@@ -6,7 +6,7 @@
 - ``queries()``: one entry per implemented operator (SURVEY.md §2 ids in
   the key names).  Relational operators run the Spark dialect of the
   same SQL the oracle runs; kernel operators (X1/X2 codec, T9 TIN, V5
-  PIP, multimodal) run the engine's real numpy/Arrow path.
+  PIP) run the engine's real numpy/Arrow path.
 - ``oracle_sql()``: DuckDB dialect for every SQL-expressible operator.
   All definitions use integer-exact arithmetic (polynomial hashes,
   quantized dots, FLOOR-before-CAST) so value hashes match bit-for-bit.
@@ -28,18 +28,7 @@ from lasutility_spark.engine import pip_stage, tin_stage
 from lasutility_spark.engine.tiling import cell_id_col
 from lasutility_spark.gridlib import topodb
 from lasutility_spark.gridlib.tilenamer import cell_id_to_name, tile_decode_batch
-from lasutility_spark.pipelines import (
-    dedup,
-    events,
-    geosql,
-    multimodal,
-    similarity,
-    text,
-)
-
-_ALL_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from lasutility_spark.pipelines import dedup, events, geosql, similarity, text
 
 
 def _register(spark: SparkSession, sf_dir: str, tables) -> None:
@@ -110,11 +99,6 @@ def _tile_envelope_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("env.maxx").alias("tile_maxx"),
         F.col("env.maxy").alias("tile_maxy"),
     )
-
-
-def _sf_of(sf_dir: str) -> float:
-    base = os.path.basename(sf_dir.rstrip("/"))
-    return float(base[2:]) if base.startswith("sf") else 0.001
 
 
 def _tin_rasterize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,99 +177,12 @@ def _pip_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("value").agg(F.count("*").alias("n_points"))
 
 
-# The multimodal + X5 oracle queries run over the FIXED sf0.01 fixture
+# The image-table + X5 oracle queries run over the FIXED sf0.01 fixture
 # (datagen.ensure_images_table(0.01)) regardless of sf_dir: their DuckDB
 # oracles are expected-result parquet side tables written at generation
-# time, and the oracle SQL embeds that one fixture path.  Scale behavior
-# of the same kernels is exercised by bench.py at sf0.1.
+# time, and the oracle SQL embeds that one fixture path.
 
 _FIXTURE_SF = 0.01
-
-
-def _image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """m1: PNG decode -> pixel stats; oracle = direct quantization of the
-    source DEM (verifies the full encode->decode round trip)."""
-    images_dir = datagen.ensure_images_table(_FIXTURE_SF)
-    return multimodal.image_decode_stats(epoints.read_images(spark, images_dir))
-
-
-def _image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """m2: decode -> block-mean resize -> re-encode -> decode -> stats;
-    oracle = block-mean of the directly-quantized plane."""
-    images_dir = datagen.ensure_images_table(_FIXTURE_SF)
-    resized = multimodal.image_resize(epoints.read_images(spark, images_dir), 2)
-    return multimodal.image_decode_stats(resized)
-
-
-def _frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """m3: REAL video frame sampling — animated-GIF media column decoded
-    through the gridlib LZW codec, every 2nd frame kept; oracle = frame
-    stats computed from the source planes BEFORE container encoding."""
-    images_dir = datagen.ensure_images_table(_FIXTURE_SF)
-    media = spark.read.parquet(f"{images_dir}/videos.parquet")
-    return multimodal.frame_sample(media, every_n=2)
-
-
-def _oracle_image_stats(dialect: str) -> str:
-    d = datagen.ensure_images_table(_FIXTURE_SF)
-    return (
-        "SELECT image_id, w, h, px_min, px_max, px_mean, px_nonzero, phash "
-        f"FROM read_parquet('{d}/image_stats.parquet')"
-    )
-
-
-def _oracle_resize_stats(dialect: str) -> str:
-    d = datagen.ensure_images_table(_FIXTURE_SF)
-    return (
-        "SELECT image_id, w, h, px_min, px_max, px_mean, px_nonzero, phash "
-        f"FROM read_parquet('{d}/resize_stats.parquet')"
-    )
-
-
-def _audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """m4: REAL audio feature extraction — PCM16 WAV media column decoded
-    through the gridlib RIFF/WAVE codec; oracle = clip stats computed
-    from the source samples BEFORE container encoding."""
-    images_dir = datagen.ensure_images_table(_FIXTURE_SF)
-    audio = spark.read.parquet(f"{images_dir}/audio.parquet")
-    return multimodal.audio_decode_stats(audio)
-
-
-def _audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """m5: decode -> integer block-mean decimate -> WAV re-encode ->
-    decode -> stats; oracle = stats of the directly-decimated source
-    samples (proves the full resample + container round trip)."""
-    images_dir = datagen.ensure_images_table(_FIXTURE_SF)
-    audio = spark.read.parquet(f"{images_dir}/audio.parquet")
-    resampled = multimodal.audio_resample(audio, datagen.AUDIO_DECIMATE)
-    return multimodal.audio_decode_stats(resampled)
-
-
-def _oracle_audio_stats(dialect: str) -> str:
-    d = datagen.ensure_images_table(_FIXTURE_SF)
-    return (
-        "SELECT media_id, n_samples, sample_rate, peak, sumsq, zero_crossings "
-        f"FROM read_parquet('{d}/audio_stats.parquet')"
-    )
-
-
-def _oracle_audio_resample_stats(dialect: str) -> str:
-    d = datagen.ensure_images_table(_FIXTURE_SF)
-    return (
-        "SELECT media_id, n_samples, sample_rate, peak, sumsq, zero_crossings "
-        f"FROM read_parquet('{d}/audio_resample_stats.parquet')"
-    )
-
-
-def _oracle_frames(dialect: str) -> str:
-    """m3 oracle: per-frame stats from the generation-time source planes
-    (independent of the GIF decode path), sampled every 2nd frame."""
-    d = datagen.ensure_images_table(_FIXTURE_SF)
-    return (
-        "SELECT media_id, frame_idx, w, h, px_sum, px_nonzero, phash "
-        f"FROM read_parquet('{d}/video_frames.parquet') "
-        "WHERE frame_idx % 2 = 0"
-    )
 
 
 def _oracle_tile_stats(dialect: str) -> str:
@@ -369,14 +266,7 @@ def _oracle_feature_covers(dialect: str) -> str:
 # ``queries()`` in insertion order (VERDICT r04).  The registry therefore
 # holds exactly <=50 queries (asserted below) and ``queries()`` emits the
 # kernel-path flagships FIRST, so the driver sheet covers every operator
-# family with zero truncation.  Six superseded variants were consolidated
-# away in round 5 (each fully subsumed by a green sibling running the same
-# code path, all green in CORRECTNESS_r04): x2_tile_envelope_arith (dup of
-# x2_tile_envelope), sim_ivf_assign / sim_ivf_topk (subsumed by the
-# learned / nprobe=2 siblings), sim_lsh_buckets (strict prefix of
-# sim_lsh_pairs), sim_ivf_learn (its centroid table feeds the two learned
-# queries), a7_neighborhood_max (subsumed by the cross-tile a7_halo).
-# The underlying SQL builders remain public API in pipelines/*.
+# family with zero truncation.
 
 # name -> (sql_fn, tables) for the dual-dialect relational operators
 _RELATIONAL: dict[str, tuple[Callable[[str], str], list[str]]] = {
@@ -411,6 +301,7 @@ _RELATIONAL: dict[str, tuple[Callable[[str], str], list[str]]] = {
     "evt_sessions": (events.sessions_sql, ["events"]),
 }
 
+
 def _minhash_bands_spark(spark, sf_dir):
     _register(spark, sf_dir, ["documents"])
     return dedup.minhash_bands_spark(spark)
@@ -441,19 +332,6 @@ def _components_spark(spark, sf_dir):
     _register(spark, sf_dir, ["documents"])
     return dedup.components_spark(spark)
 
-
-# kernel-path queries: Spark side is the real engine; oracle where possible
-_KERNEL_WITH_ORACLE = {
-    "x1_tile_encode": (_tile_encode_spark, geosql.tile_encode_sql_query, ["lineitem"]),
-    "x2_tile_envelope": (_tile_envelope_spark, geosql.tile_envelope_sql, ["lineitem"]),
-    # Spark side = Arrow-batched numpy signatures (HOF SQL is interpreted
-    # and ~10x slower); oracle keeps the SQL form — identical arithmetic
-    "dd_minhash_bands": (_minhash_bands_spark, dedup.minhash_bands_sql, ["documents"]),
-    "dd_minhash_pairs": (_minhash_pairs_spark, dedup.minhash_pairs_sql, ["documents"]),
-    "dd_ngram_jaccard": (_ngram_jaccard_spark, dedup.ngram_jaccard_pairs_sql, ["documents"]),
-    "dd_components": (_components_spark, dedup.components_sql, ["documents"]),
-    "dd_keep_one": (_keep_one_spark, dedup.keep_one_sql, ["documents"]),
-}
 
 def _tin_rasterize_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T9 via the skew-salted path (north rule: dense tiles re-keyed with
@@ -545,29 +423,28 @@ def _a7_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return voxel.neighborhood_max_halo(pts)
 
 
-# real kernel/engine paths vs independent closed-form/side-table oracles
-_KERNEL_WITH_ORACLE.update(
-    {
-        "v5_pip_classify": (_pip_classify, geosql.pip_classify_kernel_sql, ["lineitem"]),
-        "a7_halo": (_a7_halo, geosql.neighborhood_max_halo_sql, ["lineitem"]),
-        "x5_feature_covers": (_feature_covers, _oracle_feature_covers, []),
-        "m1_image_stats": (_image_stats, _oracle_image_stats, []),
-        "m2_image_resize": (_image_resize, _oracle_resize_stats, []),
-        "m3_frame_sample": (_frame_sample, _oracle_frames, []),
-        "m4_audio_stats": (_audio_stats, _oracle_audio_stats, []),
-        "m5_audio_resample": (_audio_resample, _oracle_audio_resample_stats, []),
-        "t9_tin_rasterize": (_tin_rasterize, _oracle_tile_stats, []),
-        "t9_tin_rasterize_skew": (_tin_rasterize_skew, _oracle_tile_stats, []),
-        "b_voxel_tin_backfill": (_tin_rasterize_voxel, _oracle_voxel_stats, []),
-        "v5_pip_rasterize": (_pip_rasterize, _oracle_pip_tile_stats, []),
-        "v9_raster_extents": (_raster_extents, _oracle_raster_extents, []),
-        "s10_triangle_features": (
-            _tin_triangle_features,
-            _oracle_triangle_stats,
-            [],
-        ),
-    }
-)
+# kernel-path queries: real kernel/engine paths vs independent
+# closed-form/side-table oracles
+_KERNEL_WITH_ORACLE = {
+    "x1_tile_encode": (_tile_encode_spark, geosql.tile_encode_sql_query, ["lineitem"]),
+    "x2_tile_envelope": (_tile_envelope_spark, geosql.tile_envelope_sql, ["lineitem"]),
+    # Spark side = Arrow-batched numpy signatures (HOF SQL is interpreted
+    # and ~10x slower); oracle keeps the SQL form — identical arithmetic
+    "dd_minhash_bands": (_minhash_bands_spark, dedup.minhash_bands_sql, ["documents"]),
+    "dd_minhash_pairs": (_minhash_pairs_spark, dedup.minhash_pairs_sql, ["documents"]),
+    "dd_ngram_jaccard": (_ngram_jaccard_spark, dedup.ngram_jaccard_pairs_sql, ["documents"]),
+    "dd_components": (_components_spark, dedup.components_sql, ["documents"]),
+    "dd_keep_one": (_keep_one_spark, dedup.keep_one_sql, ["documents"]),
+    "v5_pip_classify": (_pip_classify, geosql.pip_classify_kernel_sql, ["lineitem"]),
+    "a7_halo": (_a7_halo, geosql.neighborhood_max_halo_sql, ["lineitem"]),
+    "x5_feature_covers": (_feature_covers, _oracle_feature_covers, []),
+    "t9_tin_rasterize": (_tin_rasterize, _oracle_tile_stats, []),
+    "t9_tin_rasterize_skew": (_tin_rasterize_skew, _oracle_tile_stats, []),
+    "b_voxel_tin_backfill": (_tin_rasterize_voxel, _oracle_voxel_stats, []),
+    "v5_pip_rasterize": (_pip_rasterize, _oracle_pip_tile_stats, []),
+    "v9_raster_extents": (_raster_extents, _oracle_raster_extents, []),
+    "s10_triangle_features": (_tin_triangle_features, _oracle_triangle_stats, []),
+}
 
 # No-oracle queries: none left.  s10 (the last rows-only entry through
 # round 3) now rides a tie-independent oracle: Delaunay triangle COUNTS

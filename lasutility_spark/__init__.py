@@ -9,8 +9,10 @@ Spark DataFrame engine:
   ``spark-submit --py-files``.
 - ``engine``    — Spark stages: tiling/partitioning, voxel aggregates,
   per-tile TIN rasterization kernels, vector→raster PIP, checkpoints.
-- ``pipelines`` — large-scale training-data ops (dedup, similarity search,
-  text analysis, multimodal plumbing) over document/embedding tables.
+- ``pipelines`` — the geospatial operators as portable SQL over a points
+  table (``geosql``), shared by the Spark queries and the DuckDB oracle,
+  plus document/embedding/event ops (dedup, similarity search, text
+  analysis, sessionization) that are slated for removal.
 """
 
 __version__ = "0.1.0"

@@ -25,7 +25,7 @@ import pandas as pd
 
 from .gridlib import topodb
 from .gridlib.phash import phash64
-from .gridlib.png import dem_to_png16, quantize_dem
+from .gridlib.png import dem_to_png16
 from .gridlib.tilenamer import cell_id as _cell_id
 from .gridlib.tilenamer import tile_decode, tile_encode
 from .gridlib.wkb import encode_linestring, encode_polygon
@@ -181,10 +181,8 @@ def sample_points_from_tile(
 
 def assign_classes(x, y, z):
     """Deterministic veg-class assignment + height lift for sampled
-    points (ground 80%, veg classes 3/4/5 sit above the terrain).
-    Derived from (x, y) only, so the packed shuffle path
-    (engine.points.decode_points_packed) can recompute it kernel-side
-    bit-for-bit instead of shipping z/cls through the shuffle."""
+    points (ground 80%, veg classes 3/4/5 sit above the terrain),
+    derived from (x, y) only."""
     v = hash01((x * 100).astype(np.int64) + 13, (y * 100).astype(np.int64))
     cls = np.full(len(x), topodb.CLS_GROUND, dtype=np.uint8)
     veg = v >= 0.8
@@ -286,159 +284,6 @@ def gen_features(area_tiles: list[str], n_polygons: int, n_lines: int):
 
 
 # oracle side tables --------------------------------------------------------
-#
-# Expected results for the multimodal kernels, computed at generation time
-# from the raw planes (NOT by running the engine): the image-stats oracle
-# quantizes the DEM directly and the engine must reproduce it through a
-# full PNG encode->decode round trip; the resize oracle block-means the
-# quantized plane and the engine must match through decode->resize->
-# re-encode->decode.  frames.parquet is a golden table over the written
-# PNG bytes for the (declared) frame-sampler stub.
-
-
-def _plane_stats(image_id: str, plane: np.ndarray) -> dict:
-    a = plane.astype(np.float64)
-    return {
-        "image_id": image_id,
-        "w": np.int32(plane.shape[1]),
-        "h": np.int32(plane.shape[0]),
-        "px_min": float(a.min()),
-        "px_max": float(a.max()),
-        "px_mean": float(a.mean()),
-        "px_nonzero": np.int64((a != 0).sum()),
-        "phash": np.int64(phash64(a)),
-    }
-
-
-def gen_oracle_tables(
-    names: list[str], px: int = 128, resize_factor: int = 2,
-):
-    """(image_stats, resize_stats) expected-result frames, computed from
-    the directly-quantized source planes (never by running the engine).
-    The former byte-window frames table is gone: video frame sampling is
-    now oracled by gen_video_tables' source-plane statistics."""
-    stats_rows, resize_rows = [], []
-    for name in names:
-        q = quantize_dem(tile_dem(name, px), Z_MIN, Z_MAX)
-        stats_rows.append(_plane_stats(name, q))
-        f = resize_factor
-        hh, ww = px // f, px // f
-        small = (
-            q[: hh * f, : ww * f].reshape(hh, f, ww, f).mean(axis=(1, 3))
-        ).astype(q.dtype)
-        resize_rows.append(_plane_stats(name, small))
-    return pd.DataFrame(stats_rows), pd.DataFrame(resize_rows)
-
-
-# video fixture: per tile, a real multi-frame GIF whose frames derive
-# deterministically from the tile's DEM plane ----------------------------
-
-N_VIDEO_FRAMES = 6
-
-
-def video_frame_plane(name: str, k: int, px: int = 128) -> np.ndarray:
-    """Frame k of a tile's synthetic clip: the 8-bit DEM plane dimmed by
-    a per-frame brightness ramp and panned horizontally — deterministic,
-    and every frame has distinct sums/hashes."""
-    g8 = (quantize_dem(tile_dem(name, px), Z_MIN, Z_MAX) >> 8).astype(np.uint8)
-    dim = ((g8.astype(np.int32) * (10 - k)) // 10).astype(np.uint8)
-    return np.roll(dim, 9 * k, axis=1)
-
-
-def gen_video_tables(
-    names: list[str], px: int = 128, n_frames: int = N_VIDEO_FRAMES
-) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """(videos, video_frames): real animated-GIF media rows plus the
-    expected per-frame statistics computed from the SOURCE planes before
-    container encoding — the engine must reproduce them through a full
-    GIF (LZW) decode, so the oracle is independent of the decode path."""
-    from .gridlib.gif import gif_encode
-
-    vids, stats = [], []
-    for name in names:
-        planes = [video_frame_plane(name, k, px) for k in range(n_frames)]
-        vids.append(
-            {
-                "media_id": name,
-                "bytes": gif_encode(planes),
-                "n_frames": np.int32(n_frames),
-                "w": np.int32(px),
-                "h": np.int32(px),
-                "fmt": "gif",
-            }
-        )
-        for k, p in enumerate(planes):
-            stats.append(
-                {
-                    "media_id": name,
-                    "frame_idx": np.int32(k),
-                    "w": np.int32(px),
-                    "h": np.int32(px),
-                    "px_sum": np.int64(p.astype(np.int64).sum()),
-                    "px_nonzero": np.int64((p != 0).sum()),
-                    "phash": np.int64(phash64(p)),
-                }
-            )
-    return pd.DataFrame(vids), pd.DataFrame(stats)
-
-
-# audio fixture: per tile, a real PCM16 WAV clip whose samples derive
-# deterministically from the tile's DEM plane --------------------------
-
-AUDIO_RATE = 16000
-AUDIO_DECIMATE = 4
-
-
-def audio_clip_samples(name: str, px: int = 128) -> np.ndarray:
-    """Deterministic int16 sample stream for a tile's synthetic clip:
-    the 16-bit DEM plane flattened row-major and AC-coupled — the
-    integer clip mean removed, then halved (floor) to bound the range
-    at +/-32767 (px*px samples ~ 1 s at 16 kHz).  Every clip distinct,
-    integer-exact, and sign-oscillating wherever the terrain crosses
-    its own mean (guaranteed for any non-constant plane)."""
-    c = quantize_dem(tile_dem(name, px), Z_MIN, Z_MAX).astype(np.int64).ravel()
-    return ((c - c.sum() // c.size) // 2).astype(np.int16)
-
-
-def gen_audio_tables(
-    names: list[str], rate: int = AUDIO_RATE, factor: int = AUDIO_DECIMATE
-) -> tuple[pd.DataFrame, pd.DataFrame, pd.DataFrame]:
-    """(audio, audio_stats, audio_resample_stats): real WAV media rows
-    plus expected clip statistics computed from the SOURCE samples
-    before container encoding — the engine must reproduce them through
-    a full RIFF/WAVE decode (and, for the resample table, an integer
-    block-mean decimation and a re-encode round trip), so the oracles
-    are independent of the codec path (the m3 pattern)."""
-    from .gridlib.wav import audio_stats, decimate_mean, wav_encode
-
-    clips, stats, rstats = [], [], []
-    for name in names:
-        s = audio_clip_samples(name)
-        clips.append(
-            {
-                "media_id": name,
-                "bytes": wav_encode(s, rate),
-                "n_samples": np.int32(s.size),
-                "sample_rate": np.int32(rate),
-                "fmt": "wav",
-            }
-        )
-        for sink, arr, r in (
-            (stats, s, rate),
-            (rstats, decimate_mean(s, factor), rate // factor),
-        ):
-            st = audio_stats(arr)
-            sink.append(
-                {
-                    "media_id": name,
-                    "n_samples": np.int32(st["n_samples"]),
-                    "sample_rate": np.int32(r),
-                    "peak": np.int32(st["peak"]),
-                    "sumsq": np.int64(st["sumsq"]),
-                    "zero_crossings": np.int32(st["zero_crossings"]),
-                }
-            )
-    return pd.DataFrame(clips), pd.DataFrame(stats), pd.DataFrame(rstats)
 
 
 def gen_tile_stats(
@@ -611,7 +456,7 @@ SF_TILES = {0.001: 9, 0.01: 36, 0.1: 4096}
 
 # per-tile expected-metric side tables are only written for oracle-scale
 # fixtures: the PIP expected rasterization is a single-process numpy loop
-# (O(tiles x features)), unusable at the 4096-tile bench fixture — and
+# (O(tiles x features)), unusable at the 4096-tile sf0.1 fixture — and
 # only the sf0.01 fixture feeds the DuckDB oracle queries.
 MAX_STATS_TILES = 256
 
@@ -627,14 +472,13 @@ def ensure_images_table(
 
     n = n_tiles if n_tiles else SF_TILES.get(sf, max(9, int(2560 * sf)))
     out = os.path.join(base_dir, f"images_n{n}")  # content-addressed by count
-    # v8: adds the WAV audio table + clip/resample oracle stats;
-    # v7 added sum_area_x100 (S10 hull-area oracle) to tile_stats;
-    # v6 added the pip_class_extents raster->vector oracle side table;
-    # v5 added the GIF videos table + per-frame oracle stats; v4 added
-    # the tile_stats/pip_tile_stats expected-metric side tables (oracle
-    # fixtures only); v3 added envelope columns on the feature tables +
-    # tile-anchor columns on images (pushdown pruning); v2 added the
-    # multimodal oracle side tables.  v3+ caches upgrade in place
+    # v8 marks a complete cache (v8 caches may also hold media tables
+    # that nothing reads any more); v7 added sum_area_x100 (S10
+    # hull-area oracle) to tile_stats; v6 added the pip_class_extents
+    # raster->vector oracle side table; v4 added the tile_stats/
+    # pip_tile_stats expected-metric side tables (oracle fixtures only);
+    # v3 added envelope columns on the feature tables + tile-anchor
+    # columns on images (pushdown pruning).  v3+ caches upgrade in place
     # (side tables only); older caches regenerate in full (idempotent).
     marker = os.path.join(out, "_SUCCESS_v8")
     if os.path.exists(marker):
@@ -685,35 +529,26 @@ def ensure_images_table(
         pa.Table.from_pandas(edf, preserve_index=False),
         os.path.join(out, "feature_envelopes.parquet"),
     )
-    sdf, rdf = gen_oracle_tables(names)
-    for fname, frame in (
-        ("image_stats.parquet", sdf),
-        ("resize_stats.parquet", rdf),
-    ):
-        pq.write_table(
-            pa.Table.from_pandas(frame, preserve_index=False),
-            os.path.join(out, fname),
-        )
     _write_stats_tables(out, names, n)
     open(marker, "w").close()
     return out
 
 
 def _write_stats_tables(out: str, names: list[str], n: int) -> None:
-    """tile_stats/pip_tile_stats/videos side tables (oracle fixtures
-    only — the driver's DuckDB correctness gate reads the sf0.01
-    fixture; the 4096-tile bench fixture never needs them)."""
+    """tile_stats/pip_tile_stats/pip_class_extents side tables (oracle
+    fixtures only — the driver's DuckDB correctness gate reads the
+    sf0.01 fixture; larger fixtures never need them)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     if n > MAX_STATS_TILES:
         return
 
-    def _put(fname: str, frame: pd.DataFrame, schema=None) -> None:
+    def _put(fname: str, frame: pd.DataFrame) -> None:
         if os.path.exists(os.path.join(out, fname)):
             return
         pq.write_table(
-            pa.Table.from_pandas(frame, schema=schema, preserve_index=False),
+            pa.Table.from_pandas(frame, preserve_index=False),
             os.path.join(out, fname),
         )
 
@@ -730,31 +565,3 @@ def _write_stats_tables(out: str, names: list[str], n: int) -> None:
         stats, extents = gen_pip_tile_stats(names, pdf, ldf)
         _put("pip_tile_stats.parquet", stats)
         _put("pip_class_extents.parquet", extents)
-    if not os.path.exists(os.path.join(out, "videos.parquet")):
-        vdf, vfdf = gen_video_tables(names)
-        vschema = pa.schema(
-            [
-                ("media_id", pa.string()),
-                ("bytes", pa.binary()),
-                ("n_frames", pa.int32()),
-                ("w", pa.int32()),
-                ("h", pa.int32()),
-                ("fmt", pa.string()),
-            ]
-        )
-        _put("videos.parquet", vdf, vschema)
-        _put("video_frames.parquet", vfdf)
-    if not os.path.exists(os.path.join(out, "audio.parquet")):
-        adf, asdf, ardf = gen_audio_tables(names)
-        aschema = pa.schema(
-            [
-                ("media_id", pa.string()),
-                ("bytes", pa.binary()),
-                ("n_samples", pa.int32()),
-                ("sample_rate", pa.int32()),
-                ("fmt", pa.string()),
-            ]
-        )
-        _put("audio.parquet", adf, aschema)
-        _put("audio_stats.parquet", asdf)
-        _put("audio_resample_stats.parquet", ardf)

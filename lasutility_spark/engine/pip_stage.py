@@ -647,15 +647,13 @@ def classify_images_scanlocal(
     """Scan-local variant of :func:`classify_images_prebroadcast`: the
     input is a row-group split table (``sources.parquet_row_group_
     splits``) and each python task reads its own row groups with
-    pyarrow — the image bytes never enter the JVM at all.  Measured
-    motivation: the JVM-cache -> Arrow IPC framing of ~450 MB of tile
-    bytes is a pure-memcpy stage pinned at the host memory-bus scaling
-    ceiling (8->32 quotient ~0.16-0.18, BENCH/host_ceiling json), while
-    every compute stage scales at ~0.74; removing the framing moves the
-    whole query to the compute ceiling.  On a real cluster this is the
-    standard node-local columnar scan, so nothing is lost at 1000
-    executors.  Output rows identical to the other strategies (pinned
-    in tests)."""
+    pyarrow — the image bytes never enter the JVM at all.  Motivation:
+    the JVM-cache -> Arrow IPC framing of the tile bytes is a
+    pure-memcpy stage bound by host memory bandwidth rather than by
+    cores; removing the framing leaves only compute stages.  On a real
+    cluster this is the standard node-local columnar scan, so nothing
+    is lost at 1000 executors.  Output rows identical to the other
+    strategies (pinned in tests)."""
     from .sources import scan_row_groups
 
     cmap = dict(classmap)

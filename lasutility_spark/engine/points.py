@@ -63,68 +63,6 @@ def decode_points(images: DataFrame) -> DataFrame:
     )
 
 
-PACKED_SCHEMA = "cell_id long, px int, rc binary, qz binary"
-
-
-def decode_points_packed(images: DataFrame, size_north: int = 1000) -> DataFrame:
-    """Map-side-combined decode for the general shuffle path: one output
-    row per (source image, covered tile) with the tile's sampled points
-    PACKED — row/col offsets as uint8 bytes and heights as the raw
-    uint16 png quantile — instead of one 25-byte (x, y, z, cls) row per
-    point (which Spark shuffles as a ~48-byte UnsafeRow).  ~4.4 bytes
-    per point cross the shuffle; the tile kernel
-    (:func:`..engine.tin_stage.rasterize_tin_tiles_packed`) reconstructs
-    x/y/z/cls BIT-EXACTLY: offsets regenerate coordinates through the
-    same ``minx + (c + 0.5) * cellsize`` float ops (cellsize 1000/128 =
-    7.8125 is dyadic), the png quantile replays ``png16_to_dem``'s
-    per-value arithmetic, and class + veg lift are deterministic in
-    (x, y) (``datagen.assign_classes``).  This is the classic packed
-    point-batch combine: shuffle rows = O(images x tiles covered), not
-    O(points) — the design that survives 10^12 points.
-    """
-    from ..gridlib.png import png_decode
-    from ..gridlib.tilenamer import cell_id as cid_fn
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cap, data in zip(pdf["caption"], pdf["bytes"]):
-                name, minx, miny, maxx, maxy, cs, _ = datagen.parse_caption(cap)
-                q = png_decode(bytes(data))
-                px = q.shape[0]
-                if px > 256:  # r/c no longer fit uint8
-                    raise ValueError(f"packed path supports px<=256, got {px}")
-                cols, rws = np.meshgrid(np.arange(px), np.arange(px))
-                ex = minx + (cols + 0.5) * cs
-                ny = miny + (rws + 0.5) * cs
-                u = datagen.hash01(
-                    (ex * 100).astype(np.int64) + 7, (ny * 100).astype(np.int64)
-                )
-                rate = (
-                    datagen.DENSE_RATE
-                    if datagen.is_dense_tile(name)
-                    else datagen.BASE_RATE
-                )
-                sel = u < rate
-                r = rws[sel].ravel().astype(np.uint8)
-                c = cols[sel].ravel().astype(np.uint8)
-                qs = q[sel].ravel().astype("<u2")
-                cell = int(
-                    cid_fn(np.array([minx]), np.array([miny]), size_north)[0]
-                )
-                rows.append(
-                    {
-                        "cell_id": cell,
-                        "px": px,
-                        "rc": r.tobytes() + c.tobytes(),
-                        "qz": qs.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["cell_id", "px", "rc", "qz"])
-
-    return images.select("caption", "bytes").mapInPandas(run, PACKED_SCHEMA)
-
-
 def read_images(spark, images_dir: str) -> DataFrame:
     return spark.read.parquet(f"{images_dir}/images.parquet")
 

@@ -122,14 +122,12 @@ def parquet_row_group_splits(
     SCAN-LOCAL stage (python workers read their own row groups with
     pyarrow instead of receiving cached JVM bytes over Arrow IPC).
 
-    Motivation (measured, BENCH/BASELINE.md): piping a cached table of
-    large binary tiles JVM->python costs 4-5 memory passes over the
-    bytes (cache read, Arrow serialize, socket, pandas materialize) —
-    a pure-memcpy stage whose 8->32-thread quotient is the host's
-    memory-bus ceiling (~0.16), dragging the whole query's scaling
-    down.  Executors reading their own splits from (page-cached) files
-    is one pass, and on a real cluster it is simply the normal
-    node-local columnar scan.
+    Motivation: piping a cached table of large binary tiles JVM->python
+    costs 4-5 memory passes over the bytes (cache read, Arrow
+    serialize, socket, pandas materialize) — a pure-memcpy stage bound
+    by host memory bandwidth rather than by cores.  Executors reading
+    their own splits from (page-cached) files is one pass, and on a
+    real cluster it is simply the normal node-local columnar scan.
 
     ``strip_col``/``strip``: row groups whose [min, max] statistics for
     that column don't intersect ``[lo, hi)`` are pruned driver-side —

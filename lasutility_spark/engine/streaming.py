@@ -1,8 +1,7 @@
 """Structured Streaming stages.
 
 The reference has no streaming (SURVEY.md §2.6) — this module covers the
-engine's streaming surface for the event/ingest side of a training-data
-pipeline:
+engine's streaming surface:
 
 - windowed event aggregation with watermarked late-data handling
   (the streaming twin of the ``evt_hourly`` batch query — same results
@@ -136,45 +135,6 @@ def tiles_stream(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         tiles = tin_stage.rasterize_images_fused(batch_df, px=px)
         write_batch_idempotent(tiles, out_dir, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def media_stream(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 2,
-):
-    """Streaming media ingest: new audio files -> the SAME RIFF/WAVE
-    decode + clip-stats kernel as batch (m4), written incrementally —
-    the multimodal twin of :func:`tiles_stream`.  A training-data
-    pipeline ingests media continuously; the feature-extraction kernel
-    must not fork between the backfill (batch) and the live tail
-    (stream), so foreachBatch hands each micro-batch to the batch
-    operator and stream output == batch output row-for-row by
-    construction.  The stream checkpoint plus the batch_id-keyed
-    idempotent sink (:func:`write_batch_idempotent`) gives exactly-once
-    stats production across restarts, including mid-batch
-    crash-replay."""
-    from ..pipelines import multimodal
-
-    static = spark.read.parquet(source_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        stats = multimodal.audio_decode_stats(batch_df)
-        write_batch_idempotent(stats, out_dir, batch_id)
 
     return (
         stream.writeStream.foreachBatch(sink)

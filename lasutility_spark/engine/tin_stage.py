@@ -75,9 +75,8 @@ def _tile_row(
     size_north: int,
     ground_max_first: bool,
 ) -> pd.DataFrame:
-    """One tile's point arrays -> its DEM tile row (shared by the row
-    and packed shuffle kernels; point order does not matter — Delaunay
-    canonicalizes via sorted dedup)."""
+    """One tile's point arrays -> its DEM tile row (point order does not
+    matter — Delaunay canonicalizes via sorted dedup)."""
     minx, miny, maxx, maxy = (
         int(v) for v in np.array(cell_id_envelope(np.array([cell]), size_north)).ravel()
     )
@@ -150,81 +149,6 @@ def rasterize_tin_tiles(
     points = repartition_by_cell(points, num_partitions)
     kernel = _tile_kernel_factory(px, size_north, ground_max_first)
     return points.groupBy("cell_id").applyInPandas(kernel, TILE_SCHEMA)
-
-
-def rasterize_tin_tiles_packed(
-    packed: DataFrame,
-    px: int = 128,
-    size_north: int = 1000,
-    ground_max_first: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Packed-shuffle twin of :func:`rasterize_tin_tiles`: input is the
-    ``engine.points.decode_points_packed`` table (one row per source
-    image with uint8 row/col offsets + uint16 png quantiles), so the
-    groupBy exchange moves ~4.4 bytes/point instead of a ~48-byte
-    UnsafeRow/point.  The kernel reconstructs x/y/z/cls bit-exactly
-    (dyadic cellsize, replayed ``png16_to_dem`` arithmetic,
-    deterministic ``datagen.assign_classes``) and produces rows
-    byte-identical to the row-shuffle path — pinned in
-    tests/test_engine_spark.py.
-
-    ``num_partitions`` matters MORE here than on the row path: the
-    packed rows are so small that AQE's bytes-based partition
-    coalescing collapses the kernel stage to a handful of tasks
-    (observed 6 tasks on 32 cores at sf0.1 — the Delaunay kernel is
-    CPU-bound, so bytes are the wrong signal).  An explicit
-    range-partition on cell_id pins the kernel-stage parallelism and
-    applyInPandas reuses that partitioning without a second
-    exchange."""
-    from ..gridlib.png import png_decode  # noqa: F401  (doc anchor)
-
-    z_min, z_max = datagen.Z_MIN, datagen.Z_MAX
-    scale = (z_max - z_min) / 65534.0
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        cell = int(key[0])
-        minx, miny, maxx, maxy = (
-            int(v)
-            for v in np.array(
-                cell_id_envelope(np.array([cell]), size_north)
-            ).ravel()
-        )
-        xs, ys, zs, cs_ = [], [], [], []
-        for px_img, rc, qz in zip(pdf["px"], pdf["rc"], pdf["qz"]):
-            n = len(rc) // 2
-            rr = np.frombuffer(rc, np.uint8, count=n)
-            cc = np.frombuffer(rc, np.uint8, count=n, offset=n)
-            q = np.frombuffer(qz, "<u2")
-            cs = (maxx - minx) / int(px_img)
-            # identical float ops to datagen.sample_points_from_tile:
-            # int + (int64 + 0.5) * float64, elementwise
-            x = minx + (cc.astype(np.int64) + 0.5) * cs
-            y = miny + (rr.astype(np.int64) + 0.5) * cs
-            # replay png16_to_dem per value: f64 -> f32 -> f64 round trip
-            demv = ((q.astype(np.float64) - 1.0) * scale + z_min)
-            demv[q == 0] = np.nan
-            z = demv.astype(np.float32).astype(np.float64)
-            z, cls = datagen.assign_classes(x, y, z)
-            xs.append(x)
-            ys.append(y)
-            zs.append(z)
-            cs_.append(cls)
-        if xs:
-            x, y, z, cls = (
-                np.concatenate(xs),
-                np.concatenate(ys),
-                np.concatenate(zs),
-                np.concatenate(cs_),
-            )
-        else:  # pragma: no cover — groupBy never yields empty groups
-            x = y = z = np.empty(0)
-            cls = np.empty(0, np.uint8)
-        return _tile_row(cell, x, y, z, cls, px, size_north, ground_max_first)
-
-    if num_partitions:
-        packed = repartition_by_cell(packed, num_partitions)
-    return packed.groupBy("cell_id").applyInPandas(kernel, TILE_SCHEMA)
 
 
 def rasterize_images_fused(images: DataFrame, px: int = 128,

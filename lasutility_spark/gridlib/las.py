@@ -9,7 +9,7 @@ wave-packet descriptor block per point (spec: index u1, byte offset
 u8, packet size u4, return-point location f4, Xt/Yt/Zt f4) — the
 descriptor metadata is surfaced; the external waveform payload itself
 (EVLR / .wdp) is not interpreted.  LAZ decompression lives in
-laz.py/laz14.py; the .las layout is the same minus compression.
+laz.py; the .las layout is the same minus compression.
 
 Semantics pinned from the reference:
 

@@ -37,11 +37,9 @@ Round 4 added the RGB12 v2 item both directions (point formats 2/3);
 round 5 added the BYTE v2 (extra-bytes) item, the WAVEPACKET13 v1
 item (point formats 4/5 — both directions, following the public
 laszip v1 scheme; round-trip-pinned since the reference tree has no
-wavepacket fixture), and the LAS 1.4 POINT14 layered path in
-:mod:`.laz14` (:func:`read_laz` dispatches item types >= 10 there).
-Remaining scope boundary: the LAS 1.4 layered WAVEPACKET14 item and
-record-version-1 variants of the classic items raise ValueError with
-a clear message.
+wavepacket fixture).  Scope boundary: the LAS 1.4 layered items
+(POINT14 and later, point formats 6+) and record-version-1 variants
+of the classic items raise ValueError with a clear message.
 """
 
 from __future__ import annotations
@@ -793,7 +791,7 @@ class Wavepacket13V1Reader:
 
 
 ITEM_BYTE = 0
-ITEM_POINT14 = 10  # layered family — handled in .laz14
+ITEM_POINT14 = 10  # layered family (LAS 1.4, compressor 3) — refused
 ITEM_POINT10 = 6
 ITEM_GPSTIME11 = 7
 ITEM_RGB12 = 8
@@ -809,7 +807,6 @@ def parse_laszip_vlr(data: bytes, header: dict) -> dict:
     pos = header["header_size"]
     for _ in range(header["n_vlrs"]):
         _res, _uid, rid, rlen = struct.unpack_from("<H16sHH", data, pos)
-        desc = data[pos + 22 : pos + 54]
         body = data[pos + 54 : pos + 54 + rlen]
         pos += 54 + rlen
         if rid != LASZIP_VLR_RECORD_ID:
@@ -827,9 +824,6 @@ def parse_laszip_vlr(data: bytes, header: dict) -> dict:
             "version": (vmaj, vmin, vrev),
             "chunk_size": chunk_size,
             "items": items,  # (type, size, version)
-            # VLR description, nulls stripped — laz14 writes its writer
-            # tag here so its reader can refuse native POINT14 streams
-            "writer_tag": desc.rstrip(b"\0"),
         }
     raise ValueError("no laszip VLR found — not a LAZ file?")
 
@@ -854,11 +848,14 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
         vlr = parse_laszip_vlr(data, header)
     if vlr["compressor"] not in (1, 2):
         raise ValueError(f"unsupported laszip compressor {vlr['compressor']}")
+    if vlr["compressor"] == 2 and vlr["chunk_size"] == 0:
+        # a zero chunk would never advance the chunk walk below
+        raise ValueError("laszip VLR declares chunk_size 0 for a chunked stream")
     for itype, _isize, iver in vlr["items"]:
         if itype == ITEM_POINT14:
             raise ValueError(
-                "POINT14 streams are layered (compressor 3) — use "
-                "laz14.read_laz14 (read_laz dispatches there)"
+                "POINT14 streams are layered (compressor 3, LAS 1.4 point "
+                "formats 6+) — not supported"
             )
         if (itype, iver) not in (
             (ITEM_POINT10, 2), (ITEM_GPSTIME11, 2), (ITEM_RGB12, 2),
@@ -1035,15 +1032,8 @@ def read_laz(data: bytes):
     — the same surface as :func:`las.read_las`, via full LASzip
     decompression.  Also attaches per-point return numbers and gps times
     on the header dict (``_returns``, ``_gps_time``) for validation.
-    LAS 1.4 POINT14 streams (point formats 6+) dispatch to
-    :func:`.laz14.read_laz14` (layered compressor 3)."""
-    h = read_header(data)
-    vlr0 = parse_laszip_vlr(data, h)
-    if any(t >= 10 for t, _s, _v in vlr0["items"]):
-        from .laz14 import read_laz14
-
-        return read_laz14(data)
-    header, vlr, chunks = laz_chunk_plan(data, header=h, vlr=vlr0)
+    LAS 1.4 POINT14 streams (point formats 6+) raise ValueError."""
+    header, vlr, chunks = laz_chunk_plan(data)
     if not chunks:  # 0-point file: no chunks to decode
         e = np.array([], np.float64)
         header["_returns"] = np.array([], np.uint8)
@@ -1565,6 +1555,8 @@ def write_laz(
     32-bit/2-context integer compressor, previous-size prediction) —
     the same layout decoded from the reference fixture's own table.
     """
+    if chunk_size <= 0:
+        raise ValueError(f"chunk_size must be positive, got {chunk_size}")
     x = np.asarray(x, np.float64)
     y = np.asarray(y, np.float64)
     z = np.asarray(z, np.float64)

@@ -1,7 +1,7 @@
-"""Oracle-comparison helpers shared by tests/test_oracle_parity.py and
-scripts/driver_sweep.py — ONE definition of the normalization contract
-(NULL/NaN/bool/float repr, sorted-by-column-name tuple ordering) that
-mirrors the grading driver's compare."""
+"""Oracle-comparison helpers used by tests/test_oracle_parity.py — ONE
+definition of the normalization contract (NULL/NaN/bool/float repr,
+sorted-by-column-name tuple ordering) that mirrors the grading driver's
+compare."""
 
 from __future__ import annotations
 

@@ -1,9 +1,10 @@
-"""Large-scale training-data pipeline operators over document/embedding
-tables: dedup (exact/MinHash-LSH/SimHash/n-gram), similarity search
-(brute-force + LSH-bucketed ANN), text analysis, multimodal plumbing.
+"""Relational operators as portable SQL: the geospatial operators
+(``geosql``) plus the document/embedding/event ops (``dedup``,
+``similarity``, ``text``, ``events``) that are slated for removal.
 
 Design rule for oracle parity: every relational op is built from
-engine-portable SQL with *integer-exact* arithmetic (polynomial hashes
-mod p, quantized embedding dot products), so the DuckDB oracle and the
-Spark plan agree bit-for-bit — no FP-summation-order hazards.
+engine-portable SQL with *integer-exact* arithmetic (floor-before-cast,
+exact dyadic divisions, polynomial hashes mod p, quantized embedding dot
+products), so the DuckDB oracle and the Spark plan agree
+bit-for-bit — no FP-summation-order hazards.
 """

@@ -393,39 +393,6 @@ def test_stateful_user_totals_stream(spark, tmp_path):
     assert got == want
 
 
-def test_media_stream_matches_batch(spark, tmp_path):
-    """Streaming audio ingest == batch m4 stats row-for-row (foreachBatch
-    reuses the batch WAV-decode kernel); second drain with the same
-    checkpoint is a no-op (exactly-once)."""
-    import shutil
-
-    from lasutility_spark import datagen
-    from lasutility_spark.engine import streaming
-    from lasutility_spark.pipelines import multimodal
-
-    images_dir = datagen.ensure_images_table(0.001)
-    src = str(tmp_path / "audio_in")
-    os.makedirs(src)
-    shutil.copy(
-        os.path.join(images_dir, "audio.parquet"),
-        os.path.join(src, "part-0.parquet"),
-    )
-    out = str(tmp_path / "stats_out")
-    ckpt = str(tmp_path / "stats_ckpt")
-    q = streaming.media_stream(spark, src, out, ckpt)
-    q.awaitTermination()
-    batch = multimodal.audio_decode_stats(
-        spark.read.parquet(f"{images_dir}/audio.parquet")
-    )
-    cols = batch.columns  # sink adds a batch_id partition column on top
-    got = {tuple(r) for r in spark.read.parquet(out).select(*cols).collect()}
-    want = {tuple(r) for r in batch.collect()}
-    assert got == want and len(got) == 9
-    q2 = streaming.media_stream(spark, src, out, ckpt)
-    q2.awaitTermination()
-    assert spark.read.parquet(out).count() == 9
-
-
 def test_idempotent_sink_crash_replay(spark, tmp_path):
     """Crash-replay semantics of the foreachBatch sink: foreachBatch
     replays a micro-batch with the SAME batch_id if the process dies

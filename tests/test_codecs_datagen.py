@@ -1,9 +1,7 @@
 """PNG/WKB/clip/phash codecs + deterministic datagen."""
 
 import numpy as np
-import pytest
 
-from lasutility_spark import datagen
 from lasutility_spark.datagen import (
     ensure_images_table,
     gen_tile_rows,
@@ -162,192 +160,14 @@ def test_png_rgb8_mirrored_sink():
     assert img.sum() == 3 * (7 + 99)
 
 
-# --- GIF (LZW) codec: the real m3 video container ------------------------
 
-
-def test_lzw_roundtrip_all_regimes():
-    from lasutility_spark.gridlib.gif import lzw_decode, lzw_encode
-
-    rng = np.random.RandomState(7)
-    for n in [0, 1, 10, 255, 256, 258, 511, 512, 513, 5000, 300000]:
-        b = rng.randint(0, 256, n).astype(np.uint8)
-        assert np.array_equal(b, lzw_decode(lzw_encode(b))), n
-    # highly compressible (deep dictionary chains)
-    b = np.tile(np.arange(16, dtype=np.uint8), 5000)
-    assert np.array_equal(b, lzw_decode(lzw_encode(b)))
-
-
-def test_lzw_decode_spec_pinned_streams():
-    """Handcrafted bit streams straight from the GIF89a spec — pins the
-    decoder independently of our encoder (no matched-bug blind spot)."""
-    from lasutility_spark.gridlib.gif import lzw_decode
-
-    def pack(codes):
-        acc = nb = 0
-        out = bytearray()
-        for c, s in codes:
-            acc |= c << nb
-            nb += s
-            while nb >= 8:
-                out.append(acc & 0xFF)
-                acc >>= 8
-                nb -= 8
-        if nb:
-            out.append(acc & 0xFF)
-        return bytes(out)
-
-    # clear, literals, eoi
-    got = lzw_decode(pack([(256, 9), (5, 9), (6, 9), (7, 9), (257, 9)]), 8)
-    assert got.tolist() == [5, 6, 7]
-    # dictionary reference: 258 == [1, 2]
-    got = lzw_decode(pack([(256, 9), (1, 9), (2, 9), (258, 9), (257, 9)]), 8)
-    assert got.tolist() == [1, 2, 1, 2]
-    # the cScSc special case: code == next_code (259 built from its own
-    # prefix) -> entry = prev + prev[0]
-    got = lzw_decode(
-        pack([(256, 9), (1, 9), (2, 9), (258, 9), (260, 9), (257, 9)]), 8
-    )
-    assert got.tolist() == [1, 2, 1, 2, 1, 2, 1]
-    # mid-stream clear resets table and code width
-    got = lzw_decode(
-        pack([(256, 9), (1, 9), (2, 9), (256, 9), (3, 9), (257, 9)]), 8
-    )
-    assert got.tolist() == [1, 2, 3]
-
-
-def test_gif_container_roundtrip():
-    from lasutility_spark.gridlib.gif import gif_decode, gif_decode_gray, gif_encode
-
-    rng = np.random.RandomState(11)
-    frames = [rng.randint(0, 256, (40, 56)).astype(np.uint8) for _ in range(4)]
-    frames.append(np.zeros((40, 56), np.uint8))
-    data = gif_encode(frames, delay_cs=4)
-    assert data[:6] == b"GIF89a" and data[-1:] == b"\x3b"
-    dec = gif_decode_gray(data)
-    assert len(dec) == 5
-    for a, b in zip(frames, dec):
-        assert np.array_equal(a, b)
-    _, pal = gif_decode(data)
-    assert pal.shape == (256, 3) and np.array_equal(pal[:, 0], np.arange(256))
-
-
-def test_video_fixture_oracle_independence():
-    """The video_frames oracle rows come from the SOURCE planes; decoding
-    the written GIF must reproduce them exactly (container proof, not
-    plumbing)."""
-    from lasutility_spark.gridlib.gif import gif_decode_gray
-    from lasutility_spark.gridlib.phash import phash64
-
-    names = datagen.tile_names(2)
-    vids, stats = datagen.gen_video_tables(names)
-    for _, v in vids.iterrows():
-        frames = gif_decode_gray(bytes(v["bytes"]))
-        assert len(frames) == v["n_frames"]
-        sub = stats[stats["media_id"] == v["media_id"]]
-        for k, fr in enumerate(frames):
-            row = sub[sub["frame_idx"] == k].iloc[0]
-            assert int(fr.astype(np.int64).sum()) == row["px_sum"]
-            assert int((fr != 0).sum()) == row["px_nonzero"]
-            assert phash64(fr) == row["phash"]
-
-
-def test_wav_roundtrip_chunk_walk_and_errors():
-    """RIFF/WAVE codec: exact PCM16 round trip; the decoder must walk
-    chunk lists (unknown chunks skipped with odd-size pad alignment,
-    fmt/data in either order) and name the offending field on bad input."""
-    import struct
-
-    import pytest
-
-    from lasutility_spark.gridlib.wav import wav_decode, wav_encode
-
-    s = np.concatenate(
-        [
-            np.arange(-500, 500, dtype=np.int16),
-            np.array([-32768, 32767, 0, -1, 1], dtype=np.int16),
-        ]
-    )
-    buf = wav_encode(s, 8000)
-    dec, rate = wav_decode(buf)
-    assert rate == 8000 and dec.dtype == np.int16 and np.array_equal(dec, s)
-
-    # hand-build a spec-valid variant: LIST chunk with an ODD size (pad
-    # byte), then data BEFORE fmt — a conforming decoder must accept it
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    data = s.astype("<i2").tobytes()
-    body = (
-        b"WAVE"
-        + b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"
-        + b"data" + struct.pack("<I", len(data)) + data
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    )
-    weird = b"RIFF" + struct.pack("<I", len(body)) + body
-    dec2, rate2 = wav_decode(weird)
-    assert rate2 == 8000 and np.array_equal(dec2, s)
-
-    with pytest.raises(ValueError, match="RIFF"):
-        wav_decode(b"JUNK" + buf[4:])
-    with pytest.raises(ValueError, match="channels"):
-        stereo = struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
-        bad = (
-            b"WAVE" + b"fmt " + struct.pack("<I", 16) + stereo
-            + b"data" + struct.pack("<I", 4) + b"\x00" * 4
-        )
-        wav_decode(b"RIFF" + struct.pack("<I", len(bad)) + bad)
-    with pytest.raises(ValueError, match="16-bit"):
-        eight = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-        bad = (
-            b"WAVE" + b"fmt " + struct.pack("<I", 16) + eight
-            + b"data" + struct.pack("<I", 4) + b"\x00" * 4
-        )
-        wav_decode(b"RIFF" + struct.pack("<I", len(bad)) + bad)
-    with pytest.raises(ValueError, match="truncated|past end"):
-        wav_decode(buf[:-10])
-    with pytest.raises(ValueError, match="int16"):
-        wav_encode(s.astype(np.float64))
-
-
-def test_wav_decimate_and_stats_formulas():
-    """Integer block-mean decimation (numpy floor semantics, negatives
-    included) and the shared clip-stats formula on known vectors."""
-    from lasutility_spark.gridlib.wav import audio_stats, decimate_mean
-
-    s = np.array([-7, -7, -7, -7, 3, 3, 3, 4, 9], dtype=np.int16)
-    out = decimate_mean(s, 4)
-    # (-28)//4 = -7 ; 13//4 = 3 (floor); trailing remainder dropped
-    assert np.array_equal(out, np.array([-7, 3], dtype=np.int16))
-
-    st = audio_stats(np.array([1, -1, 2, 0, -3], dtype=np.int16))
-    # crossings: 1->-1, -1->2, 2->0 is not (0 counts as >=0), 0->-3
-    assert st == {
-        "n_samples": 5, "peak": 3, "sumsq": 1 + 1 + 4 + 0 + 9,
-        "zero_crossings": 3,
-    }
-    assert audio_stats(np.array([], dtype=np.int16))["peak"] == 0
-
-
-def test_datagen_audio_oracle_independent_of_codec():
-    """The audio side-table stats come from the SOURCE samples; decoding
-    the emitted WAV bytes must reproduce them exactly (m3 pattern)."""
-    from lasutility_spark import datagen
-    from lasutility_spark.gridlib.wav import audio_stats, decimate_mean, wav_decode
-
-    names = datagen.tile_names(2)
-    clips, stats, rstats = datagen.gen_audio_tables(names)
-    assert len(clips) == len(stats) == len(rstats) == 2
-    for i in range(2):
-        samples, rate = wav_decode(bytes(clips["bytes"][i]))
-        assert rate == datagen.AUDIO_RATE
-        got = audio_stats(samples)
-        row = stats.iloc[i]
-        assert got["n_samples"] == row["n_samples"] == 128 * 128
-        assert got["peak"] == row["peak"]
-        assert got["sumsq"] == row["sumsq"]
-        assert got["zero_crossings"] == row["zero_crossings"]
-        # clips must actually differ and actually oscillate
-        assert row["zero_crossings"] > 0
-        rrow = rstats.iloc[i]
-        rgot = audio_stats(decimate_mean(samples, datagen.AUDIO_DECIMATE))
-        assert rgot["sumsq"] == rrow["sumsq"]
-        assert rrow["sample_rate"] == datagen.AUDIO_RATE // datagen.AUDIO_DECIMATE
-    assert stats["sumsq"][0] != stats["sumsq"][1]
+def test_ensure_images_table_reuses_v8_cache(tmp_path):
+    """A cache carrying the ``_SUCCESS_v8`` marker — including one written
+    before the media side tables were dropped — is returned as is, with
+    nothing regenerated."""
+    out = tmp_path / "images_n9"
+    out.mkdir()
+    (out / "_SUCCESS_v8").touch()
+    (out / "audio.parquet").write_bytes(b"stale")
+    assert ensure_images_table(0.001, base_dir=str(tmp_path)) == str(out)
+    assert sorted(p.name for p in out.iterdir()) == ["_SUCCESS_v8", "audio.parquet"]

@@ -359,50 +359,6 @@ def test_scanlocal_q1_matches_fused(spark, images_dir):
     assert parts == a
 
 
-def test_packed_shuffle_matches_row_shuffle(spark, images_dir):
-    """q1b packed shuffle (uint8 offsets + uint16 png quantiles through
-    the exchange) is byte-identical to the row shuffle — both pipelines
-    A and B, at any partition count — and moves >=2x fewer payload bytes
-    per point."""
-    from pyspark.sql import functions as F
-
-    images = pts.read_images(spark, images_dir)
-
-    def rows(df):
-        return {
-            r["image_id"]: (
-                bytes(r["bytes"]), r["n_points"], r["n_triangles"],
-                r["phash"], r["filled_cells"], r["a2_filled_cells"],
-            )
-            for r in df.collect()
-        }
-
-    packed = pts.decode_points_packed(images)
-    a = rows(tin_stage.rasterize_tin_tiles(
-        pts.decode_points(images), px=32, num_partitions=4))
-    b = rows(tin_stage.rasterize_tin_tiles_packed(packed, px=32))
-    assert a == b and len(a) == 9
-    c = rows(tin_stage.rasterize_tin_tiles_packed(packed.repartition(7), px=32))
-    assert a == c
-    # pipeline B (A2 ground-max plane + TIN backfill) parity
-    d = rows(tin_stage.rasterize_tin_tiles(
-        pts.decode_points(images), px=32, num_partitions=3,
-        ground_max_first=True))
-    e = rows(tin_stage.rasterize_tin_tiles_packed(
-        packed, px=32, ground_max_first=True))
-    assert d == e
-
-    # shuffle payload: raw row bytes (x,y,z doubles + cls) vs packed
-    # blobs (+12 B/row key+px overhead) — the >=2x VERDICT criterion,
-    # conservatively ignoring the extra per-row UnsafeRow padding the
-    # row path also pays
-    n_points = pts.decode_points(images).count()
-    packed_bytes = packed.select(
-        (F.sum(F.length("rc") + F.length("qz")) + F.count("*") * 12).alias("b")
-    ).collect()[0]["b"]
-    assert packed_bytes * 2 <= n_points * 25
-
-
 def test_ann_topk_matmul_matches_sql(spark):
     """Scale-path brute-force ANN (Arrow matmul + per-batch local top-k)
     is row-identical to the SQL form that queries() ships — same
@@ -564,37 +520,6 @@ def test_minhash_slim_vs_fat_shuffle_bytes(spark, monkeypatch):
     )
     assert slim_raw * 2 <= fat_raw, (
         f"raw row width {slim_raw} vs {fat_raw} — expected >=2x reduction"
-    )
-
-
-def test_packed_shuffle_measured_exchange_bytes(spark, images_dir):
-    """Measured (SQL-metrics) 'shuffle bytes written' for the q1b packed
-    path vs the row path: the packed groupBy exchange must move <= half
-    the bytes end-to-end.  Complements the schema-math assertion in
-    test_packed_shuffle_matches_row_shuffle with the engine's own
-    runtime metrics (VERDICT r04 ask #3)."""
-    from lasutility_spark.engine import points as pts
-    from lasutility_spark.engine import tin_stage
-
-    images = pts.read_images(spark, images_dir)
-
-    n0 = _n_execs(spark)
-    n_row = tin_stage.rasterize_tin_tiles(
-        pts.decode_points(images), px=32, num_partitions=4
-    ).count()
-    row_bytes = _exchange_bytes_since(spark, n0)
-
-    n0 = _n_execs(spark)
-    n_packed = tin_stage.rasterize_tin_tiles_packed(
-        pts.decode_points_packed(images), px=32
-    ).count()
-    packed_bytes = _exchange_bytes_since(spark, n0)
-
-    assert n_row == n_packed == 9
-    assert row_bytes > 0 and packed_bytes > 0
-    assert packed_bytes * 2 <= row_bytes, (
-        f"packed exchange {packed_bytes:.0f} B vs row {row_bytes:.0f} B — "
-        "expected >=2x measured reduction"
     )
 
 

@@ -16,6 +16,18 @@ from lasutility_spark.gridlib.shp import read_dbf_column, read_shapefile
 from lasutility_spark.gridlib import wkb
 from lasutility_spark.gridlib.tilenamer import cell_id as cid, tile_decode
 
+# LAS 1.4 POINT14 core record (formats 6-10), 30 bytes
+_POINT14 = struct.Struct("<3iHBBBBhHd")
+
+
+def _pack_point14(qx, qy, qz, intensity, ret, nret, flags6, channel,
+                  cls, user, angle, psid, gps) -> bytes:
+    b14 = (ret & 0x0F) | ((nret & 0x0F) << 4)
+    b15 = (flags6 & 0x0F) | ((channel & 0x03) << 4) | ((flags6 & 0x30) << 2)
+    return _POINT14.pack(qx, qy, qz, intensity, b14, b15, cls, user,
+                         angle, psid, gps)
+
+
 FIXTURE_DIR = (
     "/root/reference/LasUtility.Tests/TestFiles/RasteriserEvenOdd/"
     "AddShapefileAndSave/Input"
@@ -335,6 +347,50 @@ def test_laz_chunk_plan_rejects_point14():
     struct.pack_into("<H", d, off, 10)
     with pytest.raises(ValueError, match="POINT14"):
         laz.laz_chunk_plan(bytes(d))
+    with pytest.raises(ValueError, match="POINT14"):
+        laz.read_laz(bytes(d))
+
+
+def test_laz_zero_chunk_size_is_refused_not_a_hang():
+    """A compressor-2 laszip VLR declaring chunk_size 0, with the
+    chunk-table offset an interrupted writer leaves at -1, is refused
+    instead of walking zero-point chunks forever; write_laz refuses a
+    non-positive chunk_size the same way.  A 5 s alarm turns a hang
+    into a failure."""
+    import signal
+
+    from lasutility_spark.gridlib import laz
+    from lasutility_spark.gridlib.las import read_header
+
+    rng = np.random.RandomState(23)
+    n = 10
+    x, y, z = 380000 + rng.rand(n), 6666000 + rng.rand(n), rng.rand(n)
+    cls = np.full(n, 2, np.uint8)
+    d = bytearray(laz.write_laz(x, y, z, cls))
+    h = read_header(bytes(d))
+    pos = h["header_size"]
+    for _ in range(h["n_vlrs"]):
+        rid, rlen = struct.unpack_from("<HH", d, pos + 18)
+        if rid == laz.LASZIP_VLR_RECORD_ID:
+            struct.pack_into("<I", d, pos + 54 + 12, 0)  # chunk_size
+        pos += 54 + rlen
+    struct.pack_into("<q", d, h["offset_to_points"], -1)  # chunk table
+
+    def hang(_signum, _frame):
+        raise TimeoutError("LAZ chunk loop did not return")
+
+    old = signal.signal(signal.SIGALRM, hang)
+    signal.alarm(5)
+    try:
+        for read in (laz.laz_chunk_plan, laz.read_laz):
+            with pytest.raises(ValueError, match="chunk_size 0"):
+                read(bytes(d))
+        for chunk_size in (0, -1):
+            with pytest.raises(ValueError, match="chunk_size must be positive"):
+                laz.write_laz(x, y, z, cls, chunk_size=chunk_size)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
 
 
 def test_laz_source_reads_written_file(spark, tmp_path):
@@ -383,55 +439,6 @@ def test_laz_chunked_source_parallel_decode(spark, tmp_path):
     assert got == want
 
 
-def test_laz14_point14_roundtrip_multichunk():
-    """LAS 1.4 format-6 POINT14 layered codec (compressor 3): synthetic
-    multi-chunk file round-trips exactly — quantized coordinates,
-    classes, gps times, and all four scanner-channel contexts
-    (VERDICT r04 #5).  WAVEPACKET items stay a ValueError."""
-    from lasutility_spark.gridlib import laz, laz14
-
-    rng = np.random.RandomState(7)
-    n = 9000
-    x = 385000 + np.cumsum(rng.normal(0, 0.8, n))
-    y = 6672000 + np.cumsum(rng.normal(0, 0.8, n))
-    z = 100 + np.cumsum(rng.normal(0, 0.05, n))
-    cls = rng.choice([2, 5, 6], n).astype(np.uint8)
-    gps = 300000.0 + np.cumsum(rng.uniform(1e-6, 1e-4, n))
-    chan = rng.choice([0, 1, 2, 3], n, p=[0.7, 0.1, 0.1, 0.1]).astype(np.uint8)
-
-    blob = laz14.write_laz14(
-        x, y, z, cls, gps_time=gps, channel=chan, chunk_size=2000
-    )
-    assert len(blob) < n * 30  # actually compresses
-    h, x2, y2, z2, c2 = laz14.read_laz14(blob)
-    assert h["version"] == (1, 4) and h["point_count"] == n
-    assert h["legacy_count"] == 0  # formats 6+ zero the legacy field
-    sx = h["scale"][0]
-    assert np.allclose(x2, x, atol=sx) and np.allclose(y2, y, atol=sx)
-    assert np.allclose(z2, z, atol=sx)
-    assert np.array_equal(c2, cls)
-    assert np.array_equal(h["_channel"], chan)
-    assert np.array_equal(h["_gps_time"], gps)  # bit-exact doubles
-    # the generic entry point dispatches by item type
-    h3, x3, _y3, _z3, c3 = laz.read_laz(blob)
-    assert np.array_equal(x3, x2) and np.array_equal(c3, c2)
-
-    # native laszip POINT14 streams are REFUSED (no silent garbage):
-    # strip the writer tag from the VLR description
-    d = bytearray(blob)
-    off = d.index(laz14._WRITER_TAG)
-    d[off : off + len(laz14._WRITER_TAG)] = b"\0" * len(laz14._WRITER_TAG)
-    with pytest.raises(ValueError, match="native laszip POINT14"):
-        laz14.read_laz14(bytes(d))
-
-    # WAVEPACKET refusal retained
-    d = bytearray(blob)
-    off = d.index(struct.pack("<3H", laz.ITEM_POINT14, 30, 3))
-    struct.pack_into("<H", d, off, laz14.ITEM_WAVEPACKET14)
-    with pytest.raises(ValueError, match="WAVEPACKET"):
-        laz14.read_laz14(bytes(d))
-
-
 def test_laz_extra_bytes_roundtrip():
     """BYTE v2 (extra-bytes) item: (n, k) uint8 payload rides every
     record through the compressed stream and round-trips exactly,
@@ -460,7 +467,7 @@ def test_las14_uncompressed_formats_6_to_8():
     """Uncompressed LAS 1.4 point formats 6-8 read through read_las:
     classification at byte 16, gps/channel/returns attached; an
     unknown format id refuses."""
-    from lasutility_spark.gridlib import las, laz14
+    from lasutility_spark.gridlib import las
 
     rng = np.random.RandomState(5)
     n = 80
@@ -472,7 +479,7 @@ def test_las14_uncompressed_formats_6_to_8():
     ox, oy, oz = (float(np.floor(v.min())) for v in (x, y, z))
     for fmt, pad in ((6, 0), (7, 6), (8, 8)):
         recs = b"".join(
-            laz14._pack_point14(
+            _pack_point14(
                 int(round((x[i] - ox) / 0.01)), int(round((y[i] - oy) / 0.01)),
                 int(round((z[i] - oz) / 0.01)), 7, 2, 3, 1, i % 4,
                 int(cls[i]), 9, -42, 17, float(gps[i]),
@@ -505,7 +512,7 @@ def test_las_uncompressed_waveform_formats_4_5_9_10():
     descriptor trailer (LAS 1.4 spec: desc u1, offset u8, size u4,
     return-loc f4, Xt/Yt/Zt f4) is surfaced; the external waveform
     payload is out of scope by design."""
-    from lasutility_spark.gridlib import las, laz14
+    from lasutility_spark.gridlib import las
 
     rng = np.random.RandomState(9)
     n = 60
@@ -539,12 +546,12 @@ def test_las_uncompressed_waveform_formats_4_5_9_10():
         5: (2, [legacy_core(i) + struct.pack("<d", gps[i])
                 + struct.pack("<3H", 1, 2, 3) + wave_block(i)
                 for i in range(n)]),
-        9: (4, [laz14._pack_point14(
+        9: (4, [_pack_point14(
                 int(round((x[i] - ox) / 0.01)), int(round((y[i] - oy) / 0.01)),
                 int(round((z[i] - oz) / 0.01)), 30, 1, 1, 0, 0,
                 int(cls[i]), 0, -50, 1, float(gps[i])) + wave_block(i)
                 for i in range(n)]),
-        10: (4, [laz14._pack_point14(
+        10: (4, [_pack_point14(
                 int(round((x[i] - ox) / 0.01)), int(round((y[i] - oy) / 0.01)),
                 int(round((z[i] - oz) / 0.01)), 30, 1, 1, 0, 0,
                 int(cls[i]), 0, -50, 1, float(gps[i]))
@@ -576,8 +583,8 @@ def test_las_uncompressed_waveform_formats_4_5_9_10():
 
 
 def test_laz_single_and_zero_point_files():
-    """Degenerate classic-item LAZ sizes round-trip (the laz14 twin of
-    this test already existed; the classic path crashed on 0 points)."""
+    """Degenerate classic-item LAZ sizes round-trip (the classic path
+    once crashed on 0 points)."""
     from lasutility_spark.gridlib import laz
 
     blob1 = laz.write_laz(
@@ -692,48 +699,3 @@ def test_laz_wavepacket_through_distributed_source(spark, tmp_path):
     assert len(rows) == n
     assert sorted(r["cls"] for r in rows) == sorted(cls.tolist())
     assert abs(min(r["x"] for r in rows) - x.min()) < 0.01
-
-
-def test_laz14_through_distributed_source(spark, tmp_path):
-    """A written format-6 POINT14 file flows through the distributed
-    sources.read_las_points scan (read_laz dispatches by item type), so
-    the engine ingests LAS 1.4 clouds with zero caller changes."""
-    from lasutility_spark.engine import sources
-    from lasutility_spark.gridlib import laz14
-
-    rng = np.random.RandomState(23)
-    n = 400
-    x = 385000 + rng.rand(n) * 100
-    y = 6672000 + rng.rand(n) * 100
-    z = 100 + rng.rand(n)
-    cls = rng.choice([2, 5], n).astype(np.uint8)
-    p = str(tmp_path / "pts14.laz")
-    with open(p, "wb") as f:
-        f.write(laz14.write_laz14(x, y, z, cls, chunk_size=150))
-    df = sources.read_las_points(spark, [p])
-    rows = df.collect()
-    assert len(rows) == n
-    got_cls = sorted(r["cls"] for r in rows)
-    assert got_cls == sorted(cls.tolist())
-    assert abs(min(r["x"] for r in rows) - x.min()) < 0.01
-
-
-def test_laz14_single_and_zero_point_files():
-    """Degenerate sizes: a 1-point file (raw-only chunk, all layers
-    empty) and a 0-point file (no chunks, empty chunk table) both
-    round-trip."""
-    from lasutility_spark.gridlib import laz14
-
-    blob = laz14.write_laz14(
-        np.array([385000.5]), np.array([6672000.5]), np.array([101.25]),
-        np.array([7], np.uint8), gps_time=np.array([123.5]),
-    )
-    h, x, y, z, c = laz14.read_laz14(blob)
-    assert len(x) == 1 and abs(x[0] - 385000.5) < 0.01
-    assert c[0] == 7 and h["_gps_time"][0] == 123.5
-
-    blob0 = laz14.write_laz14(
-        np.array([]), np.array([]), np.array([]), np.array([], np.uint8)
-    )
-    h0, x0, _y0, _z0, c0 = laz14.read_laz14(blob0)
-    assert len(x0) == 0 and len(c0) == 0 and h0["point_count"] == 0
