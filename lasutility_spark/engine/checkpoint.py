@@ -1,4 +1,4 @@
-"""Checkpoint-resumable stage tables with per-partition lineage + metrics.
+"""Checkpoint-resumable stage tables with per-file lineage + metrics.
 
 The reference checkpoints a whole VoxelGrid as one MessagePack blob with
 an atomic .tmp rename (S11, VoxelGrid/VoxelGrid.cs:347-366).  The engine
@@ -9,10 +9,12 @@ plus two Parquet SIDE TABLES and a small JSON manifest:
   consumed entirely by Spark jobs; at the 100 TB / ~10^9-tile target the
   key set alone is GBs, so it must never materialize on the driver
   (neither as a collect() nor as a JSON array),
-- ``_lineage/``  per-partition row counts and key ranges (the A8-style
-  before/after metrics roll up here),
+- ``_lineage/``  one row per non-empty data file: its row count and key
+  range, read from the file's parquet footer right after the write (the
+  Iceberg manifest model — no Spark job re-reads the data for them),
 - ``_manifest.json``  lineage header only: stage name, input paths,
-  parameter hash, aggregate counts — O(1) regardless of scale,
+  parameter hash, aggregate counts (summed from the same footers) —
+  O(1) regardless of scale,
 - a _SUCCESS marker written last (atomic completion point).
 
 Resume = Spark anti-join of the wanted keys against ``_keys/`` — only
@@ -29,10 +31,15 @@ import hashlib
 import json
 import logging
 import os
+import shutil
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
+from pyspark.sql.types import StructType
 
 log = logging.getLogger(__name__)
 
@@ -56,23 +63,19 @@ def write_stage(
     params: dict | None = None,
     key: str = "cell_id",
 ) -> dict:
-    """Write a stage table + side tables + manifest; returns the manifest."""
+    """Write a stage table + side tables + manifest; returns the manifest.
+
+    Two Spark actions: the data write, then the ``_keys/`` write (one
+    ``distinct()`` over the written key column).  Row and key counts and
+    the ``_lineage/`` rows come from the parquet footers of the files
+    just written."""
     params = params or {}
     df.write.mode("overwrite").parquet(path)
-
     spark = df.sparkSession
-    out = spark.read.parquet(path)
-    lineage = out.groupBy(F.spark_partition_id().alias("pid")).agg(
-        F.count("*").alias("rows"),
-        F.min(key).alias("min_key"),
-        F.max(key).alias("max_key"),
-    )
-    lineage.write.mode("overwrite").parquet(os.path.join(path, LINEAGE_DIR))
-    out.select(key).distinct().write.mode("overwrite").parquet(
-        os.path.join(path, KEYS_DIR)
-    )
-    row_count = int(out.count())
-    n_keys = int(spark.read.parquet(os.path.join(path, KEYS_DIR)).count())
+    files = sorted(_data_files(path))
+    row_count, lin = _footer_lineage(path, files, key)
+    n_keys = _write_keys(spark, path, files, df.schema[key], "overwrite")
+    _write_lineage(path, lin, df.schema[key].dataType, "overwrite")
     manifest = {
         "stage": stage,
         "inputs": inputs,
@@ -81,9 +84,7 @@ def write_stage(
         "written_at": time.time(),
         "row_count": row_count,
         "n_completed_keys": n_keys,
-        "n_partitions": int(
-            spark.read.parquet(os.path.join(path, LINEAGE_DIR)).count()
-        ),
+        "n_partitions": len(lin),
         "keys_table": KEYS_DIR,
         "lineage_table": LINEAGE_DIR,
         # Iceberg-style snapshot log: one entry per commit (initial write
@@ -96,6 +97,61 @@ def write_stage(
     _write_manifest(path, manifest)
     open(os.path.join(path, SUCCESS), "w").close()  # atomic completion (S11)
     return manifest
+
+
+def _footer_lineage(path: str, files: list[str], key: str) -> tuple[int, list[tuple]]:
+    """Total rows of ``files`` and one lineage row (pid, rows, min_key,
+    max_key) per non-empty file, read from their parquet footers (the
+    Iceberg manifest model: per-file counts and column bounds).  ``pid``
+    is the file's position among the commit's non-empty files."""
+    total, lin = 0, []
+    for f in files:
+        md = pq.ParquetFile(os.path.join(path, f)).metadata
+        if md.num_rows == 0:
+            continue
+        ci = [md.schema.column(i).name for i in range(md.num_columns)].index(key)
+        lo = hi = None
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(ci).statistics
+            if st is None or not st.has_min_max:
+                continue
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        total += md.num_rows
+        lin.append((len(lin), md.num_rows, lo, hi))
+    return total, lin
+
+
+def _write_keys(spark: SparkSession, path: str, files: list[str], key_field,
+                mode: str) -> int:
+    """Write the distinct keys of the data ``files`` to ``_keys/``;
+    returns how many were written (from the new files' footers).  The
+    read is given its schema, so no schema-inference job runs."""
+    keys_dir = os.path.join(path, KEYS_DIR)
+    before = _data_files(keys_dir) if mode == "append" else set()
+    spark.read.schema(StructType([key_field])).parquet(
+        *[os.path.join(path, f) for f in files]
+    ).distinct().write.mode(mode).parquet(keys_dir)
+    new = sorted(_data_files(keys_dir) - before)
+    return _footer_lineage(keys_dir, new, key_field.name)[0]
+
+
+def _write_lineage(path: str, lin: list[tuple], key_type, mode: str) -> None:
+    """Write lineage rows as one parquet file from the driver: they are
+    O(data files), like an Iceberg manifest, so no Spark job is needed."""
+    lin_dir = os.path.join(path, LINEAGE_DIR)
+    if mode == "overwrite":
+        shutil.rmtree(lin_dir, ignore_errors=True)
+    os.makedirs(lin_dir, exist_ok=True)
+    pid, rows, lo, hi = zip(*lin) if lin else ((), (), (), ())
+    kt = to_arrow_type(key_type)
+    table = pa.table({
+        "pid": pa.array(pid, pa.int32()),
+        "rows": pa.array(rows, pa.int64()),
+        "min_key": pa.array(lo, kt),
+        "max_key": pa.array(hi, kt),
+    })
+    pq.write_table(table, os.path.join(lin_dir, f"part-{uuid.uuid4().hex}.parquet"))
 
 
 def _write_manifest(path: str, manifest: dict) -> None:
@@ -127,12 +183,16 @@ def load_manifest(path: str) -> dict | None:
 
 
 def completed_keys(spark: SparkSession, path: str) -> DataFrame:
-    """The checkpoint's completed key set as a DataFrame (never collected)."""
-    return spark.read.parquet(os.path.join(path, KEYS_DIR))
+    """The checkpoint's completed key set as a DataFrame (never collected).
+    Its schema comes from one file's footer, so no inference job runs."""
+    keys_dir = os.path.join(path, KEYS_DIR)
+    first = os.path.join(keys_dir, min(_data_files(keys_dir)))
+    schema = from_arrow_schema(pq.read_schema(first))
+    return spark.read.schema(schema).parquet(keys_dir)
 
 
 def lineage(spark: SparkSession, path: str) -> DataFrame:
-    """Per-partition lineage metrics (pid, rows, min_key, max_key)."""
+    """Per-file lineage metrics (pid, rows, min_key, max_key)."""
     return spark.read.parquet(os.path.join(path, LINEAGE_DIR))
 
 
@@ -182,8 +242,6 @@ def _compact_side_table(spark: SparkSession, path: str, subdir: str) -> None:
     checkpoint that is recomputed — never silently wrong."""
     full = os.path.join(path, subdir)
     nxt = full + ".next"
-    import shutil
-
     if os.path.exists(nxt):
         shutil.rmtree(nxt)
     spark.read.parquet(full).coalesce(4).write.parquet(nxt)
@@ -230,40 +288,32 @@ def resume_stage(
     if m is not None and todo.isEmpty():
         return spark.read.parquet(path)
     fresh = compute(todo)
+    # the stage table has fresh's schema: giving it saves an inference job
+    table = spark.read.schema(fresh.schema)
     if m is None:
         # first write (or invalidated checkpoint): full stage write via
         # the .next + atomic-rename protocol
         write_stage(fresh, path + ".next", stage, inputs, params, key)
-        import shutil
-
         if os.path.exists(path):
             shutil.rmtree(path)
         os.rename(path + ".next", path)
-        return spark.read.parquet(path)
+        return table.parquet(path)
 
     # incremental append commit
     os.remove(os.path.join(path, SUCCESS))  # invalidate during mutation
     before = _data_files(path)
     fresh.write.mode("append").parquet(path)
     new_files = sorted(_data_files(path) - before)
-    if not new_files:
+    d_rows, lin = _footer_lineage(path, new_files, key)
+    if not d_rows:
         # compute(todo) produced zero rows (valid: e.g. every pending key
-        # filtered out upstream) — Spark wrote no part files, so there is
-        # no delta to commit.  Restore the marker instead of tearing the
-        # checkpoint on an empty-but-valid append.
+        # filtered out upstream) — there is no delta to commit.  Restore
+        # the marker instead of tearing the checkpoint on an
+        # empty-but-valid append.
         open(os.path.join(path, SUCCESS), "w").close()
-        return spark.read.parquet(path)
-    delta = spark.read.parquet(*[os.path.join(path, f) for f in new_files])
-    delta.select(key).distinct().write.mode("append").parquet(
-        os.path.join(path, KEYS_DIR)
-    )
-    delta.groupBy(F.spark_partition_id().alias("pid")).agg(
-        F.count("*").alias("rows"),
-        F.min(key).alias("min_key"),
-        F.max(key).alias("max_key"),
-    ).write.mode("append").parquet(os.path.join(path, LINEAGE_DIR))
-    d_rows = int(delta.count())
-    d_keys = int(delta.select(key).distinct().count())
+        return table.parquet(path)
+    d_keys = _write_keys(spark, path, new_files, fresh.schema[key], "append")
+    _write_lineage(path, lin, fresh.schema[key].dataType, "append")
     snapshots = list(m.get("snapshots", []))
     snapshots.append(
         {"snapshot": len(snapshots) + 1, "written_at": time.time(),
@@ -279,12 +329,10 @@ def resume_stage(
     m.update(
         row_count=m["row_count"] + d_rows,
         n_completed_keys=m["n_completed_keys"] + d_keys,
-        n_partitions=int(
-            spark.read.parquet(os.path.join(path, LINEAGE_DIR)).count()
-        ),
+        n_partitions=m["n_partitions"] + len(lin),
         written_at=time.time(),
         snapshots=snapshots,
     )
     _write_manifest(path, m)
     open(os.path.join(path, SUCCESS), "w").close()
-    return spark.read.parquet(path)
+    return table.parquet(path)

@@ -22,10 +22,6 @@ from ..gridlib.png import png16_to_dem
 POINTS_SCHEMA = "x double, y double, z double, cls smallint"
 # smallint, not tinyint: LAS 1.4 (point formats 6+) classification is the
 # full 0-255 byte, and a tinyint column wraps 128..255 to negatives
-DECODED_SCHEMA = (
-    "image_id string, minx int, miny int, cellsize double, dem binary, "
-    "w int, h int"
-)
 
 
 def _decode_points_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,20 +1,17 @@
-"""File-format sources: LAS point clouds and shapefiles -> DataFrames.
+"""File-format sources: LAS/LAZ point clouds -> DataFrames.
 
-The reference's inputs are LAZ/LAS point streams (LAS/LasZipNetReader.cs)
-and NLS shapefiles (Shapefile/RasteriserEvenOdd.cs:28).  Here:
-
-- LAS files scan DISTRIBUTED: the path list becomes a one-column table
-  and each task parses its files with the vectorized numpy reader
-  (gridlib/las.py) inside ``mapInPandas`` — at 100 TB the tile->file
-  mapping shards across executors and no point ever touches the driver.
-- Shapefiles are dimension-sized (the largest NLS fixture is ~2 MB /
-  7k features), so one driver-side parse feeding a broadcast-able
-  DataFrame is the right physical plan; for many files, parse inside
-  ``mapInPandas`` over a path table exactly like LAS.
+The reference's inputs are LAZ/LAS point streams (LAS/LasZipNetReader.cs).
+LAS files scan DISTRIBUTED: the driver bins the path list into one file
+list per task, and each task parses its files with the vectorized numpy
+reader (gridlib/las.py) inside ``mapInPandas`` — at 100 TB the
+tile->file mapping shards across executors and no point ever touches
+the driver.  Parquet splits (``parquet_row_group_splits``) follow the
+same pattern with row groups as the unit.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -22,50 +19,43 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..gridlib.las import read_las_file
 from ..gridlib.laz import read_laz_file
-from ..gridlib.shp import read_shapefile
 from .points import POINTS_SCHEMA
-
-FEATURE_SCHEMA = "feature_id long, geom_wkb binary, luokka long, seq long"
 
 
 def read_las_points(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """LAS/LAZ files -> points(x, y, z, cls), one scan task per file.
+    """LAS/LAZ files -> points(x, y, z, cls), one scan wave.
+
+    The files are binned into ``min(len(paths), defaultParallelism)``
+    file lists, largest file first into the lightest bin, so bytes
+    balance across tasks.  Each list is one row (column ``path``) of its
+    own ``parallelize`` slice: the scan is one task per bin and needs no
+    exchange to spread the rows.
 
     Compressed .laz files route through the pure-Python LASzip
     decompressor (gridlib/laz.py); at scale each LAZ *chunk* is an
-    independently decodable unit, so a large file shards by chunk-table
-    offsets the same way this shards by file."""
-    path_df = spark.createDataFrame([(p,) for p in paths], "path string")
-    path_df = path_df.repartition(max(1, min(len(paths), 256)))
+    independently decodable unit (see :func:`read_laz_points_chunked`)."""
+    n = max(1, min(len(paths), spark.sparkContext.defaultParallelism))
+    size = {p: os.path.getsize(p) for p in paths}
+    bins: list[list[str]] = [[] for _ in range(n)]
+    load = [0] * n
+    for p in sorted(paths, key=size.get, reverse=True):
+        i = load.index(min(load))
+        bins[i].append(p)
+        load[i] += size[p]
+    rdd = spark.sparkContext.parallelize([(b,) for b in bins], n)
+    path_df = spark.createDataFrame(rdd, "path array<string>")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for p in pdf["path"]:
-                reader = read_laz_file if p.endswith(".laz") else read_las_file
-                _h, x, y, z, cls = reader(p)
-                yield pd.DataFrame(
-                    {"x": x, "y": y, "z": z, "cls": cls.astype("int16")}
-                )
+            for files in pdf["path"]:
+                for p in files:
+                    reader = read_laz_file if p.endswith(".laz") else read_las_file
+                    _h, x, y, z, cls = reader(p)
+                    yield pd.DataFrame(
+                        {"x": x, "y": y, "z": z, "cls": cls.astype("int16")}
+                    )
 
     return path_df.mapInPandas(run, POINTS_SCHEMA)
-
-
-def read_shapefile_features(
-    spark: SparkSession, path: str, seq_offset: int = 0
-) -> DataFrame:
-    """One shapefile -> features(feature_id, geom_wkb, luokka, seq).
-
-    ``seq_offset`` shifts the scan-order ranks so several files keep the
-    reference's file-by-file overlay order (RasteriserEvenOdd.Tests.cs:
-    45-46 sorts filenames because overlap order matters)."""
-    pdf = read_shapefile(path)
-    if seq_offset:
-        pdf = pdf.assign(seq=pdf["seq"] + seq_offset)
-    rows = [
-        (int(r.feature_id), bytes(r.geom_wkb), int(r.luokka), int(r.seq))
-        for r in pdf.itertuples()
-    ]
-    return spark.createDataFrame(rows, FEATURE_SCHEMA)
 
 
 def read_laz_points_chunked(spark: SparkSession, path: str) -> DataFrame:
@@ -138,7 +128,6 @@ def parquet_row_group_splits(
     style) instead of living on the driver.
     """
     import glob
-    import os
 
     import pyarrow.parquet as pq
 

@@ -1,4 +1,4 @@
-"""Spatial partitioning: cell-id columns, range partitioning, salting.
+"""Spatial partitioning: cell-id columns and the hash exchange on them.
 
 The cell id (the H3/S2 analog, reference grammar Nls/TileNamer.cs) is a
 **native Spark column expression** — pure floor/mod arithmetic that stays
@@ -67,52 +67,14 @@ def cell_id_from_caption(size_north: int = 1000) -> Column:
 
 
 def repartition_by_cell(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Range-partition on cell_id so each applyInPandas group ~= one tile
-    and neighboring tiles co-locate (hierarchical prefixes stay sorted)."""
-    if num_partitions:
-        return df.repartitionByRange(num_partitions, "cell_id")
-    return df.repartitionByRange("cell_id")
+    """Hash-partition on cell_id so each applyInPandas group is one tile
+    and every tile's points meet in one task.
 
-
-def with_salted_cell(
-    df: DataFrame, size_north: int, sub_size_north: int, halo: float,
-    x: str = "x", y: str = "y",
-) -> DataFrame:
-    """Skew salting for per-tile kernels: re-key dense tiles at a finer
-    NLS level (the grammar is natively hierarchical, SURVEY.md §4) and
-    duplicate points within ``halo`` meters of a sub-tile edge into the
-    neighboring sub-tiles, so each sub-kernel triangulates with enough
-    context to match the unsalted raster in its interior window.
-
-    Implementation is pure DataFrame ops: a 3x3 neighbor-offset explode
-    filtered to the halo band — the classic spatial-join duplication step
-    (X5 analog).
-    """
-    se, sn = tn._snap_sizes(sub_size_north)
-    xs, ys = F.col(x), F.col(y)
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    df = df.withColumn("_off", F.explode(offs))
-    sub_x = xs + F.col("_off.dx") * F.lit(float(halo))
-    sub_y = ys + F.col("_off.dy") * F.lit(float(halo))
-    # the point belongs (possibly with halo shift) to this sub-cell iff the
-    # shifted position lands in a different sub-cell than unshifted ==> the
-    # point is within halo of that sub-cell
-    own = cell_id_col(xs, ys, sub_size_north)
-    shifted = cell_id_col(sub_x, sub_y, sub_size_north)
-    df = (
-        df.withColumn("sub_cell", shifted)
-        .withColumn("_own", own)
-        .filter(
-            (F.col("_off.dx") == 0) & (F.col("_off.dy") == 0)
-            | (F.col("sub_cell") != F.col("_own"))
-        )
-        .dropDuplicates(["sub_cell", x, y])
-        .drop("_off", "_own")
-    )
-    return df.withColumn("cell_id", cell_id_col(xs, ys, size_north))
+    ``repartition(n, "cell_id")`` needs no sampling pass over the input
+    (a range partitioner scans it twice to pick bounds), and it already
+    satisfies the ``groupBy(cell_id)`` distribution, so the grouped
+    kernel adds no second exchange.  ``n`` defaults to the cluster's
+    ``defaultParallelism``: an explicit count keeps AQE from coalescing
+    a few heavy tiles into one task."""
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, "cell_id")

@@ -2,12 +2,13 @@
 
 Spark shape (SURVEY.md §3.1):
 
-    images -> decode_points (mapInPandas) -> cell_id column (JVM expr)
-           -> repartitionByRange(cell_id) -> groupBy(cell_id)
+    points (mapInPandas source) -> cell_id column (JVM expr)
+           -> repartition(n, cell_id) -> groupBy(cell_id)
            -> applyInPandas(tin_kernel) -> DEM tile table (png16 + caption)
 
 The kernel body is gridlib (Delaunay + vectorized barycentric fill); the
-shuffle before applyInPandas is the only data movement.  Each output row
+hash exchange before applyInPandas is the only data movement, and it
+needs no sampling pass over the points (``tiling.repartition_by_cell``).  Each output row
 carries per-partition lineage metrics (n_points, n_triangles, filled /
 missing cell counts) — the checkpoint/resume contract (north rule).
 """
@@ -37,9 +38,6 @@ TILE_SCHEMA = (
     "caption string, phash long, n_points int, n_triangles int, "
     "filled_cells int, missing_cells int, a2_filled_cells int"
 )
-
-DSM_CLASSES = (topodb.CLS_LOW_VEGETATION, topodb.CLS_HIGH_VEGETATION)
-
 
 def _tile_kernel_factory(px: int, size_north: int, ground_max_first: bool):
     """Kernel: one tile's points -> one DEM tile row.
@@ -426,10 +424,3 @@ def rasterize_tin_tiles_skew(
     salted = subs.groupBy("cell_id").applyInPandas(merge_kernel, TILE_SCHEMA)
     return normal.unionByName(salted)
 
-
-def tile_metrics(tiles: DataFrame) -> DataFrame:
-    """Stage-level lineage metrics (north rule: per-partition row counts)."""
-    return tiles.select(
-        "cell_id", "image_id", "n_points", "n_triangles", "filled_cells",
-        "missing_cells",
-    )

@@ -9,7 +9,6 @@ keyed by (cell_id, row, col):
   (sort_array on struct sorts by first field = z, matching
   BinPoint.CompareTo, Bin.cs:51-54)
 - A5 highest-in-range:  max_by over class-filtered points
-- A6 heights-by-range:  filter projection
 - A7 neighborhood max:  radius self-join (range join on |dr|,|dc|<=r)
 - A8 backfill:          left join TIN surface + coalesce (tin_stage)
 - S14 surface export:   coalesce(surface_z, dem_z, nodata)
@@ -57,13 +56,6 @@ def highest_in_class_range(points: DataFrame, lo: int, hi: int) -> DataFrame:
     return f.groupBy(*CELL_KEYS).agg(
         F.max("z").alias("surface_z"),
         F.max_by("cls", F.struct("z", "cls")).alias("surface_cls"),
-    )
-
-
-def heights_in_class_range(points: DataFrame, lo: int, hi: int) -> DataFrame:
-    """A6 (VoxelGrid.cs:254-265)."""
-    return points.filter(F.col("cls").between(lo, hi)).select(
-        *CELL_KEYS, "z", "cls"
     )
 
 

@@ -89,8 +89,10 @@ def _build_and_load():
             return None
         fd, tmp = tempfile.mkstemp(suffix=".so", dir=cache_dir)
         os.close(fd)
-        c_src = os.path.join(cache_dir, f"_delaunay_{tag}.c")
-        with open(c_src, "wb") as f:
+        # private source copy per build: a shared path would be
+        # truncated by a concurrent build while cc reads it
+        fd, c_src = tempfile.mkstemp(suffix=".c", dir=cache_dir)
+        with os.fdopen(fd, "wb") as f:
             f.write(src)
         try:
             # -ffp-contract=off: no FMA contraction, so C results match the
@@ -110,6 +112,8 @@ def _build_and_load():
             except OSError:
                 pass
             return None
+        finally:
+            os.unlink(c_src)
     if not _owned_and_private(so_path):
         return None
     lib = ctypes.CDLL(so_path)

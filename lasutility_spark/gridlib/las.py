@@ -27,6 +27,7 @@ import struct
 import numpy as np
 
 _SIG = b"LASF"
+_MIN_HEADER = 227  # LAS 1.0-1.2 public header block
 
 # point record core layout (formats 0-3): X/Y/Z int32, intensity u2,
 # flags u1, classification u1, scan angle i1, user data u1, source u2
@@ -73,8 +74,21 @@ def read_header(data: bytes) -> dict:
     """LAS header bytes -> dict (the ILasFileReader surface + layout)."""
     if data[:4] != _SIG:
         raise ValueError("not a LAS file (bad signature)")
+    if len(data) < _MIN_HEADER:
+        raise ValueError(
+            f"truncated LAS header: {len(data)} bytes, need {_MIN_HEADER}"
+        )
     ver_major, ver_minor = data[24], data[25]
     header_size, offset_to_points = struct.unpack_from("<HI", data, 94)
+    # a point block that starts inside the header would decode header
+    # bytes as points, with no error
+    if header_size < _MIN_HEADER:
+        raise ValueError(f"LAS header_size {header_size} < {_MIN_HEADER}")
+    if offset_to_points < header_size:
+        raise ValueError(
+            f"LAS offset_to_points {offset_to_points} lies inside the "
+            f"{header_size}-byte header"
+        )
     n_vlrs, point_format, record_len = struct.unpack_from("<IBH", data, 100)
     legacy_count = struct.unpack_from("<I", data, 107)[0]
     sx, sy, sz, ox, oy, oz = struct.unpack_from("<6d", data, 131)

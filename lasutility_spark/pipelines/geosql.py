@@ -12,7 +12,7 @@ Operators covered (SURVEY.md §2 ids):
 - A2     ground DEM max(z)
 - A4/A5  per-cell descending rank / top-1 in class range
 - A6     class-range heights
-- A7     neighborhood local-max self-join
+- A7     neighborhood local-max, halo form across tile borders
 - S4     integer extent
 - S14    surface model coalesce
 - V2     class-map semi-join
@@ -139,28 +139,6 @@ def surface_model_sql(dialect: str, lo: int = 3, hi: int = 5) -> str:
              MAX(CASE WHEN cls = 2 THEN z END) AS dem_z
       FROM points GROUP BY 1, 2, 3
     ) t
-    """
-    )
-
-
-def neighborhood_max_sql(dialect: str, radius: int = 1, lo: int = 3, hi: int = 5) -> str:
-    """A7: strict local maxima over Chebyshev radius within each tile."""
-    base = f"""
-    SELECT {_CELL} AS cell_id, {_ROW} AS cell_row, {_COL} AS cell_col, MAX(z) AS zmax
-    FROM points WHERE cls BETWEEN {lo} AND {hi}
-    GROUP BY 1, 2, 3
-    """
-    return _with_points(
-        f"""
-    , cellmax AS ({base})
-    SELECT a.cell_id, a.cell_row, a.cell_col, a.zmax,
-           CAST((COUNT(CASE WHEN b.zmax >= a.zmax THEN 1 END) = 0) AS INT) AS is_local_max
-    FROM cellmax a
-    LEFT JOIN cellmax b
-      ON a.cell_id = b.cell_id
-     AND ABS(a.cell_row - b.cell_row) <= {radius} AND ABS(a.cell_col - b.cell_col) <= {radius}
-     AND NOT (a.cell_row = b.cell_row AND a.cell_col = b.cell_col)
-    GROUP BY a.cell_id, a.cell_row, a.cell_col, a.zmax
     """
     )
 

@@ -22,6 +22,19 @@ def test_checkpoint_write_and_resume(spark, tmp_path):
     lin = checkpoint.lineage(spark, path)
     assert all(r["rows"] >= 1 for r in lin.collect())
     assert m["n_partitions"] == lin.count()
+    # footer-derived counts agree with a scan of the written data, and
+    # each lineage row is exactly one data file's count and key range
+    assert m["row_count"] == spark.read.parquet(path).count() == sum(
+        r["rows"] for r in lin.collect()
+    )
+    per_file = (
+        spark.read.parquet(path)
+        .groupBy(F.input_file_name())
+        .agg(F.count("*"), F.min("cell_id"), F.max("cell_id"))
+    )
+    assert sorted(tuple(r)[1:] for r in per_file.collect()) == sorted(
+        (r["rows"], r["min_key"], r["max_key"]) for r in lin.collect()
+    )
     assert os.path.exists(os.path.join(path, checkpoint.SUCCESS))
     # the _keys/_lineage side tables must NOT pollute the data read
     assert set(spark.read.parquet(path).columns) == {"cell_id", "v"}
@@ -53,6 +66,73 @@ def test_checkpoint_write_and_resume(spark, tmp_path):
     )
     assert calls == [[4, 5]]
     assert out2.count() == 5
+
+
+def test_checkpoint_empty_write_then_resume(spark, tmp_path):
+    """An empty stage commits zero rows, keys and lineage rows (Spark's
+    empty part file is no lineage row); a resume onto it appends the
+    computed keys with matching counts."""
+    path = str(tmp_path / "empty_write")
+    empty = spark.createDataFrame([], "cell_id long, v long")
+    m = checkpoint.write_stage(empty, path, "tin", ["in.parquet"], {"px": 64})
+    lin = checkpoint.lineage(spark, path)
+    assert (
+        m["row_count"] == m["n_completed_keys"] == m["n_partitions"]
+        == lin.count() == 0
+    )
+    assert checkpoint.completed_keys(spark, path).count() == 0
+
+    wanted = spark.createDataFrame(pd.DataFrame({"cell_id": [1, 2, 3]}))
+    out = checkpoint.resume_stage(
+        spark, wanted, path,
+        lambda todo: todo.select("cell_id", (F.col("cell_id") * 10).alias("v")),
+        "tin", ["in.parquet"], {"px": 64},
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 10), (2, 20), (3, 30)]
+    m = checkpoint.load_manifest(path)
+    lin = checkpoint.lineage(spark, path)
+    assert m["row_count"] == m["n_completed_keys"] == 3
+    assert m["n_partitions"] == lin.count() >= 1
+    assert sum(r["rows"] for r in lin.collect()) == 3
+    keys = checkpoint.completed_keys(spark, path)
+    assert sorted(r["cell_id"] for r in keys.collect()) == [1, 2, 3]
+
+
+def _spark_jobs(spark, group, fn):
+    """Number of Spark jobs ``fn()`` runs, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_commit_job_budget(spark, tmp_path):
+    """A commit is the data write plus one distinct() for _keys/; counts
+    and lineage come from parquet footers, not from re-reading jobs."""
+    path = str(tmp_path / "budget_stage")
+    df = spark.createDataFrame(
+        pd.DataFrame({"cell_id": [1, 2, 3], "v": [10, 20, 30]})
+    )
+    n_write = _spark_jobs(
+        spark, "ckpt-budget-write",
+        lambda: checkpoint.write_stage(df, path, "tin", ["in.parquet"], {"px": 64}),
+    )
+    wanted = spark.createDataFrame(pd.DataFrame({"cell_id": [1, 2, 3, 4, 5]}))
+    extra = spark.createDataFrame(pd.DataFrame({"cell_id": [4, 5], "v": [40, 50]}))
+    n_resume = _spark_jobs(
+        spark, "ckpt-budget-resume",
+        lambda: checkpoint.resume_stage(
+            spark, wanted, path,
+            lambda todo: extra.join(todo, "cell_id", "left_semi"),
+            "tin", ["in.parquet"], {"px": 64},
+        ),
+    )
+    assert n_write <= 5, n_write
+    assert n_resume <= 11, n_resume
+    assert checkpoint.load_manifest(path)["row_count"] == 5
 
 
 def test_checkpoint_resume_scales_without_driver_keys(spark, tmp_path):

@@ -288,3 +288,47 @@ def test_broadcast_memo_lru_holds_two_sets():
     assert pip_stage._decoded_feats(a) is da1
     assert pip_stage._decoded_feats(b) is not db1  # re-decoded after evict
     pip_stage._DECODED_BROADCASTS.clear()
+
+
+
+def _native_build_worker(tmpdir: str, barrier, delay: float) -> None:
+    import sys
+    import tempfile
+    import time
+
+    tempfile.tempdir = tmpdir
+    from lasutility_spark.gridlib import _native
+
+    barrier.wait()
+    time.sleep(delay)  # staggered first builds, as in a Spark stage
+    tri = _native.triangulate(np.array([0.0, 1.0, 0.0]), np.array([0.0, 0.0, 1.0]))
+    sys.exit(0 if tri is not None else 1)
+
+
+def test_native_kernel_concurrent_first_build(tmp_path):
+    """Workers that compile the C kernel into one empty cache at the same
+    time all load it: none falls back to the Python Delaunay (which
+    breaks ties differently) because another build overwrote the
+    source file it was compiling."""
+    import multiprocessing as mp
+    import shutil
+
+    if shutil.which("cc") is None:
+        pytest.skip("no C compiler")
+    ctx = mp.get_context("spawn")
+    n = 6
+    for trial in range(4):
+        d = tmp_path / f"cache{trial}"
+        d.mkdir()
+        barrier = ctx.Barrier(n)
+        procs = [
+            ctx.Process(
+                target=_native_build_worker, args=(str(d), barrier, 0.01 * i)
+            )
+            for i in range(n)
+        ]
+        for p in procs:
+            p.start()
+        for p in procs:
+            p.join(120)
+        assert [p.exitcode for p in procs] == [0] * n, trial

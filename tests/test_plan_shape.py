@@ -55,6 +55,17 @@ def test_fused_tin_pass_has_no_exchange(spark, images_dir):
     images.unpersist()
 
 
+def test_tin_stage_hash_exchange_without_range_sampling(spark, images_dir):
+    """rasterize_tin_tiles moves points with one hash exchange on
+    cell_id: no range partitioner, whose bound sampling re-runs the
+    point source twice, and no second exchange for the groupBy."""
+    p = epoints.decode_points(epoints.read_images(spark, images_dir))
+    plan = _plan(tin_stage.rasterize_tin_tiles(p, px=32))
+    assert "hashpartitioning(cell_id" in plan
+    assert "rangepartitioning" not in plan
+    assert plan.count("Exchange") == 1, plan
+
+
 def test_cogroup_reuses_image_side_partitioning(spark, images_dir):
     """classify_images_fused over an input cached as repartition(N,
     parent_id): the heavy image side feeds the cogroup via

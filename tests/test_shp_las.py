@@ -106,6 +106,57 @@ def test_las_spark_scan_matches_numpy(spark, tmp_path):
     assert got_cls == {2, 3, 4}
 
 
+def test_las_scan_is_one_wave_without_exchange(spark, tmp_path):
+    """Files are binned into min(n_files, defaultParallelism) partitions
+    by ``parallelize``, so the scan needs no exchange to spread them."""
+    from lasutility_spark.engine.sources import read_las_points
+
+    paths = []
+    for i, n in enumerate((500, 2000, 1000)):
+        p = tmp_path / f"g{i}.las"
+        p.write_bytes(write_las(
+            380000 + np.arange(n) * 0.1, 6666000 + np.arange(n) * 0.1,
+            np.zeros(n), np.full(n, 2, np.uint8),
+        ))
+        paths.append(str(p))
+    df = read_las_points(spark, paths)
+    want = min(3, spark.sparkContext.defaultParallelism)
+    assert df.rdd.getNumPartitions() == want
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Exchange" not in plan, plan
+    assert df.count() == 3500
+
+
+def _las_truncated(d):
+    return d[:226]
+
+
+def _las_header_size_200(d):
+    struct.pack_into("<H", d, 94, 200)
+    return d
+
+
+def _las_offset_inside_header(d):
+    struct.pack_into("<I", d, 96, 100)
+    return d
+
+
+@pytest.mark.parametrize(
+    "patch", [_las_truncated, _las_header_size_200, _las_offset_inside_header]
+)
+def test_las_reader_rejects_corrupt_header(patch):
+    """A header that is cut short, declares fewer than 227 bytes, or
+    points into itself is refused instead of decoding header bytes as
+    points."""
+    n = 20
+    data = bytearray(write_las(
+        380636 + np.arange(n) * 0.5, 6671000 + np.arange(n) * 0.5,
+        np.arange(n) * 0.25, np.full(n, 2, np.uint8),
+    ))
+    with pytest.raises(ValueError):
+        read_las(bytes(patch(data)))
+
+
 @needs_fixture
 def test_shapefile_fixture_scan():
     p = read_shapefile(os.path.join(FIXTURE_DIR, "m_L4133L_p.shp"))
