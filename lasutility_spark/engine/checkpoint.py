@@ -2,27 +2,30 @@
 
 The reference checkpoints a whole VoxelGrid as one MessagePack blob with
 an atomic .tmp rename (S11, VoxelGrid/VoxelGrid.cs:347-366).  The engine
-equivalent (north rule): each stage writes its output as a Parquet table
-plus two Parquet SIDE TABLES and a small JSON manifest:
+equivalent (north rule) is the Iceberg layout: data files, per-file
+counts and bounds from their footers, and a manifest.  Each stage writes
 
-- ``_keys/``     completed key set (one row per cell id) — written and
-  consumed entirely by Spark jobs; at the 100 TB / ~10^9-tile target the
-  key set alone is GBs, so it must never materialize on the driver
+- its output as a Parquet table holding one row per completed key, so
+  the completed key set is a key-only (column-projected) read of the data
+  files — consumed by Spark jobs only; at the 100 TB / ~10^9-tile target
+  the key set alone is GBs, so it must never materialize on the driver
   (neither as a collect() nor as a JSON array),
-- ``_lineage/``  one row per non-empty data file: its row count and key
-  range, read from the file's parquet footer right after the write (the
-  Iceberg manifest model — no Spark job re-reads the data for them),
+- ``_lineage/``  one parquet file with one row per non-empty data file:
+  its row count and key range, read from the file's parquet footer right
+  after the write and written by the driver (no Spark job re-reads the
+  data for them),
 - ``_manifest.json``  lineage header only: stage name, input paths,
   parameter hash, aggregate counts (summed from the same footers) —
   O(1) regardless of scale,
 - a _SUCCESS marker written last (atomic completion point).
 
-Resume = Spark anti-join of the wanted keys against ``_keys/`` — only
-missing tiles are recomputed, no driver-side key materialization.  On a
-real cluster the same layout maps 1:1 onto an Iceberg table + snapshot
-metadata; plain Parquet-plus-manifest keeps the sandbox dependency-free.
-(Subdirectories starting with ``_`` are ignored by Spark's parquet scan
-of the stage path, so the side tables never pollute the data read.)
+Resume = Spark anti-join of the wanted keys against the data files' key
+column — only missing tiles are recomputed, no driver-side key
+materialization.  On a real cluster the same layout maps 1:1 onto an
+Iceberg table + snapshot metadata; plain Parquet-plus-manifest keeps the
+sandbox dependency-free.  (Subdirectories starting with ``_`` are
+ignored by Spark's parquet scan of the stage path, so ``_lineage/`` never
+pollutes the data read.)
 """
 
 from __future__ import annotations
@@ -45,7 +48,6 @@ log = logging.getLogger(__name__)
 
 MANIFEST = "_manifest.json"
 SUCCESS = "_SUCCESS_STAGE"
-KEYS_DIR = "_keys"
 LINEAGE_DIR = "_lineage"
 
 
@@ -63,19 +65,17 @@ def write_stage(
     params: dict | None = None,
     key: str = "cell_id",
 ) -> dict:
-    """Write a stage table + side tables + manifest; returns the manifest.
+    """Write a stage table + ``_lineage/`` + manifest; returns the manifest.
 
-    Two Spark actions: the data write, then the ``_keys/`` write (one
-    ``distinct()`` over the written key column).  Row and key counts and
-    the ``_lineage/`` rows come from the parquet footers of the files
-    just written."""
+    One Spark action, the data write.  Row counts and the ``_lineage/``
+    rows come from the parquet footers of the files just written.  A
+    stage table holds one row per ``key`` — tiles are grouped by cell id,
+    and a resume computes only the keys that are absent — so its row
+    count is also its completed-key count."""
     params = params or {}
     df.write.mode("overwrite").parquet(path)
-    spark = df.sparkSession
-    files = sorted(_data_files(path))
-    row_count, lin = _footer_lineage(path, files, key)
-    n_keys = _write_keys(spark, path, files, df.schema[key], "overwrite")
-    _write_lineage(path, lin, df.schema[key].dataType, "overwrite")
+    row_count, lin = _footer_lineage(path, sorted(_data_files(path)), key)
+    _write_lineage(path, lin, df.schema[key].dataType)
     manifest = {
         "stage": stage,
         "inputs": inputs,
@@ -83,15 +83,14 @@ def write_stage(
         "params_hash": _params_hash(params),
         "written_at": time.time(),
         "row_count": row_count,
-        "n_completed_keys": n_keys,
+        "n_completed_keys": row_count,
         "n_partitions": len(lin),
-        "keys_table": KEYS_DIR,
         "lineage_table": LINEAGE_DIR,
         # Iceberg-style snapshot log: one entry per commit (initial write
         # or incremental resume append)
         "snapshots": [
             {"snapshot": 1, "written_at": time.time(), "rows": row_count,
-             "n_keys": n_keys}
+             "n_keys": row_count}
         ],
     }
     _write_manifest(path, manifest)
@@ -122,26 +121,14 @@ def _footer_lineage(path: str, files: list[str], key: str) -> tuple[int, list[tu
     return total, lin
 
 
-def _write_keys(spark: SparkSession, path: str, files: list[str], key_field,
-                mode: str) -> int:
-    """Write the distinct keys of the data ``files`` to ``_keys/``;
-    returns how many were written (from the new files' footers).  The
-    read is given its schema, so no schema-inference job runs."""
-    keys_dir = os.path.join(path, KEYS_DIR)
-    before = _data_files(keys_dir) if mode == "append" else set()
-    spark.read.schema(StructType([key_field])).parquet(
-        *[os.path.join(path, f) for f in files]
-    ).distinct().write.mode(mode).parquet(keys_dir)
-    new = sorted(_data_files(keys_dir) - before)
-    return _footer_lineage(keys_dir, new, key_field.name)[0]
-
-
-def _write_lineage(path: str, lin: list[tuple], key_type, mode: str) -> None:
-    """Write lineage rows as one parquet file from the driver: they are
-    O(data files), like an Iceberg manifest, so no Spark job is needed."""
+def _write_lineage(path: str, lin: list[tuple], key_type) -> None:
+    """Add lineage rows to ``_lineage/``, which is always one parquet file
+    written from the driver: the rows are O(data files), like an Iceberg
+    manifest list, so no Spark job is needed.  The old file(s) are read
+    and written back with ``lin`` appended under a new name, then
+    deleted, so the table never fans out over many small files."""
     lin_dir = os.path.join(path, LINEAGE_DIR)
-    if mode == "overwrite":
-        shutil.rmtree(lin_dir, ignore_errors=True)
+    old = sorted(_data_files(lin_dir))
     os.makedirs(lin_dir, exist_ok=True)
     pid, rows, lo, hi = zip(*lin) if lin else ((), (), (), ())
     kt = to_arrow_type(key_type)
@@ -151,7 +138,13 @@ def _write_lineage(path: str, lin: list[tuple], key_type, mode: str) -> None:
         "min_key": pa.array(lo, kt),
         "max_key": pa.array(hi, kt),
     })
+    table = pa.concat_tables(
+        [pq.read_table(os.path.join(lin_dir, f), schema=table.schema) for f in old]
+        + [table]
+    )
     pq.write_table(table, os.path.join(lin_dir, f"part-{uuid.uuid4().hex}.parquet"))
+    for f in old:
+        os.remove(os.path.join(lin_dir, f))
 
 
 def _write_manifest(path: str, manifest: dict) -> None:
@@ -182,18 +175,41 @@ def load_manifest(path: str) -> dict | None:
         return json.load(f)
 
 
-def completed_keys(spark: SparkSession, path: str) -> DataFrame:
-    """The checkpoint's completed key set as a DataFrame (never collected).
-    Its schema comes from one file's footer, so no inference job runs."""
-    keys_dir = os.path.join(path, KEYS_DIR)
-    first = os.path.join(keys_dir, min(_data_files(keys_dir)))
-    schema = from_arrow_schema(pq.read_schema(first))
-    return spark.read.schema(schema).parquet(keys_dir)
+def _valid_manifest(path: str, params: dict | None) -> dict | None:
+    """Manifest if the checkpoint is complete and, when ``params`` is
+    given, was written with them; else None, after one warning that says
+    why the checkpoint was invalidated."""
+    m = load_manifest(path)
+    if m is not None and params is not None and m["params_hash"] != _params_hash(params):
+        log.warning(
+            "checkpoint invalidated: %s was written with params_hash=%s, "
+            "resume requested with params_hash=%s — ALL work will be recomputed",
+            path, m["params_hash"], _params_hash(params),
+        )
+        return None
+    return m
+
+
+def completed_keys(spark: SparkSession, path: str, key: str = "cell_id") -> DataFrame:
+    """The checkpoint's completed key set as a DataFrame (never collected):
+    the ``key`` column of the data files.  Its schema comes from one
+    file's footer, so no inference job runs, and the column projection
+    reads only the key column chunks, never the tile bytes."""
+    first = os.path.join(path, min(_data_files(path)))
+    field = from_arrow_schema(pq.read_schema(first))[key]
+    return spark.read.schema(StructType([field])).parquet(path)
 
 
 def lineage(spark: SparkSession, path: str) -> DataFrame:
     """Per-file lineage metrics (pid, rows, min_key, max_key)."""
     return spark.read.parquet(os.path.join(path, LINEAGE_DIR))
+
+
+def _pending(spark: SparkSession, wanted: DataFrame, path: str,
+             m: dict | None, key: str) -> DataFrame:
+    if m is None:
+        return wanted
+    return wanted.join(completed_keys(spark, path, key), key, "left_anti")
 
 
 def pending_keys(
@@ -202,26 +218,16 @@ def pending_keys(
 ) -> DataFrame:
     """Resume support: which of ``wanted``'s keys still need computing?
 
-    Anti-join against the ``_keys/`` side table — a pure Spark plan, so
+    Anti-join against the data files' key column — a pure Spark plan, so
     a 10^9-key checkpoint resumes without the key set ever touching the
     driver.  A parameter-hash mismatch invalidates the checkpoint
     entirely (recompute all).
     """
-    m = load_manifest(path)
-    if m is None:
-        return wanted
-    if params is not None and m["params_hash"] != _params_hash(params):
-        log.warning(
-            "checkpoint invalidated: %s was written with params_hash=%s, "
-            "resume requested with params_hash=%s — ALL work will be recomputed",
-            path, m["params_hash"], _params_hash(params),
-        )
-        return wanted
-    return wanted.join(completed_keys(spark, path), key, "left_anti")
+    return _pending(spark, wanted, path, _valid_manifest(path, params), key)
 
 
 def _data_files(path: str) -> set[str]:
-    """Parquet data files directly under the stage path (side tables and
+    """Parquet data files directly under ``path`` (side tables and
     markers start with ``_`` and are excluded)."""
     if not os.path.isdir(path):
         return set()
@@ -229,24 +235,6 @@ def _data_files(path: str) -> set[str]:
         e for e in os.listdir(path)
         if not e.startswith(("_", ".")) and os.path.isfile(os.path.join(path, e))
     }
-
-
-def _compact_side_table(spark: SparkSession, path: str, subdir: str) -> None:
-    """Rewrite a ``_keys``/``_lineage`` side table into few files.
-
-    Each incremental resume appends small parquet deltas to the side
-    tables; after many resumes the ``_keys`` read fans out over hundreds
-    of tiny files.  Compaction rewrites ONLY the side table (never the
-    data files) via the same .next + rename protocol; it runs inside the
-    marker-removed mutation window, so a crash mid-compact leaves a torn
-    checkpoint that is recomputed — never silently wrong."""
-    full = os.path.join(path, subdir)
-    nxt = full + ".next"
-    if os.path.exists(nxt):
-        shutil.rmtree(nxt)
-    spark.read.parquet(full).coalesce(4).write.parquet(nxt)
-    shutil.rmtree(full)
-    os.rename(nxt, full)
 
 
 def resume_stage(
@@ -258,41 +246,30 @@ def resume_stage(
     inputs: list[str],
     params: dict | None = None,
     key: str = "cell_id",
-    compact_after: int = 16,
 ) -> DataFrame:
     """Compute-or-reuse: run ``compute(pending)`` only for missing keys.
 
     O(new-work) resume: the fresh rows are APPENDED to the stage table
-    as new parquet files (plus ``_keys``/``_lineage`` deltas and a new
+    as new parquet files (plus their ``_lineage`` rows and a new
     manifest snapshot entry) — resuming a 10^9-tile stage with 1%
     pending keys writes ~1% of the bytes, never a full rewrite.  The
     commit protocol stays atomic-by-marker: the ``_SUCCESS_STAGE``
     marker is removed before mutation and re-created after the manifest
     lands, so a crash mid-append leaves a torn checkpoint that
-    :func:`load_manifest` flags and :func:`pending_keys` recomputes.
+    :func:`load_manifest` flags and the next resume recomputes.
     (On a real cluster this is exactly an Iceberg append snapshot.)
     """
-    todo = pending_keys(spark, wanted, path, params, key)
-    m = load_manifest(path)
-    # a params-hash mismatch means todo == ALL keys: the existing table's
-    # rows were computed under different params and must not be kept, so
-    # invalidate the manifest here and take the full .next+rename rewrite
-    # below (appending the full recompute onto the stale table would
-    # duplicate keys and keep stale-params rows)
-    if (
-        m is not None
-        and params is not None
-        and m["params_hash"] != _params_hash(params)
-    ):
-        m = None
+    m = _valid_manifest(path, params)
+    todo = _pending(spark, wanted, path, m, key)
     if m is not None and todo.isEmpty():
         return spark.read.parquet(path)
     fresh = compute(todo)
     # the stage table has fresh's schema: giving it saves an inference job
     table = spark.read.schema(fresh.schema)
     if m is None:
-        # first write (or invalidated checkpoint): full stage write via
-        # the .next + atomic-rename protocol
+        # first write, or a torn or stale-params checkpoint whose rows
+        # must not be kept (appending onto it would duplicate keys): full
+        # stage write via the .next + atomic-rename protocol
         write_stage(fresh, path + ".next", stage, inputs, params, key)
         if os.path.exists(path):
             shutil.rmtree(path)
@@ -312,23 +289,15 @@ def resume_stage(
         # empty-but-valid append.
         open(os.path.join(path, SUCCESS), "w").close()
         return table.parquet(path)
-    d_keys = _write_keys(spark, path, new_files, fresh.schema[key], "append")
-    _write_lineage(path, lin, fresh.schema[key].dataType, "append")
+    _write_lineage(path, lin, fresh.schema[key].dataType)
     snapshots = list(m.get("snapshots", []))
     snapshots.append(
         {"snapshot": len(snapshots) + 1, "written_at": time.time(),
-         "rows": d_rows, "n_keys": d_keys, "files": new_files}
+         "rows": d_rows, "n_keys": d_rows, "files": new_files}
     )
-    # side-table compaction: after ``compact_after`` snapshots the
-    # accumulated per-resume deltas are rewritten into few files (data
-    # files are never touched).  Still inside the mutation window.
-    if compact_after and len(snapshots) % compact_after == 0:
-        _compact_side_table(spark, path, KEYS_DIR)
-        _compact_side_table(spark, path, LINEAGE_DIR)
-        snapshots[-1]["compacted_side_tables"] = True
     m.update(
         row_count=m["row_count"] + d_rows,
-        n_completed_keys=m["n_completed_keys"] + d_keys,
+        n_completed_keys=m["n_completed_keys"] + d_rows,
         n_partitions=m["n_partitions"] + len(lin),
         written_at=time.time(),
         snapshots=snapshots,

@@ -103,14 +103,33 @@ class Geometry:
         return []
 
 
-def _read_ring(buf: memoryview, pos: int):
+def _need(buf: memoryview, pos: int, n: int) -> int:
+    """End offset of ``n`` bytes at ``pos``; ValueError if they are not
+    all there (a corrupt count or a cut buffer)."""
+    if n > len(buf) - pos:
+        raise ValueError(
+            f"truncated WKB: {n} bytes needed at offset {pos}, {len(buf) - pos} left"
+        )
+    return pos + n
+
+
+def _count(buf: memoryview, pos: int, min_item: int) -> tuple[int, int]:
+    """A uint32 count at ``pos`` whose items take ``min_item`` bytes or
+    more each, checked against the bytes that remain after it."""
+    end = _need(buf, pos, 4)
     (n,) = struct.unpack_from("<I", buf, pos)
-    pos += 4
+    _need(buf, end, n * min_item)
+    return n, end
+
+
+def _read_ring(buf: memoryview, pos: int):
+    n, pos = _count(buf, pos, 16)
     arr = np.frombuffer(buf[pos : pos + 16 * n], dtype="<f8").reshape(n, 2)
     return (arr[:, 0].copy(), arr[:, 1].copy()), pos + 16 * n
 
 
 def _decode_at(buf: memoryview, pos: int):
+    _need(buf, pos, 5)
     endian = buf[pos]
     if endian != 1:
         raise ValueError("only little-endian WKB supported")
@@ -118,31 +137,36 @@ def _decode_at(buf: memoryview, pos: int):
     gtype &= 0xFF  # strip SRID/Z flags if present in high bytes
     pos += 5
     if gtype == POINT:
-        arr = np.frombuffer(buf[pos : pos + 16], dtype="<f8")
+        arr = np.frombuffer(buf[pos : _need(buf, pos, 16)], dtype="<f8")
         return Geometry("Point", [(arr[0:1].copy(), arr[1:2].copy())]), pos + 16
     if gtype == LINESTRING:
         ring, pos = _read_ring(buf, pos)
         return Geometry("LineString", [ring]), pos
     if gtype == POLYGON:
-        (nrings,) = struct.unpack_from("<I", buf, pos)
-        pos += 4
+        nrings, pos = _count(buf, pos, 4)
         rings = []
         for _ in range(nrings):
             ring, pos = _read_ring(buf, pos)
             rings.append(ring)
         return Geometry("Polygon", rings), pos
     if gtype in (MULTILINESTRING, MULTIPOLYGON):
-        (nparts,) = struct.unpack_from("<I", buf, pos)
-        pos += 4
+        nparts, pos = _count(buf, pos, 9)
+        part_kind = "LineString" if gtype == MULTILINESTRING else "Polygon"
         parts = []
         for _ in range(nparts):
             sub, pos = _decode_at(buf, pos)
+            if sub.kind != part_kind:  # also bounds the recursion depth
+                raise ValueError(f"{_GEOM_NAMES[gtype]} holds a {sub.kind}")
             parts.append(sub.parts)
-        kind = _GEOM_NAMES[gtype]
-        return Geometry(kind, parts), pos
+        return Geometry(_GEOM_NAMES[gtype], parts), pos
     raise ValueError(f"Unsupported geometry type {gtype}")
 
 
 def decode(data: bytes) -> Geometry:
-    geom, _ = _decode_at(memoryview(data), 0)
+    """Geometry of one WKB value; ValueError on a cut, corrupt or
+    over-long buffer."""
+    buf = memoryview(data)
+    geom, end = _decode_at(buf, 0)
+    if end != len(buf):
+        raise ValueError(f"{len(buf) - end} trailing bytes after the WKB geometry")
     return geom

@@ -60,11 +60,12 @@ def main() -> None:
         def compute(pending):
             from lasutility_spark.engine.tiling import with_cell_id
 
-            cells = [int(r["cell_id"]) for r in pending.collect()]
+            # only the pending tiles' points, by a semi-join: the pending
+            # key set never reaches the driver
             pts = with_cell_id(epoints.decode_points(images), 1000)
-            if len(cells) < tile_df.count():  # resume: only missing tiles
-                pts = pts.where(pts["cell_id"].isin(cells))
-            return tin_stage.rasterize_tin_tiles(pts, px=args.px)
+            return tin_stage.rasterize_tin_tiles(
+                pts.join(pending, "cell_id", "left_semi"), px=args.px
+            )
 
         if args.resume:
             out = checkpoint.resume_stage(

@@ -36,7 +36,7 @@ def test_checkpoint_write_and_resume(spark, tmp_path):
         (r["rows"], r["min_key"], r["max_key"]) for r in lin.collect()
     )
     assert os.path.exists(os.path.join(path, checkpoint.SUCCESS))
-    # the _keys/_lineage side tables must NOT pollute the data read
+    # the _lineage side table must NOT pollute the data read
     assert set(spark.read.parquet(path).columns) == {"cell_id", "v"}
 
     wanted = spark.createDataFrame(pd.DataFrame({"cell_id": [1, 2, 3, 4, 5]}))
@@ -110,8 +110,9 @@ def _spark_jobs(spark, group, fn):
 
 
 def test_checkpoint_commit_job_budget(spark, tmp_path):
-    """A commit is the data write plus one distinct() for _keys/; counts
-    and lineage come from parquet footers, not from re-reading jobs."""
+    """A commit is one Spark write: counts and lineage come from parquet
+    footers, and resume's key set is a key-only read of the data files,
+    so no job rewrites or re-reads the keys."""
     path = str(tmp_path / "budget_stage")
     df = spark.createDataFrame(
         pd.DataFrame({"cell_id": [1, 2, 3], "v": [10, 20, 30]})
@@ -130,8 +131,8 @@ def test_checkpoint_commit_job_budget(spark, tmp_path):
             "tin", ["in.parquet"], {"px": 64},
         ),
     )
-    assert n_write <= 5, n_write
-    assert n_resume <= 11, n_resume
+    assert n_write <= 1, n_write
+    assert n_resume <= 5, n_resume
     assert checkpoint.load_manifest(path)["row_count"] == 5
 
 
@@ -154,7 +155,7 @@ def test_checkpoint_resume_scales_without_driver_keys(spark, tmp_path):
 
 
 def _stage_bytes(path):
-    """Total size + file set of the stage's data files and _keys files."""
+    """Total size + file set of the stage's data and _lineage files."""
     total, names = 0, set()
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -266,9 +267,9 @@ def test_resume_empty_delta_keeps_checkpoint_intact(spark, tmp_path):
 
 
 def test_resume_side_table_compaction_bounds_files(spark, tmp_path):
-    """Many sequential 1-key resumes keep the _keys/ file fan-out bounded
-    (side tables are compacted every ``compact_after`` snapshots; data
-    files are never rewritten) and resume semantics stay identical."""
+    """Many sequential 1-key resumes keep ``_lineage/`` at one file (each
+    append rewrites it; data files are never rewritten), write no key
+    side table, and resume semantics stay identical."""
     path = str(tmp_path / "compact_stage")
     df = spark.createDataFrame(pd.DataFrame({"cell_id": [0], "v": [0]}))
     checkpoint.write_stage(df, path, "tin", ["in.parquet"], {"px": 64})
@@ -282,15 +283,10 @@ def test_resume_side_table_compaction_bounds_files(spark, tmp_path):
             pd.DataFrame({"cell_id": list(range(k + 1))})
         )
         checkpoint.resume_stage(
-            spark, wanted, path, compute, "tin", ["in.parquet"],
-            {"px": 64}, compact_after=5,
+            spark, wanted, path, compute, "tin", ["in.parquet"], {"px": 64},
         )
-    keys_files = [
-        f for f in os.listdir(os.path.join(path, checkpoint.KEYS_DIR))
-        if f.endswith(".parquet")
-    ]
-    # without compaction this would be >= 13 delta files (1 + 12 appends)
-    assert len(keys_files) <= 8
+    assert len(os.listdir(os.path.join(path, checkpoint.LINEAGE_DIR))) == 1
+    assert not any(e.startswith("_keys") for e in os.listdir(path))
     keys = checkpoint.completed_keys(spark, path)
     assert sorted(r["cell_id"] for r in keys.collect()) == list(
         range(n_resumes + 1)
@@ -301,7 +297,8 @@ def test_resume_side_table_compaction_bounds_files(spark, tmp_path):
     }
     m = checkpoint.load_manifest(path)
     assert m["n_completed_keys"] == n_resumes + 1
-    assert any(s.get("compacted_side_tables") for s in m["snapshots"])
+    lin = checkpoint.lineage(spark, path).collect()
+    assert sum(r["rows"] for r in lin) == m["row_count"] == n_resumes + 1
 
 
 def test_torn_checkpoint_is_flagged(spark, tmp_path, caplog):
@@ -318,6 +315,17 @@ def test_torn_checkpoint_is_flagged(spark, tmp_path, caplog):
         todo = checkpoint.pending_keys(spark, wanted, path, {"px": 64})
     assert todo.count() == 3  # everything recomputed (correct)
     assert any("checkpoint invalidated" in r.message for r in caplog.records)
+    # a resume checks the manifest once: one warning, not one per lookup
+    caplog.clear()
+    with caplog.at_level(logging.WARNING, logger="lasutility_spark.engine.checkpoint"):
+        out = checkpoint.resume_stage(
+            spark, wanted, path,
+            lambda todo: todo.select("cell_id", F.col("cell_id").alias("v")),
+            "tin", ["in.parquet"], {"px": 64},
+        )
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 1), (2, 2), (3, 3)]
+    warnings = [r for r in caplog.records if "checkpoint invalidated" in r.message]
+    assert len(warnings) == 1, [r.message for r in warnings]
 
 
 def test_streaming_matches_batch(spark, tmp_path):
@@ -495,50 +503,170 @@ def test_idempotent_sink_crash_replay(spark, tmp_path):
     assert got == {(1, "a", 0), (2, "b", 0), (3, "c", 1)}
 
 
-def test_compaction_crash_window_recovers(spark, tmp_path):
-    """Crash injected in _compact_side_table's rewrite window (after
-    ``rmtree(_keys)``, before ``rename(_keys.next, _keys)``): the marker
-    is already removed, so the checkpoint is torn — detected on the next
-    resume, fully recomputed, and healthy afterwards.  Recovery cost is
-    O(stage), never silent wrongness (VERDICT r04 #8)."""
-    import shutil
+class _Fault(Exception):
+    """An injected crash."""
 
-    path = str(tmp_path / "crash_stage")
-    df = spark.createDataFrame(pd.DataFrame({"cell_id": [0, 1], "v": [0, 2]}))
+
+def _inject_faults(mp, root, k):
+    """Make the k-th filesystem step that ``checkpoint`` takes under
+    ``root`` raise :class:`_Fault` instead of running; returns the list of
+    step names taken so far (the faulted one last).  The steps: Spark
+    parquet writes, ``pq.write_table``, ``os.makedirs``/``remove``/
+    ``replace``/``rename``, ``shutil.rmtree`` and every ``open`` for
+    writing (the manifest write and the marker creation)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    steps = []
+
+    def wrap(name, fn, arg=0, counts=lambda a, kw: True):
+        def step(*a, **kw):
+            if str(a[arg]).startswith(root) and counts(a, kw):
+                steps.append(name)
+                if len(steps) == k:
+                    raise _Fault(name)
+            return fn(*a, **kw)
+        return step
+
+    mp.setattr(DataFrameWriter, "parquet", wrap("spark_write", DataFrameWriter.parquet, 1))
+    mp.setattr(pq, "write_table", wrap("write_table", pq.write_table, 1))
+    for name in ("makedirs", "remove", "replace", "rename"):
+        mp.setattr(os, name, wrap(name, getattr(os, name)))
+    mp.setattr(checkpoint.shutil, "rmtree", wrap("rmtree", checkpoint.shutil.rmtree))
+    mp.setattr(
+        checkpoint, "open",
+        wrap("open", open, counts=lambda a, kw: a[1:] == ("w",)),
+        raising=False,
+    )
+    return steps
+
+
+def test_checkpoint_fault_injection_recovers(spark, tmp_path, monkeypatch):
+    """Crash at every filesystem step of a direct ``write_stage``, of
+    ``resume_stage``'s .next + rename rewrite and of its append commit:
+    a checkpoint left valid is consistent, and a clean resume afterwards
+    computes only the keys it lacks (all of them when the crash tore it),
+    gives the uninterrupted run's values with no duplicate keys, a
+    consistent manifest and no ``.next`` wreckage."""
+    wanted = spark.createDataFrame(pd.DataFrame({"cell_id": list(range(6))}))
+    want = {k: 10 * k for k in range(6)}
+    calls = []
+
+    def compute(todo):
+        calls.append(sorted(r["cell_id"] for r in todo.collect()))
+        return todo.select("cell_id", (F.col("cell_id") * 10).alias("v"))
+
+    def first(n, v=None):
+        return spark.createDataFrame(pd.DataFrame(
+            {"cell_id": list(range(n)), "v": [10 * k if v is None else v for k in range(n)]}
+        ))
+
+    def consistent(path):
+        m = checkpoint.load_manifest(path)
+        lin = checkpoint.lineage(spark, path).collect()
+        n = spark.read.parquet(path).count()
+        assert m["row_count"] == n == sum(r["rows"] for r in lin)
+        assert m["n_completed_keys"] == n
+
+    px = {"px": 64}
+    scenarios = {
+        "write_stage": (
+            lambda p: None,
+            lambda p: checkpoint.write_stage(first(6), p, "tin", ["in"], px),
+            {"spark_write", "makedirs", "write_table", "open", "replace"},
+        ),
+        # stale rows (v=-1) under other params: taken to the full rewrite
+        "resume_rewrite": (
+            lambda p: checkpoint.write_stage(first(3, -1), p, "tin", ["in"], {"px": 32}),
+            lambda p: checkpoint.resume_stage(spark, wanted, p, compute, "tin", ["in"], px),
+            {"spark_write", "makedirs", "write_table", "open", "replace",
+             "rmtree", "rename"},
+        ),
+        "resume_append": (
+            lambda p: checkpoint.write_stage(first(3), p, "tin", ["in"], px),
+            lambda p: checkpoint.resume_stage(spark, wanted, p, compute, "tin", ["in"], px),
+            {"remove", "spark_write", "makedirs", "write_table", "open",
+             "replace"},
+        ),
+    }
+    for name, (setup, op, required) in scenarios.items():
+        faulted = []
+        for k in range(1, 40):
+            root = str(tmp_path / f"{name}-{k}")
+            path = os.path.join(root, "stage")
+            setup(path)
+            with monkeypatch.context() as mp:
+                steps = _inject_faults(mp, root, k)
+                try:
+                    op(path)
+                except _Fault:
+                    pass
+            if len(steps) < k:  # no k-th step: the run completed
+                break
+            faulted.append(steps[-1])
+            m = checkpoint.load_manifest(path)
+            missing = sorted(want)
+            if m is not None:
+                consistent(path)
+                if m["params"] == px:
+                    done = {r["cell_id"] for r in spark.read.parquet(path).collect()}
+                    missing = sorted(set(want) - done)
+            calls.clear()
+            out = checkpoint.resume_stage(
+                spark, wanted, path, compute, "tin", ["in"], px
+            ).collect()
+            assert len(out) == len({r["cell_id"] for r in out}), (name, steps)
+            assert {r["cell_id"]: r["v"] for r in out} == want, (name, steps)
+            assert calls == ([missing] if missing else []), (name, steps)
+            consistent(path)
+            assert not os.path.exists(path + ".next"), (name, steps)
+        else:
+            pytest.fail(f"{name}: no fault-free run within 39 steps")
+        assert faulted == steps, (name, faulted, steps)
+        assert set(steps) == required, (name, steps)
+
+
+def test_old_layout_checkpoint_resumes(spark, tmp_path):
+    """A checkpoint with a leftover ``_keys/`` side table and two
+    ``_lineage`` files resumes from its data files: a key listed only in
+    ``_keys/`` is computed, and the lineage merges into one file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "old_layout")
+    df = spark.createDataFrame(
+        pd.DataFrame({"cell_id": [1, 2, 3], "v": [10, 20, 30]})
+    ).repartitionByRange(2, "cell_id")
     checkpoint.write_stage(df, path, "tin", ["in.parquet"], {"px": 64})
-
-    def compute(pending):
-        return pending.select("cell_id", (F.col("cell_id") * 2).alias("v"))
-
-    wanted = spark.createDataFrame(pd.DataFrame({"cell_id": [0, 1, 2, 3]}))
-    checkpoint.resume_stage(
-        spark, wanted, path, compute, "tin", ["in.parquet"], {"px": 64}
+    lin_dir = os.path.join(path, checkpoint.LINEAGE_DIR)
+    (only,) = os.listdir(lin_dir)
+    lin = pq.read_table(os.path.join(lin_dir, only))
+    assert lin.num_rows == 2
+    pq.write_table(lin.slice(0, 1), os.path.join(lin_dir, "part-a.parquet"))
+    pq.write_table(lin.slice(1), os.path.join(lin_dir, "part-b.parquet"))
+    os.remove(os.path.join(lin_dir, only))
+    os.makedirs(os.path.join(path, "_keys"))
+    pq.write_table(
+        pa.table({"cell_id": pa.array([1, 2, 3, 4], pa.int64())}),
+        os.path.join(path, "_keys", "part-0.parquet"),
     )
 
-    # fabricate the exact mid-compaction crash state: marker removed
-    # (mutation window), _keys rewritten to _keys.next, _keys deleted,
-    # rename never happened
-    keys_dir = os.path.join(path, checkpoint.KEYS_DIR)
-    os.remove(os.path.join(path, checkpoint.SUCCESS))
-    shutil.copytree(keys_dir, keys_dir + ".next")
-    shutil.rmtree(keys_dir)
+    calls = []
 
-    # torn: the manifest loader refuses it, pending = ALL keys
-    assert checkpoint.load_manifest(path) is None
-    todo = checkpoint.pending_keys(spark, wanted, path, {"px": 64})
-    assert todo.count() == 4
+    def compute(todo):
+        calls.append(sorted(r["cell_id"] for r in todo.collect()))
+        return todo.select("cell_id", (F.col("cell_id") * 10).alias("v"))
 
-    # next resume recomputes the full stage and leaves a healthy
-    # checkpoint: marker back, side tables readable, values correct
+    wanted = spark.createDataFrame(pd.DataFrame({"cell_id": [1, 2, 3, 4, 5]}))
     out = checkpoint.resume_stage(
         spark, wanted, path, compute, "tin", ["in.parquet"], {"px": 64}
     )
+    assert calls == [[4, 5]]
     assert {r["cell_id"]: r["v"] for r in out.collect()} == {
-        0: 0, 1: 2, 2: 4, 3: 6
+        k: 10 * k for k in range(1, 6)
     }
-    assert os.path.exists(os.path.join(path, checkpoint.SUCCESS))
-    keys = checkpoint.completed_keys(spark, path)
-    assert sorted(r["cell_id"] for r in keys.collect()) == [0, 1, 2, 3]
-    assert not os.path.exists(keys_dir + ".next")  # wreckage swept
+    assert len(os.listdir(lin_dir)) == 1
     m = checkpoint.load_manifest(path)
-    assert m is not None and m["n_completed_keys"] == 4
+    lin = checkpoint.lineage(spark, path).collect()
+    assert sum(r["rows"] for r in lin) == m["row_count"] == 5
+    assert out.count() == 5

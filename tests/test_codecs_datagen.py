@@ -1,6 +1,7 @@
 """PNG/WKB/clip/phash codecs + deterministic datagen."""
 
 import numpy as np
+import pytest
 
 from lasutility_spark.datagen import (
     ensure_images_table,
@@ -23,6 +24,7 @@ from lasutility_spark.gridlib.raster import crop, get_value
 from lasutility_spark.gridlib.wkb import (
     decode,
     encode_linestring,
+    encode_multilinestring,
     encode_multipolygon,
     encode_polygon,
 )
@@ -171,3 +173,33 @@ def test_ensure_images_table_reuses_v8_cache(tmp_path):
     (out / "audio.parquet").write_bytes(b"stale")
     assert ensure_images_table(0.001, base_dir=str(tmp_path)) == str(out)
     assert sorted(p.name for p in out.iterdir()) == ["_SUCCESS_v8", "audio.parquet"]
+
+
+def test_wkb_decode_refuses_corrupt_input():
+    """Every truncation of a WKB value, and trailing bytes, raise
+    ValueError; a random bit flip either decodes or raises ValueError —
+    never struct.error, IndexError or a recursion blow-up."""
+    xs = np.array([0.0, 10.0, 10.0, 0.0, 0.0])
+    ys = np.array([0.0, 0.0, 10.0, 10.0, 0.0])
+    hole = (xs * 0.2 + 4, ys * 0.2 + 4)
+    geoms = [
+        encode_linestring(xs, ys),
+        encode_polygon([(xs, ys), hole]),
+        encode_multipolygon([[(xs, ys), hole], [(xs + 20, ys)]]),
+        encode_multilinestring([(xs, ys), (xs[:3], ys[:3] + 5)]),
+    ]
+    rng = np.random.RandomState(7)
+    for g in geoms:
+        decode(g)
+        for cut in range(len(g)):
+            with pytest.raises(ValueError):
+                decode(g[:cut])
+        with pytest.raises(ValueError):
+            decode(g + b"\x00")
+        for bit in rng.randint(0, 8 * len(g), 300):
+            flipped = bytearray(g)
+            flipped[bit // 8] ^= 1 << (bit % 8)
+            try:
+                decode(bytes(flipped))
+            except ValueError:
+                pass
