@@ -170,8 +170,8 @@ def _pip_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             closed.append((xs, ys))
         rows.append((seq, luokka, bytearray(encode_polygon(closed))))
     feats = spark.createDataFrame(rows, "seq long, luokka long, geom_wkb binary")
-    pip_tiles = pip_stage.rasterize_features_broadcast(
-        spark, tiles, feats, geosql.PIPK_CLASSMAP, px=128
+    pip_tiles = pip_stage.rasterize_features_cogrouped(
+        tiles, feats, geosql.PIPK_CLASSMAP, px=128
     )
     out = pip_stage.pip_classify_points(pts, pip_tiles)
     return out.groupBy("value").agg(F.count("*").alias("n_points"))

@@ -272,6 +272,11 @@ def resume_stage(
         # stage write via the .next + atomic-rename protocol
         write_stage(fresh, path + ".next", stage, inputs, params, key)
         if os.path.exists(path):
+            # marker first: a crash inside rmtree must leave a torn
+            # checkpoint, never a manifest over missing data files
+            marker = os.path.join(path, SUCCESS)
+            if os.path.exists(marker):
+                os.remove(marker)
             shutil.rmtree(path)
         os.rename(path + ".next", path)
         return table.parquet(path)

@@ -6,16 +6,19 @@ the raster (V3), dispatched by geometry type (V4), polygon scanline fill
 with even-odd holes (V5/V6), Bresenham lines (V7), strictly in ``seq``
 order (V8 last-writer-wins).
 
-Two physical strategies (SURVEY.md §4 "Broadcast vs partitioned"):
+One path per input shape (SURVEY.md §4 "Broadcast vs partitioned"):
 
-- **broadcast**: the feature set is small (fixture: ~7k features,
-  ~660 KB) -> ship decoded features to every kernel, loop tiles in
-  ``mapInPandas``.
-- **cogrouped**: at 10^12 scale, features are exploded to the tiles
-  their envelope covers (X5 duplication) and cogrouped with per-tile
-  rows — an equi-join shuffle on cell_id, no driver collect.
+- **tiled images -> per-tile class histogram** (broadcast):
+  :func:`per_cell_feature_lists` groups the exploded feature covers
+  per cell, :func:`per_cell_broadcast` ships them once per executor,
+  and :func:`classify_images_prebroadcast` runs one narrow
+  ``mapInPandas`` over the image table.
+- **features -> PIP class tiles** (partitioned):
+  :func:`rasterize_features_cogrouped` explodes features to the tiles
+  their envelope covers (X5 duplication) and cogroups them with the
+  tile rows — an equi-join shuffle on cell_id, no driver collect.
 
-Both call the same per-tile numpy kernel, so outputs are identical.
+Both call the same per-tile numpy kernel (:func:`_rasterize_tile_raster`).
 """
 
 from __future__ import annotations
@@ -32,54 +35,14 @@ from ..gridlib import wkb
 from ..gridlib.bounds import EPSILON, RasterBounds
 from ..gridlib.clip import clip_polyline, clip_ring
 from ..gridlib.phash import phash64
-from ..gridlib.png import png_encode
-from ..gridlib.scanline import (
-    fill_polygon,
-    rasterize_linestring,
-    rasterize_polygon_with_holes,
-)
+from ..gridlib.png import png16_to_dem, png_encode
+from ..gridlib.scanline import rasterize_linestring, rasterize_polygon_with_holes
 from ..gridlib.tilenamer import cell_id, cell_id_envelope, cell_id_to_name
 
 PIP_TILE_SCHEMA = (
     "cell_id long, image_id string, bytes binary, w int, h int, fmt string, "
     "caption string, phash long, n_features int, painted_cells int"
 )
-
-# per-worker-process memo of decoded broadcast feature sets: decoding the
-# WKB of ~1e5 features costs more than rasterizing one tile, so paying it
-# per (tile x feature) made the broadcast strategy O(tiles * features) in
-# Python decode time.  Keyed by id() of the broadcast value; the entry
-# also holds a strong reference to that value, which (a) lets a hit be
-# verified with ``is`` and (b) pins the object so its address cannot be
-# recycled for a different broadcast while the memo entry is alive.
-# Spark reuses Python workers (spark.python.worker.reuse), so each
-# executor decodes once.
-_DECODED_BROADCASTS: dict[int, tuple[object, list]] = {}
-
-
-def _decoded_feats(b_feats) -> list:
-    """Broadcast [(seq, luokka, wkb_bytes), ...] -> decoded once per worker.
-
-    Keyed by id() of the broadcast VALUE and identity-verified on hit:
-    the PySpark worker keeps one loaded value per broadcast id in its
-    registry, so the id is stable across tasks in a reused worker (the
-    Broadcast wrapper itself is re-deserialized per task and is not a
-    stable key).  The stored strong reference guarantees the id() key
-    can never alias a later, different broadcast."""
-    val = b_feats.value
-    key = id(val)
-    got = _DECODED_BROADCASTS.get(key)
-    if got is not None and got[0] is val:
-        _DECODED_BROADCASTS[key] = _DECODED_BROADCASTS.pop(key)  # refresh LRU
-        return got[1]
-    raw = val[0] if isinstance(val, tuple) else val
-    decoded = [(s, l, wkb.decode(g)) for s, l, g in raw]
-    while len(_DECODED_BROADCASTS) >= 2:  # LRU of 2: a job alternating
-        # two feature broadcasts (e.g. polygon + line stages) keeps both
-        # decoded; insertion order is eviction order (dict is ordered)
-        _DECODED_BROADCASTS.pop(next(iter(_DECODED_BROADCASTS)))
-    _DECODED_BROADCASTS[key] = (val, decoded)
-    return decoded
 
 
 def _rasterize_tile_raster(
@@ -95,7 +58,7 @@ def _rasterize_tile_raster(
     feats: (seq, luokka, geom) where geom is WKB bytes OR an
     already-decoded :class:`wkb.Geometry` (hot paths decode each feature
     once per executor/batch instead of once per tile).  Caller must NOT
-    pre-sort; sorted here so both strategies agree
+    pre-sort; sorted here so every caller applies ``seq`` order
     (V8 RasteriserEvenOdd.Tests.cs:45-46).
     """
     minx, miny, maxx, maxy = (
@@ -169,51 +132,6 @@ def _rasterize_tile(
         "n_features": n_applied,
         "painted_cells": int((raster != 0).sum()),
     }
-
-
-def rasterize_features_broadcast(
-    spark: SparkSession,
-    tiles: DataFrame,
-    features: DataFrame,
-    classmap: dict[int, int],
-    px: int = 128,
-    size_north: int = 1000,
-) -> DataFrame:
-    """Broadcast strategy: features collected + broadcast, tiles fanned out.
-
-    ``tiles`` needs a ``cell_id`` column (one row per output tile).
-    """
-    rows = features.select("seq", "luokka", "geom_wkb").collect()
-    feats = [(r["seq"], r["luokka"], bytes(r["geom_wkb"])) for r in rows]
-    b_feats = spark.sparkContext.broadcast(feats)
-    b_map = spark.sparkContext.broadcast(dict(classmap))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats_dec = _decoded_feats(b_feats)
-            out = [
-                _rasterize_tile(
-                    int(c), px, size_north, feats_dec, b_map.value
-                )
-                for c in pdf["cell_id"]
-            ]
-            yield pd.DataFrame(out) if out else pd.DataFrame(
-                {k.split()[0]: [] for k in PIP_TILE_SCHEMA.split(", ")}
-            )
-
-    return tiles.select("cell_id").distinct().mapInPandas(run, PIP_TILE_SCHEMA)
-
-
-def parent_cell_col(batch_parent: int = 3):
-    """The batch_parent x batch_parent parent-cell id of ``cell_id`` —
-    the cogroup key of :func:`classify_images_fused`.  Callers that
-    pre-partition their tile table on this column (repartition(N,
-    "parent_id") before caching) let the heavy side of the cogroup skip
-    its exchange."""
-    return F.expr(
-        f"(shiftright(cell_id, 32) DIV {batch_parent}) * 4294967296"
-        f" + ((cell_id & 4294967295) DIV {batch_parent})"
-    ).alias("parent_id")
 
 
 def explode_feature_covers(
@@ -301,131 +219,9 @@ def rasterize_features_cogrouped(
     )
 
 
-def classify_images_fused(
-    images: DataFrame,
-    features: DataFrame,
-    classmap: dict[int, int],
-    px: int = 128,
-    size_north: int = 1000,
-    batch_parent: int = 3,
-) -> DataFrame:
-    """Fused tile-level PIP classification — the 100 TB-shape of the
-    point->class join.
-
-    One image row IS one tile, and its synthesized points are inside that
-    tile by construction, so the points never need to exist as a shuffled
-    table: cogroup the image rows with the exploded feature covers on
-    cell_id, and inside the kernel (a) rasterize the tile's features
-    (V1-V8), (b) decode the tile's points from the image bytes, (c) index
-    the raster at the point cells, returning one row per (tile, class
-    value) with the point count.  The only data crossing the shuffle is
-    one image row per tile + the exploded features — never per-point rows
-    (a 31M-point input moves ~1 GB as points but ~160 MB as tiles; point
-    rows are also what made the join-based variant memory-bandwidth bound
-    and anti-scale beyond ~8 local workers).
-
-    Emits per-partition lineage metrics (n_points per tile) via the
-    n_points column — summable downstream for the north-rule row counts.
-
-    ``batch_parent``: cogroup on the ``batch_parent`` x ``batch_parent``
-    PARENT cell (the tile grammar is hierarchical — 3 km over 1 km by
-    default), not the tile itself.  Each Python group crossing carries
-    ~batch_parent^2 tiles, cutting the per-group fixed cost (Arrow
-    round-trip, kernel dispatch) ~9x, and features covering several tiles
-    of one parent are WKB-decoded once per group instead of once per
-    tile.  Group payload stays bounded (9 tile rows + their features).
-    Set to 1 for the plain per-tile cogroup.
-    """
-    from .. import datagen as dg
-    from ..gridlib.png import png16_to_dem
-    from .tiling import cell_id_from_caption
-
-    if "cell_id" not in images.columns:
-        images = images.withColumn("cell_id", cell_id_from_caption(size_north))
-    covers = explode_feature_covers(features, size_north)
-    # partition pruning: only covers for tiles this job actually owns ever
-    # enter the cogroup — when the input is a slice of the tile universe
-    # (an executor shard, an incremental/resume run), the feature side and
-    # the group count shrink with it instead of fanning out to every
-    # covered cell.  AQE picks broadcast for small tile sets, SMJ at scale.
-    covers = covers.join(images.select("cell_id").distinct(), "cell_id", "semi")
-    cmap = dict(classmap)
-    parent = parent_cell_col(batch_parent)
-
-    def run(key, img_pdf: pd.DataFrame, feat_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "cell_id": pd.Series(dtype="i8"),
-                "image_id": pd.Series(dtype=object),
-                "value": pd.Series(dtype="i4"),
-                "n_points": pd.Series(dtype="i8"),
-            }
-        )
-        if img_pdf.empty:
-            return empty
-        feat_by_cell = (
-            {c: g for c, g in feat_pdf.groupby("cell_id")}
-            if not feat_pdf.empty
-            else {}
-        )
-        decode_memo: dict[bytes, object] = {}
-        out = []
-        for cell, sub in img_pdf.groupby("cell_id"):
-            cell = int(cell)
-            feats = []
-            fp = feat_by_cell.get(cell)
-            if fp is not None:
-                for s, l, g in zip(fp["seq"], fp["luokka"], fp["geom_wkb"]):
-                    gb = bytes(g)
-                    geom = decode_memo.get(gb)
-                    if geom is None:
-                        geom = wkb.decode(gb)
-                        decode_memo[gb] = geom
-                    feats.append((int(s), int(l), geom))
-            raster, _n, _env = _rasterize_tile_raster(
-                cell, px, size_north, feats, cmap
-            )
-            for cap, data in zip(sub["caption"], sub["bytes"]):
-                name, minx, miny, maxx, maxy, cs, _ = dg.parse_caption(cap)
-                dem = png16_to_dem(bytes(data), dg.Z_MIN, dg.Z_MAX)
-                x, y, _z, _c = dg.sample_points_from_tile(name, dem, minx, miny, cs)
-                rcs = (maxx - minx) / raster.shape[1]
-                row = ((y - miny) / rcs).astype(np.int64)
-                col = ((x - minx) / rcs).astype(np.int64)
-                vals = raster[row, col]
-                uv, cnt = np.unique(vals, return_counts=True)
-                for v, n in zip(uv, cnt):
-                    out.append(
-                        {
-                            "cell_id": cell,
-                            "image_id": name,
-                            "value": int(v),
-                            "n_points": int(n),
-                        }
-                    )
-        return pd.DataFrame(out) if out else empty
-
-    # keep a caller-provided parent_id column: input pre-partitioned on
-    # it (repartition(N, "parent_id") before cache) satisfies the
-    # cogroup's clustered distribution, so the heavy image-bytes side
-    # skips its exchange entirely — only the small covers side shuffles
-    img_side = images.select("cell_id", "caption", "bytes", *(
-        ["parent_id"] if "parent_id" in images.columns else []
-    ))
-    if "parent_id" not in img_side.columns:
-        img_side = img_side.withColumn("parent_id", parent)
-    return (
-        img_side
-        .groupBy("parent_id")
-        .cogroup(covers.withColumn("parent_id", parent).groupBy("parent_id"))
-        .applyInPandas(
-            run, "cell_id long, image_id string, value int, n_points long"
-        )
-    )
-
-
 def per_cell_feature_lists(features: DataFrame, size_north: int = 1000) -> DataFrame:
-    """The join-attach strategy's broadcast dimension: exploded covers
+    """The broadcast dimension of :func:`classify_images_prebroadcast`:
+    exploded covers
     grouped per cell into (cell_id, fl: array<struct(seq, luokka,
     geom_wkb)>).  Callers that classify repeatedly should build this
     ONCE and .cache() it (bench does; a deployment materializes it as a
@@ -434,94 +230,6 @@ def per_cell_feature_lists(features: DataFrame, size_north: int = 1000) -> DataF
     covers = explode_feature_covers(features, size_north)
     return covers.groupBy("cell_id").agg(
         F.collect_list(F.struct("seq", "luokka", "geom_wkb")).alias("fl")
-    )
-
-
-def classify_images_joined(
-    images: DataFrame,
-    features: DataFrame | None,
-    classmap: dict[int, int],
-    px: int = 128,
-    size_north: int = 1000,
-    per_cell: DataFrame | None = None,
-) -> DataFrame:
-    """Join-attach strategy of the tile PIP classification — the fastest
-    shape measured when the per-tile feature lists fit a broadcast.
-
-    The exploded covers (X5) are grouped per cell into a feature-list
-    column and BROADCAST-JOINED onto the image rows JVM-side; the kernel
-    then runs as ONE narrow ``mapInPandas`` over the image table — no
-    cogroup, no exchange on the heavy image side at all, and the
-    per-group Arrow framing of the cogroup (measured ~2x the mapInPandas
-    framing on this host) disappears.  WKB decode is memoized per worker
-    since features repeat across the tiles they cover.
-
-    Strategy ladder (all three produce identical rows, pinned in tests):
-    - :func:`classify_images_broadcast` — whole feature set broadcast,
-      per-tile bbox scan in the kernel: best when features are tiny.
-    - **this** — per-cell lists broadcast, JVM join prunes per tile:
-      best while sum(covers) fits a broadcast (~10 MB-1 GB).
-    - :func:`classify_images_fused` — cogroup equi-join on cell_id:
-      the unbounded-scale fallback (feature side shuffles, image side
-      reuses caller partitioning).
-    """
-    import numpy as np
-
-    from .. import datagen as dg
-    from ..gridlib import wkb as W
-    from ..gridlib.png import png16_to_dem
-
-    if "cell_id" not in images.columns:
-        from .tiling import cell_id_from_caption
-
-        images = images.withColumn("cell_id", cell_id_from_caption(size_north))
-    if per_cell is None:
-        per_cell = per_cell_feature_lists(features, size_north)
-    cmap = dict(classmap)
-    img = images.select("cell_id", "caption", "bytes").join(
-        F.broadcast(per_cell), "cell_id", "left"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[bytes, object] = {}
-        for pdf in batches:
-            out = []
-            for cell, cap, data, fl in zip(
-                pdf["cell_id"], pdf["caption"], pdf["bytes"], pdf["fl"]
-            ):
-                name, minx, miny, maxx, maxy, cs, _ = dg.parse_caption(cap)
-                fls = []
-                if fl is not None:
-                    for r in fl:
-                        gb = bytes(r["geom_wkb"])
-                        g = memo.get(gb)
-                        if g is None:
-                            g = memo[gb] = W.decode(gb)
-                        fls.append((int(r["seq"]), int(r["luokka"]), g))
-                raster, _n, _env = _rasterize_tile_raster(
-                    int(cell), px, size_north, fls, cmap
-                )
-                dem = png16_to_dem(bytes(data), dg.Z_MIN, dg.Z_MAX)
-                x, y, _z, _c = dg.sample_points_from_tile(name, dem, minx, miny, cs)
-                rcs = (maxx - minx) / raster.shape[1]
-                row = ((y - miny) / rcs).astype(np.int64)
-                col = ((x - minx) / rcs).astype(np.int64)
-                uv, cnt = np.unique(raster[row, col], return_counts=True)
-                for v, n in zip(uv, cnt):
-                    out.append(
-                        {
-                            "cell_id": int(cell),
-                            "image_id": name,
-                            "value": int(v),
-                            "n_points": int(n),
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=["cell_id", "image_id", "value", "n_points"]
-            )
-
-    return img.mapInPandas(
-        run, "cell_id long, image_id string, value int, n_points long"
     )
 
 
@@ -559,24 +267,52 @@ def classify_images_prebroadcast(
     px: int = 128,
     size_north: int = 1000,
 ) -> DataFrame:
-    """Zero-exchange variant of :func:`classify_images_joined`: the
-    per-cell feature lists arrive as a prepared ``sc.broadcast`` dict
-    (:func:`per_cell_broadcast`), so the query plan is ONE narrow
-    ``mapInPandas`` over the (cached) image table — no join, no
-    broadcast exchange, no shuffle of any side.  This is the same plan
-    shape as q1's fused rasterization, which measures at ~90% of the
-    host's no-Spark scaling ceiling; the per-attempt broadcast exchange
-    of the JVM-join strategy is a constant ~0.3-0.5 s that cannot scale
-    with cores.  Identical output rows to the other three strategies
-    (pinned in tests).  Valid while sum(per-cell lists) fits executor
-    memory — the same envelope as the joined strategy's broadcast."""
+    """Tile-level PIP classification: one row per (tile, class value)
+    with the count of the tile's points that fall in that class.
+
+    One image row IS one tile, and its synthesized points lie inside it
+    by construction, so the points never exist as a table: per tile the
+    kernel rasterizes the tile's features (V1-V8), decodes the tile's
+    points from the image bytes and histograms the raster at the point
+    cells.  The per-cell feature lists arrive as a prepared
+    ``sc.broadcast`` dict (:func:`per_cell_broadcast`), so the plan is
+    ONE narrow ``mapInPandas`` over the (cached) image table — no join,
+    no exchange.  Valid while sum(per-cell lists) fits executor memory."""
     cmap = dict(classmap)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         val, memo = _pybc_state(b_per_cell)
         for pdf in batches:
-            yield _classify_tiles_pdf(
-                pdf["caption"], pdf["bytes"], val, memo, cmap, px, size_north
+            out = []
+            for cap, data in zip(pdf["caption"], pdf["bytes"]):
+                name, minx, miny, maxx, maxy, cs, _ = datagen.parse_caption(cap)
+                cell = int(cell_id(np.array([minx]), np.array([miny]), size_north)[0])
+                fls = []
+                for seq, luokka, gb in val.get(cell, ()):
+                    g = memo.get(gb)
+                    if g is None:
+                        g = memo[gb] = wkb.decode(gb)
+                    fls.append((seq, luokka, g))
+                raster, _n, _env = _rasterize_tile_raster(
+                    cell, px, size_north, fls, cmap
+                )
+                dem = png16_to_dem(bytes(data), datagen.Z_MIN, datagen.Z_MAX)
+                x, y, _z, _c = datagen.sample_points_from_tile(name, dem, minx, miny, cs)
+                rcs = (maxx - minx) / raster.shape[1]
+                row = ((y - miny) / rcs).astype(np.int64)
+                col = ((x - minx) / rcs).astype(np.int64)
+                uv, cnt = np.unique(raster[row, col], return_counts=True)
+                for v, n in zip(uv, cnt):
+                    out.append(
+                        {
+                            "cell_id": cell,
+                            "image_id": name,
+                            "value": int(v),
+                            "n_points": int(n),
+                        }
+                    )
+            yield pd.DataFrame(
+                out, columns=["cell_id", "image_id", "value", "n_points"]
             )
 
     return images.select("caption", "bytes").mapInPandas(
@@ -593,162 +329,6 @@ def _pybc_state(b_per_cell):
         _PYBC_DECODE_MEMO.clear()
         ent = _PYBC_DECODE_MEMO[id(val)] = (val, {})
     return val, ent[1]
-
-
-def _classify_tiles_pdf(
-    caps, datas, val: dict, memo: dict, cmap: dict, px: int, size_north: int
-) -> pd.DataFrame:
-    """Shared per-tile classify loop of the prebroadcast and scan-local
-    strategies: caption+png16 bytes -> per-tile class histogram rows."""
-    from .. import datagen as dg
-    from ..gridlib import wkb as W
-    from ..gridlib.png import png16_to_dem
-    from ..gridlib.tilenamer import cell_id as cid_fn
-
-    out = []
-    for cap, data in zip(caps, datas):
-        name, minx, miny, maxx, maxy, cs, _ = dg.parse_caption(cap)
-        cell = int(cid_fn(np.array([minx]), np.array([miny]), size_north)[0])
-        fls = []
-        for seq, luokka, gb in val.get(cell, ()):
-            g = memo.get(gb)
-            if g is None:
-                g = memo[gb] = W.decode(gb)
-            fls.append((seq, luokka, g))
-        raster, _n, _env = _rasterize_tile_raster(
-            cell, px, size_north, fls, cmap
-        )
-        dem = png16_to_dem(bytes(data), dg.Z_MIN, dg.Z_MAX)
-        x, y, _z, _c = dg.sample_points_from_tile(name, dem, minx, miny, cs)
-        rcs = (maxx - minx) / raster.shape[1]
-        row = ((y - miny) / rcs).astype(np.int64)
-        col = ((x - minx) / rcs).astype(np.int64)
-        uv, cnt = np.unique(raster[row, col], return_counts=True)
-        for v, n in zip(uv, cnt):
-            out.append(
-                {
-                    "cell_id": cell,
-                    "image_id": name,
-                    "value": int(v),
-                    "n_points": int(n),
-                }
-            )
-    return pd.DataFrame(out, columns=["cell_id", "image_id", "value", "n_points"])
-
-
-def classify_images_scanlocal(
-    splits: DataFrame,
-    b_per_cell,
-    classmap: dict[int, int],
-    px: int = 128,
-    size_north: int = 1000,
-    strip: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Scan-local variant of :func:`classify_images_prebroadcast`: the
-    input is a row-group split table (``sources.parquet_row_group_
-    splits``) and each python task reads its own row groups with
-    pyarrow — the image bytes never enter the JVM at all.  Motivation:
-    the JVM-cache -> Arrow IPC framing of the tile bytes is a
-    pure-memcpy stage bound by host memory bandwidth rather than by
-    cores; removing the framing leaves only compute stages.  On a real
-    cluster this is the standard node-local columnar scan, so nothing
-    is lost at 1000 executors.  Output rows identical to the other
-    strategies (pinned in tests)."""
-    from .sources import scan_row_groups
-
-    cmap = dict(classmap)
-
-    cols = ["caption", "bytes"] + (["miny"] if strip else [])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        val, memo = _pybc_state(b_per_cell)
-        for pdf in scan_row_groups(batches, cols):
-            if strip is not None:
-                # row-group stats pruning is advisory; the shard contract
-                # (disjoint strips, totals sum) needs the exact predicate
-                pdf = pdf[(pdf["miny"] >= strip[0]) & (pdf["miny"] < strip[1])]
-            yield _classify_tiles_pdf(
-                pdf["caption"], pdf["bytes"], val, memo, cmap, px, size_north
-            )
-
-    return splits.mapInPandas(
-        run, "cell_id long, image_id string, value int, n_points long"
-    )
-
-
-def classify_images_broadcast(
-    spark: SparkSession,
-    images: DataFrame,
-    features: DataFrame,
-    classmap: dict[int, int],
-    px: int = 128,
-    size_north: int = 1000,
-) -> DataFrame:
-    """Broadcast strategy of :func:`classify_images_fused` — the right
-    physical plan while the feature set fits a broadcast (fixture scale:
-    ~7k features ~660 KB; here ~131k ~20 MB).  Features (+precomputed
-    envelopes) ship once per executor; image rows stream through ONE
-    narrow mapInPandas — no shuffle at all, not even of tile rows.  Per
-    tile the kernel bbox-filters the broadcast set (vectorized),
-    rasterizes, decodes the tile's points and histograms their class
-    values.  Beyond broadcast limits, use classify_images_fused
-    (cogrouped equi-join on cell_id).  Outputs are identical."""
-    import numpy as np
-
-    from .. import datagen as dg
-    from ..gridlib import wkb as W
-    from ..gridlib.png import png16_to_dem
-    from ..gridlib.tilenamer import cell_id as cid_fn
-
-    rows = features.select("seq", "luokka", "geom_wkb").collect()
-    feats = [(r["seq"], r["luokka"], bytes(r["geom_wkb"])) for r in rows]
-    envs = np.array(
-        [W.decode(g).envelope() for _s, _l, g in feats], dtype=np.float64
-    ).reshape(-1, 4)
-    b_feats = spark.sparkContext.broadcast((feats, envs))
-    b_map = spark.sparkContext.broadcast(dict(classmap))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_feats = _decoded_feats(b_feats)  # decode once per worker
-        fenvs = b_feats.value[1]
-        cmap = b_map.value
-        for pdf in batches:
-            out = []
-            for cap, data in zip(pdf["caption"], pdf["bytes"]):
-                name, minx, miny, maxx, maxy, cs, _ = dg.parse_caption(cap)
-                sel = np.flatnonzero(
-                    (fenvs[:, 2] >= minx)
-                    & (fenvs[:, 0] < maxx)
-                    & (fenvs[:, 3] >= miny)
-                    & (fenvs[:, 1] < maxy)
-                )
-                cell = int(cid_fn(np.array([minx]), np.array([miny]), size_north)[0])
-                raster, _n, _env = _rasterize_tile_raster(
-                    cell, px, size_north, [all_feats[i] for i in sel], cmap
-                )
-                dem = png16_to_dem(bytes(data), dg.Z_MIN, dg.Z_MAX)
-                x, y, _z, _c = dg.sample_points_from_tile(name, dem, minx, miny, cs)
-                rcs = (maxx - minx) / raster.shape[1]
-                row = ((y - miny) / rcs).astype(np.int64)
-                col = ((x - minx) / rcs).astype(np.int64)
-                uv, cnt = np.unique(raster[row, col], return_counts=True)
-                for v, n in zip(uv, cnt):
-                    out.append(
-                        {
-                            "cell_id": cell,
-                            "image_id": name,
-                            "value": int(v),
-                            "n_points": int(n),
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["cell_id", "image_id", "value", "n_points"],
-            )
-
-    return images.select("caption", "bytes").mapInPandas(
-        run, "cell_id long, image_id string, value int, n_points long"
-    )
 
 
 def pip_classify_points(

@@ -5,8 +5,8 @@ LAS files scan DISTRIBUTED: the driver bins the path list into one file
 list per task, and each task parses its files with the vectorized numpy
 reader (gridlib/las.py) inside ``mapInPandas`` — at 100 TB the
 tile->file mapping shards across executors and no point ever touches
-the driver.  Parquet splits (``parquet_row_group_splits``) follow the
-same pattern with row groups as the unit.
+the driver.  LAZ files split the same way with LASzip chunks as the
+unit (``read_laz_points_chunked``).
 """
 
 from __future__ import annotations
@@ -100,75 +100,3 @@ def read_laz_points_chunked(spark: SparkSession, path: str) -> DataFrame:
                 )
 
     return plan.mapInPandas(run, POINTS_SCHEMA)
-
-
-def parquet_row_group_splits(
-    spark: SparkSession,
-    path: str,
-    strip_col: str | None = None,
-    strip: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Parquet file(s) -> one row per row group: the split table for a
-    SCAN-LOCAL stage (python workers read their own row groups with
-    pyarrow instead of receiving cached JVM bytes over Arrow IPC).
-
-    Motivation: piping a cached table of large binary tiles JVM->python
-    costs 4-5 memory passes over the bytes (cache read, Arrow
-    serialize, socket, pandas materialize) — a pure-memcpy stage bound
-    by host memory bandwidth rather than by cores.  Executors reading
-    their own splits from (page-cached) files is one pass, and on a
-    real cluster it is simply the normal node-local columnar scan.
-
-    ``strip_col``/``strip``: row groups whose [min, max] statistics for
-    that column don't intersect ``[lo, hi)`` are pruned driver-side —
-    the row-group analog of parquet predicate pushdown (shard mode).
-    One split = one task (repartition(n_splits)): at 16k tiles that is
-    256 tasks of ~64 tiles — fine-grained enough for wave balance, and
-    at 10^12 scale the listing itself would shard (Iceberg manifest
-    style) instead of living on the driver.
-    """
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = (
-        [path]
-        if os.path.isfile(path)
-        else sorted(glob.glob(os.path.join(path, "*.parquet")))
-    )
-    rows = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        ci = names.index(strip_col) if strip_col else -1
-        for i in range(md.num_row_groups):
-            if strip is not None and ci >= 0:
-                st = md.row_group(i).column(ci).statistics
-                if st is not None and st.has_min_max and (
-                    st.max < strip[0] or st.min >= strip[1]
-                ):
-                    continue
-            rows.append((f, i))
-    return spark.createDataFrame(rows, "path string, rg int").repartition(
-        len(rows) or 1
-    )
-
-
-def scan_row_groups(
-    pdf_iter: Iterator[pd.DataFrame], columns: list[str]
-) -> Iterator[pd.DataFrame]:
-    """Kernel-side half of the scan-local pattern: iterate a split
-    table's (path, rg) rows, yield one pandas frame per row group.
-    ParquetFile handles are memoized per task so a task owning several
-    row groups of one file parses the footer once."""
-    import pyarrow.parquet as pq
-
-    handles: dict[str, object] = {}
-    for pdf in pdf_iter:
-        for p, rg in zip(pdf["path"], pdf["rg"]):
-            pf = handles.get(p)
-            if pf is None:
-                pf = handles[p] = pq.ParquetFile(p)
-            yield pf.read_row_group(
-                int(rg), columns=columns, use_threads=False
-            ).to_pandas()

@@ -24,8 +24,8 @@ from .. import datagen
 from ..gridlib import topodb
 from ..gridlib.bounds import RasterBounds
 from ..gridlib.phash import phash64
-from ..gridlib.png import dem_to_png16
-from ..gridlib.tilenamer import cell_id_envelope, cell_id_to_name
+from ..gridlib.png import dem_to_png16, png16_to_dem
+from ..gridlib.tilenamer import cell_id, cell_id_envelope, cell_id_to_name
 from ..gridlib.tin import Tin
 from .tiling import repartition_by_cell, with_cell_id
 
@@ -38,6 +38,8 @@ TILE_SCHEMA = (
     "caption string, phash long, n_points int, n_triangles int, "
     "filled_cells int, missing_cells int, a2_filled_cells int"
 )
+TILE_COLUMNS = [c.split()[0] for c in TILE_SCHEMA.split(", ")]
+
 
 def _tile_kernel_factory(px: int, size_north: int, ground_max_first: bool):
     """Kernel: one tile's points -> one DEM tile row.
@@ -49,7 +51,7 @@ def _tile_kernel_factory(px: int, size_north: int, ground_max_first: bool):
     """
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _tile_row(
+        return pd.DataFrame([_tile_row(
             int(key[0]),
             pdf["x"].to_numpy(),
             pdf["y"].to_numpy(),
@@ -58,7 +60,7 @@ def _tile_kernel_factory(px: int, size_north: int, ground_max_first: bool):
             px,
             size_north,
             ground_max_first,
-        )
+        )])
 
     return kernel
 
@@ -72,13 +74,10 @@ def _tile_row(
     px: int,
     size_north: int,
     ground_max_first: bool,
-) -> pd.DataFrame:
+) -> dict:
     """One tile's point arrays -> its DEM tile row (point order does not
     matter — Delaunay canonicalizes via sorted dedup)."""
-    minx, miny, maxx, maxy = (
-        int(v) for v in np.array(cell_id_envelope(np.array([cell]), size_north)).ravel()
-    )
-    bounds = RasterBounds(px, px, minx, miny, maxx, maxy)
+    bounds = RasterBounds(px, px, *_envelope(cell, size_north))
 
     ground = cls == topodb.CLS_GROUND
     dem = np.full((px, px), np.nan, dtype=np.float32)
@@ -107,31 +106,48 @@ def _tile_row(
         else:
             tin.rasterize_dem(bounds, dem=dem)
 
+    return _encode_tile(cell, dem, len(x), n_tri, a2_filled, size_north)
+
+
+def _envelope(cell: int, size_north: int) -> tuple[int, int, int, int]:
+    return tuple(
+        int(v) for v in np.array(cell_id_envelope(np.array([cell]), size_north)).ravel()
+    )
+
+
+def _encode_tile(
+    cell: int,
+    dem: np.ndarray,
+    n_points: int,
+    n_triangles: int,
+    a2_filled: int,
+    size_north: int,
+) -> dict:
+    """A finished DEM plane -> its :data:`TILE_SCHEMA` row: caption,
+    png16 bytes, phash and fill counts.  Every TIN path ends here."""
+    px = dem.shape[0]
+    minx, miny, maxx, maxy = _envelope(cell, size_north)
     name = str(cell_id_to_name(np.array([cell]), size_north)[0])
     caption = datagen.CAPTION_FMT.format(
         name=name, minx=minx, miny=miny, maxx=maxx, maxy=maxy,
         cellsize=(maxx - minx) / px, nodata=-9999,
     )
     filled_cells = int((~np.isnan(dem)).sum())
-    return pd.DataFrame(
-        [
-            {
-                "cell_id": cell,
-                "image_id": name,
-                "bytes": dem_to_png16(dem, datagen.Z_MIN, datagen.Z_MAX),
-                "w": px,
-                "h": px,
-                "fmt": "png16",
-                "caption": caption,
-                "phash": phash64(np.nan_to_num(dem)),
-                "n_points": len(x),
-                "n_triangles": n_tri,
-                "filled_cells": filled_cells,
-                "missing_cells": px * px - filled_cells,
-                "a2_filled_cells": a2_filled,
-            }
-        ]
-    )
+    return {
+        "cell_id": cell,
+        "image_id": name,
+        "bytes": dem_to_png16(dem, datagen.Z_MIN, datagen.Z_MAX),
+        "w": px,
+        "h": px,
+        "fmt": "png16",
+        "caption": caption,
+        "phash": phash64(np.nan_to_num(dem)),
+        "n_points": n_points,
+        "n_triangles": n_triangles,
+        "filled_cells": filled_cells,
+        "missing_cells": px * px - filled_cells,
+        "a2_filled_cells": a2_filled,
+    }
 
 
 def rasterize_tin_tiles(
@@ -162,89 +178,21 @@ def rasterize_images_fused(images: DataFrame, px: int = 128,
     classic small-file parallelism trap (at 10^12 scale the table has
     thousands of splits and this repartition becomes a no-op coalesce).
     """
-    import pandas as pd
-
-    from .. import datagen as dg
-    from ..gridlib.png import png16_to_dem
-    from ..gridlib.tilenamer import cell_id as cid_fn
-
     if partitions:
         images = images.repartition(partitions)
 
     def run(batches):
         for pdf in batches:
-            yield _rasterize_tiles_pdf(pdf["caption"], pdf["bytes"], px)
+            rows = []
+            for cap, data in zip(pdf["caption"], pdf["bytes"]):
+                name, minx, miny, _maxx, _maxy, cs, _ = datagen.parse_caption(cap)
+                dem = png16_to_dem(bytes(data), datagen.Z_MIN, datagen.Z_MAX)
+                x, y, z, cls = datagen.sample_points_from_tile(name, dem, minx, miny, cs)
+                cell = int(cell_id(np.array([minx]), np.array([miny]), 1000)[0])
+                rows.append(_tile_row(cell, x, y, z, cls, px, 1000, False))
+            yield pd.DataFrame(rows, columns=TILE_COLUMNS)
 
     return images.select("caption", "bytes").mapInPandas(run, TILE_SCHEMA)
-
-
-def _rasterize_tiles_pdf(caps, datas, px: int) -> "pd.DataFrame":
-    """Shared per-tile loop of the fused and scan-local q1 paths:
-    caption+png16 bytes -> TIN -> DEM tile rows."""
-    import pandas as pd
-
-    from .. import datagen as dg
-    from ..gridlib.png import png16_to_dem
-    from ..gridlib.tilenamer import cell_id as cid_fn
-
-    rows = []
-    for cap, data in zip(caps, datas):
-        name, minx, miny, maxx, maxy, cs, _ = dg.parse_caption(cap)
-        dem_in = png16_to_dem(bytes(data), dg.Z_MIN, dg.Z_MAX)
-        x, y, z, cls = dg.sample_points_from_tile(name, dem_in, minx, miny, cs)
-        bounds = RasterBounds(px, px, minx, miny, maxx, maxy)
-        dem = np.full((px, px), np.nan, dtype=np.float32)
-        n_tri = 0
-        if len(x) >= 3:
-            tin = Tin(x, y, z, cls)
-            n_tri = tin.triangle_count
-            tin.rasterize_dem(bounds, dem=dem)
-        cell = int(cid_fn(np.array([minx]), np.array([miny]), 1000)[0])
-        caption = dg.CAPTION_FMT.format(
-            name=name, minx=minx, miny=miny, maxx=maxx, maxy=maxy,
-            cellsize=(maxx - minx) / px, nodata=-9999,
-        )
-        filled = int((~np.isnan(dem)).sum())
-        rows.append(
-            {
-                "cell_id": cell,
-                "image_id": name,
-                "bytes": dem_to_png16(dem, dg.Z_MIN, dg.Z_MAX),
-                "w": px, "h": px, "fmt": "png16",
-                "caption": caption,
-                "phash": phash64(np.nan_to_num(dem)),
-                "n_points": len(x),
-                "n_triangles": n_tri,
-                "filled_cells": filled,
-                "missing_cells": px * px - filled,
-                "a2_filled_cells": -1,
-            }
-        )
-    cols = [c.split()[0] for c in TILE_SCHEMA.split(", ")]
-    return pd.DataFrame(rows, columns=cols)
-
-
-def rasterize_images_scanlocal(splits, px: int = 128,
-                               strip: tuple[float, float] | None = None):
-    """Scan-local q1: tasks read their own parquet row groups with
-    pyarrow (``sources.parquet_row_group_splits``), so tile bytes never
-    transit the JVM->python Arrow IPC path — see
-    :func:`..engine.pip_stage.classify_images_scanlocal` for the
-    measured motivation (the framing memcpy is bus-bound and caps the
-    N->4N scaling quotient).  Identical output rows to
-    :func:`rasterize_images_fused`."""
-    from .sources import scan_row_groups
-
-    cols = ["caption", "bytes"] + (["miny"] if strip else [])
-
-    def run(batches):
-        for pdf in scan_row_groups(batches, cols):
-            if strip is not None:
-                # exact shard predicate; row-group stats pruning is advisory
-                pdf = pdf[(pdf["miny"] >= strip[0]) & (pdf["miny"] < strip[1])]
-            yield _rasterize_tiles_pdf(pdf["caption"], pdf["bytes"], px)
-
-    return splits.mapInPandas(run, TILE_SCHEMA)
 
 
 SUB_SCHEMA = (
@@ -343,10 +291,7 @@ def rasterize_tin_tiles_skew(
 
     def sub_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         cell, kqr, kqc = int(key[0]), int(key[1]), int(key[2])
-        minx, miny, _maxx, _maxy = (
-            float(v)
-            for v in np.array(cell_id_envelope(np.array([cell]), size_north)).ravel()
-        )
+        minx, miny, _maxx, _maxy = _envelope(cell, size_north)
         sminx = minx + kqc * sub_e
         sminy = miny + kqr * sub_n
         bounds = RasterBounds(sub_px, sub_px, sminx, sminy, sminx + sub_e, sminy + sub_n)
@@ -383,10 +328,6 @@ def rasterize_tin_tiles_skew(
 
     def merge_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         cell = int(key[0])
-        minx, miny, maxx, maxy = (
-            int(v)
-            for v in np.array(cell_id_envelope(np.array([cell]), size_north)).ravel()
-        )
         dem = np.full((px, px), np.nan, dtype=np.float32)
         n_pts = n_tri = 0
         for buf, qr, qc, npts, ntri in zip(
@@ -397,29 +338,7 @@ def rasterize_tin_tiles_skew(
             dem[r0 : r0 + sub_px, c0 : c0 + sub_px] = sub
             n_pts += int(npts)
             n_tri += int(ntri)
-        name = str(cell_id_to_name(np.array([cell]), size_north)[0])
-        caption = datagen.CAPTION_FMT.format(
-            name=name, minx=minx, miny=miny, maxx=maxx, maxy=maxy,
-            cellsize=(maxx - minx) / px, nodata=-9999,
-        )
-        filled = int((~np.isnan(dem)).sum())
-        return pd.DataFrame(
-            [
-                {
-                    "cell_id": cell,
-                    "image_id": name,
-                    "bytes": dem_to_png16(dem, datagen.Z_MIN, datagen.Z_MAX),
-                    "w": px, "h": px, "fmt": "png16",
-                    "caption": caption,
-                    "phash": phash64(np.nan_to_num(dem)),
-                    "n_points": n_pts,
-                    "n_triangles": n_tri,
-                    "filled_cells": filled,
-                    "missing_cells": px * px - filled,
-                    "a2_filled_cells": -1,
-                }
-            ]
-        )
+        return pd.DataFrame([_encode_tile(cell, dem, n_pts, n_tri, -1, size_north)])
 
     salted = subs.groupBy("cell_id").applyInPandas(merge_kernel, TILE_SCHEMA)
     return normal.unionByName(salted)

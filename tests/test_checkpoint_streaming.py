@@ -512,16 +512,41 @@ def _inject_faults(mp, root, k):
     ``root`` raise :class:`_Fault` instead of running; returns the list of
     step names taken so far (the faulted one last).  The steps: Spark
     parquet writes, ``pq.write_table``, ``os.makedirs``/``remove``/
-    ``replace``/``rename``, ``shutil.rmtree`` and every ``open`` for
-    writing (the manifest write and the marker creation)."""
+    ``replace``/``rename``, ``shutil.rmtree``, each ``os.unlink``/
+    ``os.rmdir`` that rmtree makes inside it, and every ``open`` for
+    writing (the manifest write and the marker creation).
+
+    Filesystems list a directory in any order (ext4 by name hash), so
+    rmtree here sees each directory under ``root`` in reverse name
+    order: the data files go before the ``_SUCCESS_STAGE`` marker, the
+    order that tears a commit which removes its marker last."""
+    import contextlib
+
     import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameWriter
 
     steps = []
 
+    def fd_dir(fd):
+        return os.readlink(f"/proc/self/fd/{fd}")
+
+    def target(a, kw, arg):
+        # rmtree unlinks by name relative to an open directory fd
+        if kw.get("dir_fd") is not None:
+            return os.path.join(fd_dir(kw["dir_fd"]), a[arg])
+        return str(a[arg])
+
+    scandir = os.scandir
+
+    def listing(p="."):
+        if not (isinstance(p, int) and fd_dir(p).startswith(root)):
+            return scandir(p)
+        with scandir(p) as it:
+            return contextlib.nullcontext(sorted(it, key=lambda e: e.name, reverse=True))
+
     def wrap(name, fn, arg=0, counts=lambda a, kw: True):
         def step(*a, **kw):
-            if str(a[arg]).startswith(root) and counts(a, kw):
+            if target(a, kw, arg).startswith(root) and counts(a, kw):
                 steps.append(name)
                 if len(steps) == k:
                     raise _Fault(name)
@@ -530,9 +555,10 @@ def _inject_faults(mp, root, k):
 
     mp.setattr(DataFrameWriter, "parquet", wrap("spark_write", DataFrameWriter.parquet, 1))
     mp.setattr(pq, "write_table", wrap("write_table", pq.write_table, 1))
-    for name in ("makedirs", "remove", "replace", "rename"):
+    for name in ("makedirs", "remove", "replace", "rename", "unlink", "rmdir"):
         mp.setattr(os, name, wrap(name, getattr(os, name)))
     mp.setattr(checkpoint.shutil, "rmtree", wrap("rmtree", checkpoint.shutil.rmtree))
+    mp.setattr(os, "scandir", listing)
     mp.setattr(
         checkpoint, "open",
         wrap("open", open, counts=lambda a, kw: a[1:] == ("w",)),
@@ -580,7 +606,7 @@ def test_checkpoint_fault_injection_recovers(spark, tmp_path, monkeypatch):
             lambda p: checkpoint.write_stage(first(3, -1), p, "tin", ["in"], {"px": 32}),
             lambda p: checkpoint.resume_stage(spark, wanted, p, compute, "tin", ["in"], px),
             {"spark_write", "makedirs", "write_table", "open", "replace",
-             "rmtree", "rename"},
+             "remove", "rmtree", "unlink", "rmdir", "rename"},
         ),
         "resume_append": (
             lambda p: checkpoint.write_stage(first(3), p, "tin", ["in"], px),

@@ -128,9 +128,9 @@ def test_neighborhood_max(spark):
     assert res[(5, 5)] is True  # isolated cell (border clamp analog)
 
 
-def test_pip_broadcast_vs_cogrouped_and_oracle(spark, images_dir):
-    """V1-V8: both physical strategies produce identical rasters, and they
-    match the single-process gridlib oracle."""
+def test_pip_cogrouped_matches_oracle(spark, images_dir):
+    """V1-V8: the cogrouped rasterizer matches the single-process gridlib
+    oracle on every tile."""
     images = pts.read_images(spark, images_dir)
     feats = spark.read.parquet(f"{images_dir}/polygons.parquet").union(
         spark.read.parquet(f"{images_dir}/lines.parquet")
@@ -144,28 +144,21 @@ def test_pip_broadcast_vs_cogrouped_and_oracle(spark, images_dir):
     tile_df = spark.createDataFrame(pd.DataFrame({"cell_id": cells}))
 
     classmap = {**topodb.ALL_POLYGON, **topodb.ALL_LINE}
-    a = pip_stage.rasterize_features_broadcast(
-        spark, tile_df, feats, classmap, px=64
-    ).collect()
-    b = pip_stage.rasterize_features_cogrouped(
+    got = pip_stage.rasterize_features_cogrouped(
         tile_df, feats, classmap, px=64
     ).collect()
-    da = {r["image_id"]: bytes(r["bytes"]) for r in a}
-    db = {r["image_id"]: bytes(r["bytes"]) for r in b}
-    assert da.keys() == db.keys()
-    assert da == db  # identical rasters from both strategies
+    assert sorted(r["cell_id"] for r in got) == sorted(int(c) for c in cells)
 
-    # oracle: rasterize one tile single-process
     feat_rows = [
         (r["seq"], r["luokka"], bytes(r["geom_wkb"]))
         for r in feats.select("seq", "luokka", "geom_wkb").collect()
     ]
-    some = a[0]
-    oracle = pip_stage._rasterize_tile(
-        some["cell_id"], 64, 1000, feat_rows, classmap
-    )
-    assert oracle["bytes"] == bytes(some["bytes"])
-    assert sum(r["painted_cells"] for r in a) > 0  # something got painted
+    for r in got:
+        oracle = pip_stage._rasterize_tile(
+            r["cell_id"], 64, 1000, feat_rows, classmap
+        )
+        assert {k: r[k] for k in oracle} == oracle, r["image_id"]
+    assert sum(r["painted_cells"] for r in got) > 0  # something got painted
 
 
 def test_pip_classify_points(spark, images_dir):
@@ -181,8 +174,8 @@ def test_pip_classify_points(spark, images_dir):
     tile_df = spark.createDataFrame(
         pd.DataFrame({"cell_id": cell_id(mins[:, 0], mins[:, 1], 1000)})
     )
-    pip_tiles = pip_stage.rasterize_features_broadcast(
-        spark, tile_df, feats, topodb.ALL_POLYGON, px=64
+    pip_tiles = pip_stage.rasterize_features_cogrouped(
+        tile_df, feats, topodb.ALL_POLYGON, px=64
     )
     p = pts.decode_points(images)
     classified = pip_stage.pip_classify_points(p, pip_tiles)
@@ -193,10 +186,10 @@ def test_pip_classify_points(spark, images_dir):
     assert -1 not in byval  # every point found its tile
 
 
-def test_classify_images_fused_matches_point_rows(spark, images_dir):
-    """The fused tile-level PIP (production shape: points never cross the
-    shuffle) must agree, per (cell, class value), with the general
-    point-rows path."""
+def test_classify_prebroadcast_matches_point_rows(spark, images_dir):
+    """The tile-level PIP classification (production shape: points never
+    exist as rows) must agree, per (cell, class value), with the general
+    point-rows path, on polygons and lines."""
     from pyspark.sql import functions as F
 
     images = pts.read_images(spark, images_dir)
@@ -205,10 +198,13 @@ def test_classify_images_fused_matches_point_rows(spark, images_dir):
     )
     cm = {**topodb.ALL_POLYGON, **topodb.ALL_LINE}
 
-    fused = pip_stage.classify_images_fused(images, feats, cm, px=64)
+    b_pc = pip_stage.per_cell_broadcast(
+        spark, pip_stage.per_cell_feature_lists(feats)
+    )
+    classified = pip_stage.classify_images_prebroadcast(images, b_pc, cm, px=64)
     a = {
         (r["cell_id"], r["value"]): r["n"]
-        for r in fused.groupBy("cell_id", "value")
+        for r in classified.groupBy("cell_id", "value")
         .agg(F.sum("n_points").alias("n"))
         .collect()
     }
@@ -274,89 +270,18 @@ def test_skew_salted_tin_matches_unsalted(spark, images_dir):
     assert b2 == s2
 
 
-def test_classify_broadcast_matches_cogrouped(spark, images_dir):
-    """Broadcast and cogrouped fused-PIP strategies (SURVEY §4
-    broadcast-vs-partitioned) must produce identical per-tile class
-    histograms."""
-    from pyspark.sql import functions as F
-
+def test_fused_images_match_point_tin_tiles(spark, images_dir):
+    """The fused image path and the general points path run the same
+    pure TIN over the same points, so every TILE_SCHEMA column agrees
+    byte for byte on every tile."""
     images = pts.read_images(spark, images_dir)
-    feats = spark.read.parquet(f"{images_dir}/polygons.parquet").union(
-        spark.read.parquet(f"{images_dir}/lines.parquet")
-    )
-    cm = {**topodb.ALL_POLYGON, **topodb.ALL_LINE}
-    a = {
-        (r["cell_id"], r["value"]): r["n_points"]
-        for r in pip_stage.classify_images_fused(images, feats, cm, px=64).collect()
-    }
-    b = {
-        (r["cell_id"], r["value"]): r["n_points"]
-        for r in pip_stage.classify_images_broadcast(
-            spark, images, feats, cm, px=64
-        ).collect()
-    }
-    assert a == b and len(a) > 0
-    c = {
-        (r["cell_id"], r["value"]): r["n_points"]
-        for r in pip_stage.classify_images_joined(
-            images, feats, cm, px=64
-        ).collect()
-    }
-    assert a == c
-    b_pc = pip_stage.per_cell_broadcast(
-        spark, pip_stage.per_cell_feature_lists(feats)
-    )
-    d = {
-        (r["cell_id"], r["value"]): r["n_points"]
-        for r in pip_stage.classify_images_prebroadcast(
-            images, b_pc, cm, px=64
-        ).collect()
-    }
-    assert a == d
-    from lasutility_spark.engine import sources as esources
-
-    splits = esources.parquet_row_group_splits(
-        spark, f"{images_dir}/images.parquet"
-    )
-    e = {
-        (r["cell_id"], r["value"]): r["n_points"]
-        for r in pip_stage.classify_images_scanlocal(
-            splits, b_pc, cm, px=64
-        ).collect()
-    }
-    assert a == e
-
-
-def test_scanlocal_q1_matches_fused(spark, images_dir):
-    """Scan-local q1 (python tasks read their own parquet row groups) is
-    byte-identical to the fused cached-table path, including under a
-    strip predicate (row-group stats pruning + exact kernel filter)."""
-    from lasutility_spark.engine import sources as esources
-
-    images = pts.read_images(spark, images_dir)
-    splits = esources.parquet_row_group_splits(
-        spark, f"{images_dir}/images.parquet"
-    )
-    a = {r["image_id"]: (bytes(r["bytes"]), r["n_points"]) for r in
-         tin_stage.rasterize_images_fused(images, px=32).collect()}
-    b = {r["image_id"]: (bytes(r["bytes"]), r["n_points"]) for r in
-         tin_stage.rasterize_images_scanlocal(splits, px=32).collect()}
-    assert a == b and len(a) == 9
-    # strip slicing: the two shard halves partition the full output
-    lo = float(datagen.ANCHOR_N)
-    mid, hi = lo + 2 * datagen.TILE_M, lo + 3 * datagen.TILE_M
-    parts = {}
-    for s in ((lo, mid), (mid, hi)):
-        sp = esources.parquet_row_group_splits(
-            spark, f"{images_dir}/images.parquet", strip_col="miny", strip=s
-        )
-        got = {r["image_id"]: (bytes(r["bytes"]), r["n_points"]) for r in
-               tin_stage.rasterize_images_scanlocal(
-                   sp, px=32, strip=s
-               ).collect()}
-        assert not set(got) & set(parts)
-        parts.update(got)
-    assert parts == a
+    cols = tin_stage.TILE_COLUMNS
+    fused = tin_stage.rasterize_images_fused(images, px=32).collect()
+    general = tin_stage.rasterize_tin_tiles(pts.decode_points(images), px=32).collect()
+    a = {r["image_id"]: tuple(r[c] for c in cols) for r in fused}
+    b = {r["image_id"]: tuple(r[c] for c in cols) for r in general}
+    assert len(a) == 9
+    assert a == b
 
 
 def test_ann_topk_matmul_matches_sql(spark):

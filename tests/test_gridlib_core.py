@@ -257,40 +257,6 @@ def test_clip_native_matches_python_fallback():
             assert np.array_equal(cx, px_) and np.array_equal(cy, py_)
 
 
-def test_broadcast_memo_lru_holds_two_sets():
-    """Alternating two feature broadcasts hits the memo BOTH ways (LRU
-    of 2); a third set evicts the least-recently-used one."""
-    from types import SimpleNamespace
-
-    import numpy as np
-
-    from lasutility_spark.engine import pip_stage
-    from lasutility_spark.gridlib import wkb
-
-    def featset(dx):
-        g = wkb.encode_polygon(
-            [(np.array([0.0, 1 + dx, 1 + dx, 0.0]),
-              np.array([0.0, 0.0, 1.0, 1.0]))]
-        )
-        return SimpleNamespace(value=[(1, 42, g)])
-
-    a, b, c = featset(0), featset(5), featset(9)
-    pip_stage._DECODED_BROADCASTS.clear()
-    da1 = pip_stage._decoded_feats(a)
-    db1 = pip_stage._decoded_feats(b)
-    # both hit (identical decoded list objects back)
-    assert pip_stage._decoded_feats(a) is da1
-    assert pip_stage._decoded_feats(b) is db1
-    assert len(pip_stage._DECODED_BROADCASTS) == 2
-    # a was just used -> b is LRU; inserting c evicts b, keeps a
-    pip_stage._decoded_feats(a)
-    pip_stage._decoded_feats(c)
-    assert pip_stage._decoded_feats(a) is da1
-    assert pip_stage._decoded_feats(b) is not db1  # re-decoded after evict
-    pip_stage._DECODED_BROADCASTS.clear()
-
-
-
 def _native_build_worker(tmpdir: str, barrier, delay: float) -> None:
     import sys
     import tempfile

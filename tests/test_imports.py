@@ -79,3 +79,28 @@ def test_relative_imports_resolve():
             if importlib.util.find_spec(f"{target}.{n}") is None:
                 dangling.append(f"{mod}:{lineno}: {target} has no {n}")
     assert not dangling, "\n".join(dangling)
+
+
+def test_deleted_names_stay_gone():
+    """The duplicate strategy paths deleted from pip_stage, tin_stage and
+    sources are not named anywhere in the code or the top-level docs."""
+    deleted = [
+        "classify_images_fused", "classify_images_joined",
+        "classify_images_scanlocal", "classify_images_broadcast",
+        "parent_cell_col", "rasterize_features_broadcast",
+        "rasterize_images_scanlocal", "parquet_row_group_splits",
+        "scan_row_groups", "_decoded_feats", "_rasterize_tiles_pdf",
+    ]
+    repo = os.path.dirname(PKG_DIR)
+    paths = [os.path.join(repo, f) for f in ("__spark_entry__.py", "README.md", "SURVEY.md")]
+    for top in ("lasutility_spark", "scripts", "tests"):
+        for root, _dirs, files in os.walk(os.path.join(repo, top)):
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    assert len(paths) > 40  # the walk really saw the source tree
+    found = []
+    for path in paths:
+        if os.path.samefile(path, __file__):
+            continue
+        text = open(path, encoding="utf-8").read()
+        found += [f"{os.path.relpath(path, repo)}: {n}" for n in deleted if n in text]
+    assert not found, "\n".join(found)

@@ -43,8 +43,7 @@ def test_fused_tin_pass_has_no_exchange(spark, images_dir):
     images = (
         epoints.read_images(spark, images_dir)
         .withColumn("cell_id", cell_id_from_caption(1000))
-        .withColumn("parent_id", pip_stage.parent_cell_col(3))
-        .repartition(4, "parent_id")
+        .repartition(4, "cell_id")
         .cache()
     )
     images.count()
@@ -66,51 +65,20 @@ def test_tin_stage_hash_exchange_without_range_sampling(spark, images_dir):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_cogroup_reuses_image_side_partitioning(spark, images_dir):
-    """classify_images_fused over an input cached as repartition(N,
-    parent_id): the heavy image side feeds the cogroup via
-    InMemoryTableScan + Sort with NO exchange above it."""
-    images = (
-        epoints.read_images(spark, images_dir)
-        .withColumn("cell_id", cell_id_from_caption(1000))
-        .withColumn("parent_id", pip_stage.parent_cell_col(3))
-        .repartition(4, "parent_id")
-        .cache()
-    )
-    images.count()
-    feats = spark.read.parquet(f"{images_dir}/polygons.parquet")
+def test_prebroadcast_classify_has_no_exchange(spark, images_dir):
+    """classify_images_prebroadcast: the per-cell feature lists arrive as
+    a prepared broadcast, so the plan over the image table is ONE narrow
+    mapInPandas with no Exchange of any kind."""
     from lasutility_spark.gridlib import topodb
 
-    df = pip_stage.classify_images_fused(images, feats, topodb.ALL_POLYGON, px=32)
-    plan = _plan(df)
-    # the image side of FlatMapCoGroupsInPandas is the first child; it
-    # must read the cache directly (Sort over InMemoryTableScan)
-    cogroup_at = plan.index("FlatMapCoGroupsInPandas")
-    img_side = plan[cogroup_at : plan.index("InMemoryTableScan", cogroup_at)]
-    assert "Exchange" not in img_side
-    images.unpersist()
-
-
-def test_joined_classify_never_exchanges_images(spark, images_dir):
-    """classify_images_joined: the heavy image side must reach the
-    mapInPandas kernel through a BROADCAST hash join — zero Exchange
-    anywhere on the image path (only the small per-cell feature-list
-    side broadcasts)."""
-    images = epoints.read_images(spark, images_dir).withColumn(
-        "cell_id", cell_id_from_caption(1000)
-    )
+    images = epoints.read_images(spark, images_dir)
     feats = spark.read.parquet(f"{images_dir}/polygons.parquet")
-    from lasutility_spark.gridlib import topodb
-
-    df = pip_stage.classify_images_joined(images, feats, topodb.ALL_POLYGON, px=32)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan
-    # the streamed (image) subtree is printed between the join node and
-    # the build side's BroadcastExchange: no shuffle Exchange allowed
-    # there (the feature side may shuffle — it is tiny by construction)
-    join_at = plan.index("BroadcastHashJoin")
-    img_branch = plan[join_at : plan.index("BroadcastExchange", join_at)]
-    assert "Exchange hashpartitioning" not in img_branch, img_branch
+    b = pip_stage.per_cell_broadcast(spark, pip_stage.per_cell_feature_lists(feats))
+    plan = _plan(
+        pip_stage.classify_images_prebroadcast(images, b, topodb.ALL_POLYGON, px=32)
+    )
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
 
 
 def test_ivf_learned_centroid_joins_are_broadcast(spark):

@@ -47,8 +47,8 @@ def test_window_sink_and_roundtrip(spark, images_dir):
         pd.DataFrame({"cell_id": cid_fn(mins[:, 0], mins[:, 1], 1000)})
     )
     feats = spark.read.parquet(f"{images_dir}/polygons.parquet")
-    pip_tiles = pip_stage.rasterize_features_broadcast(
-        spark, tile_df, feats, topodb.ALL_POLYGON, px=32
+    pip_tiles = pip_stage.rasterize_features_cogrouped(
+        tile_df, feats, topodb.ALL_POLYGON, px=32
     )
     asc = sinks.tiles_to_ascii(pip_tiles).collect()
     assert all(r["kind"] == "asc" for r in asc)
