@@ -28,7 +28,7 @@ from lasutility_spark.engine import pip_stage, tin_stage
 from lasutility_spark.engine.tiling import cell_id_col
 from lasutility_spark.gridlib import topodb
 from lasutility_spark.gridlib.tilenamer import cell_id_to_name, tile_decode_batch
-from lasutility_spark.pipelines import dedup, events, geosql, similarity, text
+from lasutility_spark.pipelines import events, geosql, similarity
 
 
 def _register(spark: SparkSession, sf_dir: str, tables) -> None:
@@ -45,8 +45,7 @@ def _sql_query(sql_fn, tables):
 
 
 def _events_sql(dialect: str) -> str:
-    """Hourly tumbling-window aggregate over the events stream table —
-    the batch view of the Structured Streaming stage (engine.streaming)."""
+    """Hourly tumbling-window aggregate over the events table."""
     return """
     SELECT date_trunc('hour', ts) AS hour, event_type,
            COUNT(*) AS n_events,
@@ -282,14 +281,6 @@ _RELATIONAL: dict[str, tuple[Callable[[str], str], list[str]]] = {
     "t5_knn_interp": (geosql.knn_interp_sql, ["lineitem"]),
     "v1_classmap_union": (geosql.classmap_union_sql, []),
     "v2_classmap_semijoin": (geosql.classmap_semijoin_sql, ["lineitem"]),
-    "txt_doc_stats": (text.doc_stats_sql, ["documents"]),
-    "txt_lang_id": (text.lang_id_sql, ["documents"]),
-    "txt_fingerprint": (text.fingerprint_sql, ["documents"]),
-    "txt_quality": (text.quality_sql, ["documents"]),
-    "txt_token_hist": (text.token_hist_sql, ["documents"]),
-    "txt_bpe_tokens": (text.bpe_tokens_sql, ["documents"]),
-    "dd_exact": (dedup.exact_dedup_sql, ["documents"]),
-    "dd_simhash": (dedup.simhash_sql, ["documents"]),
     "sim_ann_topk": (similarity.ann_topk_sql, ["embeddings"]),
     "sim_lsh_pairs": (similarity.lsh_candidate_pairs_sql, ["embeddings"]),
     "sim_near_dup": (similarity.near_dup_pairs_sql, ["embeddings"]),
@@ -300,37 +291,6 @@ _RELATIONAL: dict[str, tuple[Callable[[str], str], list[str]]] = {
     "evt_hourly": (_events_sql, ["events"]),
     "evt_sessions": (events.sessions_sql, ["events"]),
 }
-
-
-def _minhash_bands_spark(spark, sf_dir):
-    _register(spark, sf_dir, ["documents"])
-    return dedup.minhash_bands_spark(spark)
-
-
-def _minhash_pairs_spark(spark, sf_dir):
-    _register(spark, sf_dir, ["documents"])
-    return dedup.minhash_pairs_spark(spark)
-
-
-def _ngram_jaccard_spark(spark, sf_dir):
-    _register(spark, sf_dir, ["documents"])
-    return dedup.ngram_jaccard_pairs_spark(spark)
-
-
-def _keep_one_spark(spark, sf_dir):
-    """Dedup keep-one: per near-dup component, the surviving doc (the
-    component's MIN doc_id) + group size — the cleaned-corpus manifest."""
-    _register(spark, sf_dir, ["documents"])
-    return dedup.keep_one_spark(spark)
-
-
-def _components_spark(spark, sf_dir):
-    """Dedup clustering: connected components over the LSH pair graph —
-    Spark side is the Pregel-shaped iterative min-label propagation
-    (Spark SQL has no recursive CTE); oracle side is DuckDB's RECURSIVE
-    CTE transitive closure.  Same fixpoint, engine-native expressions."""
-    _register(spark, sf_dir, ["documents"])
-    return dedup.components_spark(spark)
 
 
 def _tin_rasterize_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,13 +388,6 @@ def _a7_halo(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KERNEL_WITH_ORACLE = {
     "x1_tile_encode": (_tile_encode_spark, geosql.tile_encode_sql_query, ["lineitem"]),
     "x2_tile_envelope": (_tile_envelope_spark, geosql.tile_envelope_sql, ["lineitem"]),
-    # Spark side = Arrow-batched numpy signatures (HOF SQL is interpreted
-    # and ~10x slower); oracle keeps the SQL form — identical arithmetic
-    "dd_minhash_bands": (_minhash_bands_spark, dedup.minhash_bands_sql, ["documents"]),
-    "dd_minhash_pairs": (_minhash_pairs_spark, dedup.minhash_pairs_sql, ["documents"]),
-    "dd_ngram_jaccard": (_ngram_jaccard_spark, dedup.ngram_jaccard_pairs_sql, ["documents"]),
-    "dd_components": (_components_spark, dedup.components_sql, ["documents"]),
-    "dd_keep_one": (_keep_one_spark, dedup.keep_one_sql, ["documents"]),
     "v5_pip_classify": (_pip_classify, geosql.pip_classify_kernel_sql, ["lineitem"]),
     "a7_halo": (_a7_halo, geosql.neighborhood_max_halo_sql, ["lineitem"]),
     "x5_feature_covers": (_feature_covers, _oracle_feature_covers, []),

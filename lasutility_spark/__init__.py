@@ -11,8 +11,8 @@ Spark DataFrame engine:
   per-tile TIN rasterization kernels, vector→raster PIP, checkpoints.
 - ``pipelines`` — the geospatial operators as portable SQL over a points
   table (``geosql``), shared by the Spark queries and the DuckDB oracle,
-  plus document/embedding/event ops (dedup, similarity search, text
-  analysis, sessionization) that are slated for removal.
+  plus embedding similarity search (``similarity``) and event
+  sessionization (``events``), which are slated for removal.
 """
 
 __version__ = "0.1.0"

@@ -803,18 +803,29 @@ _ITEM_NAMES = {0: "BYTE", 1: "SHORT", 2: "INT", 3: "LONG", 4: "FLOAT",
 
 
 def parse_laszip_vlr(data: bytes, header: dict) -> dict:
-    """Locate + parse the laszip VLR (record id 22204)."""
+    """Locate + parse the laszip VLR (record id 22204).  A VLR that runs
+    past the end of ``data`` raises ValueError."""
     pos = header["header_size"]
     for _ in range(header["n_vlrs"]):
+        if pos + 54 > len(data):
+            raise ValueError("VLR header runs past the end of the file")
         _res, _uid, rid, rlen = struct.unpack_from("<H16sHH", data, pos)
         body = data[pos + 54 : pos + 54 + rlen]
+        if len(body) < rlen:
+            raise ValueError("VLR body runs past the end of the file")
         pos += 54 + rlen
         if rid != LASZIP_VLR_RECORD_ID:
             continue
+        if rlen < 34:
+            raise ValueError(f"laszip VLR is {rlen} bytes, fixed fields need 34")
         (compressor, coder, vmaj, vmin, vrev, options, chunk_size,
          n_special, off_special, num_items) = struct.unpack_from(
             "<HHBBHIIqqH", body, 0
         )
+        if 34 + 6 * num_items > rlen:
+            raise ValueError(
+                f"laszip VLR lists {num_items} items in {rlen} bytes"
+            )
         items = [
             struct.unpack_from("<3H", body, 34 + 6 * i) for i in range(num_items)
         ]
@@ -896,16 +907,26 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
     pos = header["offset_to_points"]
     chunk_starts: list[int] | None = None
     if vlr["compressor"] == 2:  # chunked: chunk table offset precedes data
+        if pos + 8 > len(data):
+            raise ValueError("point data cannot hold the chunk table offset")
         (table_off,) = struct.unpack_from("<q", data, pos)
         pos += 8
+        # a positive offset past the end means the file was cut short;
+        # -1 (an interrupted writer) still reads as one chunk below
+        if table_off > len(data) - 8:
+            raise ValueError(
+                f"chunk table offset {table_off} lies past the end of the "
+                f"{len(data)}-byte file (truncated?)"
+            )
         # chunk table: version 0 = the laszip-native layout (chunk sizes
         # arithmetic-coded with the 32-bit/2-context integer compressor,
         # each size predicted by the previous one — validated against the
         # reference fixture's own table); version 1 = this module's
         # legacy raw u32 layout (older written files)
-        if 0 < table_off <= len(data) - 8:
+        if table_off > 0:
             ver, cnt = struct.unpack_from("<2I", data, table_off)
             max_chunks = 1 + n // max(vlr["chunk_size"], 1)
+            sizes = None
             if ver == 0 and 0 < cnt <= max_chunks:
                 tdec = ArithmeticDecoder(data, table_off + 8)
                 tdec.init()
@@ -915,11 +936,17 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
                 for _ in range(cnt):
                     prev = ic.decompress(prev, 1)
                     sizes.append(prev)
-                chunk_starts = [pos]
-                for s in sizes[:-1]:
-                    chunk_starts.append(chunk_starts[-1] + s)
             elif ver == 1 and 0 < cnt <= max_chunks:
+                if table_off + 8 + 4 * cnt > len(data):
+                    raise ValueError("chunk table runs past the end of the file")
                 sizes = struct.unpack_from(f"<{cnt}I", data, table_off + 8)
+            if sizes is not None:
+                # the chunks fill the bytes between the offset and the table
+                if sum(sizes) != table_off - pos:
+                    raise ValueError(
+                        f"chunk table sizes sum to {sum(sizes)} bytes, the "
+                        f"chunks span {table_off - pos}"
+                    )
                 chunk_starts = [pos]
                 for s in sizes[:-1]:
                     chunk_starts.append(chunk_starts[-1] + s)

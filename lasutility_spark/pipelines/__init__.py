@@ -1,6 +1,6 @@
 """Relational operators as portable SQL: the geospatial operators
-(``geosql``) plus the document/embedding/event ops (``dedup``,
-``similarity``, ``text``, ``events``) that are slated for removal.
+(``geosql``) plus embedding similarity search (``similarity``) and event
+sessionization (``events``), which are slated for removal.
 
 Design rule for oracle parity: every relational op is built from
 engine-portable SQL with *integer-exact* arithmetic (floor-before-cast,

@@ -6,10 +6,6 @@ SQL is dual-dialect (timestampdiff vs date_diff; both are calendar
 arithmetic on naive timestamps, so no session-timezone hazard) and
 collapses exact-duplicate timestamps per user first so the LAG order is
 total and deterministic.
-
-Streaming form: engine/streaming.events_sessions_stream uses Spark's
-built-in ``session_window`` with a watermark — the state-store-backed
-equivalent (pinned stream==batch in tests).
 """
 
 from __future__ import annotations
@@ -22,9 +18,9 @@ def sessions_sql(dialect: str, gap_seconds: int = 1800) -> str:
     # elapsed time while DuckDB's date_diff counts boundary crossings —
     # they disagree on sub-second positions.  `ts >= prev + INTERVAL n
     # SECOND` is microsecond-exact calendar arithmetic in BOTH engines.
-    # `>=` (not `>`) matches the streaming twin's session_window
-    # semantics: a window spans [first, last + gap) and an event exactly
-    # at prev + gap falls OUTSIDE it, i.e. starts a new session.
+    # `>=` (not `>`) matches Spark's session_window semantics: a window
+    # spans [first, last + gap) and an event exactly at prev + gap falls
+    # OUTSIDE it, i.e. starts a new session.
     new_session = (
         f"prev_ts IS NULL OR ts >= prev_ts + INTERVAL {gap_seconds} SECOND"
     )

@@ -35,23 +35,16 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     args = ap.parse_args()
 
-    import numpy as np
-    import pandas as pd
-
     from lasutility_spark import datagen
     from lasutility_spark.engine import checkpoint, pip_stage, points as epoints, tin_stage
     from lasutility_spark.engine.session import get_spark
+    from lasutility_spark.engine.tiling import cell_id_from_caption
     from lasutility_spark.gridlib import topodb
-    from lasutility_spark.gridlib.tilenamer import cell_id as cid_fn
 
     spark = get_spark(args.cpus, app="lasutility_pipeline")
     images_dir = args.images_dir or datagen.ensure_images_table(args.sf)
     images = epoints.read_images(spark, images_dir)
-    caps = images.select("caption").toPandas()["caption"]
-    mins = np.array([datagen.parse_caption(c)[1:3] for c in caps])
-    tile_df = spark.createDataFrame(
-        pd.DataFrame({"cell_id": cid_fn(mins[:, 0], mins[:, 1], 1000)})
-    )
+    tile_df = images.select(cell_id_from_caption(1000).alias("cell_id"))
 
     if args.stage in ("tin", "all"):
         path = os.path.join(args.out, "tin_tiles")

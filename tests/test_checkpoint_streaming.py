@@ -1,4 +1,5 @@
-"""Checkpoint/resume contract + Structured Streaming parity with batch."""
+"""Checkpoint/resume contract: commit, resume, invalidation and fault
+injection at every filesystem step."""
 
 import os
 
@@ -6,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from lasutility_spark.engine import checkpoint, streaming
+from lasutility_spark.engine import checkpoint
 
 
 def test_checkpoint_write_and_resume(spark, tmp_path):
@@ -326,181 +327,6 @@ def test_torn_checkpoint_is_flagged(spark, tmp_path, caplog):
     assert sorted(tuple(r) for r in out.collect()) == [(1, 1), (2, 2), (3, 3)]
     warnings = [r for r in caplog.records if "checkpoint invalidated" in r.message]
     assert len(warnings) == 1, [r.message for r in warnings]
-
-
-def test_streaming_matches_batch(spark, tmp_path):
-    # the file stream source requires a directory; stage the single
-    # parquet file into one
-    import shutil
-
-    events_dir = str(tmp_path / "events")
-    os.makedirs(events_dir)
-    shutil.copy(
-        "/root/testdata/sf0.001/events.parquet",
-        os.path.join(events_dir, "part-0.parquet"),
-    )
-    stream = streaming.events_hourly_stream(spark, events_dir)
-    rows = streaming.run_stream_once(stream, str(tmp_path / "ckpt"))
-    got = {
-        (r["hour"], r["event_type"]): (r["n_events"], r["sum_value_x1000"])
-        for r in rows
-    }
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy(
-            F.date_trunc("hour", "ts").alias("hour"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 1000).cast("long")).alias("s"),
-        )
-        .collect()
-    )
-    want = {(r["hour"], r["event_type"]): (r["n"], r["s"]) for r in batch}
-    assert got == want  # stream (availableNow) == batch, exactly
-
-
-def test_tiles_stream_matches_batch(spark, tmp_path):
-    """Streaming tile ingest == batch rasterization row-for-row (the
-    foreachBatch sink reuses the batch kernel), and the stream
-    checkpoint makes a second drain a no-op (exactly-once)."""
-    from lasutility_spark import datagen
-    from lasutility_spark.engine import streaming, tin_stage
-
-    import shutil
-
-    images_dir = datagen.ensure_images_table(0.001)
-    src = str(tmp_path / "images_in")  # file source requires a directory
-    os.makedirs(src)
-    shutil.copy(
-        os.path.join(images_dir, "images.parquet"),
-        os.path.join(src, "part-0.parquet"),
-    )
-    out = str(tmp_path / "tiles_out")
-    ckpt = str(tmp_path / "tiles_ckpt")
-    q = streaming.tiles_stream(spark, src, out, ckpt, px=32)
-    q.awaitTermination()
-    got = {
-        (r["cell_id"], r["phash"], r["n_points"], r["filled_cells"])
-        for r in spark.read.parquet(out).collect()
-    }
-    batch = tin_stage.rasterize_images_fused(
-        spark.read.parquet(f"{images_dir}/images.parquet"), px=32
-    )
-    want = {
-        (r["cell_id"], r["phash"], r["n_points"], r["filled_cells"])
-        for r in batch.collect()
-    }
-    assert got == want and len(got) == 9
-    # restart with the same checkpoint: no new source files -> no new rows
-    q2 = streaming.tiles_stream(spark, src, out, ckpt, px=32)
-    q2.awaitTermination()
-    assert spark.read.parquet(out).count() == 9
-
-
-def test_sessions_stream_matches_batch(spark, tmp_path):
-    """Stateful streaming sessionization (session_window + watermark,
-    availableNow) == the same session_window aggregation run as batch."""
-    import shutil
-
-    from pyspark.sql import functions as F
-    from lasutility_spark.engine import streaming
-
-    events_dir = str(tmp_path / "events")
-    os.makedirs(events_dir)
-    shutil.copy(
-        "/root/testdata/sf0.001/events.parquet",
-        os.path.join(events_dir, "part-0.parquet"),
-    )
-    stream = streaming.events_sessions_stream(spark, events_dir)
-    rows = streaming.run_stream_once(stream, str(tmp_path / "sess_ckpt"))
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"]):
-        (r["n_events"], r["sum_value_x1000"])
-        for r in rows
-    }
-    batch = (
-        spark.read.parquet(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 1000).cast("long")).alias("s"),
-        )
-        .collect()
-    )
-    want = {
-        (r["user_id"], r["win"]["start"], r["win"]["end"]): (r["n"], r["s"])
-        for r in batch
-    }
-    assert got == want and len(got) > 15
-
-
-def test_stateful_user_totals_stream(spark, tmp_path):
-    """applyInPandasWithState running totals: after draining the source,
-    each user's LAST emitted row equals the batch aggregate (state
-    persisted across micro-batches)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-    from lasutility_spark.engine import streaming
-
-    events_dir = str(tmp_path / "events")
-    os.makedirs(events_dir)
-    # several source files => several micro-batches (maxFilesPerTrigger=2)
-    src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src.repartition(6).write.parquet(events_dir, mode="overwrite")
-
-    stream = streaming.user_totals_stream(spark, events_dir)
-    q = (
-        stream.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_totals")
-        .option("checkpointLocation", str(tmp_path / "ut_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM user_totals").collect()
-    # update mode appends one row per (user, micro-batch); the running
-    # totals are monotone, so the max per user is the final state
-    got = {}
-    for r in rows:
-        cur = got.get(r["user_id"], (0, 0))
-        got[r["user_id"]] = max(cur, (r["n_events"], r["sum_value_x1000"]))
-    batch = (
-        spark.read.parquet(events_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.floor(F.col("value") * 1000).cast("long")).alias("s"),
-        )
-        .collect()
-    )
-    want = {r["user_id"]: (r["n"], r["s"]) for r in batch}
-    assert got == want
-
-
-def test_idempotent_sink_crash_replay(spark, tmp_path):
-    """Crash-replay semantics of the foreachBatch sink: foreachBatch
-    replays a micro-batch with the SAME batch_id if the process dies
-    after the data write but before the offsets commit.  The
-    batch_id-keyed dynamic-overwrite sink must absorb the replay
-    (no duplicate rows) while still appending genuinely new batches."""
-    from lasutility_spark.engine import streaming
-
-    out = str(tmp_path / "sink_out")
-    df0 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-    streaming.write_batch_idempotent(df0, out, batch_id=0)
-    assert spark.read.parquet(out).count() == 2
-    # simulated crash-replay: same batch re-delivered with batch_id=0
-    streaming.write_batch_idempotent(df0, out, batch_id=0)
-    assert spark.read.parquet(out).count() == 2  # overwrote, not appended
-    # a new batch still lands additively
-    df1 = spark.createDataFrame([(3, "c")], "k int, v string")
-    streaming.write_batch_idempotent(df1, out, batch_id=1)
-    got = {(r["k"], r["v"], r["batch_id"]) for r in spark.read.parquet(out).collect()}
-    assert got == {(1, "a", 0), (2, "b", 0), (3, "c", 1)}
 
 
 class _Fault(Exception):

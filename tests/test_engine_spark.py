@@ -1,8 +1,6 @@
 """Spark-stage integration tests: end-to-end slice, PIP strategies, voxel
 relational ops, partition-count invariance (local[8] == local[32] analog)."""
 
-import re
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -312,154 +310,31 @@ def test_ann_topk_matmul_matches_sql(spark):
     assert got13 == want
 
 
-def test_components_one_action_per_superstep(spark, monkeypatch):
-    """The connected-components loop folds its convergence check into
-    the label-update aggregate: ONE driver action (the agg that both
-    materializes the new label cache and returns the changed-count) per
-    superstep, plus the single initial materialization — no separate
-    old-vs-new join + count job per iteration (at 10^12 edges that
-    second job per superstep doubles the job count for control flow).
-    Value parity vs the DuckDB RECURSIVE CTE is pinned separately in
-    test_oracle_parity (dd_components)."""
-    from lasutility_spark.pipelines import dedup
+def test_run_pipeline_script_end_to_end(spark, images_dir, tmp_path):
+    """``scripts/run_pipeline.py --stage all --resume`` as a subprocess:
+    the TIN stage writes one tile per image (the cell ids that
+    ``cell_id_from_caption`` derives from the captions) and the PIP
+    stage prints the point-class histogram."""
+    import os
+    import subprocess
+    import sys
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.createOrReplaceTempView("documents")
-
-    # patch the CONCRETE class (pyspark 4 instances are
-    # pyspark.sql.classic.dataframe.DataFrame, a subclass of the public
-    # pyspark.sql.DataFrame — patching the base doesn't intercept)
-    DataFrame = type(docs)
-    calls = {"n": 0}
-    orig_collect, orig_count = DataFrame.collect, DataFrame.count
-
-    def counting_collect(self):
-        calls["n"] += 1
-        return orig_collect(self)
-
-    def counting_count(self):
-        calls["n"] += 1
-        return orig_count(self)
-
-    monkeypatch.setattr(DataFrame, "collect", counting_collect)
-    monkeypatch.setattr(DataFrame, "count", counting_count)
-    stats: dict = {}
-    labels = dedup.components_spark(spark, stats=stats)
-    actions = calls["n"]
-    monkeypatch.undo()
-
-    assert stats["supersteps"] >= 1
-    assert actions == 1 + stats["supersteps"], (
-        f"{actions} driver actions for {stats['supersteps']} supersteps — "
-        "expected exactly one per superstep plus the initial count"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "out"
+    env = {**os.environ, "PYTHONPATH": repo}
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "scripts", "run_pipeline.py"),
+         "--stage", "all", "--sf", "0.001", "--cpus", "2", "--resume",
+         "--out", str(out)],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=60,
     )
-    assert labels.count() == docs.count()  # one label row per document
-
-
-def _exchange_bytes_since(spark, n0: int) -> float:
-    """Sum 'shuffle bytes written' across SQL executions with index >= n0
-    (SQLAppStatusStore; values are UI-formatted like '59.0 B' / '1.2 KiB')."""
-    units = {"B": 1, "KB": 2**10, "KiB": 2**10, "MB": 2**20, "MiB": 2**20,
-             "GB": 2**30, "GiB": 2**30}
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = store.executionsList()
-    total = 0.0
-    for i in range(n0, execs.size()):
-        ex = execs.apply(i)
-        names = {}
-        sit = ex.metrics().iterator()
-        while sit.hasNext():
-            m = sit.next()
-            names[m.accumulatorId()] = m.name()
-        eit = store.executionMetrics(ex.executionId()).iterator()
-        while eit.hasNext():
-            e = eit.next()
-            if names.get(e._1()) == "shuffle bytes written":
-                # plain ('51.0 KiB') or stats ('total (min, med, max …):\n51.0 KiB (…)')
-                m = re.search(r"([\d.]+)\s+(B|KiB|KB|MiB|MB|GiB|GB)", str(e._2()))
-                assert m, f"unparseable metric value: {e._2()!r}"
-                total += float(m.group(1)) * units[m.group(2)]
-    return total
-
-
-def _n_execs(spark) -> int:
-    return spark._jsparkSession.sharedState().statusStore().executionsList().size()
-
-
-def test_minhash_slim_vs_fat_shuffle_bytes(spark, monkeypatch):
-    """Round-5 band-table slimming: each band row carries only its
-    EARLIER bands' keys (fixed nullable pk columns, avg 1.5 live
-    int64s) instead of the full K=8-slot mh signature through the band
-    equi-join exchange.  Raw UnsafeRow width drops 120 -> 56 B/row
-    (2.1x, asserted below from the schema); the measured wire bytes
-    (post-lz4) drop ~1.4x — compression already squeezes the
-    low-entropy mh arrays, so the on-the-wire ratio is smaller than
-    the raw ratio.  With broadcast disabled (fixture tables broadcast
-    otherwise, hiding the exchange) the slim payload must measurably
-    shrink the exchange and produce the identical pair set."""
-    from lasutility_spark.pipelines import dedup
-
-    def unsafe_row_bytes(df):
-        """UnsafeRow fixed-layout width: 8B null-bitset word (<=64
-        cols), 8B per fixed-width field, and for array<bigint> fields
-        the variable part (8B header + 8B null bits + 8B/element,
-        K_MINHASH elements)."""
-        w = 8
-        for f in df.schema.fields:
-            w += 8
-            if f.dataType.simpleString() == "array<bigint>":
-                w += 16 + 8 * dedup.K_MINHASH
-        return w
-
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .createOrReplaceTempView("documents")
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        monkeypatch.setenv("SPARK_GRAFT_Q4_FAT", "1")
-        spark.catalog.clearCache()
-        n0 = _n_execs(spark)
-        fat_rows = sorted(tuple(r) for r in dedup.minhash_pairs_spark(spark).collect())
-        fat_bytes = _exchange_bytes_since(spark, n0)
-
-        monkeypatch.setenv("SPARK_GRAFT_Q4_FAT", "0")
-        spark.catalog.clearCache()
-        n0 = _n_execs(spark)
-        slim_rows = sorted(tuple(r) for r in dedup.minhash_pairs_spark(spark).collect())
-        slim_bytes = _exchange_bytes_since(spark, n0)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.catalog.clearCache()
-
-    assert slim_rows == fat_rows and len(slim_rows) > 0
-    assert fat_bytes > 0 and slim_bytes > 0
-    assert slim_bytes <= 0.75 * fat_bytes, (
-        f"slim exchange {slim_bytes:.0f} B vs fat {fat_bytes:.0f} B — "
-        "expected a measurable (>=1.33x) compressed-wire reduction"
-    )
-    fat_raw = unsafe_row_bytes(
-        dedup.minhash_bands_spark(spark, keep_sig=True, keep_prior_keys=False)
-    )
-    slim_raw = unsafe_row_bytes(
-        dedup.minhash_bands_spark(spark, keep_prior_keys=True)
-    )
-    assert slim_raw * 2 <= fat_raw, (
-        f"raw row width {slim_raw} vs {fat_raw} — expected >=2x reduction"
-    )
-
-
-def test_components_empty_documents_terminates(spark):
-    """Empty documents table: F.sum over zero rows is NULL — the folded
-    convergence check must coerce it to 0 and terminate on the first
-    superstep instead of spinning to max_iters and raising."""
-    from lasutility_spark.pipelines import dedup
-
-    spark.createDataFrame([], "doc_id long, text string") \
-        .createOrReplaceTempView("documents")
-    stats: dict = {}
-    labels = dedup.components_spark(spark, stats=stats)
-    assert labels.count() == 0
-    assert stats["supersteps"] == 1
-    # restore the real view for any later test in the session
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .createOrReplaceTempView("documents")
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "tin_tiles: 9 tiles" in proc.stdout, proc.stdout
+    assert "class histogram: " in proc.stdout, proc.stdout
+    want = {
+        r["cell_id"] for r in pts.read_images(spark, images_dir)
+        .select(tiling.cell_id_from_caption(1000).alias("cell_id")).collect()
+    }
+    got = [r["cell_id"] for r in
+           spark.read.parquet(str(out / "tin_tiles")).select("cell_id").collect()]
+    assert len(want) == 9 and sorted(got) == sorted(want)

@@ -83,14 +83,24 @@ def test_relative_imports_resolve():
 
 def test_deleted_names_stay_gone():
     """The duplicate strategy paths deleted from pip_stage, tin_stage and
-    sources are not named anywhere in the code or the top-level docs."""
+    sources, and the text, dedup and streaming modules, are not named
+    anywhere in the code or the top-level docs."""
     deleted = [
         "classify_images_fused", "classify_images_joined",
         "classify_images_scanlocal", "classify_images_broadcast",
         "parent_cell_col", "rasterize_features_broadcast",
         "rasterize_images_scanlocal", "parquet_row_group_splits",
         "scan_row_groups", "_decoded_feats", "_rasterize_tiles_pdf",
+        "minhash_bands_spark", "minhash_pairs_spark",
+        "ngram_jaccard_pairs_spark", "components_spark", "keep_one_spark",
+        "exact_dedup_sql", "simhash_sql", "doc_stats_sql", "bpe_tokens_sql",
+        "SPARK_GRAFT_Q4_FAT",
+        "events_hourly_stream", "events_sessions_stream",
+        "user_totals_stream", "tiles_stream", "write_batch_idempotent",
+        "run_stream_once",
     ]
+    for mod in ("pipelines.text", "pipelines.dedup", "engine.streaming"):
+        assert importlib.util.find_spec(f"lasutility_spark.{mod}") is None, mod
     repo = os.path.dirname(PKG_DIR)
     paths = [os.path.join(repo, f) for f in ("__spark_entry__.py", "README.md", "SURVEY.md")]
     for top in ("lasutility_spark", "scripts", "tests"):

@@ -15,7 +15,7 @@ from lasutility_spark.oracle_compare import rows_spark as _rows_spark
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
+    "region nation customer supplier part orders lineitem events embeddings"
 ).split()
 
 

@@ -444,6 +444,54 @@ def test_laz_zero_chunk_size_is_refused_not_a_hang():
         signal.signal(signal.SIGALRM, old)
 
 
+def test_laz_truncation_raises_or_reads_exactly():
+    """A LAZ file cut short either decodes to exactly the original
+    points or raises ValueError: never wrong points, never a
+    ``struct.error``.  Formats 0 and 1, one chunk and three chunks, each
+    cut by 1-39 bytes and by 86 seeded random lengths; a 2 s alarm per
+    read turns a hang into a failure."""
+    import signal
+
+    from lasutility_spark.gridlib import laz
+
+    def hang(_signum, _frame):
+        raise TimeoutError("truncated LAZ read did not return")
+
+    rng = np.random.RandomState(29)
+    n = 300
+    x = 380000 + rng.rand(n) * 500
+    y = 6666000 + rng.rand(n) * 500
+    z = rng.rand(n) * 10
+    cls = rng.choice([2, 5], n).astype(np.uint8)
+    gps = np.sort(rng.rand(n) * 3600) + 300000.0
+    old = signal.signal(signal.SIGALRM, hang)
+    try:
+        for g in (None, gps):
+            for chunk_size in (100, 50000):
+                data = laz.write_laz(x, y, z, cls, gps_time=g,
+                                     chunk_size=chunk_size)
+                h, *want = laz.read_laz(data)
+                want += [h["_gps_time"], h["_returns"]]
+                cuts = list(range(1, 40)) + list(
+                    rng.choice(np.arange(40, len(data)), 86, replace=False)
+                )
+                for cut in cuts:
+                    signal.alarm(2)
+                    try:
+                        got_h, *got = laz.read_laz(data[: len(data) - cut])
+                    except ValueError:
+                        continue
+                    finally:
+                        signal.alarm(0)
+                    got += [got_h["_gps_time"], got_h["_returns"]]
+                    assert all(
+                        np.array_equal(a, b) for a, b in zip(got, want)
+                    ), (g is not None, chunk_size, cut)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+
 def test_laz_source_reads_written_file(spark, tmp_path):
     """Distributed source over a file our own encoder wrote."""
     from lasutility_spark.gridlib import laz
