@@ -9,7 +9,7 @@
   PIP) run the engine's real numpy/Arrow path.
 - ``oracle_sql()``: DuckDB dialect for every SQL-expressible operator.
   All definitions use integer-exact arithmetic (polynomial hashes,
-  quantized dots, FLOOR-before-CAST) so value hashes match bit-for-bit.
+  FLOOR-before-CAST) so value hashes match bit-for-bit.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from lasutility_spark.engine import pip_stage, tin_stage
 from lasutility_spark.engine.tiling import cell_id_col
 from lasutility_spark.gridlib import topodb
 from lasutility_spark.gridlib.tilenamer import cell_id_to_name, tile_decode_batch
-from lasutility_spark.pipelines import events, geosql, similarity
+from lasutility_spark.pipelines import geosql
 
 
 def _register(spark: SparkSession, sf_dir: str, tables) -> None:
@@ -42,19 +42,6 @@ def _sql_query(sql_fn, tables):
         return spark.sql(sql_fn("spark"))
 
     return run
-
-
-def _events_sql(dialect: str) -> str:
-    """Hourly tumbling-window aggregate over the events table."""
-    return """
-    SELECT date_trunc('hour', ts) AS hour, event_type,
-           COUNT(*) AS n_events,
-           COUNT(DISTINCT user_id) AS users,
-           CAST(SUM(CAST(FLOOR(value * 1000.0) AS BIGINT)) AS BIGINT)
-             AS sum_value_x1000
-    FROM events
-    GROUP BY 1, 2
-    """
 
 
 # --- Spark-side kernel implementations (real engine path) -----------------
@@ -281,15 +268,6 @@ _RELATIONAL: dict[str, tuple[Callable[[str], str], list[str]]] = {
     "t5_knn_interp": (geosql.knn_interp_sql, ["lineitem"]),
     "v1_classmap_union": (geosql.classmap_union_sql, []),
     "v2_classmap_semijoin": (geosql.classmap_semijoin_sql, ["lineitem"]),
-    "sim_ann_topk": (similarity.ann_topk_sql, ["embeddings"]),
-    "sim_lsh_pairs": (similarity.lsh_candidate_pairs_sql, ["embeddings"]),
-    "sim_near_dup": (similarity.near_dup_pairs_sql, ["embeddings"]),
-    "sim_knn_label": (similarity.knn_label_sql, ["embeddings"]),
-    "sim_ivf_topk2": (similarity.ivf_topk2_sql, ["embeddings"]),
-    "sim_ivf_assign_learned": (similarity.ivf_assign_learned_sql, ["embeddings"]),
-    "sim_ivf_topk_learned": (similarity.ivf_topk_learned_sql, ["embeddings"]),
-    "evt_hourly": (_events_sql, ["events"]),
-    "evt_sessions": (events.sessions_sql, ["events"]),
 }
 
 

@@ -5,14 +5,14 @@ Kuoste/LasUtility (reference: /root/reference, C#, MIT) as an idiomatic
 Spark DataFrame engine:
 
 - ``gridlib``   — pure numpy semantic core (grid math, tile codec, scanline,
-  Delaunay TIN, raster codecs).  No Spark imports; shippable via
-  ``spark-submit --py-files``.
+  Delaunay TIN, raster codecs, the image-tile contract in ``imagetile``).
+  No Spark imports; shippable via ``spark-submit --py-files``.
 - ``engine``    — Spark stages: tiling/partitioning, voxel aggregates,
   per-tile TIN rasterization kernels, vector→raster PIP, checkpoints.
 - ``pipelines`` — the geospatial operators as portable SQL over a points
-  table (``geosql``), shared by the Spark queries and the DuckDB oracle,
-  plus embedding similarity search (``similarity``) and event
-  sessionization (``events``), which are slated for removal.
+  table (``geosql``), shared by the Spark queries and the DuckDB oracle.
+- ``datagen``   — deterministic synthetic input tables: test and
+  benchmark input only, never imported by ``engine`` or ``gridlib``.
 """
 
 __version__ = "0.1.0"

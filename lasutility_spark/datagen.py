@@ -1,19 +1,15 @@
-"""Deterministic synthetic input tables (no external data).
+"""Deterministic synthetic input tables: test and benchmark input only.
 
-Generates the graft input table from BASELINE.json ``input_hint`` —
-``(image_id:string, bytes:binary, w:int32, h:int32, fmt:string,
-caption:string, phash:int64)`` — plus vector feature tables
-(``feature_id, geom_wkb, luokka, seq``) per FIXTURES.md §2-3.
+No engine module imports this one.  It writes the image table of
+BASELINE.json ``input_hint`` — ``(image_id:string, bytes:binary, w:int32,
+h:int32, fmt:string, caption:string, phash:int64)`` — plus vector feature
+tables (``feature_id, geom_wkb, luokka, seq``) per FIXTURES.md §2-3, and
+the oracle side tables the correctness queries compare against.
 
-Determinism rules (required for local[8] == local[32] output equality):
-every pixel/point value is a pure function of absolute world coordinates
-through an integer hash (splitmix64) — never of partition, order, or RNG
-stream state.  One image = one 1 km raster tile; the caption carries the
-georeferencing: ``"<tile_name>;<minx>;<miny>;<maxx>;<maxy>;<cellsize>;<nodata>"``.
-
-At test scale this writes Parquet directly via pyarrow; the same
-per-tile core (:func:`gen_tile_rows`) is what the Spark path fans out
-with ``mapInPandas`` for large tile counts (engine/points.py).
+The rows follow the image-tile contract of :mod:`gridlib.imagetile`
+(caption grammar, png16 height range, coordinate-hashed point sampling),
+so every pixel/point value is a pure function of absolute world
+coordinates — never of partition, order, or RNG stream state.
 """
 
 from __future__ import annotations
@@ -24,6 +20,21 @@ import numpy as np
 import pandas as pd
 
 from .gridlib import topodb
+# parse_caption, sample_points_from_tile and assign_classes are unused
+# here: perfbench/ reads them, like Z_MIN/Z_MAX and is_dense_tile, as
+# ``datagen.<name>``.
+from .gridlib.imagetile import (  # noqa: F401
+    BASE_RATE,
+    CAPTION_FMT,
+    DENSE_RATE,
+    Z_MAX,
+    Z_MIN,
+    assign_classes,
+    hash01,
+    is_dense_tile,
+    parse_caption,
+    sample_points_from_tile,
+)
 from .gridlib.phash import phash64
 from .gridlib.png import dem_to_png16
 from .gridlib.tilenamer import cell_id as _cell_id
@@ -34,31 +45,6 @@ from .gridlib.wkb import encode_linestring, encode_polygon
 ANCHOR_E = 380000
 ANCHOR_N = 6666000
 TILE_M = 1000  # one image = one 1 km tile
-Z_MIN, Z_MAX = 0.0, 500.0  # DEM quantization range for 16-bit PNG tiles
-
-CAPTION_FMT = "{name};{minx};{miny};{maxx};{maxy};{cellsize};{nodata}"
-
-
-def _splitmix64(v: np.ndarray) -> np.ndarray:
-    """Deterministic integer hash (public splitmix64 mixer)."""
-    v = v.astype(np.uint64)
-    v = (v + np.uint64(0x9E3779B97F4A7C15)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-    z = v
-    z = ((z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & np.uint64(
-        0xFFFFFFFFFFFFFFFF
-    )
-    z = ((z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & np.uint64(
-        0xFFFFFFFFFFFFFFFF
-    )
-    return z ^ (z >> np.uint64(31))
-
-
-def hash01(*ints: np.ndarray) -> np.ndarray:
-    """Combine integer arrays -> uniform [0,1) doubles, coordinate-pure."""
-    acc = np.zeros_like(np.broadcast_arrays(*ints)[0], dtype=np.uint64)
-    for arr in ints:
-        acc = _splitmix64(acc ^ np.asarray(arr, dtype=np.int64).view(np.uint64))
-    return (acc >> np.uint64(11)).astype(np.float64) / float(1 << 53)
 
 
 def terrain_z(e: np.ndarray, n: np.ndarray) -> np.ndarray:
@@ -130,68 +116,6 @@ def gen_tile_rows(names: list[str], px: int = 128) -> pd.DataFrame:
             }
         )
     return pd.DataFrame(rows)
-
-
-def parse_caption(caption: str):
-    name, minx, miny, maxx, maxy, cellsize, nodata = caption.split(";")
-    return name, int(minx), int(miny), int(maxx), int(maxy), float(cellsize), float(nodata)
-
-
-# point sampling: which pixels are "LIDAR returns" and their class --------
-
-BASE_RATE = 0.08
-DENSE_RATE = 0.45  # a few "urban" tiles for skew tests (FIXTURES.md §1)
-
-
-def is_dense_tile(name: str) -> bool:
-    h = _splitmix64(np.frombuffer(name.encode().ljust(8, b"\0")[:8], dtype=np.uint64))
-    return bool(h % np.uint64(10) == 0)  # ~10% of tiles are dense
-
-
-def sample_points_from_tile(
-    name: str, dem: np.ndarray, minx: int, miny: int, cellsize: float
-):
-    """Decode-to-points: pixel -> point at cell center; deterministic
-    subsample + class assignment (ground 80%, veg 3/4/5).
-
-    C fast path (gridlib._native.sample_points) with bit-identical
-    numpy fallback — pinned by tests/test_codecs_datagen.py."""
-    from .gridlib import _native
-
-    rate_ = DENSE_RATE if is_dense_tile(name) else BASE_RATE
-    if dem.dtype == np.float32:  # other dtypes would downcast: numpy path
-        got = _native.sample_points(
-            dem, float(minx), float(miny), float(cellsize), rate_
-        )
-        if got is not None:
-            return got
-    px = dem.shape[0]
-    cols, rws = np.meshgrid(np.arange(px), np.arange(px))
-    ex = minx + (cols + 0.5) * cellsize
-    ny = miny + (rws + 0.5) * cellsize
-    u = hash01((ex * 100).astype(np.int64) + 7, (ny * 100).astype(np.int64))
-    rate = DENSE_RATE if is_dense_tile(name) else BASE_RATE
-    sel = u < rate
-    x = ex[sel].ravel()
-    y = ny[sel].ravel()
-    z = dem[sel].ravel().astype(np.float64)
-    z, cls = assign_classes(x, y, z)
-    return x, y, z, cls
-
-
-def assign_classes(x, y, z):
-    """Deterministic veg-class assignment + height lift for sampled
-    points (ground 80%, veg classes 3/4/5 sit above the terrain),
-    derived from (x, y) only."""
-    v = hash01((x * 100).astype(np.int64) + 13, (y * 100).astype(np.int64))
-    cls = np.full(len(x), topodb.CLS_GROUND, dtype=np.uint8)
-    veg = v >= 0.8
-    cls[veg & (v < 0.88)] = topodb.CLS_LOW_VEGETATION
-    cls[(v >= 0.88) & (v < 0.95)] = topodb.CLS_MEDIUM_VEGETATION
-    cls[v >= 0.95] = topodb.CLS_HIGH_VEGETATION
-    # vegetation points sit above the terrain
-    z = z + np.where(cls == topodb.CLS_GROUND, 0.0, 2.0 + 14.0 * v)
-    return z, cls
 
 
 # vector features (FIXTURES.md §2) ----------------------------------------
@@ -398,7 +322,7 @@ def gen_pip_tile_stats(
     Returns (tile_stats, class_extents): the second frame is the
     raster->vector oracle — per (tile, class value) the painted cell
     count and row/col extent box of the expected raster."""
-    from .engine import pip_stage  # lazy: engine modules import datagen
+    from .engine import pip_stage  # lazy: keeps pyspark out of this import
 
     feats = [
         (int(r.seq), int(r.luokka), bytes(r.geom_wkb))

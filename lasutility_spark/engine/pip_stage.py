@@ -30,12 +30,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import datagen
 from ..gridlib import wkb
 from ..gridlib.bounds import EPSILON, RasterBounds
 from ..gridlib.clip import clip_polyline, clip_ring
+from ..gridlib.imagetile import CAPTION_FMT, parse_caption, tile_points
 from ..gridlib.phash import phash64
-from ..gridlib.png import png16_to_dem, png_encode
+from ..gridlib.png import png_decode, png_encode
 from ..gridlib.scanline import rasterize_linestring, rasterize_polygon_with_holes
 from ..gridlib.tilenamer import cell_id, cell_id_envelope, cell_id_to_name
 
@@ -116,7 +116,7 @@ def _rasterize_tile(
         cell, px, size_north, feats, classmap
     )
     name = str(cell_id_to_name(np.array([cell]), size_north)[0])
-    caption = datagen.CAPTION_FMT.format(
+    caption = CAPTION_FMT.format(
         name=name, minx=minx, miny=miny, maxx=maxx, maxy=maxy,
         cellsize=(maxx - minx) / px, nodata=0,
     )
@@ -285,7 +285,7 @@ def classify_images_prebroadcast(
         for pdf in batches:
             out = []
             for cap, data in zip(pdf["caption"], pdf["bytes"]):
-                name, minx, miny, maxx, maxy, cs, _ = datagen.parse_caption(cap)
+                name, minx, miny, maxx, maxy, _cs, _ = parse_caption(cap)
                 cell = int(cell_id(np.array([minx]), np.array([miny]), size_north)[0])
                 fls = []
                 for seq, luokka, gb in val.get(cell, ()):
@@ -296,8 +296,7 @@ def classify_images_prebroadcast(
                 raster, _n, _env = _rasterize_tile_raster(
                     cell, px, size_north, fls, cmap
                 )
-                dem = png16_to_dem(bytes(data), datagen.Z_MIN, datagen.Z_MAX)
-                x, y, _z, _c = datagen.sample_points_from_tile(name, dem, minx, miny, cs)
+                x, y, _z, _c = tile_points(cap, data)
                 rcs = (maxx - minx) / raster.shape[1]
                 row = ((y - miny) / rcs).astype(np.int64)
                 col = ((x - minx) / rcs).astype(np.int64)
@@ -346,7 +345,6 @@ def pip_classify_points(
     indexes all of the group's points vectorized — transfer scales as
     points + tiles.  Points whose cell has no tile row get value -1
     (left-join semantics)."""
-    from ..gridlib.png import png_decode
     from .tiling import with_cell_id
 
     if "cell_id" not in points.columns:
@@ -362,7 +360,7 @@ def pip_classify_points(
         if tiles.empty:
             vals = np.full(len(pts), -1, dtype=np.int32)
         else:
-            _, minx, miny, _, _, cs, _ = datagen.parse_caption(
+            _, minx, miny, _, _, cs, _ = parse_caption(
                 tiles["caption"].iloc[0]
             )
             r = png_decode(bytes(tiles["bytes"].iloc[0]))
@@ -398,7 +396,6 @@ def raster_class_extents(pip_tiles: DataFrame) -> DataFrame:
     (value) or spatial joins on the extent boxes are ordinary relational
     plans.  Pure numpy per tile: one nonzero pass per present class.
     """
-    from ..gridlib.png import png_decode
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -16,8 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import datagen
-from ..gridlib.png import png16_to_dem
+from ..gridlib.imagetile import tile_points
 
 POINTS_SCHEMA = "x double, y double, z double, cls smallint"
 # smallint, not tinyint: LAS 1.4 (point formats 6+) classification is the
@@ -28,9 +27,7 @@ def _decode_points_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
     for pdf in batches:
         out_x, out_y, out_z, out_c = [], [], [], []
         for cap, data in zip(pdf["caption"], pdf["bytes"]):
-            name, minx, miny, maxx, maxy, cs, _ = datagen.parse_caption(cap)
-            dem = png16_to_dem(data, datagen.Z_MIN, datagen.Z_MAX)
-            x, y, z, cls = datagen.sample_points_from_tile(name, dem, minx, miny, cs)
+            x, y, z, cls = tile_points(cap, data)
             out_x.append(x)
             out_y.append(y)
             out_z.append(z)

@@ -18,7 +18,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .. import datagen
 from ..gridlib.asc import (
     byte_raster_to_ascii,
     byte_raster_window_to_ascii,
@@ -26,6 +25,7 @@ from ..gridlib.asc import (
     write_dem_topdown,
 )
 from ..gridlib.bounds import RasterBounds
+from ..gridlib.imagetile import Z_MAX, Z_MIN, parse_caption
 from ..gridlib.png import png16_to_dem, png_decode
 from ..gridlib.tin import Tin
 from ..gridlib.wkb import encode_polygon
@@ -47,7 +47,7 @@ def tiles_to_ascii(tiles: DataFrame, compressed: bool = False) -> DataFrame:
             for img_id, fmt, data, cap in zip(
                 pdf["image_id"], pdf["fmt"], pdf["bytes"], pdf["caption"]
             ):
-                name, minx, miny, maxx, maxy, cs, nodata = datagen.parse_caption(cap)
+                name, minx, miny, maxx, maxy, cs, nodata = parse_caption(cap)
                 raster = png_decode(bytes(data))
                 b = RasterBounds(raster.shape[0], raster.shape[1], minx, miny, maxx, maxy)
                 if fmt == "png8":
@@ -62,7 +62,7 @@ def tiles_to_ascii(tiles: DataFrame, compressed: bool = False) -> DataFrame:
                         }
                     )
                 else:
-                    dem = png16_to_dem(bytes(data), datagen.Z_MIN, datagen.Z_MAX)
+                    dem = png16_to_dem(bytes(data), Z_MIN, Z_MAX)
                     for kind, text in (
                         ("dem_ground", save_dem_ground(dem, b)),
                         ("dem_topdown", write_dem_topdown(dem, b)),
@@ -92,7 +92,7 @@ def tiles_to_ascii_window(
         for pdf in batches:
             rows = []
             for img_id, data, cap in zip(pdf["image_id"], pdf["bytes"], pdf["caption"]):
-                name, minx, miny, maxx, maxy, cs, _ = datagen.parse_caption(cap)
+                name, minx, miny, maxx, maxy, cs, _ = parse_caption(cap)
                 ix0, iy0 = max(wminx, minx), max(wminy, miny)
                 ix1, iy1 = min(wmaxx, maxx), min(wmaxy, maxy)
                 if ix0 >= ix1 or iy0 >= iy1:

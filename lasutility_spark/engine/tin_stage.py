@@ -20,11 +20,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import datagen
 from ..gridlib import topodb
 from ..gridlib.bounds import RasterBounds
+from ..gridlib.imagetile import CAPTION_FMT, Z_MAX, Z_MIN, parse_caption, tile_points
 from ..gridlib.phash import phash64
-from ..gridlib.png import dem_to_png16, png16_to_dem
+from ..gridlib.png import dem_to_png16
 from ..gridlib.tilenamer import cell_id, cell_id_envelope, cell_id_to_name
 from ..gridlib.tin import Tin
 from .tiling import repartition_by_cell, with_cell_id
@@ -128,7 +128,7 @@ def _encode_tile(
     px = dem.shape[0]
     minx, miny, maxx, maxy = _envelope(cell, size_north)
     name = str(cell_id_to_name(np.array([cell]), size_north)[0])
-    caption = datagen.CAPTION_FMT.format(
+    caption = CAPTION_FMT.format(
         name=name, minx=minx, miny=miny, maxx=maxx, maxy=maxy,
         cellsize=(maxx - minx) / px, nodata=-9999,
     )
@@ -136,7 +136,7 @@ def _encode_tile(
     return {
         "cell_id": cell,
         "image_id": name,
-        "bytes": dem_to_png16(dem, datagen.Z_MIN, datagen.Z_MAX),
+        "bytes": dem_to_png16(dem, Z_MIN, Z_MAX),
         "w": px,
         "h": px,
         "fmt": "png16",
@@ -185,9 +185,8 @@ def rasterize_images_fused(images: DataFrame, px: int = 128,
         for pdf in batches:
             rows = []
             for cap, data in zip(pdf["caption"], pdf["bytes"]):
-                name, minx, miny, _maxx, _maxy, cs, _ = datagen.parse_caption(cap)
-                dem = png16_to_dem(bytes(data), datagen.Z_MIN, datagen.Z_MAX)
-                x, y, z, cls = datagen.sample_points_from_tile(name, dem, minx, miny, cs)
+                _name, minx, miny, *_ = parse_caption(cap)
+                x, y, z, cls = tile_points(cap, data)
                 cell = int(cell_id(np.array([minx]), np.array([miny]), 1000)[0])
                 rows.append(_tile_row(cell, x, y, z, cls, px, 1000, False))
             yield pd.DataFrame(rows, columns=TILE_COLUMNS)

@@ -523,7 +523,7 @@ void lsu_rasterize_dem(int64_t n_tri, const int64_t *tri, const double *x,
 /* ----------------------------------------------------------------------
  * lsu_sample_points: decode-to-points subsample + class assignment.
  *
- * Bit-exact C twin of datagen.sample_points_from_tile (the numpy path):
+ * Bit-exact C twin of imagetile.sample_points_from_tile (the numpy path):
  * pixel centers hashed with splitmix64 -> uniform [0,1) doubles; a
  * pixel becomes a "LIDAR return" when u < rate, with class from a
  * second hash (ground 80%, vegetation 3/4/5) and vegetation lifted

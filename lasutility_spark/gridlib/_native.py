@@ -198,7 +198,7 @@ def sample_points(
     dem: np.ndarray, minx: float, miny: float, cs: float, rate: float
 ):
     """C decode-to-points subsample; None => caller uses the numpy path.
-    Bit-identical to datagen.sample_points_from_tile's numpy arithmetic."""
+    Bit-identical to imagetile.sample_points_from_tile's numpy arithmetic."""
     if os.environ.get("LSU_NO_NATIVE") == "1":
         return None
     _ensure_loaded()

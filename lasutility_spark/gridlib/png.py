@@ -11,6 +11,7 @@ DEM tiles.  Deterministic: fixed zlib level, no ancillary chunks.
 from __future__ import annotations
 
 import struct
+import sys
 import zlib
 
 import numpy as np
@@ -71,40 +72,62 @@ def png_encode_rgb8_mirrored(raster: np.ndarray) -> bytes:
 
 def png_decode(data: bytes) -> np.ndarray:
     """PNG bytes -> array: grayscale 8/16-bit -> (h, w); RGB 8-bit ->
-    (h, w, 3) (filters 0-4, non-interlaced)."""
+    (h, w, 3) (filters 0-4, non-interlaced).
+
+    Corrupt input raises ``ValueError``: a chunk that runs past the end
+    or fails its CRC, an IHDR that is not 13 bytes or has a zero size, a
+    missing IEND, or image data that does not inflate to exactly the
+    size IHDR declares — checked before any plane is allocated."""
     if data[:8] != _SIG:
         raise ValueError("not a PNG")
     pos = 8
-    w = h = depth = ctype = None
-    idat = b""
-    while pos < len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        tag = data[pos + 4 : pos + 8]
-        payload = data[pos + 8 : pos + 8 + length]
-        pos += 12 + length
+    ihdr = None
+    idat = []
+    while True:
+        if pos + 12 > len(data):
+            raise ValueError("PNG truncated before IEND")
+        length, tag = struct.unpack_from(">I4s", data, pos)
+        end = pos + 12 + length
+        if end > len(data):
+            raise ValueError(f"PNG chunk {tag!r} runs past the end")
+        body = data[pos + 4 : end - 4]  # tag + payload, what the CRC covers
+        if zlib.crc32(body) != struct.unpack_from(">I", data, end - 4)[0]:
+            raise ValueError(f"PNG chunk {tag!r} fails its CRC")
+        pos = end
         if tag == b"IHDR":
-            w, h, depth, ctype, comp, filt, inter = struct.unpack(">IIBBBBB", payload)
-            if ctype not in (0, 2) or comp != 0 or filt != 0 or inter != 0:
-                raise ValueError("only non-interlaced grayscale/RGB supported")
-            if depth not in (8, 16) or (ctype == 2 and depth != 8):
-                raise ValueError(f"unsupported bit depth {depth}")
+            if length != 13:
+                raise ValueError("bad IHDR length")
+            ihdr = struct.unpack(">IIBBBBB", body[4:])
         elif tag == b"IDAT":
-            idat += payload
+            idat.append(body[4:])
         elif tag == b"IEND":
             break
-    if w is None:
+    if ihdr is None:
         raise ValueError("missing IHDR")
+    w, h, depth, ctype, comp, filt, inter = ihdr
+    if w == 0 or h == 0:
+        raise ValueError("empty PNG")
+    if ctype not in (0, 2) or comp != 0 or filt != 0 or inter != 0:
+        raise ValueError("only non-interlaced grayscale/RGB supported")
+    if depth not in (8, 16) or (ctype == 2 and depth != 8):
+        raise ValueError(f"unsupported bit depth {depth}")
     channels = 3 if ctype == 2 else 1
     bpp = channels * depth // 8
     stride = w * bpp
-    raw = zlib.decompress(idat)
+    want = h * (1 + stride)
+    inflate = zlib.decompressobj()
+    try:
+        raw = inflate.decompress(b"".join(idat), min(want + 1, sys.maxsize))
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG image data: {e}") from None
+    if len(raw) != want or not inflate.eof:
+        raise ValueError("PNG image data does not match the IHDR size")
     # fast path: every scanline filter byte is 0 (all PNGs this codec
     # writes) -> the whole plane is one strided slice, no per-row loop
-    if len(raw) == h * (1 + stride):
-        grid = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + stride)
-        if not grid[:, 0].any():
-            out = np.ascontiguousarray(grid[:, 1:])
-            return _assemble(out, h, w, depth, ctype)
+    grid = np.frombuffer(raw, dtype=np.uint8).reshape(h, 1 + stride)
+    if not grid[:, 0].any():
+        out = np.ascontiguousarray(grid[:, 1:])
+        return _assemble(out, h, w, depth, ctype)
     out = np.empty((h, stride), dtype=np.uint8)
     prev = np.zeros(stride, dtype=np.uint8)
     pos = 0
@@ -167,7 +190,12 @@ def dem_to_png16(dem: np.ndarray, z_min: float, z_max: float) -> bytes:
 
 
 def png16_to_dem(data: bytes, z_min: float, z_max: float) -> np.ndarray:
-    q = png_decode(data).astype(np.float64)
+    """16-bit grayscale PNG -> float32 DEM (NaN where the value is 0);
+    any other PNG raises ``ValueError``."""
+    q = png_decode(data)
+    if q.ndim != 2 or q.dtype != np.uint16:
+        raise ValueError(f"not a 16-bit grayscale DEM tile: {q.dtype} {q.shape}")
+    q = q.astype(np.float64)
     scale = (z_max - z_min) / 65534.0
     dem = (q - 1.0) * scale + z_min
     dem[q == 0] = np.nan

@@ -1,26 +1,38 @@
 """PNG/WKB/clip/phash codecs + deterministic datagen."""
 
+import contextlib
+import signal
+
 import numpy as np
 import pytest
 
 from lasutility_spark.datagen import (
     ensure_images_table,
     gen_tile_rows,
-    parse_caption,
-    sample_points_from_tile,
     terrain_z,
+    tile_dem,
     tile_names,
 )
 from lasutility_spark.gridlib.bounds import RasterBounds
 from lasutility_spark.gridlib.clip import clip_polyline, clip_ring
+from lasutility_spark.gridlib.imagetile import (
+    CAPTION_FMT,
+    Z_MAX,
+    Z_MIN,
+    parse_caption,
+    sample_points_from_tile,
+    tile_points,
+)
 from lasutility_spark.gridlib.phash import hamming64, phash64
 from lasutility_spark.gridlib.png import (
     dem_to_png16,
     png16_to_dem,
     png_decode,
     png_encode,
+    png_encode_rgb8_mirrored,
 )
 from lasutility_spark.gridlib.raster import crop, get_value
+from lasutility_spark.gridlib.tilenamer import tile_decode
 from lasutility_spark.gridlib.wkb import (
     decode,
     encode_linestring,
@@ -150,8 +162,6 @@ def test_ensure_images_table(tmp_path):
 def test_png_rgb8_mirrored_sink():
     """S9 WriteAsPng analog: mirrored rows, value on all 3 channels
     (ByteRaster.cs:124-153)."""
-    from lasutility_spark.gridlib.png import png_decode, png_encode_rgb8_mirrored
-
     r = np.zeros((4, 3), dtype=np.uint8)
     r[0, 0] = 7   # southwest corner -> image bottom-left
     r[3, 2] = 99  # northeast corner -> image top-right
@@ -203,3 +213,62 @@ def test_wkb_decode_refuses_corrupt_input():
                 decode(bytes(flipped))
             except ValueError:
                 pass
+
+
+@contextlib.contextmanager
+def _deadline(seconds: int):
+    """Fail the read if it runs longer than ``seconds`` (a hang)."""
+
+    def _expired(_signum, _frame):
+        raise TimeoutError(f"read ran past {seconds} s")
+
+    old = signal.signal(signal.SIGALRM, _expired)
+    signal.alarm(seconds)
+    try:
+        yield
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+
+
+def test_png_decode_refuses_corrupt_input():
+    """Every mutation of a png16 DEM tile decodes to the exact original
+    plane or raises ValueError, within 2 s: cuts of 1-59 bytes and 140
+    random cuts, every bit of the IHDR chunk, and 300 random byte flips
+    after it.  Rows whose bytes do not match their caption are refused
+    too: an 8-bit or RGB image as a DEM, and a 64 px plane under a
+    128 px caption."""
+    name = tile_names(1)[0]
+    data = dem_to_png16(tile_dem(name, 128), Z_MIN, Z_MAX)
+    want = png_decode(data)
+    rng = np.random.RandomState(11)
+    mutants = [data[:-cut] for cut in range(1, 60)]
+    mutants += [data[:cut] for cut in rng.randint(0, len(data), 140)]
+    for bit in range(8 * 8, 8 * 33):  # the IHDR chunk: offsets 8-32
+        flipped = bytearray(data)
+        flipped[bit // 8] ^= 1 << (bit % 8)
+        mutants.append(bytes(flipped))
+    for off, mask in zip(rng.randint(33, len(data), 300), rng.randint(1, 256, 300)):
+        flipped = bytearray(data)
+        flipped[off] ^= mask
+        mutants.append(bytes(flipped))
+    assert len(mutants) == 699
+    for i, blob in enumerate(mutants):
+        try:
+            with _deadline(2):
+                got = png_decode(blob)
+        except ValueError:
+            continue
+        assert got.dtype == want.dtype and np.array_equal(got, want), i
+
+    with pytest.raises(ValueError):
+        png16_to_dem(png_encode(np.zeros((128, 128), np.uint8)), Z_MIN, Z_MAX)
+    with pytest.raises(ValueError):
+        png16_to_dem(png_encode_rgb8_mirrored(np.zeros((128, 128), np.uint8)),
+                     Z_MIN, Z_MAX)
+    minx, miny, maxx, maxy = tile_decode(name)
+    caption = CAPTION_FMT.format(name=name, minx=minx, miny=miny, maxx=maxx,
+                                 maxy=maxy, cellsize=(maxx - minx) / 128, nodata=-9999)
+    assert len(tile_points(caption, data)[0]) > 100
+    with pytest.raises(ValueError):
+        tile_points(caption, dem_to_png16(tile_dem(name, 64), Z_MIN, Z_MAX))

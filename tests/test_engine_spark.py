@@ -7,7 +7,7 @@ import pytest
 
 from lasutility_spark import datagen
 from lasutility_spark.engine import pip_stage, points as pts, tiling, tin_stage, voxel
-from lasutility_spark.gridlib import topodb
+from lasutility_spark.gridlib import imagetile, topodb
 from lasutility_spark.gridlib.bounds import RasterBounds
 from lasutility_spark.gridlib.png import png16_to_dem, png_decode
 from lasutility_spark.gridlib.tilenamer import tile_decode
@@ -33,13 +33,13 @@ def test_end_to_end_tin_slice(spark, images_dir):
 
     src = pq.read_table(f"{images_dir}/images.parquet").to_pandas()
     row = src.iloc[3]
-    name, minx, miny, maxx, maxy, cs, _ = datagen.parse_caption(row["caption"])
-    dem_in = png16_to_dem(row["bytes"], datagen.Z_MIN, datagen.Z_MAX)
-    x, y, z, cls = datagen.sample_points_from_tile(name, dem_in, minx, miny, cs)
+    name, minx, miny, maxx, maxy, cs, _ = imagetile.parse_caption(row["caption"])
+    dem_in = png16_to_dem(row["bytes"], imagetile.Z_MIN, imagetile.Z_MAX)
+    x, y, z, cls = imagetile.sample_points_from_tile(name, dem_in, minx, miny, cs)
     bounds = RasterBounds(64, 64, minx, miny, maxx, maxy)
     oracle = Tin(x, y, z, cls).rasterize_dem(bounds)
 
-    got = png16_to_dem(bytes(out[name]["bytes"]), datagen.Z_MIN, datagen.Z_MAX)
+    got = png16_to_dem(bytes(out[name]["bytes"]), imagetile.Z_MIN, imagetile.Z_MAX)
     both = ~np.isnan(oracle) & ~np.isnan(got)
     assert both.mean() > 0.9
     # PSNR >= 40 dB gate (BASELINE input_hint)
@@ -137,7 +137,7 @@ def test_pip_cogrouped_matches_oracle(spark, images_dir):
     cap = images.select("caption").toPandas()["caption"]
     from lasutility_spark.gridlib.tilenamer import cell_id
 
-    mins = np.array([datagen.parse_caption(c)[1:3] for c in cap])
+    mins = np.array([imagetile.parse_caption(c)[1:3] for c in cap])
     cells = cell_id(mins[:, 0], mins[:, 1], 1000)
     tile_df = spark.createDataFrame(pd.DataFrame({"cell_id": cells}))
 
@@ -168,7 +168,7 @@ def test_pip_classify_points(spark, images_dir):
     from lasutility_spark.gridlib.tilenamer import cell_id
 
     cap = images.select("caption").toPandas()["caption"]
-    mins = np.array([datagen.parse_caption(c)[1:3] for c in cap])
+    mins = np.array([imagetile.parse_caption(c)[1:3] for c in cap])
     tile_df = spark.createDataFrame(
         pd.DataFrame({"cell_id": cell_id(mins[:, 0], mins[:, 1], 1000)})
     )
@@ -246,13 +246,13 @@ def test_skew_salted_tin_matches_unsalted(spark, images_dir):
         p, px=64, dense_threshold=20000, split=2, halo=40.0, num_partitions=4
     ).collect()
     assert len(base) == 1 and len(salted) == 1
-    a = png16_to_dem(bytes(base[0]["bytes"]), datagen.Z_MIN, datagen.Z_MAX)
-    c = png16_to_dem(bytes(salted[0]["bytes"]), datagen.Z_MIN, datagen.Z_MAX)
+    a = png16_to_dem(bytes(base[0]["bytes"]), imagetile.Z_MIN, imagetile.Z_MAX)
+    c = png16_to_dem(bytes(salted[0]["bytes"]), imagetile.Z_MIN, imagetile.Z_MAX)
     fa = np.nan_to_num(a, nan=-1.0)
     fc = np.nan_to_num(c, nan=-1.0)
     mse = float(((fa - fc) ** 2).mean())
     psnr = 99.0 if mse == 0 else 10 * np.log10(
-        (datagen.Z_MAX - datagen.Z_MIN) ** 2 / mse
+        (imagetile.Z_MAX - imagetile.Z_MIN) ** 2 / mse
     )
     assert psnr >= 40.0, f"salted PSNR {psnr:.1f} dB"
     # lineage metrics survive the split+merge: interior points sum back
@@ -280,34 +280,6 @@ def test_fused_images_match_point_tin_tiles(spark, images_dir):
     b = {r["image_id"]: tuple(r[c] for c in cols) for r in general}
     assert len(a) == 9
     assert a == b
-
-
-def test_ann_topk_matmul_matches_sql(spark):
-    """Scale-path brute-force ANN (Arrow matmul + per-batch local top-k)
-    is row-identical to the SQL form that queries() ships — same
-    quantization, exact int64 dots, same (dot DESC, vec_id ASC) ties."""
-    from lasutility_spark.pipelines import similarity
-
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").createOrReplaceTempView(
-        "embeddings"
-    )
-    want = {
-        tuple(r) for r in spark.sql(similarity.ann_topk_sql("spark"))
-        .select("query_id", "neighbor_id", "dot", "rnk").collect()
-    }
-    got = {
-        tuple(r) for r in similarity.ann_topk_spark(spark)
-        .select("query_id", "neighbor_id", "dot", "rnk").collect()
-    }
-    assert got == want and len(got) == 50
-    # partition-count independence: local top-k union is lossless
-    emb = spark.table("embeddings").repartition(13)
-    emb.createOrReplaceTempView("embeddings")
-    got13 = {
-        tuple(r) for r in similarity.ann_topk_spark(spark)
-        .select("query_id", "neighbor_id", "dot", "rnk").collect()
-    }
-    assert got13 == want
 
 
 def test_run_pipeline_script_end_to_end(spark, images_dir, tmp_path):

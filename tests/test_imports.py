@@ -54,6 +54,7 @@ def test_walk_finds_the_package_layers():
     assert {
         "lasutility_spark.datagen",
         "lasutility_spark.engine.tin_stage",
+        "lasutility_spark.gridlib.imagetile",
         "lasutility_spark.gridlib.laz",
         "lasutility_spark.pipelines.geosql",
     } <= set(MODULES)
@@ -81,10 +82,24 @@ def test_relative_imports_resolve():
     assert not dangling, "\n".join(dangling)
 
 
+def test_engine_does_not_import_datagen():
+    """The engine and gridlib read the image-tile contract from
+    ``gridlib.imagetile``; the synthetic-data generator is test and
+    benchmark input only."""
+    found = [
+        f"{mod}:{lineno}"
+        for mod, lineno, target, names in _relative_imports()
+        if mod.startswith(("lasutility_spark.engine", "lasutility_spark.gridlib"))
+        and (target == "lasutility_spark.datagen"
+             or (target == "lasutility_spark" and "datagen" in names))
+    ]
+    assert not found, "\n".join(found)
+
+
 def test_deleted_names_stay_gone():
     """The duplicate strategy paths deleted from pip_stage, tin_stage and
-    sources, and the text, dedup and streaming modules, are not named
-    anywhere in the code or the top-level docs."""
+    sources, and the text, dedup, streaming, similarity and events
+    modules, are not named anywhere in the code or the top-level docs."""
     deleted = [
         "classify_images_fused", "classify_images_joined",
         "classify_images_scanlocal", "classify_images_broadcast",
@@ -98,8 +113,12 @@ def test_deleted_names_stay_gone():
         "events_hourly_stream", "events_sessions_stream",
         "user_totals_stream", "tiles_stream", "write_batch_idempotent",
         "run_stream_once",
+        "ann_topk_spark", "lsh_candidate_pairs_sql", "near_dup_pairs_sql",
+        "knn_label_sql", "ivf_topk2_sql", "ivf_assign_learned_sql",
+        "ivf_topk_learned_sql", "sessions_sql", "_events_sql",
     ]
-    for mod in ("pipelines.text", "pipelines.dedup", "engine.streaming"):
+    for mod in ("pipelines.text", "pipelines.dedup", "engine.streaming",
+                "pipelines.similarity", "pipelines.events"):
         assert importlib.util.find_spec(f"lasutility_spark.{mod}") is None, mod
     repo = os.path.dirname(PKG_DIR)
     paths = [os.path.join(repo, f) for f in ("__spark_entry__.py", "README.md", "SURVEY.md")]

@@ -14,9 +14,7 @@ from lasutility_spark.oracle_compare import rows_duck as _rows_duck
 from lasutility_spark.oracle_compare import rows_spark as _rows_spark
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events embeddings"
-).split()
+TABLES = "region nation customer supplier part orders lineitem".split()
 
 
 @pytest.fixture(scope="module")

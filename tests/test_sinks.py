@@ -7,6 +7,7 @@ from lasutility_spark import datagen
 from lasutility_spark.engine import points as pts
 from lasutility_spark.engine import sinks, tin_stage
 from lasutility_spark.gridlib import wkb
+from lasutility_spark.gridlib.imagetile import parse_caption
 from lasutility_spark.gridlib.asc import ascii_to_byte_raster
 
 
@@ -40,7 +41,7 @@ def test_window_sink_and_roundtrip(spark, images_dir):
     import pandas as pd
 
     caps = images.select("caption").toPandas()["caption"]
-    mins = np.array([datagen.parse_caption(c)[1:3] for c in caps])
+    mins = np.array([parse_caption(c)[1:3] for c in caps])
     from lasutility_spark.gridlib.tilenamer import cell_id as cid_fn
 
     tile_df = spark.createDataFrame(
