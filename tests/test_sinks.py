@@ -1,5 +1,7 @@
 """ASCII sink stages + TIN triangle-feature export over Spark."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -85,6 +87,14 @@ GOLDEN_SHP_DIR = (
 )
 
 
+@pytest.mark.skipif(
+    not all(
+        os.path.exists(GOLDEN_SHP_DIR + "/DEM" + ext)
+        for ext in (".shp", ".shx", ".dbf", ".cpg")
+    ),
+    reason=f"DEM.shp/.shx/.dbf/.cpg not present under {GOLDEN_SHP_DIR}: "
+    "byte parity with the reference's DEM.shp stays unverified",
+)
 def test_write_polygonz_golden_byte_parity(tmp_path):
     """read the reference's committed DEM shapefile, re-write it with our
     writer -> ALL FOUR files byte-identical (NetTopologySuite layout:
