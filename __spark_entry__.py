@@ -377,13 +377,11 @@ _KERNEL_WITH_ORACLE = {
     "s10_triangle_features": (_tin_triangle_features, _oracle_triangle_stats, []),
 }
 
-# No-oracle queries: none left.  s10 (the last rows-only entry through
-# round 3) now rides a tie-independent oracle: Delaunay triangle COUNTS
-# are co-circular/collinear-tie dependent, but the triangle-area SUM
-# equals the convex-hull area for every valid triangulation, and on the
-# dyadic cell-center grid both sides compute it exactly (see
+# Every query has an oracle.  s10's is tie-independent: Delaunay triangle
+# COUNTS depend on co-circular ties, but the triangle-area SUM equals the
+# convex-hull area for every valid triangulation, and on the dyadic
+# cell-center grid both sides compute it exactly (see
 # _tin_triangle_features / datagen.hull_area_x100).
-_ROWS_ONLY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -416,7 +414,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         q.setdefault(name, spark_fn)
     for name, (fn, tables) in _RELATIONAL.items():
         q[name] = _sql_query(fn, tables)
-    q.update(_ROWS_ONLY)
     if len(q) > 50:  # ValueError, not assert: must survive python -O
         raise ValueError(
             f"driver correctness harness caps at 50 queries; got {len(q)} — "

@@ -1,21 +1,28 @@
-"""Build-on-first-use loader for the C Delaunay kernel (_delaunay.c).
+"""Build-on-first-use loader for the C kernels in ``_delaunay.c``.
 
-Why compile at import: executors receive the package via
+Why compile at first use: executors receive the package via
 ``spark-submit --py-files`` as a zip of sources; shipping a prebuilt
-``.so`` would pin one glibc/arch.  Compiling the single-file kernel with
-the node's ``cc`` takes ~200 ms once per node, the artifact is cached in
-a content-addressed temp path (atomic rename, safe under 32 concurrent
-workers), and ANY failure — no compiler, sandboxed /tmp, exotic arch —
-falls back to the pure-numpy Bowyer-Watson in :mod:`delaunay`, which is
-semantics-identical (both produce valid Delaunay triangulations; rasters
-are compared with tolerance, SURVEY.md §7).
+``.so`` would pin one glibc/arch.  Compiling the single-file unit with
+the node's ``cc`` takes ~200 ms once per node, and the artifact is cached
+in a content-addressed, per-uid private temp path (atomic rename, safe
+under concurrent first builds).
 
-Kill-switch: ``LSU_NO_NATIVE=1`` forces the pure-Python path (used by
-tests to pin fallback behavior).
+The unit is required: every node needs ``cc`` (or ``gcc``/``clang``) on
+``PATH``.  A build or load failure — no compiler, a failed compile, a
+``.so`` that is not privately owned — raises at first use, naming the
+compiler and its stderr, and the same error is raised again on every
+later call rather than recompiling.  The Delaunay kernel has no Python
+twin, so no failure can silently change a tile's triangles.
+
+``LSU_NO_NATIVE=1`` switches the other kernels (sample, DEM rasterize,
+polygon fill, polyline stamp, clip) to their bit-identical numpy twins,
+which stay the semantics definition and compute datagen's oracle side
+tables.  It does not reach :func:`triangulate`.
 """
 
 from __future__ import annotations
 
+import contextlib
 import ctypes
 import hashlib
 import os
@@ -26,17 +33,13 @@ import tempfile
 import numpy as np
 
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_delaunay.c")
-_loaded = False
-_fn = None
-_raster_fn = None
-_fill_fn = None
-_line_fn = None
-_sample_fn = None
-_clip_ring_fn = None
-_clip_line_fn = None
+# ctypes handles, set together by _ensure_loaded
+_fn = _raster_fn = _fill_fn = _line_fn = _sample_fn = None
+_clip_ring_fn = _clip_line_fn = None
+_load_error: Exception | None = None  # first build/load failure, re-raised
 
-# sentinel: "native kernel unavailable, use the Python fallback" — needed
-# because clip results legitimately include None (empty after clip)
+# sentinel: "LSU_NO_NATIVE=1, run the Python clip" — needed because clip
+# results legitimately include None (empty after clip)
 UNAVAILABLE = object()
 
 
@@ -74,10 +77,7 @@ def _build_and_load():
     cache_dir = os.path.join(
         tempfile.gettempdir(), f"lasutility_native_{os.getuid()}"
     )
-    try:
-        os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-    except OSError:
-        return None
+    os.makedirs(cache_dir, mode=0o700, exist_ok=True)
     if not _owned_and_private(cache_dir):
         # dir pre-existed with wrong owner/perms — build in a fresh
         # private mkdtemp instead (uncached, still correct)
@@ -86,7 +86,10 @@ def _build_and_load():
     if not (os.path.exists(so_path) and _owned_and_private(so_path)):
         cc = shutil.which("cc") or shutil.which("gcc") or shutil.which("clang")
         if cc is None:
-            return None
+            raise RuntimeError(
+                "no C compiler (cc, gcc or clang) found on PATH: the native "
+                "kernel _delaunay.c is required on every node"
+            )
         fd, tmp = tempfile.mkstemp(suffix=".so", dir=cache_dir)
         os.close(fd)
         # private source copy per build: a shared path would be
@@ -96,26 +99,27 @@ def _build_and_load():
             f.write(src)
         try:
             # -ffp-contract=off: no FMA contraction, so C results match the
-            # numpy fallback's double arithmetic operation-for-operation
-            subprocess.run(
+            # numpy twins' double arithmetic operation-for-operation
+            proc = subprocess.run(
                 [cc, "-O2", "-ffp-contract=off", "-shared", "-fPIC",
                  "-o", tmp, c_src, "-lm"],
-                check=True,
                 capture_output=True,
                 timeout=120,
             )
+            if proc.returncode != 0:
+                raise RuntimeError(
+                    f"{cc} could not build _delaunay.c (exit {proc.returncode}): "
+                    + proc.stderr.decode(errors="replace").strip()
+                )
             os.chmod(tmp, 0o600)
             os.replace(tmp, so_path)  # atomic under concurrent builders
-        except Exception:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            return None
         finally:
             os.unlink(c_src)
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
     if not _owned_and_private(so_path):
-        return None
+        raise RuntimeError(f"refusing to load {so_path}: not owned by uid "
+                           f"{os.getuid()} or group/world writable")
     lib = ctypes.CDLL(so_path)
     fn = lib.lsu_triangulate
     fn.restype = ctypes.c_int64
@@ -182,16 +186,29 @@ def _build_and_load():
 
 
 def _ensure_loaded():
-    global _loaded, _fn, _raster_fn, _fill_fn, _line_fn, _sample_fn
-    global _clip_ring_fn, _clip_line_fn
-    if not _loaded:
-        try:
-            (_fn, _raster_fn, _fill_fn, _line_fn, _sample_fn,
-             _clip_ring_fn, _clip_line_fn) = _build_and_load()
-        except Exception:
-            _fn = _raster_fn = _fill_fn = _line_fn = _sample_fn = None
-            _clip_ring_fn = _clip_line_fn = None
-        _loaded = True
+    """Load the unit once; re-raise the first build/load error ever after."""
+    global _fn, _raster_fn, _fill_fn, _line_fn, _sample_fn
+    global _clip_ring_fn, _clip_line_fn, _load_error
+    if _fn is not None:
+        return
+    if _load_error is not None:
+        raise _load_error
+    try:
+        handles = _build_and_load()
+    except Exception as e:
+        _load_error = e
+        raise
+    (_fn, _raster_fn, _fill_fn, _line_fn, _sample_fn,
+     _clip_ring_fn, _clip_line_fn) = handles
+
+
+def _native_on() -> bool:
+    """False under ``LSU_NO_NATIVE=1`` (the caller runs its numpy twin);
+    otherwise loads the unit, raising if it cannot be built."""
+    if os.environ.get("LSU_NO_NATIVE") == "1":
+        return False
+    _ensure_loaded()
+    return True
 
 
 def sample_points(
@@ -199,10 +216,7 @@ def sample_points(
 ):
     """C decode-to-points subsample; None => caller uses the numpy path.
     Bit-identical to imagetile.sample_points_from_tile's numpy arithmetic."""
-    if os.environ.get("LSU_NO_NATIVE") == "1":
-        return None
-    _ensure_loaded()
-    if _sample_fn is None:
+    if not _native_on():
         return None
     dem = np.ascontiguousarray(dem, dtype=np.float32)
     px = dem.shape[0]
@@ -220,13 +234,12 @@ def sample_points(
     return x[:n], y[:n], z[:n], cls[:n]
 
 
-def triangulate(x: np.ndarray, y: np.ndarray) -> np.ndarray | None:
-    """C sweep-hull triangulation; None => caller must use the fallback."""
-    if os.environ.get("LSU_NO_NATIVE") == "1":
-        return None
+def triangulate(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """C sweep-hull triangulation -> (n_tri, 3) int64 point indices.
+
+    The only triangulator, so ``LSU_NO_NATIVE`` does not apply; raises
+    ``MemoryError`` when the kernel cannot allocate its buffers."""
     _ensure_loaded()
-    if _fn is None:
-        return None
     n = len(x)
     if n < 3:
         return np.empty((0, 3), dtype=np.int64)
@@ -236,8 +249,8 @@ def triangulate(x: np.ndarray, y: np.ndarray) -> np.ndarray | None:
     rc = _fn(n, x, y, out)
     if rc == -2:  # fully collinear
         return np.empty((0, 3), dtype=np.int64)
-    if rc < 0:
-        return None
+    if rc == -1:
+        raise MemoryError(f"lsu_triangulate: allocation failed for {n} points")
     return out[:rc].copy()
 
 
@@ -258,12 +271,9 @@ def rasterize_dem(
 ) -> bool:
     """C triangle-push rasterization into ``dem`` in place.
 
-    Returns False when the native kernel is unavailable (caller falls
-    back to the numpy path).  ``dem`` must be C-contiguous float32."""
-    if os.environ.get("LSU_NO_NATIVE") == "1":
-        return False
-    _ensure_loaded()
-    if _raster_fn is None:
+    Returns False under ``LSU_NO_NATIVE=1`` (caller runs the numpy
+    path).  ``dem`` must be C-contiguous float32."""
+    if not _native_on():
         return False
     rows, cols = dem.shape
     tri = np.ascontiguousarray(tri, dtype=np.int64)
@@ -302,10 +312,7 @@ def fill_polygon_cells(
     poly_y: np.ndarray,
 ) -> bool:
     """C even-odd scanline fill; False => caller uses the numpy path."""
-    if os.environ.get("LSU_NO_NATIVE") == "1":
-        return False
-    _ensure_loaded()
-    if _fill_fn is None or dest.dtype != np.uint8 or not dest.flags["C_CONTIGUOUS"]:
+    if not _native_on() or dest.dtype != np.uint8 or not dest.flags["C_CONTIGUOUS"]:
         return False
     px = np.ascontiguousarray(poly_x, dtype=np.float64)
     py = np.ascontiguousarray(poly_y, dtype=np.float64)
@@ -324,10 +331,7 @@ def rasterize_polyline(
     dest: np.ndarray, value: int, vrows: np.ndarray, vcols: np.ndarray
 ) -> bool:
     """C Bresenham polyline stamp; False => caller uses the numpy path."""
-    if os.environ.get("LSU_NO_NATIVE") == "1":
-        return False
-    _ensure_loaded()
-    if _line_fn is None or dest.dtype != np.uint8 or not dest.flags["C_CONTIGUOUS"]:
+    if not _native_on() or dest.dtype != np.uint8 or not dest.flags["C_CONTIGUOUS"]:
         return False
     vr = np.ascontiguousarray(vrows, dtype=np.int64)
     vc = np.ascontiguousarray(vcols, dtype=np.int64)
@@ -338,12 +342,9 @@ def rasterize_polyline(
 
 
 def clip_ring(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
-    """C Sutherland-Hodgman ring clip; returns UNAVAILABLE to request the
-    Python fallback, None when the clipped ring is empty, else (x, y)."""
-    if os.environ.get("LSU_NO_NATIVE") == "1":
-        return UNAVAILABLE
-    _ensure_loaded()
-    if _clip_ring_fn is None:
+    """C Sutherland-Hodgman ring clip; returns UNAVAILABLE under
+    ``LSU_NO_NATIVE=1``, None when the clipped ring is empty, else (x, y)."""
+    if not _native_on():
         return UNAVAILABLE
     xs = np.ascontiguousarray(xs, dtype=np.float64)
     ys = np.ascontiguousarray(ys, dtype=np.float64)
@@ -364,12 +365,9 @@ def clip_ring(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
 
 
 def clip_polyline(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
-    """C Liang-Barsky polyline clip; UNAVAILABLE => Python fallback, else
-    a list of (x, y) parts (possibly empty)."""
-    if os.environ.get("LSU_NO_NATIVE") == "1":
-        return UNAVAILABLE
-    _ensure_loaded()
-    if _clip_line_fn is None:
+    """C Liang-Barsky polyline clip; UNAVAILABLE under ``LSU_NO_NATIVE=1``,
+    else a list of (x, y) parts (possibly empty)."""
+    if not _native_on():
         return UNAVAILABLE
     xs = np.ascontiguousarray(xs, dtype=np.float64)
     ys = np.ascontiguousarray(ys, dtype=np.float64)

@@ -1,163 +1,22 @@
-"""2-D Delaunay triangulation, pure Python/numpy (no scipy in this env).
+"""2-D Delaunay triangulation through the C sweep-hull kernel.
 
 Role parity: the reference triangulates per tile with DelaunatorSharp
-(LasUtility/DEM/Triangulation.cs:58-72).  Algorithms may legally produce
-different triangle sets on co-circular inputs (SURVEY.md §7 "Delaunay
-nondeterminism") — downstream rasters are compared with tolerance, never
-triangle lists.
+(LasUtility/DEM/Triangulation.cs:58-72).  ``_delaunay.c`` implements the
+same sweep-hull (Delaunator) scheme and is built on first use by
+:mod:`_native`; it is the only triangulator, so a node that cannot build
+it raises instead of producing different triangles.
 
-Implementation: Bowyer-Watson incremental insertion with
-
-- numpy-vectorized in-circumcircle scans over all live triangles,
-- strict predicate with relative slack (ties = outside, so co-circular
-  quads get an arbitrary but valid diagonal),
-- an exact rational (fractions.Fraction over exact float conversion)
-  fallback per insertion whenever the cavity boundary fails to close —
-  which is how FP ties manifest — so grid-aligned inputs (points at cell
-  centers, maximally co-circular) still triangulate correctly,
-- deterministic: same input order -> same output, independent of
-  parallelism (required for local[8] == local[32] output equality).
+Co-circular inputs may legally triangulate either way (SURVEY.md §7
+"Delaunay nondeterminism"); the kernel breaks ties by point index, so the
+same input order always gives the same triangles, independent of
+parallelism (required for local[8] == local[32] output equality).
 """
 
 from __future__ import annotations
 
-import math
-from fractions import Fraction
-
 import numpy as np
 
 from . import _native
-
-_SLACK = 1e-12
-
-
-def _circumcircle(ax, ay, bx, by, cx, cy):
-    """Circumcenter + squared radius; (inf) for degenerate triangles."""
-    d = 2.0 * (ax * (by - cy) + bx * (cy - ay) + cx * (ay - by))
-    if d == 0.0 or not math.isfinite(d):
-        return 0.0, 0.0, math.inf
-    a2 = ax * ax + ay * ay
-    b2 = bx * bx + by * by
-    c2 = cx * cx + cy * cy
-    ux = (a2 * (by - cy) + b2 * (cy - ay) + c2 * (ay - by)) / d
-    uy = (a2 * (cx - bx) + b2 * (ax - cx) + c2 * (bx - ax)) / d
-    r2 = (ax - ux) ** 2 + (ay - uy) ** 2
-    return ux, uy, r2
-
-
-def _incircle_exact(ax, ay, bx, by, cx, cy, px, py) -> bool:
-    """Exact in-circumcircle for CCW triangle (a,b,c): det > 0 <=> strictly
-    inside.  Fraction(float) is exact, so this is error-free."""
-    ax, ay, bx, by, cx, cy, px, py = (
-        Fraction(v) for v in (ax, ay, bx, by, cx, cy, px, py)
-    )
-    adx, ady = ax - px, ay - py
-    bdx, bdy = bx - px, by - py
-    cdx, cdy = cx - px, cy - py
-    det = (
-        (adx * adx + ady * ady) * (bdx * cdy - cdx * bdy)
-        - (bdx * bdx + bdy * bdy) * (adx * cdy - cdx * ady)
-        + (cdx * cdx + cdy * cdy) * (adx * bdy - bdx * ady)
-    )
-    return det > 0
-
-
-def _orient(ax, ay, bx, by, cx, cy) -> float:
-    return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-
-
-class _Mesh:
-    """Growable triangle soup with per-triangle circumcircles."""
-
-    def __init__(self, cap: int):
-        self.tri = np.empty((cap, 3), dtype=np.int64)
-        self.ccx = np.empty(cap)
-        self.ccy = np.empty(cap)
-        self.r2 = np.empty(cap)
-        self.alive = np.zeros(cap, dtype=bool)
-        self.n = 0
-        self.dead = 0
-
-    def _grow(self):
-        cap = len(self.tri) * 2
-        for name in ("ccx", "ccy", "r2"):
-            arr = getattr(self, name)
-            new = np.empty(cap)
-            new[: self.n] = arr[: self.n]
-            setattr(self, name, new)
-        tri = np.empty((cap, 3), dtype=np.int64)
-        tri[: self.n] = self.tri[: self.n]
-        self.tri = tri
-        alive = np.zeros(cap, dtype=bool)
-        alive[: self.n] = self.alive[: self.n]
-        self.alive = alive
-
-    def add(self, a, b, c, x, y):
-        if self.n == len(self.tri):
-            self._grow()
-        i = self.n
-        self.tri[i] = (a, b, c)
-        self.ccx[i], self.ccy[i], self.r2[i] = _circumcircle(
-            x[a], y[a], x[b], y[b], x[c], y[c]
-        )
-        self.alive[i] = True
-        self.n += 1
-
-    def compact(self):
-        """Drop dead slots so the per-insertion circumcircle scan stays
-        O(live triangles) instead of O(all ever created)."""
-        live = self.alive[: self.n]
-        k = int(live.sum())
-        self.tri[:k] = self.tri[: self.n][live]
-        self.ccx[:k] = self.ccx[: self.n][live]
-        self.ccy[:k] = self.ccy[: self.n][live]
-        self.r2[:k] = self.r2[: self.n][live]
-        self.alive[:k] = True
-        self.alive[k : self.n] = False
-        self.n = k
-        self.dead = 0
-
-
-def _cavity_boundary(edges: list[tuple[int, int]]) -> list[tuple[int, int]] | None:
-    """Directed edges of bad triangles -> boundary edges (appear once as an
-    unordered pair).  Returns None if the boundary is not a single closed
-    loop — the signal that FP ties corrupted the cavity."""
-    count: dict[tuple[int, int], int] = {}
-    keep: dict[tuple[int, int], tuple[int, int]] = {}
-    for a, b in edges:
-        key = (a, b) if a < b else (b, a)
-        c = count.get(key, 0) + 1
-        count[key] = c
-        if c == 1:
-            keep[key] = (a, b)
-        elif c > 2:
-            return None
-    boundary = [keep[k] for k, c in count.items() if c == 1]
-    # must form one closed loop: every vertex appears exactly once as a
-    # source and once as a target
-    src = {}
-    for a, b in boundary:
-        if a in src:
-            return None
-        src[a] = b
-    # walk the loop
-    if not boundary:
-        return None
-    start = boundary[0][0]
-    seen = 0
-    v = start
-    while True:
-        v = src.get(v)
-        seen += 1
-        if v is None:
-            return None
-        if v == start:
-            break
-        if seen > len(boundary):
-            return None
-    if seen != len(boundary):
-        return None
-    return boundary
 
 
 def delaunay(x: np.ndarray, y: np.ndarray) -> np.ndarray:
@@ -181,106 +40,19 @@ def delaunay(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     _, first_idx = np.unique(x + 1j * y, return_index=True)
     keep_idx = np.sort(first_idx)
 
-    minx, maxx = float(x.min()), float(x.max())
-    miny, maxy = float(y.min()), float(y.max())
-    span = max(maxx - minx, maxy - miny, 1.0)
-    cx0, cy0 = (minx + maxx) / 2.0, (miny + maxy) / 2.0
-
-    # fast path: C sweep-hull kernel (~50x the pure-python fallback),
-    # fed tile-local coordinates so grid-aligned inputs keep exact
-    # double-precision predicates (see delaunay.py translation note below)
-    tri_local = _native.triangulate(x[keep_idx] - cx0, y[keep_idx] - cy0)
-    if tri_local is not None:
-        tri = keep_idx[tri_local]
-        if len(tri):
-            ax, ay = x[tri[:, 0]], y[tri[:, 0]]
-            bx, by = x[tri[:, 1]], y[tri[:, 1]]
-            cx_, cy_ = x[tri[:, 2]], y[tri[:, 2]]
-            area2 = (bx - ax) * (cy_ - ay) - (by - ay) * (cx_ - ax)
-            flip = area2 < 0  # normalize to CCW (winding contract of Tin)
-            tri[flip, 1], tri[flip, 2] = tri[flip, 2], tri[flip, 1]
-            tri = tri[area2 != 0.0]
-        return tri
-
-    # pure-python Bowyer-Watson fallback ----------------------------------
-    # randomized insertion order (fixed seed — input-deterministic):
-    # scan-ordered inserts grow long skinny triangles and ~25-edge
-    # cavities; the classic BW randomization keeps cavities ~6 edges
-    order = keep_idx[np.random.RandomState(0x5EED).permutation(len(keep_idx))]
-
-    # translate to local coordinates: Delaunay is translation-invariant,
-    # and circumcircle determinants on absolute ETRS coordinates (~6.6e6)
-    # lose ~13 digits to cancellation — which made every co-circular
-    # (grid-aligned) test a tie and forced the slow exact fallback
-    x = x - cx0
-    y = y - cy0
-
-    # super-triangle well outside the data
-    m = 32.0 * span
-    xs = np.concatenate([x, [-m, m, 0.0]])
-    ys = np.concatenate([y, [-m, -m, m]])
-    s0, s1, s2 = n, n + 1, n + 2
-
-    mesh = _Mesh(max(16, 4 * n))
-    mesh.add(s0, s1, s2, xs, ys)
-
-    for p in order:
-        if mesh.n > 2048 and mesh.dead * 2 > mesh.n:
-            mesh.compact()
-        px, py = float(xs[p]), float(ys[p])
-        nn = mesh.n
-        d2 = (px - mesh.ccx[:nn]) ** 2 + (py - mesh.ccy[:nn]) ** 2
-        bad = np.flatnonzero(
-            mesh.alive[:nn] & (d2 < mesh.r2[:nn] * (1.0 - _SLACK))
-        )
-        boundary = None
-        if len(bad):
-            edges = []
-            for t in bad:
-                a, b, c = mesh.tri[t]
-                edges += [(a, b), (b, c), (c, a)]
-            boundary = _cavity_boundary(edges)
-
-        if boundary is None:
-            # FP tie corrupted the cavity (or no triangle matched): redo
-            # this insertion with the exact predicate over candidates near
-            # the tie region.
-            cand = np.flatnonzero(
-                mesh.alive[:nn] & (d2 <= mesh.r2[:nn] * (1.0 + 1e-9))
-            )
-            bad_list = []
-            for t in cand:
-                a, b, c = mesh.tri[t]
-                if _incircle_exact(
-                    xs[a], ys[a], xs[b], ys[b], xs[c], ys[c], px, py
-                ):
-                    bad_list.append(t)
-            bad = np.array(bad_list, dtype=np.int64)
-            if len(bad) == 0:
-                # exactly on an existing vertex/edge of the hull structure
-                # with no strict containment — skip (duplicate-like point)
-                continue
-            edges = []
-            for t in bad:
-                a, b, c = mesh.tri[t]
-                edges += [(a, b), (b, c), (c, a)]
-            boundary = _cavity_boundary(edges)
-            if boundary is None:
-                raise RuntimeError("Delaunay cavity failed even with exact predicate")
-
-        mesh.alive[bad] = False
-        mesh.dead += len(bad)
-        for a, b in boundary:
-            mesh.add(a, b, p, xs, ys)
-
-    live = mesh.tri[: mesh.n][mesh.alive[: mesh.n]]
-    # drop triangles touching super vertices and degenerate slivers
-    keep = (live < n).all(axis=1)
-    live = live[keep]
-    if len(live):
-        ax, ay = xs[live[:, 0]], ys[live[:, 0]]
-        bx, by = xs[live[:, 1]], ys[live[:, 1]]
-        cx, cy = xs[live[:, 2]], ys[live[:, 2]]
-        area2 = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-        live = live[area2 != 0.0]
-    return live
+    # tile-local coordinates: Delaunay is translation-invariant, and
+    # orient/incircle determinants on absolute ETRS coordinates (~6.6e6)
+    # lose ~13 digits to cancellation, while grid-aligned local inputs
+    # keep them integer-valued and exact in doubles
+    cx0 = (float(x.min()) + float(x.max())) / 2.0
+    cy0 = (float(y.min()) + float(y.max())) / 2.0
+    tri = keep_idx[_native.triangulate(x[keep_idx] - cx0, y[keep_idx] - cy0)]
+    if len(tri):
+        ax, ay = x[tri[:, 0]], y[tri[:, 0]]
+        bx, by = x[tri[:, 1]], y[tri[:, 1]]
+        cx_, cy_ = x[tri[:, 2]], y[tri[:, 2]]
+        area2 = (bx - ax) * (cy_ - ay) - (by - ay) * (cx_ - ax)
+        flip = area2 < 0  # normalize to CCW (winding contract of Tin)
+        tri[flip, 1], tri[flip, 2] = tri[flip, 2], tri[flip, 1]
+        tri = tri[area2 != 0.0]
+    return tri

@@ -79,7 +79,8 @@ class Tin:
 
         # C fast path: tight per-triangle scanline, compute-bound (the
         # numpy expansion below is memory-bandwidth bound, which caps
-        # multi-worker scaling); falls through on any unavailability
+        # multi-worker scaling); falls through to the numpy twin below
+        # under LSU_NO_NATIVE=1 or for non-contiguous/other-dtype planes
         if (
             dem.dtype == np.float32
             and dem.flags["C_CONTIGUOUS"]

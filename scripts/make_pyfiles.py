@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Package lasutility_spark into dist/lasutility_spark.zip for
-``spark-submit --py-files`` (pure Python + numpy deps only — no native
-wheels to ship)."""
+``spark-submit --py-files``: the Python sources plus the C kernel source
+``gridlib/_delaunay.c``, which every node compiles on first use with its
+own ``cc`` (required; no prebuilt native wheels to ship)."""
 
 from __future__ import annotations
 
@@ -22,8 +23,8 @@ def main() -> str:
                 continue
             for f in files:
                 # .c: the build-on-first-use native kernel source must
-                # ship with the package (compiled per node, numpy
-                # fallback when no compiler)
+                # ship with the package (compiled per node; a node
+                # without a compiler raises at first use)
                 if f.endswith((".py", ".c")):
                     full = os.path.join(root, f)
                     zf.write(full, os.path.relpath(full, REPO))

@@ -1,6 +1,8 @@
-"""Delaunay + TIN kernel tests: Delaunay property checks against a brute
-oracle, grid (co-circular) inputs, and rasterization semantics pinned by
-Triangulation.Tests.cs:82-179."""
+"""Delaunay + TIN kernel tests: exact (rational) Delaunay property checks,
+grid (co-circular) and quantized ETRS inputs, and rasterization semantics
+pinned by Triangulation.Tests.cs:82-179."""
+
+from fractions import Fraction
 
 import numpy as np
 import pytest
@@ -10,55 +12,76 @@ from lasutility_spark.gridlib.delaunay import delaunay
 from lasutility_spark.gridlib.tin import Tin, backfill_dem_from_tin
 
 
-def _check_delaunay(x, y, tri, tol=1e-9):
-    """Every triangle's circumcircle is empty of other points (tolerance
-    for co-circular ties), triangles are CCW, and the triangulation covers
-    the convex hull (area check)."""
+def _cross(o, a, b):
+    return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
+
+
+def _incircle(a, b, c, d):
+    """> 0 iff d is strictly inside the circumcircle of CCW (a, b, c)."""
+    adx, ady = a[0] - d[0], a[1] - d[1]
+    bdx, bdy = b[0] - d[0], b[1] - d[1]
+    cdx, cdy = c[0] - d[0], c[1] - d[1]
+    return (
+        (adx * adx + ady * ady) * (bdx * cdy - cdx * bdy)
+        - (bdx * bdx + bdy * bdy) * (adx * cdy - cdx * ady)
+        + (cdx * cdx + cdy * cdy) * (adx * bdy - bdx * ady)
+    )
+
+
+def _hull(pts):
+    """Strictly convex hull (CCW) by Andrew's monotone chain."""
+    pts = sorted(set(pts))
+    lower, upper = [], []
+    for p in pts:
+        while len(lower) >= 2 and _cross(lower[-2], lower[-1], p) <= 0:
+            lower.pop()
+        lower.append(p)
+    for p in reversed(pts):
+        while len(upper) >= 2 and _cross(upper[-2], upper[-1], p) <= 0:
+            upper.pop()
+        upper.append(p)
+    return lower[:-1] + upper[:-1]
+
+
+def _check_delaunay(x, y, tri):
+    """Exact Delaunay property check, in rationals (Fraction(float) is
+    exact): triangles are CCW and no directed edge repeats; on every
+    interior edge the opposite vertex is not strictly inside the other
+    triangle's circumcircle; every boundary edge is a convex-hull edge (no
+    point strictly to its right); every distinct input point is a vertex;
+    and the triangle areas sum to the convex hull area."""
     assert len(tri) > 0
-    for a, b, c in tri:
-        ax, ay, bx, by, cx, cy = x[a], y[a], x[b], y[b], x[c], y[c]
-        area2 = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-        assert area2 > 0, "triangle not CCW"
-        d = 2 * (ax * (by - cy) + bx * (cy - ay) + cx * (ay - by))
-        ux = ((ax**2 + ay**2) * (by - cy) + (bx**2 + by**2) * (cy - ay) + (cx**2 + cy**2) * (ay - by)) / d
-        uy = ((ax**2 + ay**2) * (cx - bx) + (bx**2 + by**2) * (ax - cx) + (cx**2 + cy**2) * (bx - ax)) / d
-        r2 = (ax - ux) ** 2 + (ay - uy) ** 2
-        d2 = (x - ux) ** 2 + (y - uy) ** 2
-        inside = d2 < r2 * (1 - tol) - tol
-        inside[[a, b, c]] = False
-        assert not inside.any(), "non-empty circumcircle"
+    pts = [(Fraction(a), Fraction(b)) for a, b in zip(x.tolist(), y.tolist())]
+    apex = {}  # directed edge (a, b) -> third vertex of its CCW triangle
+    for a, b, c in tri.tolist():
+        assert _cross(pts[a], pts[b], pts[c]) > 0, "triangle not CCW"
+        for e, o in (((a, b), c), ((b, c), a), ((c, a), b)):
+            assert e not in apex, f"edge {e} in two triangles"
+            apex[e] = o
+    hull = _hull(pts)
+    for (a, b), c in apex.items():
+        if (b, a) in apex:
+            d = apex[(b, a)]
+            assert _incircle(pts[a], pts[b], pts[c], pts[d]) <= 0, (
+                f"illegal edge {(a, b)}"
+            )
+        else:
+            # extreme points suffice: if any point lies strictly right of
+            # a -> b, some hull vertex does
+            assert all(_cross(pts[a], pts[b], h) >= 0 for h in hull), (
+                f"boundary edge {(a, b)} is not a hull edge"
+            )
+    assert {pts[i] for i in tri.ravel().tolist()} == set(pts), "point missed"
     # area coverage: sum of triangle areas == convex hull area
     tri_area = 0.0
     for a, b, c in tri:
         tri_area += abs(
             (x[b] - x[a]) * (y[c] - y[a]) - (y[b] - y[a]) * (x[c] - x[a])
         ) / 2
-    hull_area = _hull_area(x, y)
+    hull_area = float(
+        abs(sum(_cross(hull[0], p, q) for p, q in zip(hull[1:], hull[2:]))) / 2
+    )
     assert abs(tri_area - hull_area) < 1e-6 * max(hull_area, 1.0)
-
-
-def _hull_area(x, y):
-    pts = sorted(set(zip(x.tolist(), y.tolist())))
-
-    def cross(o, a, b):
-        return (a[0] - o[0]) * (b[1] - o[1]) - (a[1] - o[1]) * (b[0] - o[0])
-
-    lower, upper = [], []
-    for p in pts:
-        while len(lower) >= 2 and cross(lower[-2], lower[-1], p) <= 0:
-            lower.pop()
-        lower.append(p)
-    for p in reversed(pts):
-        while len(upper) >= 2 and cross(upper[-2], upper[-1], p) <= 0:
-            upper.pop()
-        upper.append(p)
-    hull = lower[:-1] + upper[:-1]
-    area = 0.0
-    for i in range(len(hull)):
-        x0, y0 = hull[i]
-        x1, y1 = hull[(i + 1) % len(hull)]
-        area += x0 * y1 - x1 * y0
-    return abs(area) / 2
 
 
 def test_delaunay_random_points():
@@ -76,8 +99,29 @@ def test_delaunay_grid_points_cocircular():
     gx, gy = np.meshgrid(np.arange(12) + 0.5, np.arange(12) + 0.5)
     x, y = gx.ravel(), gy.ravel()
     tri = delaunay(x, y)
-    _check_delaunay(x, y, tri, tol=1e-7)
+    _check_delaunay(x, y, tri)
     assert len(tri) == 2 * 11 * 11  # exactly two triangles per grid square
+
+
+def test_delaunay_quantized_etrs_tile():
+    # 3,000 points of one 1 km tile at ETRS-TM35FIN offsets, quantized to
+    # 0.01 m like LAS coordinates: absolute coordinates the kernel must
+    # triangulate through the tile-local translation
+    rng = np.random.RandomState(5)
+    x = 385000.0 + np.round(rng.uniform(0, 1000, 3000), 2)
+    y = 6672000.0 + np.round(rng.uniform(0, 1000, 3000), 2)
+    _check_delaunay(x, y, delaunay(x, y))
+
+
+def test_delaunay_ignores_no_native_switch(monkeypatch):
+    # LSU_NO_NATIVE=1 switches only the numpy-twinned kernels; the C
+    # triangulator has no twin, so the switch must not change triangles
+    rng = np.random.RandomState(11)
+    x = np.round(rng.uniform(0, 100, 500), 2)
+    y = np.round(rng.uniform(0, 100, 500), 2)
+    want = delaunay(x, y)
+    monkeypatch.setenv("LSU_NO_NATIVE", "1")
+    assert np.array_equal(delaunay(x, y), want)
 
 
 def test_delaunay_duplicates_and_small():

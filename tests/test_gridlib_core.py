@@ -218,15 +218,8 @@ def test_clip_native_matches_python_fallback():
     to the Python fallback over fuzzed boundary-crossing geometries."""
     import os
 
-    from lasutility_spark.gridlib import _native, clip
+    from lasutility_spark.gridlib import clip
 
-    if _native.clip_ring(
-        np.array([-1.0, 50.0, 50.0]), np.array([50.0, -1.0, 50.0]),
-        0.0, 0.0, 100.0, 100.0,
-    ) is _native.UNAVAILABLE:
-        import pytest
-
-        pytest.skip("no C toolchain on this node")
     rng = np.random.RandomState(7)
     box = (0.0, 0.0, 100.0, 100.0)
     for _ in range(800):
@@ -267,20 +260,21 @@ def _native_build_worker(tmpdir: str, barrier, delay: float) -> None:
 
     barrier.wait()
     time.sleep(delay)  # staggered first builds, as in a Spark stage
-    tri = _native.triangulate(np.array([0.0, 1.0, 0.0]), np.array([0.0, 0.0, 1.0]))
-    sys.exit(0 if tri is not None else 1)
+    try:
+        tri = _native.triangulate(
+            np.array([0.0, 1.0, 0.0]), np.array([0.0, 0.0, 1.0])
+        )
+    except Exception:
+        sys.exit(1)
+    sys.exit(0 if len(tri) == 1 else 1)
 
 
 def test_native_kernel_concurrent_first_build(tmp_path):
     """Workers that compile the C kernel into one empty cache at the same
-    time all load it: none falls back to the Python Delaunay (which
-    breaks ties differently) because another build overwrote the
+    time all load it: none raises because another build overwrote the
     source file it was compiling."""
     import multiprocessing as mp
-    import shutil
 
-    if shutil.which("cc") is None:
-        pytest.skip("no C compiler")
     ctx = mp.get_context("spawn")
     n = 6
     for trial in range(4):

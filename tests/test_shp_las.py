@@ -33,7 +33,10 @@ FIXTURE_DIR = (
     "AddShapefileAndSave/Input"
 )
 needs_fixture = pytest.mark.skipif(
-    not os.path.isdir(FIXTURE_DIR), reason="reference fixtures not present"
+    not os.path.isdir(FIXTURE_DIR),
+    reason=f"{FIXTURE_DIR} not present: the fixture shapefile scan (feature "
+    "counts, file order, LUOKKA) and terraintype.asp byte parity of the "
+    "rasterized fixture stay unverified",
 )
 
 
