@@ -114,13 +114,22 @@ def read_header(data: bytes) -> dict:
     }
 
 
-def read_las(data: bytes):
-    """LAS bytes -> (header, x, y, z, classification) numpy arrays.
+def read_header_at(read_at) -> dict:
+    """:func:`read_header` by ranged reads: ``read_at(offset, n)`` returns
+    up to ``n`` bytes of the file at ``offset`` (fewer only at its end).
+    Reads the public header block and nothing past it."""
+    head = read_at(0, _MIN_HEADER)
+    if len(head) == _MIN_HEADER and head[:4] == _SIG:
+        (header_size,) = struct.unpack_from("<H", head, 94)
+        if header_size > _MIN_HEADER:  # LAS 1.3/1.4 extend the block
+            head += read_at(_MIN_HEADER, header_size - _MIN_HEADER)
+    return read_header(head)
 
-    Vectorized: the point block is one strided frombuffer view; scaling
-    is three fused array ops.
-    """
-    h = read_header(data)
+
+def check_point_block(h: dict, size: int) -> None:
+    """Check an uncompressed header against its ``size``-byte file: a LAZ
+    header, an unsupported format, a record shorter than its format and
+    a point block that runs past the end of the file raise ValueError."""
     if h["point_format"] & 0x80:
         # bit 7 of the format byte marks LAZ compression; parsing the
         # compressed chunk table as raw records would yield garbage
@@ -131,23 +140,47 @@ def read_las(data: bytes):
     fmt = h["point_format"] & 0x3F
     if fmt not in _FORMAT_SIZES and fmt not in _FORMAT14_SIZES:
         raise ValueError(f"unsupported point format {fmt} (0-10 supported)")
-    core_dt = _CORE14 if fmt >= 6 else _CORE
     canon = _FORMAT14_SIZES[fmt] if fmt >= 6 else _FORMAT_SIZES[fmt]
-    n = h["point_count"]
     rec = h["record_len"]
     if rec < canon:
         raise ValueError(
             f"record length {rec} shorter than format {fmt}'s {canon}"
         )
+    start, length = h["offset_to_points"], h["point_count"] * rec
+    if start + length > size:
+        raise ValueError(
+            f"{h['point_count']} points of {rec} bytes at offset {start} "
+            f"run past the end of the {size}-byte file"
+        )
+
+
+def las_records(buf, h: dict, n: int, offset: int = 0):
+    """``n`` whole point records of ``h``'s (checked) format at ``offset``
+    of ``buf`` -> (block, core, x, y, z): the (n, record_len) bytes, the
+    core fields and the scaled coordinates."""
+    fmt = h["point_format"] & 0x3F
+    core_dt = _CORE14 if fmt >= 6 else _CORE
+    rec = h["record_len"]
     block = np.frombuffer(
-        data, dtype=np.uint8, count=n * rec, offset=h["offset_to_points"]
+        buf, dtype=np.uint8, count=n * rec, offset=offset
     ).reshape(n, rec)
     core = np.ascontiguousarray(block[:, : core_dt.itemsize]).view(core_dt).reshape(n)
     sx, sy, sz = h["scale"]
     ox, oy, oz = h["offset"]
-    x = core["X"] * sx + ox
-    y = core["Y"] * sy + oy
-    z = core["Z"] * sz + oz
+    return block, core, core["X"] * sx + ox, core["Y"] * sy + oy, core["Z"] * sz + oz
+
+
+def read_las(data: bytes):
+    """LAS bytes -> (header, x, y, z, classification) numpy arrays.
+
+    Vectorized: the point block is one strided frombuffer view; scaling
+    is three fused array ops.
+    """
+    h = read_header(data)
+    check_point_block(h, len(data))
+    fmt = h["point_format"] & 0x3F
+    n = h["point_count"]
+    block, core, x, y, z = las_records(data, h, n, h["offset_to_points"])
     if fmt >= 6:
         h["_gps_time"] = core["gps_time"].copy()
         h["_returns"] = (core["returns"] & 0x0F).astype(np.uint8)
@@ -157,6 +190,7 @@ def read_las(data: bytes):
             np.ascontiguousarray(block[:, 20:28]).view("<f8").reshape(n)
         )
     if fmt in (4, 5, 9, 10):
+        canon = _FORMAT14_SIZES[fmt] if fmt >= 6 else _FORMAT_SIZES[fmt]
         woff = canon - _WAVE.itemsize
         wav = (
             np.ascontiguousarray(block[:, woff:canon]).view(_WAVE).reshape(n)

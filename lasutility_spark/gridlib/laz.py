@@ -23,8 +23,9 @@ Components, all from the public spec:
 - GPSTIME11 v2 multi-sequence delta prediction.
 
 Each chunk starts with one RAW point and re-initialized models, so
-chunks are independently decodable — at scale, one Spark task per chunk
-(the chunk table at the start of the point data gives the offsets); the
+chunks are independently decodable — at scale, Spark tasks decode splits
+of whole chunks (the chunk table, found through the 8-byte offset at the
+start of the point data, gives the offsets; engine/sources.py); the
 reference fixture holds a single chunk.
 
 The chunk table is handled in the laszip-native version-0 layout both
@@ -57,6 +58,10 @@ BM_LENGTH_SHIFT = 13
 BM_MAX_COUNT = 1 << BM_LENGTH_SHIFT
 DM_LENGTH_SHIFT = 15
 DM_MAX_COUNT = 1 << DM_LENGTH_SHIFT
+# bytes a chunk's arithmetic decoder may read past the chunk's end (its
+# renormalization lookahead; 2-3 on write_laz chunks of every item kind
+# and chunk size)
+_LOOKAHEAD = 4
 
 
 class ArithmeticBitModel:
@@ -802,22 +807,29 @@ _ITEM_NAMES = {0: "BYTE", 1: "SHORT", 2: "INT", 3: "LONG", 4: "FLOAT",
                12: "RGBNIR14", 13: "WAVEPACKET14", 14: "BYTE14"}
 
 
-def parse_laszip_vlr(data: bytes, header: dict) -> dict:
-    """Locate + parse the laszip VLR (record id 22204).  A VLR that runs
-    past the end of ``data`` raises ValueError."""
+def _bytes_reader(data: bytes):
+    """``read_at(offset, n)`` over bytes already in memory."""
+    return lambda off, n: data[off : off + n]
+
+
+def _laszip_vlr(read_at, size: int, header: dict) -> dict:
+    """Locate + parse the laszip VLR (record id 22204) by ranged reads of
+    the VLR headers and the laszip VLR's body.  A VLR that runs past the
+    end of the ``size``-byte file raises ValueError."""
     pos = header["header_size"]
     for _ in range(header["n_vlrs"]):
-        if pos + 54 > len(data):
+        vh = read_at(pos, 54)
+        if len(vh) < 54:
             raise ValueError("VLR header runs past the end of the file")
-        _res, _uid, rid, rlen = struct.unpack_from("<H16sHH", data, pos)
-        body = data[pos + 54 : pos + 54 + rlen]
-        if len(body) < rlen:
+        _res, _uid, rid, rlen = struct.unpack_from("<H16sHH", vh, 0)
+        if pos + 54 + rlen > size:
             raise ValueError("VLR body runs past the end of the file")
         pos += 54 + rlen
         if rid != LASZIP_VLR_RECORD_ID:
             continue
         if rlen < 34:
             raise ValueError(f"laszip VLR is {rlen} bytes, fixed fields need 34")
+        body = read_at(pos - rlen, rlen)
         (compressor, coder, vmaj, vmin, vrev, options, chunk_size,
          n_special, off_special, num_items) = struct.unpack_from(
             "<HHBBHIIqqH", body, 0
@@ -844,8 +856,8 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
     """LAZ bytes -> (header, vlr, chunks) where chunks is a list of
     ``(byte_start, point_count)`` — the per-chunk scan plan.  Each chunk
     is independently decodable (raw first point + fresh models), so this
-    IS the split list for a distributed scan: at scale one Spark task
-    decodes one chunk (the analog of a parquet row group).
+    IS the split list for a distributed scan (the analog of a parquet
+    row group).
 
     ``byte_start`` is always a concrete offset: single-chunk streams use
     the point-data start, multi-chunk streams require a parsable chunk
@@ -853,10 +865,22 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
     makes sequential chunk-boundary recovery impossible)."""
     if header is None:
         header = read_header(data)
+    header, vlr, chunks = laz_plan(_bytes_reader(data), len(data), header, vlr)
+    return header, vlr, [(s, c) for s, c, _e in chunks]
+
+
+def laz_plan(read_at, size: int, header: dict, vlr: dict | None = None):
+    """:func:`laz_chunk_plan` by ranged reads of a ``size``-byte file ->
+    (header, vlr, chunks) with chunks ``(byte_start, point_count,
+    byte_end)``.  ``read_at(offset, n)`` returns up to ``n`` bytes at
+    ``offset``.  Reads the VLRs, the 8-byte chunk-table offset and the
+    chunk table (from its offset to the end of the file), never point
+    bytes.  A chunk ends where the next one starts; the last one at the
+    chunk table, or at the end of the file when there is none."""
     if not (header["point_format"] & 0x80):
         raise ValueError("not LAZ (compression bit clear) — use las.read_las")
     if vlr is None:
-        vlr = parse_laszip_vlr(data, header)
+        vlr = _laszip_vlr(read_at, size, header)
     if vlr["compressor"] not in (1, 2):
         raise ValueError(f"unsupported laszip compressor {vlr['compressor']}")
     if vlr["compressor"] == 2 and vlr["chunk_size"] == 0:
@@ -905,18 +929,24 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
         )
     n = header["point_count"]
     pos = header["offset_to_points"]
+    end = size
     chunk_starts: list[int] | None = None
     if vlr["compressor"] == 2:  # chunked: chunk table offset precedes data
-        if pos + 8 > len(data):
+        if pos + 8 > size:
             raise ValueError("point data cannot hold the chunk table offset")
-        (table_off,) = struct.unpack_from("<q", data, pos)
+        (table_off,) = struct.unpack_from("<q", read_at(pos, 8), 0)
         pos += 8
         # a positive offset past the end means the file was cut short;
         # -1 (an interrupted writer) still reads as one chunk below
-        if table_off > len(data) - 8:
+        if table_off > size - 8:
             raise ValueError(
                 f"chunk table offset {table_off} lies past the end of the "
-                f"{len(data)}-byte file (truncated?)"
+                f"{size}-byte file (truncated?)"
+            )
+        if 0 < table_off < pos:
+            raise ValueError(
+                f"chunk table offset {table_off} lies before the point "
+                f"data at {pos}"
             )
         # chunk table: version 0 = the laszip-native layout (chunk sizes
         # arithmetic-coded with the 32-bit/2-context integer compressor,
@@ -924,11 +954,13 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
         # reference fixture's own table); version 1 = this module's
         # legacy raw u32 layout (older written files)
         if table_off > 0:
-            ver, cnt = struct.unpack_from("<2I", data, table_off)
+            end = table_off
+            table = read_at(table_off, size - table_off)
+            ver, cnt = struct.unpack_from("<2I", table, 0)
             max_chunks = 1 + n // max(vlr["chunk_size"], 1)
             sizes = None
             if ver == 0 and 0 < cnt <= max_chunks:
-                tdec = ArithmeticDecoder(data, table_off + 8)
+                tdec = ArithmeticDecoder(table, 8)
                 tdec.init()
                 ic = IntegerCompressor(tdec, 32, 2)
                 sizes = []
@@ -937,10 +969,12 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
                     prev = ic.decompress(prev, 1)
                     sizes.append(prev)
             elif ver == 1 and 0 < cnt <= max_chunks:
-                if table_off + 8 + 4 * cnt > len(data):
+                if 8 + 4 * cnt > len(table):
                     raise ValueError("chunk table runs past the end of the file")
-                sizes = struct.unpack_from(f"<{cnt}I", data, table_off + 8)
+                sizes = struct.unpack_from(f"<{cnt}I", table, 8)
             if sizes is not None:
+                if min(sizes) < 0:
+                    raise ValueError("chunk table lists a negative chunk size")
                 # the chunks fill the bytes between the offset and the table
                 if sum(sizes) != table_off - pos:
                     raise ValueError(
@@ -960,9 +994,10 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
         if chunk_starts is not None:
             if k >= len(chunk_starts):
                 raise ValueError("chunk table shorter than point count implies")
-            chunks.append((chunk_starts[k], count))
+            nxt = chunk_starts[k + 1] if k + 1 < len(chunk_starts) else end
+            chunks.append((chunk_starts[k], count, nxt))
         elif i == 0:
-            chunks.append((pos, count))
+            chunks.append((pos, count, end))
         else:
             raise ValueError(
                 "multi-chunk LAZ without a parsable chunk table: sequential "
@@ -985,7 +1020,13 @@ def decode_laz_chunk(data: bytes, vlr: dict, start: int, count: int):
     (n, 29) uint8 array of raw wave-packet descriptor blocks for point
     formats 4/5 (WAVEPACKET13 item present), else None.  Items decode
     interleaved per point in VLR item order, sharing one arithmetic
-    decoder — the laszip stream layout."""
+    decoder — the laszip stream layout.
+
+    Pass exactly one chunk's bytes (``data[start:]`` is the chunk) to
+    have overruns refused: the decoder reads zeros past the end of
+    ``data``, and a read position that ends more than
+    ``_LOOKAHEAD`` bytes past it raises ValueError — the chunk table
+    gave this chunk fewer bytes than its points were coded in."""
     has_gps = any(t == ITEM_GPSTIME11 for t, _s, _v in vlr["items"])
     has_rgb = any(t == ITEM_RGB12 for t, _s, _v in vlr["items"])
     has_wave = any(t == ITEM_WAVEPACKET13 for t, _s, _v in vlr["items"])
@@ -1020,6 +1061,11 @@ def decode_laz_chunk(data: bytes, vlr: dict, start: int, count: int):
     if n_extra:
         rawextra = data[pos : pos + n_extra]
         pos += n_extra
+    if pos > len(data):
+        raise ValueError(
+            f"LAZ chunk at byte {start} ends inside its {pos - start}-byte "
+            "raw first point"
+        )
     dec = ArithmeticDecoder(data, pos)
     p10 = Point10V2Reader(dec, raw10)
     gpsr = GpsTime11V2Reader(dec, rawgps) if has_gps else None
@@ -1051,6 +1097,11 @@ def decode_laz_chunk(data: bytes, vlr: dict, start: int, count: int):
             wave[j] = np.frombuffer(wavr.read(), np.uint8)
         if extr is not None:
             extra[j] = np.frombuffer(extr.read(), np.uint8)
+    if dec.pos - len(data) > _LOOKAHEAD:
+        raise ValueError(
+            f"LAZ chunk at byte {start} decoded {dec.pos - len(data)} bytes "
+            f"past the end of its {len(data) - start}-byte buffer"
+        )
     return xs, ys, zs, cls, rets, gps, rgb, extra, wave
 
 
@@ -1060,13 +1111,14 @@ def read_laz(data: bytes):
     decompression.  Also attaches per-point return numbers and gps times
     on the header dict (``_returns``, ``_gps_time``) for validation.
     LAS 1.4 POINT14 streams (point formats 6+) raise ValueError."""
-    header, vlr, chunks = laz_chunk_plan(data)
+    header, vlr, chunks = laz_plan(_bytes_reader(data), len(data),
+                                   read_header(data))
     if not chunks:  # 0-point file: no chunks to decode
         e = np.array([], np.float64)
         header["_returns"] = np.array([], np.uint8)
         header["_gps_time"] = e.copy()
         return header, e, e.copy(), e.copy(), np.array([], np.uint8)
-    parts = [decode_laz_chunk(data, vlr, s, c) for s, c in chunks]
+    parts = [decode_laz_chunk(data[s:e], vlr, 0, c) for s, c, e in chunks]
     xs = np.concatenate([p[0] for p in parts])
     ys = np.concatenate([p[1] for p in parts])
     zs = np.concatenate([p[2] for p in parts])

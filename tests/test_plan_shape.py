@@ -1,6 +1,8 @@
 """Physical-plan shape gates: the scale claims in SURVEY/README must be
 visible in .explain() output, not just asserted in prose."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,6 +81,34 @@ def test_prebroadcast_classify_has_no_exchange(spark, images_dir):
     )
     assert "Exchange" not in plan, plan
     assert plan.count("MapInPandas") == 1, plan
+
+
+def test_laz_scan_is_one_wave_without_exchange(spark, tmp_path):
+    """The LAZ scan is planned from file headers: one MapInPandas over
+    the ``parallelize`` bins of whole-chunk splits, with no Exchange,
+    one partition per planned bin."""
+    import numpy as np
+
+    from lasutility_spark.engine import sources
+    from lasutility_spark.gridlib import laz
+
+    rng = np.random.RandomState(41)
+    paths = []
+    for i, n in enumerate((3000, 1200, 2500)):
+        p = tmp_path / f"s{i}.laz"
+        p.write_bytes(laz.write_laz(
+            380000 + rng.rand(n) * 500, 6666000 + rng.rand(n) * 500,
+            rng.rand(n) * 20, np.full(n, 2, np.uint8), chunk_size=1000,
+        ))
+        paths.append(str(p))
+    total = sum(os.path.getsize(p) for p in paths)
+    splits = sources.plan_splits(paths, sources.split_bytes(spark, total))
+    df = sources.read_las_points(spark, paths)
+    plan = _plan(df)
+    assert "MapInPandas" in plan and "Exchange" not in plan, plan
+    bins = min(len(splits), spark.sparkContext.defaultParallelism)
+    assert df.rdd.getNumPartitions() == bins
+    assert df.count() == 6700
 
 
 def test_registry_caps_and_flagships_first():

@@ -543,9 +543,12 @@ def test_laz_source_reads_written_file(spark, tmp_path):
 
 
 def test_laz_chunked_source_parallel_decode(spark, tmp_path):
-    """One task per LASzip chunk: the chunked source over a 4-chunk file
-    equals the single-pass decode row-for-row."""
-    from lasutility_spark.engine.sources import read_laz_points_chunked
+    """A 4-chunk file below Spark's split size plans as one split of
+    whole chunks (one task), which decodes each chunk from its own
+    bytes and equals the single-pass decode row-for-row."""
+    from lasutility_spark.engine.sources import (
+        plan_splits, read_laz_points_chunked, split_bytes,
+    )
     from lasutility_spark.gridlib import laz
 
     rng = np.random.RandomState(21)
@@ -558,7 +561,10 @@ def test_laz_chunked_source_parallel_decode(spark, tmp_path):
     p.write_bytes(laz.write_laz(x, y, z, cls, chunk_size=10_000))
     _h, _vlr, chunks = laz.laz_chunk_plan(p.read_bytes())
     assert len(chunks) == 4
+    splits = plan_splits([str(p)], split_bytes(spark, p.stat().st_size))
+    assert [len(s["chunks"]) for _p, _w, s in splits] == [4]
     df = read_laz_points_chunked(spark, str(p))
+    assert df.rdd.getNumPartitions() == len(splits)
     got = sorted(
         (round(r["x"], 2), round(r["y"], 2), round(r["z"], 2), r["cls"])
         for r in df.collect()
