@@ -1,23 +1,27 @@
-"""Build-on-first-use loader for the C kernels in ``_delaunay.c``.
+"""Build-on-first-use loader for the C kernels in ``_delaunay.c`` and
+``_laszip.c``.
 
 Why compile at first use: executors receive the package via
 ``spark-submit --py-files`` as a zip of sources; shipping a prebuilt
-``.so`` would pin one glibc/arch.  Compiling the single-file unit with
-the node's ``cc`` takes ~200 ms once per node, and the artifact is cached
-in a content-addressed, per-uid private temp path (atomic rename, safe
-under concurrent first builds).
+``.so`` would pin one glibc/arch.  Compiling the two sources in one
+``cc`` call with the node's compiler takes well under a second once per
+node, and the artifact is cached in a content-addressed (both sources),
+per-uid private temp path (atomic rename, safe under concurrent first
+builds).
 
 The unit is required: every node needs ``cc`` (or ``gcc``/``clang``) on
 ``PATH``.  A build or load failure — no compiler, a failed compile, a
 ``.so`` that is not privately owned — raises at first use, naming the
 compiler and its stderr, and the same error is raised again on every
-later call rather than recompiling.  The Delaunay kernel has no Python
-twin, so no failure can silently change a tile's triangles.
+later call rather than recompiling.  The Delaunay kernel and the LASzip
+chunk decoder have no Python twin in the package, so no failure can
+silently change a tile's triangles or a chunk's points.
 
 ``LSU_NO_NATIVE=1`` switches the other kernels (sample, DEM rasterize,
 polygon fill, polyline stamp, clip) to their bit-identical numpy twins,
 which stay the semantics definition and compute datagen's oracle side
-tables.  It does not reach :func:`triangulate`.
+tables.  It does not reach :func:`triangulate` or
+:func:`laz_decode_chunk`.
 """
 
 from __future__ import annotations
@@ -32,10 +36,11 @@ import tempfile
 
 import numpy as np
 
-_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_delaunay.c")
+_DIR = os.path.dirname(os.path.abspath(__file__))
+_SOURCES = ("_delaunay.c", "_laszip.c")  # compiled together into one .so
 # ctypes handles, set together by _ensure_loaded
 _fn = _raster_fn = _fill_fn = _line_fn = _sample_fn = None
-_clip_ring_fn = _clip_line_fn = None
+_clip_ring_fn = _clip_line_fn = _laz_fn = None
 _load_error: Exception | None = None  # first build/load failure, re-raised
 
 # sentinel: "LSU_NO_NATIVE=1, run the Python clip" — needed because clip
@@ -43,18 +48,18 @@ _load_error: Exception | None = None  # first build/load failure, re-raised
 UNAVAILABLE = object()
 
 
-def _read_source() -> bytes:
-    """Read _delaunay.c zip-safely: plain open() when the package is a
+def _read_source(name: str) -> bytes:
+    """Read one C source zip-safely: plain open() when the package is a
     directory, pkgutil when it was shipped inside a --py-files zip."""
     try:
-        with open(_SRC, "rb") as f:
+        with open(os.path.join(_DIR, name), "rb") as f:
             return f.read()
     except OSError:
         import pkgutil
 
-        data = pkgutil.get_data(__package__, "_delaunay.c")
+        data = pkgutil.get_data(__package__, name)
         if data is None:
-            raise FileNotFoundError("_delaunay.c not in package")
+            raise FileNotFoundError(f"{name} not in package")
         return data
 
 
@@ -69,8 +74,12 @@ def _owned_and_private(path: str) -> bool:
 
 
 def _build_and_load():
-    src = _read_source()
-    tag = hashlib.sha256(src).hexdigest()[:16]
+    srcs = [_read_source(name) for name in _SOURCES]
+    digest = hashlib.sha256()
+    for name, src in zip(_SOURCES, srcs):
+        digest.update(f"{name}\0{len(src)}\0".encode())
+        digest.update(src)
+    tag = digest.hexdigest()[:16]
     # Per-uid cache dir, mode 0700: the tag is derived from public source,
     # so a shared-path cache would let another local user pre-plant a .so
     # at the predictable path. Never CDLL anything we don't own outright.
@@ -82,39 +91,44 @@ def _build_and_load():
         # dir pre-existed with wrong owner/perms — build in a fresh
         # private mkdtemp instead (uncached, still correct)
         cache_dir = tempfile.mkdtemp(prefix="lasutility_native_")
-    so_path = os.path.join(cache_dir, f"_delaunay_{tag}.so")
+    so_path = os.path.join(cache_dir, f"_native_{tag}.so")
     if not (os.path.exists(so_path) and _owned_and_private(so_path)):
         cc = shutil.which("cc") or shutil.which("gcc") or shutil.which("clang")
         if cc is None:
             raise RuntimeError(
                 "no C compiler (cc, gcc or clang) found on PATH: the native "
-                "kernel _delaunay.c is required on every node"
+                "kernels _delaunay.c and _laszip.c are required on every node"
             )
         fd, tmp = tempfile.mkstemp(suffix=".so", dir=cache_dir)
         os.close(fd)
-        # private source copy per build: a shared path would be
+        # private source copies per build: a shared path would be
         # truncated by a concurrent build while cc reads it
-        fd, c_src = tempfile.mkstemp(suffix=".c", dir=cache_dir)
-        with os.fdopen(fd, "wb") as f:
-            f.write(src)
+        c_srcs = []
         try:
+            for name, src in zip(_SOURCES, srcs):
+                fd, c_src = tempfile.mkstemp(suffix="_" + name, dir=cache_dir)
+                c_srcs.append(c_src)
+                with os.fdopen(fd, "wb") as f:
+                    f.write(src)
             # -ffp-contract=off: no FMA contraction, so C results match the
             # numpy twins' double arithmetic operation-for-operation
             proc = subprocess.run(
                 [cc, "-O2", "-ffp-contract=off", "-shared", "-fPIC",
-                 "-o", tmp, c_src, "-lm"],
+                 "-o", tmp, *c_srcs, "-lm"],
                 capture_output=True,
                 timeout=120,
             )
             if proc.returncode != 0:
                 raise RuntimeError(
-                    f"{cc} could not build _delaunay.c (exit {proc.returncode}): "
+                    f"{cc} could not build {' and '.join(_SOURCES)} "
+                    f"(exit {proc.returncode}): "
                     + proc.stderr.decode(errors="replace").strip()
                 )
             os.chmod(tmp, 0o600)
             os.replace(tmp, so_path)  # atomic under concurrent builders
         finally:
-            os.unlink(c_src)
+            for c_src in c_srcs:
+                os.unlink(c_src)
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(tmp)
     if not _owned_and_private(so_path):
@@ -182,13 +196,16 @@ def _build_and_load():
         ctypes.c_double, ctypes.c_double, ctypes.c_double, ctypes.c_double,
         ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
     ]
-    return fn, rfn, pfn, lfn, sfn, crfn, cpfn
+    zfn = lib.lsu_laz_decode_chunk
+    zfn.restype = ctypes.c_int64
+    zfn.argtypes = [ctypes.c_void_p] + [ctypes.c_int64] * 8 + [ctypes.c_void_p] * 10
+    return fn, rfn, pfn, lfn, sfn, crfn, cpfn, zfn
 
 
 def _ensure_loaded():
     """Load the unit once; re-raise the first build/load error ever after."""
     global _fn, _raster_fn, _fill_fn, _line_fn, _sample_fn
-    global _clip_ring_fn, _clip_line_fn, _load_error
+    global _clip_ring_fn, _clip_line_fn, _laz_fn, _load_error
     if _fn is not None:
         return
     if _load_error is not None:
@@ -199,7 +216,7 @@ def _ensure_loaded():
         _load_error = e
         raise
     (_fn, _raster_fn, _fill_fn, _line_fn, _sample_fn,
-     _clip_ring_fn, _clip_line_fn) = handles
+     _clip_ring_fn, _clip_line_fn, _laz_fn) = handles
 
 
 def _native_on() -> bool:
@@ -252,6 +269,25 @@ def triangulate(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     if rc == -1:
         raise MemoryError(f"lsu_triangulate: allocation failed for {n} points")
     return out[:rc].copy()
+
+
+def laz_decode_chunk(buf: np.ndarray, start: int, count: int, has_gps: bool,
+                     has_rgb: bool, has_wave: bool, n_extra: int,
+                     lookahead: int, out: tuple) -> tuple[int, int]:
+    """C LASzip chunk decode of the uint8 array ``buf`` into ``out`` =
+    (x, y, z, cls, rets, gps, rgb, extra, wave), C-contiguous arrays of
+    ``count`` rows, None for absent items -> (kernel return code, final
+    read position).  The only chunk decoder, so ``LSU_NO_NATIVE`` does
+    not apply."""
+    _ensure_loaded()
+    end = ctypes.c_int64(0)
+    rc = _laz_fn(
+        buf.ctypes.data, len(buf), start, count, has_gps, has_rgb, has_wave,
+        n_extra, lookahead,
+        *(None if a is None else a.ctypes.data for a in out),
+        ctypes.addressof(end),
+    )
+    return rc, end.value
 
 
 def rasterize_dem(

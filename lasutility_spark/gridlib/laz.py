@@ -1,4 +1,4 @@
-"""LAZ (LASzip) point decompressor — pure Python, no native codec.
+"""LAZ (LASzip) point codec: a native chunk decoder and a Python encoder.
 
 Implements the publicly specified LASzip compression scheme (Isenburg,
 "LASzip: lossless compression of LiDAR data", PE&RS 2013; format spec at
@@ -12,15 +12,23 @@ LAS/LasZipNetReader.cs:54-89 via the laszip P/Invoke):
 
 Components, all from the public spec:
 
-- the FastAC-style adaptive arithmetic decoder (32-bit interval,
+- the FastAC-style adaptive arithmetic coder (32-bit interval,
   renormalization at 2^24) with adaptive symbol models and bit models,
 - the "integer compressor" (k-bit corrector scheme: an adaptive model
-  picks k, the corrector is decoded in a k-bit model or model+raw-bits
+  picks k, the corrector is coded in a k-bit model or model+raw-bits
   split, then folded into [-2^(k-1)-..., 2^(k-1)+1] style intervals),
 - POINT10 v2 prediction contexts (changed-values mask, streaming
   median-of-5 dx/dy predictors keyed by the return-number map, per-level
   height contexts),
 - GPSTIME11 v2 multi-sequence delta prediction.
+
+Points decode in C: :func:`decode_laz_chunk` runs the chunk decoder of
+``_laszip.c``, built on first use with the Delaunay kernel
+(:mod:`_native`), and there is no Python point decoder in the package.
+The Python arithmetic decoder and integer compressor here decode only
+the chunk table while a scan is planned (:func:`laz_plan`).  The writer side
+(:func:`write_laz`) stays Python: it is the compressed point sink and
+the round-trip source the decoder is tested on.
 
 Each chunk starts with one RAW point and re-initialized models, so
 chunks are independently decodable — at scale, Spark tasks decode splits
@@ -49,6 +57,7 @@ import struct
 
 import numpy as np
 
+from . import _native
 from .las import read_header
 
 _U32 = 0xFFFFFFFF
@@ -58,10 +67,13 @@ BM_LENGTH_SHIFT = 13
 BM_MAX_COUNT = 1 << BM_LENGTH_SHIFT
 DM_LENGTH_SHIFT = 15
 DM_MAX_COUNT = 1 << DM_LENGTH_SHIFT
-# bytes a chunk's arithmetic decoder may read past the chunk's end (its
-# renormalization lookahead; 2-3 on write_laz chunks of every item kind
-# and chunk size)
+# bytes a chunk's arithmetic decoder may end past or short of the
+# chunk's end (its renormalization lookahead: 2-3 bytes past on write_laz
+# chunks of every item kind and chunk size; laszip pads 2-3 zero bytes,
+# so its chunks end at their length)
 _LOOKAHEAD = 4
+# lsu_laz_decode_chunk return codes (_laszip.c)
+_LAZ_RAW_SHORT, _LAZ_OVERRUN, _LAZ_EARLY, _LAZ_NOMEM, _LAZ_OFFSET64 = range(-1, -6, -1)
 
 
 class ArithmeticBitModel:
@@ -226,16 +238,6 @@ class ArithmeticDecoder:
             self._renorm()
         return sym
 
-    def read_int(self) -> int:
-        low = self.read_short()
-        high = self.read_short()
-        return (high << 16) | low
-
-    def read_int64(self) -> int:
-        low = self.read_int()
-        high = self.read_int()
-        return (high << 32) | low
-
 
 class IntegerCompressor:
     """k-bit corrector integer decompression (LASzip integercompressor)."""
@@ -375,99 +377,6 @@ NUMBER_RETURN_LEVEL = (
 )
 
 
-class Point10V2Reader:
-    """POINT10 item, record version 2 (the 20-byte format-0 core)."""
-
-    def __init__(self, dec: ArithmeticDecoder, first: bytes) -> None:
-        self.dec = dec
-        (x, y, z, intensity, flags, classification, scan_angle, user_data,
-         psid) = struct.unpack("<3iHBBbBH", first)
-        self.x, self.y, self.z = x, y, z
-        self.intensity = 0  # v2 quirk: last intensity starts at 0
-        self.flags = flags
-        self.classification = classification
-        self.scan_angle = scan_angle
-        self.user_data = user_data
-        self.psid = psid
-
-        self.m_changed_values = ArithmeticModel(64)
-        self.m_scan_angle_rank = [ArithmeticModel(256), ArithmeticModel(256)]
-        self.m_bit_byte: list[ArithmeticModel | None] = [None] * 256
-        self.m_classification: list[ArithmeticModel | None] = [None] * 256
-        self.m_user_data: list[ArithmeticModel | None] = [None] * 256
-        self.ic_intensity = IntegerCompressor(dec, 16, 4)
-        self.ic_psid = IntegerCompressor(dec, 16)
-        self.ic_dx = IntegerCompressor(dec, 32, 2)
-        self.ic_dy = IntegerCompressor(dec, 32, 22)
-        self.ic_z = IntegerCompressor(dec, 32, 20)
-        self.last_x_diff_median5 = [StreamingMedian5() for _ in range(16)]
-        self.last_y_diff_median5 = [StreamingMedian5() for _ in range(16)]
-        self.last_intensity = [0] * 16
-        self.last_height = [0] * 8
-
-    def read(self) -> tuple:
-        dec = self.dec
-        changed = dec.decode_symbol(self.m_changed_values)
-        if changed:
-            if changed & 32:
-                if self.m_bit_byte[self.flags] is None:
-                    self.m_bit_byte[self.flags] = ArithmeticModel(256)
-                self.flags = dec.decode_symbol(self.m_bit_byte[self.flags])
-            r = self.flags & 0x07
-            n = (self.flags >> 3) & 0x07
-            m = NUMBER_RETURN_MAP[n][r]
-            level = NUMBER_RETURN_LEVEL[n][r]
-            if changed & 16:
-                self.intensity = self.ic_intensity.decompress(
-                    self.last_intensity[m], m if m < 3 else 3
-                )
-                self.last_intensity[m] = self.intensity
-            else:
-                self.intensity = self.last_intensity[m]
-            if changed & 8:
-                if self.m_classification[self.classification] is None:
-                    self.m_classification[self.classification] = ArithmeticModel(256)
-                self.classification = dec.decode_symbol(
-                    self.m_classification[self.classification]
-                )
-            if changed & 4:
-                scan_dir = (self.flags >> 6) & 1
-                val = dec.decode_symbol(self.m_scan_angle_rank[scan_dir])
-                self.scan_angle = (val + self.scan_angle) & 0xFF
-            if changed & 2:
-                if self.m_user_data[self.user_data] is None:
-                    self.m_user_data[self.user_data] = ArithmeticModel(256)
-                self.user_data = dec.decode_symbol(self.m_user_data[self.user_data])
-            if changed & 1:
-                self.psid = self.ic_psid.decompress(self.psid)
-        else:
-            r = self.flags & 0x07
-            n = (self.flags >> 3) & 0x07
-            m = NUMBER_RETURN_MAP[n][r]
-            level = NUMBER_RETURN_LEVEL[n][r]
-
-        # positions: median-predicted dx, k-correlated dy/z contexts
-        median = self.last_x_diff_median5[m].get()
-        diff = self.ic_dx.decompress(median, 1 if n == 1 else 0)
-        self.x += diff
-        self.last_x_diff_median5[m].add(diff)
-
-        median = self.last_y_diff_median5[m].get()
-        k_bits = self.ic_dx.k
-        ctx = (1 if n == 1 else 0) + ((k_bits & 0xFE) if k_bits < 20 else 20)
-        diff = self.ic_dy.decompress(median, ctx)
-        self.y += diff
-        self.last_y_diff_median5[m].add(diff)
-
-        k_bits = (self.ic_dx.k + self.ic_dy.k) // 2
-        ctx = (1 if n == 1 else 0) + ((k_bits & 0xFE) if k_bits < 18 else 18)
-        self.z = self.ic_z.decompress(self.last_height[level], ctx)
-        self.last_height[level] = self.z
-
-        return (self.x, self.y, self.z, self.intensity, self.flags,
-                self.classification, self.scan_angle, self.user_data, self.psid)
-
-
 GPSTIME_MULTI = 500
 GPSTIME_MULTI_MINUS = -10
 GPSTIME_MULTI_UNCHANGED = GPSTIME_MULTI - GPSTIME_MULTI_MINUS + 1  # 511
@@ -480,100 +389,6 @@ def _i32(v: int) -> int:
     return v - (1 << 32) if v >= 0x80000000 else v
 
 
-class GpsTime11V2Reader:
-    """GPSTIME11 item, record version 2 (multi-sequence delta coding)."""
-
-    def __init__(self, dec: ArithmeticDecoder, first: bytes) -> None:
-        self.dec = dec
-        self.m_gpstime_multi = ArithmeticModel(GPSTIME_MULTI_TOTAL)
-        self.m_gpstime_0diff = ArithmeticModel(6)
-        self.ic_gpstime = IntegerCompressor(dec, 32, 9)
-        self.last = 0
-        self.next = 0
-        self.last_gpstime = [0, 0, 0, 0]  # u64 bit patterns of the double
-        self.last_gpstime_diff = [0, 0, 0, 0]
-        self.multi_extreme_counter = [0, 0, 0, 0]
-        self.last_gpstime[0] = struct.unpack("<Q", first)[0]
-
-    def read(self) -> float:
-        dec = self.dec
-        lg = self.last_gpstime
-        lgd = self.last_gpstime_diff
-        mec = self.multi_extreme_counter
-        if lgd[self.last] == 0:
-            multi = dec.decode_symbol(self.m_gpstime_0diff)
-            if multi == 1:  # 32-bit difference
-                lgd[self.last] = self.ic_gpstime.decompress(0, 0)
-                lg[self.last] = (lg[self.last] + lgd[self.last]) & ((1 << 64) - 1)
-                mec[self.last] = 0
-            elif multi == 2:  # full 64-bit retake
-                self.next = (self.next + 1) & 3
-                hi = self.ic_gpstime.decompress(_i32(lg[self.last] >> 32), 8)
-                v = (hi & _U32) << 32
-                v |= dec.read_int()
-                lg[self.next] = v
-                self.last = self.next
-                lgd[self.last] = 0
-                mec[self.last] = 0
-            elif multi > 2:  # switch sequence
-                self.last = (self.last + multi - 2) & 3
-                return self.read()
-        else:
-            multi = dec.decode_symbol(self.m_gpstime_multi)
-            if multi == 1:
-                d = self.ic_gpstime.decompress(lgd[self.last], 1)
-                lg[self.last] = (lg[self.last] + d) & ((1 << 64) - 1)
-                mec[self.last] = 0
-            elif multi < GPSTIME_MULTI_UNCHANGED:
-                if multi == 0:
-                    d = self.ic_gpstime.decompress(0, 7)
-                    mec[self.last] += 1
-                    if mec[self.last] > 3:
-                        lgd[self.last] = d
-                        mec[self.last] = 0
-                elif multi < GPSTIME_MULTI:
-                    ctx = 2 if multi < 10 else 3
-                    d = self.ic_gpstime.decompress(
-                        _i32(multi * lgd[self.last]), ctx
-                    )
-                elif multi == GPSTIME_MULTI:
-                    d = self.ic_gpstime.decompress(
-                        _i32(GPSTIME_MULTI * lgd[self.last]), 4
-                    )
-                    mec[self.last] += 1
-                    if mec[self.last] > 3:
-                        lgd[self.last] = d
-                        mec[self.last] = 0
-                else:
-                    mneg = GPSTIME_MULTI - multi  # negative multiplier
-                    if mneg > GPSTIME_MULTI_MINUS:
-                        d = self.ic_gpstime.decompress(
-                            _i32(mneg * lgd[self.last]), 5
-                        )
-                    else:
-                        d = self.ic_gpstime.decompress(
-                            _i32(GPSTIME_MULTI_MINUS * lgd[self.last]), 6
-                        )
-                        mec[self.last] += 1
-                        if mec[self.last] > 3:
-                            lgd[self.last] = d
-                            mec[self.last] = 0
-                lg[self.last] = (lg[self.last] + d) & ((1 << 64) - 1)
-            elif multi == GPSTIME_MULTI_CODE_FULL:
-                self.next = (self.next + 1) & 3
-                hi = self.ic_gpstime.decompress(_i32(lg[self.last] >> 32), 8)
-                v = (hi & _U32) << 32
-                v |= dec.read_int()
-                lg[self.next] = v
-                self.last = self.next
-                lgd[self.last] = 0
-                mec[self.last] = 0
-            elif multi > GPSTIME_MULTI_CODE_FULL:
-                self.last = (self.last + multi - GPSTIME_MULTI_CODE_FULL) & 3
-                return self.read()
-        return struct.unpack("<d", struct.pack("<Q", lg[self.last]))[0]
-
-
 def _u8_clamp(v: int) -> int:
     return 0 if v < 0 else (255 if v > 255 else v)
 
@@ -583,69 +398,13 @@ def _div2_trunc(v: int) -> int:
     return v // 2 if v >= 0 else -((-v) // 2)
 
 
-class Rgb12V2Reader:
+class Rgb12V2Writer:
     """RGB12 item, record version 2 (the 6-byte r/g/b uint16 triple of
     point formats 2/3) — byte-wise diff model per channel with a 7-bit
     changed-bytes symbol; g/b predicted from the r diff (public LASzip
-    layout: lasreaditemcompressed_rgb12_v2).  The reference reads these
-    through the native laszip library (LAS/LasZipNetReader.cs:63-89)."""
-
-    def __init__(self, dec: ArithmeticDecoder, first: bytes) -> None:
-        self.dec = dec
-        self.r, self.g, self.b = struct.unpack("<3H", first)
-        self.m_byte_used = ArithmeticModel(128)
-        self.m_diff = [ArithmeticModel(256) for _ in range(6)]
-
-    def read(self) -> tuple[int, int, int]:
-        dec = self.dec
-        lr, lg, lb = self.r, self.g, self.b
-        sym = dec.decode_symbol(self.m_byte_used)
-        if sym & 1:
-            corr = dec.decode_symbol(self.m_diff[0])
-            r = (corr + (lr & 0xFF)) & 0xFF
-        else:
-            r = lr & 0xFF
-        if sym & 2:
-            corr = dec.decode_symbol(self.m_diff[1])
-            r |= ((corr + (lr >> 8)) & 0xFF) << 8
-        else:
-            r |= lr & 0xFF00
-        if sym & 64:
-            diff = (r & 0xFF) - (lr & 0xFF)
-            if sym & 4:
-                corr = dec.decode_symbol(self.m_diff[2])
-                g = (corr + _u8_clamp(diff + (lg & 0xFF))) & 0xFF
-            else:
-                g = lg & 0xFF
-            if sym & 16:
-                corr = dec.decode_symbol(self.m_diff[4])
-                diff = _div2_trunc(diff + (g & 0xFF) - (lg & 0xFF))
-                b = (corr + _u8_clamp(diff + (lb & 0xFF))) & 0xFF
-            else:
-                b = lb & 0xFF
-            diff = (r >> 8) - (lr >> 8)
-            if sym & 8:
-                corr = dec.decode_symbol(self.m_diff[3])
-                g |= ((corr + _u8_clamp(diff + (lg >> 8))) & 0xFF) << 8
-            else:
-                g |= lg & 0xFF00
-            if sym & 32:
-                corr = dec.decode_symbol(self.m_diff[5])
-                diff = _div2_trunc(diff + (g >> 8) - (lg >> 8))
-                b |= ((corr + _u8_clamp(diff + (lb >> 8))) & 0xFF) << 8
-            else:
-                b |= lb & 0xFF00
-        else:
-            g = r
-            b = r
-        self.r, self.g, self.b = r, g, b
-        return r, g, b
-
-
-class Rgb12V2Writer:
-    """Exact encode mirror of :class:`Rgb12V2Reader` — same symbol order
-    (byte-used mask; r-low, r-high, then g-low, b-low, g-high, b-high
-    corrections, each predicted from the running diff)."""
+    layout: lasreaditemcompressed_rgb12_v2), in the decoder's symbol
+    order (byte-used mask; r-low, r-high, then g-low, b-low, g-high,
+    b-high corrections, each predicted from the running diff)."""
 
     def __init__(self, enc: "ArithmeticEncoder", first: bytes) -> None:
         self.enc = enc
@@ -708,23 +467,11 @@ class Rgb12V2Writer:
         self.r, self.g, self.b = r, g, b
 
 
-class Byte2Reader:
+class Byte2Writer:
     """BYTE item (extra bytes), record version 2: each of the k extra
     bytes is coded as its (value - last) difference, folded mod 256, in
     its OWN adaptive 256-symbol model — the laszip BYTE v2 scheme."""
 
-    def __init__(self, dec: ArithmeticDecoder, first: bytes) -> None:
-        self.dec = dec
-        self.last = list(first)
-        self.models = [ArithmeticModel(256) for _ in first]
-
-    def read(self) -> bytes:
-        for i, m in enumerate(self.models):
-            self.last[i] = (self.last[i] + self.dec.decode_symbol(m)) & 0xFF
-        return bytes(self.last)
-
-
-class Byte2Writer:
     def __init__(self, enc: "ArithmeticEncoder", first: bytes) -> None:
         self.enc = enc
         self.last = list(first)
@@ -740,59 +487,6 @@ class Byte2Writer:
 
 LASZIP_VLR_RECORD_ID = 22204
 _U64 = 0xFFFFFFFFFFFFFFFF
-
-
-class Wavepacket13V1Reader:
-    """WAVEPACKET13 item, record version 1: the 29-byte wave-packet
-    descriptor block of point formats 4/5 (index u1, byte offset u64,
-    packet size u4, return-point location f4, Xt/Yt/Zt f4).  Follows
-    the public laszip v1 item scheme (lasreaditemcompressed_v1.cpp):
-    descriptor index through a 256-symbol model; byte offset through a
-    4-symbol difference classifier whose context is the PREVIOUS
-    point's symbol (0 = same offset, 1 = last offset + last size,
-    2 = i32 delta via an integer compressor, 3 = raw 64-bit); packet
-    size and the four floats (compressed as raw i32 bit patterns)
-    through 32-bit integer compressors.  The reference tree has no
-    wavepacket fixture, so this item is pinned by round-trip rather
-    than native byte parity."""
-
-    def __init__(self, dec: ArithmeticDecoder, first: bytes) -> None:
-        self.dec = dec
-        self.desc, self.offset, self.size = struct.unpack("<BQI", first[:13])
-        self.ret, self.xt, self.yt, self.zt = struct.unpack(
-            "<4i", first[13:29]
-        )
-        self.last_diff_32 = 0
-        self.sym_last = 0
-        self.m_index = ArithmeticModel(256)
-        self.m_offset_diff = [ArithmeticModel(4) for _ in range(4)]
-        self.ic_offset = IntegerCompressor(dec, 32)
-        self.ic_size = IntegerCompressor(dec, 32)
-        self.ic_ret = IntegerCompressor(dec, 32)
-        self.ic_xyz = IntegerCompressor(dec, 32, 3)
-
-    def read(self) -> bytes:
-        dec = self.dec
-        desc = dec.decode_symbol(self.m_index)
-        sym = dec.decode_symbol(self.m_offset_diff[self.sym_last])
-        self.sym_last = sym
-        if sym == 0:
-            offset = self.offset
-        elif sym == 1:
-            offset = (self.offset + self.size) & _U64
-        elif sym == 2:
-            self.last_diff_32 = self.ic_offset.decompress(self.last_diff_32)
-            offset = (self.offset + self.last_diff_32) & _U64
-        else:
-            offset = dec.read_int64()
-        size = self.ic_size.decompress(_i32(self.size)) & _U32
-        ret = self.ic_ret.decompress(self.ret)
-        xt = self.ic_xyz.decompress(self.xt, 0)
-        yt = self.ic_xyz.decompress(self.yt, 1)
-        zt = self.ic_xyz.decompress(self.zt, 2)
-        self.desc, self.offset, self.size = desc, offset, size
-        self.ret, self.xt, self.yt, self.zt = ret, xt, yt, zt
-        return struct.pack("<BQI4i", desc, offset, size, ret, xt, yt, zt)
 
 
 ITEM_BYTE = 0
@@ -1012,97 +706,62 @@ def laz_plan(read_at, size: int, header: dict, vlr: dict | None = None):
 
 def decode_laz_chunk(data: bytes, vlr: dict, start: int, count: int):
     """One chunk -> (X, Y, Z int64 raw-quantized, cls, returns, gps, rgb,
-    extra, wave).
+    extra, wave), decoded by the C kernel in ``_laszip.c``.
 
     ``rgb`` is an (n, 3) uint16 array for point formats 2/3 (RGB12 item
     present), else None; ``extra`` is an (n, k) uint8 array when a BYTE
     (extra-bytes) item of width k is present, else None; ``wave`` is an
     (n, 29) uint8 array of raw wave-packet descriptor blocks for point
     formats 4/5 (WAVEPACKET13 item present), else None.  Items decode
-    interleaved per point in VLR item order, sharing one arithmetic
-    decoder — the laszip stream layout.
+    interleaved per point, sharing one arithmetic decoder — the laszip
+    stream layout.
 
-    Pass exactly one chunk's bytes (``data[start:]`` is the chunk) to
-    have overruns refused: the decoder reads zeros past the end of
-    ``data``, and a read position that ends more than
-    ``_LOOKAHEAD`` bytes past it raises ValueError — the chunk table
-    gave this chunk fewer bytes than its points were coded in."""
-    has_gps = any(t == ITEM_GPSTIME11 for t, _s, _v in vlr["items"])
-    has_rgb = any(t == ITEM_RGB12 for t, _s, _v in vlr["items"])
-    has_wave = any(t == ITEM_WAVEPACKET13 for t, _s, _v in vlr["items"])
-    n_extra = next(
-        (s for t, s, _v in vlr["items"] if t == ITEM_BYTE), 0
+    ``data[start:]`` holds the chunk.  The decoder reads zeros past the
+    end of ``data``, and a read position that ends more than
+    ``_LOOKAHEAD`` bytes past it raises ValueError: the chunk table gave
+    this chunk fewer bytes than its points were coded in.  With
+    ``start == 0`` the buffer is taken to be exactly the chunk (no LAZ
+    chunk starts at byte 0 of a file), and a decoder that stops more
+    than ``_LOOKAHEAD`` bytes before its end raises too: the chunk table
+    gave it more bytes.  A caller that decodes a chunk out of a whole
+    file (``start`` > 0) gets only the first check.  A build failure of
+    the native unit raises RuntimeError; there is no Python fallback."""
+    items = vlr["items"]
+    has_gps = any(t == ITEM_GPSTIME11 for t, _s, _v in items)
+    has_rgb = any(t == ITEM_RGB12 for t, _s, _v in items)
+    has_wave = any(t == ITEM_WAVEPACKET13 for t, _s, _v in items)
+    n_extra = next((s for t, s, _v in items if t == ITEM_BYTE), 0)
+    n = max(count, 0)
+    out = (
+        np.empty(n, np.int64), np.empty(n, np.int64), np.empty(n, np.int64),
+        np.empty(n, np.uint8), np.empty(n, np.uint8), np.zeros(n, np.float64),
+        np.zeros((n, 3), np.uint16) if has_rgb else None,
+        np.zeros((n, n_extra), np.uint8) if n_extra else None,
+        np.zeros((n, 29), np.uint8) if has_wave else None,
     )
-    xs = np.empty(count, np.int64)
-    ys = np.empty(count, np.int64)
-    zs = np.empty(count, np.int64)
-    cls = np.empty(count, np.uint8)
-    rets = np.empty(count, np.uint8)
-    gps = np.zeros(count, np.float64)
-    rgb = np.zeros((count, 3), np.uint16) if has_rgb else None
-    wave = np.zeros((count, 29), np.uint8) if has_wave else None
-    extra = np.zeros((count, n_extra), np.uint8) if n_extra else None
-    pos = start
-    raw10 = data[pos : pos + 20]
-    pos += 20
-    rawgps = b""
-    if has_gps:
-        rawgps = data[pos : pos + 8]
-        pos += 8
-    rawrgb = b""
-    if has_rgb:
-        rawrgb = data[pos : pos + 6]
-        pos += 6
-    rawwave = b""
-    if has_wave:
-        rawwave = data[pos : pos + 29]
-        pos += 29
-    rawextra = b""
-    if n_extra:
-        rawextra = data[pos : pos + n_extra]
-        pos += n_extra
-    if pos > len(data):
-        raise ValueError(
-            f"LAZ chunk at byte {start} ends inside its {pos - start}-byte "
-            "raw first point"
-        )
-    dec = ArithmeticDecoder(data, pos)
-    p10 = Point10V2Reader(dec, raw10)
-    gpsr = GpsTime11V2Reader(dec, rawgps) if has_gps else None
-    rgbr = Rgb12V2Reader(dec, rawrgb) if has_rgb else None
-    wavr = Wavepacket13V1Reader(dec, rawwave) if has_wave else None
-    extr = Byte2Reader(dec, rawextra) if n_extra else None
-    xs[0], ys[0], zs[0] = p10.x, p10.y, p10.z
-    cls[0] = p10.classification
-    rets[0] = p10.flags & 0x07
-    if has_gps:
-        gps[0] = struct.unpack("<d", rawgps)[0]
-    if rgb is not None:
-        rgb[0] = struct.unpack("<3H", rawrgb)
-    if wave is not None:
-        wave[0] = np.frombuffer(rawwave, np.uint8)
-    if extra is not None:
-        extra[0] = np.frombuffer(rawextra, np.uint8)
-    dec.init()
-    for j in range(1, count):
-        x, y, z, _inten, flags, c, _sa, _ud, _psid = p10.read()
-        xs[j], ys[j], zs[j] = x, y, z
-        cls[j] = c
-        rets[j] = flags & 0x07
-        if gpsr is not None:
-            gps[j] = gpsr.read()
-        if rgbr is not None:
-            rgb[j] = rgbr.read()
-        if wavr is not None:
-            wave[j] = np.frombuffer(wavr.read(), np.uint8)
-        if extr is not None:
-            extra[j] = np.frombuffer(extr.read(), np.uint8)
-    if dec.pos - len(data) > _LOOKAHEAD:
-        raise ValueError(
-            f"LAZ chunk at byte {start} decoded {dec.pos - len(data)} bytes "
-            f"past the end of its {len(data) - start}-byte buffer"
-        )
-    return xs, ys, zs, cls, rets, gps, rgb, extra, wave
+    buf = np.frombuffer(data, np.uint8)
+    rc, end = _native.laz_decode_chunk(
+        buf, start, count, has_gps, has_rgb, has_wave, n_extra, _LOOKAHEAD, out
+    )
+    if rc == 0:
+        return out
+    size = len(buf)
+    if rc == _LAZ_RAW_SHORT:
+        msg = f"ends inside its {end - start}-byte raw first point"
+    elif rc == _LAZ_OVERRUN:
+        msg = (f"decoded {end - size} bytes past the end of its "
+               f"{size - start}-byte buffer")
+    elif rc == _LAZ_EARLY:
+        msg = (f"decoded {size - end} bytes short of the end of its "
+               f"{size - start}-byte buffer")
+    elif rc == _LAZ_OFFSET64:
+        msg = "decodes a wave-packet offset wider than 64 bits"
+    elif rc == _LAZ_NOMEM:
+        raise MemoryError(f"LAZ chunk at byte {start}: decoder allocation failed")
+    else:
+        msg = f"with {count} points cannot be decoded"
+    raise ValueError(f"LAZ chunk at byte {start} {msg}")
+
 
 
 def read_laz(data: bytes):
@@ -1418,9 +1077,19 @@ class Point10V2Writer:
 
 
 class Wavepacket13V1Writer:
-    """Mirror of :class:`Wavepacket13V1Reader` (same models/state; the
-    offset classifier picks the cheapest representation the reader can
-    reconstruct: same / last+size / i32 delta / raw 64-bit)."""
+    """WAVEPACKET13 item, record version 1: the 29-byte wave-packet
+    descriptor block of point formats 4/5 (index u1, byte offset u64,
+    packet size u4, return-point location f4, Xt/Yt/Zt f4).  Follows
+    the public laszip v1 item scheme (lasreaditemcompressed_v1.cpp):
+    descriptor index through a 256-symbol model; byte offset through a
+    4-symbol difference classifier whose context is the PREVIOUS
+    point's symbol (0 = same offset, 1 = last offset + last size,
+    2 = i32 delta via an integer compressor, 3 = raw 64-bit); packet
+    size and the four floats (compressed as raw i32 bit patterns)
+    through 32-bit integer compressors.  The writer's offset
+    classifier picks the cheapest representation the decoder can
+    reconstruct.  The reference tree has no wavepacket fixture, so this
+    item is pinned by round-trip rather than native byte parity."""
 
     def __init__(self, enc: "ArithmeticEncoder", first: bytes) -> None:
         self.enc = enc

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Package lasutility_spark into dist/lasutility_spark.zip for
-``spark-submit --py-files``: the Python sources plus the C kernel source
-``gridlib/_delaunay.c``, which every node compiles on first use with its
-own ``cc`` (required; no prebuilt native wheels to ship)."""
+``spark-submit --py-files``: the Python sources plus the C kernel sources
+``gridlib/_delaunay.c`` and ``gridlib/_laszip.c``, which every node
+compiles on first use with its own ``cc`` (required; no prebuilt native
+wheels to ship)."""
 
 from __future__ import annotations
 

@@ -1,6 +1,7 @@
 """The native unit is required: a node that cannot build ``_delaunay.c``
-gets an exception, never triangles from another path, and the
-``--py-files`` zip carries the kernel source each executor compiles.
+and ``_laszip.c`` gets an exception, never triangles or points from
+another path, and the ``--py-files`` zip carries the kernel sources each
+executor compiles.
 
 Each case runs in a fresh interpreter with a fresh ``TMPDIR``, so no
 build cached by this process or an earlier run is reused."""
@@ -31,17 +32,55 @@ assert errors[0] is errors[1]
 print(errors[0])
 """
 
+# the LASzip chunk decoder raises the same stored error: no Python decoder
+_DECODE_AFTER_FAILED_BUILD = """
+import numpy as np
+from lasutility_spark.gridlib import laz
+data = laz.write_laz(np.arange(5.0), np.arange(5.0), np.arange(5.0),
+                     np.full(5, 2, np.uint8), chunk_size=2)
+_h, vlr, chunks = laz.laz_chunk_plan(data)
+s, c = chunks[0]
+try:
+    laz.decode_laz_chunk(data, vlr, s, c)
+except RuntimeError as e:
+    print(e)
+else:
+    raise SystemExit(3)
+"""
 
-def _run(code, tmp_path, path, pythonpath=None):
+# one write_laz chunk through the kernel -> a digest of the nine results
+_DECODE_DIGEST = """
+import hashlib
+import numpy as np
+from lasutility_spark.gridlib import laz
+rng = np.random.RandomState(3)
+n = 500
+data = laz.write_laz(380000 + rng.rand(n) * 100, 6666000 + rng.rand(n) * 100,
+                     rng.rand(n) * 10, rng.choice([2, 5], n).astype(np.uint8),
+                     gps_time=np.sort(rng.rand(n)) + 3e5,
+                     rgb=rng.randint(0, 1 << 16, (n, 3)).astype(np.uint16),
+                     chunk_size=200)
+_h, vlr, chunks = laz.laz_chunk_plan(data)
+h = hashlib.sha256()
+for s, c in chunks:
+    for a in laz.decode_laz_chunk(data, vlr, s, c):
+        h.update(b"-" if a is None else a.tobytes())
+print("DIGEST", h.hexdigest())
+"""
+
+
+def _run(code, tmp_path, path, pythonpath=None, no_native=False):
     env = {k: v for k, v in os.environ.items()
            if k not in ("PYTHONPATH", "LSU_NO_NATIVE")}
     env["PATH"] = path
     env["TMPDIR"] = str(tmp_path / "tmp")
-    os.makedirs(env["TMPDIR"])
+    os.makedirs(env["TMPDIR"], exist_ok=True)
     if pythonpath:
         env["PYTHONPATH"] = pythonpath
+    if no_native:
+        env["LSU_NO_NATIVE"] = "1"
     work = tmp_path / "work"
-    work.mkdir()
+    work.mkdir(exist_ok=True)
     return subprocess.run(
         [sys.executable, "-c", code], env=env, cwd=work,
         capture_output=True, text=True, timeout=300,
@@ -54,6 +93,22 @@ def test_no_compiler_on_path_raises(tmp_path):
     r = _run(_TRIANGULATE_TWICE, tmp_path, str(empty), pythonpath=REPO)
     assert r.returncode == 0, r.stdout + r.stderr
     assert "no C compiler (cc, gcc or clang) found on PATH" in r.stdout
+    r = _run(_DECODE_AFTER_FAILED_BUILD, tmp_path, str(empty), pythonpath=REPO)
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert "no C compiler (cc, gcc or clang) found on PATH" in r.stdout
+
+
+def test_no_native_switch_does_not_reach_the_laz_decoder(tmp_path):
+    """LSU_NO_NATIVE=1 switches only the numpy-twinned kernels: the LAZ
+    chunk decoder's nine results are byte-identical with and without
+    it, each in a fresh interpreter."""
+    digests = []
+    for no_native in (False, True):
+        r = _run(_DECODE_DIGEST, tmp_path, os.environ["PATH"],
+                 pythonpath=REPO, no_native=no_native)
+        assert r.returncode == 0, r.stdout + r.stderr
+        digests.append(r.stdout.split("DIGEST")[1].strip())
+    assert digests[0] == digests[1]
 
 
 def test_failing_compiler_stderr_in_error(tmp_path):
@@ -72,8 +127,9 @@ def test_failing_compiler_stderr_in_error(tmp_path):
 
 def test_pyfiles_zip_ships_kernel_source(tmp_path):
     """make_pyfiles writes dist/ next to its own checkout, so it runs in
-    a copy; the package then imports from the zip alone and compiles
-    _delaunay.c read through pkgutil."""
+    a copy; the package then imports from the zip alone, compiles
+    _delaunay.c and _laszip.c read through pkgutil, triangulates and
+    decodes one LAZ chunk."""
     copy = tmp_path / "checkout"
     shutil.copytree(
         os.path.join(REPO, "lasutility_spark"), copy / "lasutility_spark",
@@ -86,7 +142,9 @@ def test_pyfiles_zip_ships_kernel_source(tmp_path):
         check=True, capture_output=True, timeout=120,
     )
     zpath = str(copy / "dist" / "lasutility_spark.zip")
-    assert "lasutility_spark/gridlib/_delaunay.c" in zipfile.ZipFile(zpath).namelist()
+    names = zipfile.ZipFile(zpath).namelist()
+    assert "lasutility_spark/gridlib/_delaunay.c" in names
+    assert "lasutility_spark/gridlib/_laszip.c" in names
     shutil.rmtree(copy / "lasutility_spark")  # only the zip remains
 
     code = f"""
@@ -99,6 +157,13 @@ from lasutility_spark.gridlib.delaunay import delaunay
 assert _native.__file__.startswith({zpath!r}), _native.__file__
 tri = delaunay(np.array([0.0, 1.0, 0.0]), np.array([0.0, 0.0, 1.0]))
 assert sorted(tri[0].tolist()) == [0, 1, 2], tri
+from lasutility_spark.gridlib import laz
+x = np.arange(7.0)
+data = laz.write_laz(x, x, x, np.full(7, 2, np.uint8), chunk_size=4)
+_h, vlr, chunks = laz.laz_chunk_plan(data)
+s, c = chunks[1]
+xs = laz.decode_laz_chunk(data, vlr, s, c)[0]
+assert xs.tolist() == [400, 500, 600], xs
 """
     r = _run(code, tmp_path, os.environ["PATH"])
     assert r.returncode == 0, r.stdout + r.stderr
