@@ -118,9 +118,10 @@ def _tin_rasterize_voxel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pip_rasterize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V1-V8 feature rasterization (cogrouped strategy) over the
     synthesized feature tables.  Oracle = pip_tile_stats side table:
-    the same gridlib kernel run single-process at generation time with
-    LSU_NO_NATIVE=1, so the C scanline fast path AND the cogrouped Spark
-    distribution are both cross-checked against the numpy fallback."""
+    the per-tile loop run single-process at generation time, so the
+    cogrouped Spark distribution is cross-checked against it; the C
+    kernels under both are held to their numpy forms by
+    tests/test_raster_native.py, which regenerates the table with them."""
     images_dir = datagen.ensure_images_table(_FIXTURE_SF)
     images = epoints.read_images(spark, images_dir)
     from lasutility_spark.engine.tiling import cell_id_from_caption
@@ -194,9 +195,10 @@ def _raster_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V9' raster -> vector: rasterize features per tile (real kernel,
     png8 encode), then DECODE the rasters back and extract per-class
     painted counts + extent boxes — the polygonize first step.  Oracle =
-    pip_class_extents side table from the LSU_NO_NATIVE=1 generation
-    rasterization, so the full encode -> decode -> extract loop is
-    verified against independent arithmetic."""
+    pip_class_extents side table from the generation-time per-tile
+    rasterization (held to the numpy oracle kernels by
+    tests/test_raster_native.py), so the full encode -> decode -> extract
+    loop is verified against independent arithmetic."""
     images_dir = datagen.ensure_images_table(_FIXTURE_SF)
     images = epoints.read_images(spark, images_dir)
     from lasutility_spark.engine.tiling import cell_id_from_caption
@@ -221,7 +223,7 @@ def _oracle_raster_extents(dialect: str) -> str:
 
 def _oracle_pip_tile_stats(dialect: str) -> str:
     """V1-V8 oracle: per-tile applied-feature + painted-cell counts from
-    the LSU_NO_NATIVE=1 generation-time rasterization."""
+    the generation-time per-tile rasterization."""
     d = datagen.ensure_images_table(_FIXTURE_SF)
     return (
         "SELECT cell_id, image_id, w, h, n_features, painted_cells "

@@ -314,10 +314,12 @@ def gen_pip_tile_stats(
     names: list[str], polys: pd.DataFrame, lines: pd.DataFrame, px: int = 64
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Expected per-tile feature-rasterization metrics (V1-V8), computed
-    at generation time with the gridlib kernel forced onto the pure-numpy
-    fallback (``LSU_NO_NATIVE=1``) — so the engine's C scanline fast path
-    is cross-checked against the independent numpy arithmetic, and the
-    Spark cogrouped distribution must reproduce the per-tile loop.
+    at generation time by the single-process per-tile loop, so the Spark
+    cogrouped distribution must reproduce it.  The loop runs the gridlib
+    C kernels; ``tests/test_raster_native.py`` regenerates both frames
+    with the fill, polyline and clip kernels swapped for their numpy
+    oracles (``tests/raster_oracle.py``) and requires them equal, which
+    is what makes these tables independent of the C arithmetic.
 
     Returns (tile_stats, class_extents): the second frame is the
     raster->vector oracle — per (tile, class value) the painted cell
@@ -329,48 +331,40 @@ def gen_pip_tile_stats(
         for r in pd.concat([polys, lines], ignore_index=True).itertuples()
     ]
     classmap = {**topodb.ALL_POLYGON, **topodb.ALL_LINE}
-    prev = os.environ.get("LSU_NO_NATIVE")
-    os.environ["LSU_NO_NATIVE"] = "1"
-    try:
-        rows = []
-        ext_rows = []
-        for name in names:
-            minx, miny, _, _ = tile_decode(name)
-            cell = int(_cell_id(np.array([minx]), np.array([miny]), TILE_M)[0])
-            raster, n_applied, _env = pip_stage._rasterize_tile_raster(
-                cell, px, TILE_M, feats, classmap
-            )
-            rows.append(
+    rows = []
+    ext_rows = []
+    for name in names:
+        minx, miny, _, _ = tile_decode(name)
+        cell = int(_cell_id(np.array([minx]), np.array([miny]), TILE_M)[0])
+        raster, n_applied, _env = pip_stage._rasterize_tile_raster(
+            cell, px, TILE_M, feats, classmap
+        )
+        rows.append(
+            {
+                "cell_id": np.int64(cell),
+                "image_id": name,
+                "w": np.int32(px),
+                "h": np.int32(px),
+                "n_features": np.int32(n_applied),
+                "painted_cells": np.int32((raster != 0).sum()),
+            }
+        )
+        for v in np.unique(raster):
+            if v == 0:
+                continue
+            rr, cc = np.nonzero(raster == v)
+            ext_rows.append(
                 {
                     "cell_id": np.int64(cell),
                     "image_id": name,
-                    "w": np.int32(px),
-                    "h": np.int32(px),
-                    "n_features": np.int32(n_applied),
-                    "painted_cells": np.int32((raster != 0).sum()),
+                    "value": np.int32(v),
+                    "n_cells": np.int64(len(rr)),
+                    "min_row": np.int32(rr.min()),
+                    "max_row": np.int32(rr.max()),
+                    "min_col": np.int32(cc.min()),
+                    "max_col": np.int32(cc.max()),
                 }
             )
-            for v in np.unique(raster):
-                if v == 0:
-                    continue
-                rr, cc = np.nonzero(raster == v)
-                ext_rows.append(
-                    {
-                        "cell_id": np.int64(cell),
-                        "image_id": name,
-                        "value": np.int32(v),
-                        "n_cells": np.int64(len(rr)),
-                        "min_row": np.int32(rr.min()),
-                        "max_row": np.int32(rr.max()),
-                        "min_col": np.int32(cc.min()),
-                        "max_col": np.int32(cc.max()),
-                    }
-                )
-    finally:
-        if prev is None:
-            os.environ.pop("LSU_NO_NATIVE", None)
-        else:
-            os.environ["LSU_NO_NATIVE"] = prev
     return pd.DataFrame(rows), pd.DataFrame(ext_rows)
 
 

@@ -336,45 +336,46 @@ int64_t lsu_triangulate(int64_t n, const double *x, const double *y,
 }
 
 /* V5 even-odd scanline polygon fill in integer cell space (semantics of
- * LasUtility/Common/MathUtils.cs:114-170 FillPolygonInt, same as the
- * numpy path in gridlib/scanline.py): per pixel row in
- * [row_bot, row_top], collect edge crossings with the rule
+ * LasUtility/Common/MathUtils.cs:114-170 FillPolygonInt): per pixel row
+ * in [row_bot, row_top], collect edge crossings with the rule
  * ``polyY[i] < y <= polyY[j]`` in either direction (MathUtils.cs:131),
  * node x = C#-style trunc-toward-zero (MathUtils.cs:136), sort, fill
- * right-exclusive pairs (MathUtils.cs:161-168).  Writes are clamped to
- * the raster for memory safety (callers pre-clip rings to bounds).
+ * right-exclusive pairs (MathUtils.cs:161-168).  Each edge crosses a
+ * row at most once, so the crossing buffer holds n doubles.  Writes are
+ * clamped to the raster for memory safety (callers pre-clip rings to
+ * bounds).  Returns 0, or -1 when the crossing buffer cannot be
+ * allocated.
  */
-void lsu_fill_polygon_cells(uint8_t *dest, int64_t rows, int64_t cols,
-                            int value, int64_t row_bot, int64_t row_top,
-                            const double *poly_x, const double *poly_y,
-                            int64_t n) {
-    if (n < 2) return;
-    double node_x[1024];
+int64_t lsu_fill_polygon_cells(uint8_t *dest, int64_t rows, int64_t cols,
+                               int value, int64_t row_bot, int64_t row_top,
+                               const double *poly_x, const double *poly_y,
+                               int64_t n) {
+    if (n < 2) return 0;
+    double *node_x = malloc(sizeof(double) * (size_t)n);
+    if (!node_x) return -1;
     if (row_bot < 0) row_bot = 0;
     if (row_top >= rows) row_top = rows - 1;
     for (int64_t y = row_bot; y <= row_top; y++) {
         double py = (double)y;
-        int nn = 0;
+        int64_t nn = 0;
         int64_t j = n - 1;
         for (int64_t i = 0; i < n; i++) {
             double yi = poly_y[i], yj = poly_y[j];
             if ((yi < py && yj >= py) || (yj < py && yi >= py)) {
-                if (nn < 1024) {
-                    node_x[nn++] =
-                        poly_x[i] + (py - yi) / (yj - yi) * (poly_x[j] - poly_x[i]);
-                }
+                node_x[nn++] =
+                    poly_x[i] + (py - yi) / (yj - yi) * (poly_x[j] - poly_x[i]);
             }
             j = i;
         }
-        /* insertion sort (crossing counts are tiny) */
-        for (int a = 1; a < nn; a++) {
+        /* insertion sort (crossing counts per row are small on real rings) */
+        for (int64_t a = 1; a < nn; a++) {
             double v = node_x[a];
-            int b = a - 1;
+            int64_t b = a - 1;
             while (b >= 0 && node_x[b] > v) { node_x[b + 1] = node_x[b]; b--; }
             node_x[b + 1] = v;
         }
         uint8_t *drow = dest + y * cols;
-        for (int k = 0; k + 1 < nn; k += 2) {
+        for (int64_t k = 0; k + 1 < nn; k += 2) {
             int64_t a = (int64_t)node_x[k];     /* trunc toward zero */
             int64_t b = (int64_t)node_x[k + 1];
             if (a < 0) a = 0;
@@ -382,6 +383,8 @@ void lsu_fill_polygon_cells(uint8_t *dest, int64_t rows, int64_t cols,
             for (int64_t c = a; c < b; c++) drow[c] = (uint8_t)value;
         }
     }
+    free(node_x);
+    return 0;
 }
 
 /* V7 Bresenham polyline rasterization (MathUtils.cs:18-87 incl. the
@@ -433,14 +436,14 @@ void lsu_rasterize_polyline(uint8_t *dest, int64_t rows, int64_t cols,
 }
 
 /* T9 triangle-push DEM rasterization (semantics of
- * LasUtility/DEM/Triangulation.cs:202-298, same as the numpy path in
- * gridlib/tin.py): per triangle IN ORDER, clamp bbox to the grid, skip
- * |det| < 1e-12, barycentric inside-test l1,l2,l3 >= 0 at each covered
- * cell's bottom-left corner, overwrite height unless the cell is locked;
- * optional nearest-vertex (3-D argmin, <=-tie to lower vertex index)
- * classification plane.
+ * LasUtility/DEM/Triangulation.cs:202-298): per triangle IN ORDER,
+ * clamp bbox to the grid, skip |det| < 1e-12, barycentric inside-test
+ * l1,l2,l3 >= 0 at each covered cell's bottom-left corner, overwrite
+ * height unless the cell is locked; optional nearest-vertex (3-D argmin,
+ * <=-tie to lower vertex index) classification plane.
  *
- * Why C: the numpy version materializes a flat triangle-x-bbox expansion
+ * Why C: the numpy form (kept in tests/raster_oracle.py as the
+ * differential oracle) materializes a flat triangle-x-bbox expansion
  * (~20 double temporaries per covered cell) and is memory-bandwidth
  * bound — which on a shared-bus host caps multi-core scaling at ~0.3
  * efficiency.  The tight loop below touches each covered cell once and
@@ -523,14 +526,14 @@ void lsu_rasterize_dem(int64_t n_tri, const int64_t *tri, const double *x,
 /* ----------------------------------------------------------------------
  * lsu_sample_points: decode-to-points subsample + class assignment.
  *
- * Bit-exact C twin of imagetile.sample_points_from_tile (the numpy path):
+ * The arithmetic of imagetile.sample_points_from_tile's contract:
  * pixel centers hashed with splitmix64 -> uniform [0,1) doubles; a
  * pixel becomes a "LIDAR return" when u < rate, with class from a
  * second hash (ground 80%, vegetation 3/4/5) and vegetation lifted
- * above the terrain.  All integer arithmetic is identical to the numpy
- * expression (truncating int64 casts of non-negative products, the
- * same op order for the IEEE doubles), so outputs match the fallback
- * bit for bit.
+ * above the terrain.  All integer arithmetic matches the numpy oracle
+ * in tests/raster_oracle.py (truncating int64 casts of non-negative
+ * products, the same op order for the IEEE doubles), so outputs match
+ * it bit for bit.  dem is rows*cols float32, row-major.
  * -------------------------------------------------------------------- */
 
 static inline uint64_t lsu_splitmix64(uint64_t v) {
@@ -548,15 +551,15 @@ static inline double lsu_hash01_2(int64_t a, int64_t b) {
     return (double)(acc >> 11) / 9007199254740992.0; /* 2^53 */
 }
 
-int64_t lsu_sample_points(int64_t px, const float *dem, double minx,
-                          double miny, double cs, double rate,
+int64_t lsu_sample_points(int64_t rows, int64_t cols, const float *dem,
+                          double minx, double miny, double cs, double rate,
                           double *out_x, double *out_y, double *out_z,
                           uint8_t *out_cls) {
     int64_t n = 0;
-    for (int64_t r = 0; r < px; r++) {
+    for (int64_t r = 0; r < rows; r++) {
         double ny = miny + ((double)r + 0.5) * cs;
         int64_t hy = (int64_t)(ny * 100.0);
-        for (int64_t c = 0; c < px; c++) {
+        for (int64_t c = 0; c < cols; c++) {
             double ex = minx + ((double)c + 0.5) * cs;
             double u = lsu_hash01_2((int64_t)(ex * 100.0) + 7, hy);
             if (u >= rate) continue;
@@ -567,7 +570,7 @@ int64_t lsu_sample_points(int64_t px, const float *dem, double minx,
                 else if (v < 0.95) cls = 4;
                 else cls = 5;
             }
-            double z = (double)dem[r * px + c];
+            double z = (double)dem[r * cols + c];
             if (cls != 2) z += 2.0 + 14.0 * v;
             out_x[n] = ex;
             out_y[n] = ny;
@@ -581,8 +584,8 @@ int64_t lsu_sample_points(int64_t px, const float *dem, double minx,
 
 /* ---- rectangular clipping (V3): Sutherland-Hodgman ring +
    Liang-Barsky polyline.  Same double arithmetic, op for op, as the
-   numpy/python fallbacks in clip.py (compiled -ffp-contract=off), so
-   outputs are bit-identical — pinned by tests/test_gridlib_core.py. */
+   Python loops in tests/raster_oracle.py (compiled -ffp-contract=off),
+   so outputs are bit-identical — pinned by tests/test_raster_native.py. */
 
 int64_t lsu_clip_ring(int64_t n, const double* xs, const double* ys,
                       double minx, double miny, double maxx, double maxy,

@@ -13,15 +13,13 @@ The unit is required: every node needs ``cc`` (or ``gcc``/``clang``) on
 ``PATH``.  A build or load failure — no compiler, a failed compile, a
 ``.so`` that is not privately owned — raises at first use, naming the
 compiler and its stderr, and the same error is raised again on every
-later call rather than recompiling.  The Delaunay kernel and the LASzip
-chunk decoder have no Python twin in the package, so no failure can
-silently change a tile's triangles or a chunk's points.
-
-``LSU_NO_NATIVE=1`` switches the other kernels (sample, DEM rasterize,
-polygon fill, polyline stamp, clip) to their bit-identical numpy twins,
-which stay the semantics definition and compute datagen's oracle side
-tables.  It does not reach :func:`triangulate` or
-:func:`laz_decode_chunk`.
+later call rather than recompiling.  Every kernel here is the only
+runtime implementation of its job (triangulation, LASzip chunk decode,
+point sampling, DEM rasterize, polygon fill, polyline stamp, clip): each
+wrapper returns its result or raises, so no failure can silently change
+a tile's triangles, points or cells.  The numpy forms of the raster
+kernels live only in ``tests/raster_oracle.py``, where the differential
+test ``tests/test_raster_native.py`` holds each kernel to them.
 """
 
 from __future__ import annotations
@@ -42,10 +40,6 @@ _SOURCES = ("_delaunay.c", "_laszip.c")  # compiled together into one .so
 _fn = _raster_fn = _fill_fn = _line_fn = _sample_fn = None
 _clip_ring_fn = _clip_line_fn = _laz_fn = None
 _load_error: Exception | None = None  # first build/load failure, re-raised
-
-# sentinel: "LSU_NO_NATIVE=1, run the Python clip" — needed because clip
-# results legitimately include None (empty after clip)
-UNAVAILABLE = object()
 
 
 def _read_source(name: str) -> bytes:
@@ -111,7 +105,7 @@ def _build_and_load():
                 with os.fdopen(fd, "wb") as f:
                     f.write(src)
             # -ffp-contract=off: no FMA contraction, so C results match the
-            # numpy twins' double arithmetic operation-for-operation
+            # numpy oracle's double arithmetic operation-for-operation
             proc = subprocess.run(
                 [cc, "-O2", "-ffp-contract=off", "-shared", "-fPIC",
                  "-o", tmp, *c_srcs, "-lm"],
@@ -161,9 +155,10 @@ def _build_and_load():
     ]
     # raw pointers for the per-ring hot kernels: ndpointer.from_param
     # flag validation costs ~10 us per call, called ~70x per tile; the
-    # Python wrappers below enforce dtype/contiguity themselves
+    # Python wrappers below enforce dtype/contiguity themselves (dest via
+    # _check_plane, vertices via np.ascontiguousarray)
     pfn = lib.lsu_fill_polygon_cells
-    pfn.restype = None
+    pfn.restype = ctypes.c_int64
     pfn.argtypes = [
         ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64, ctypes.c_int,
         ctypes.c_int64, ctypes.c_int64, ctypes.c_void_p, ctypes.c_void_p,
@@ -178,7 +173,7 @@ def _build_and_load():
     sfn = lib.lsu_sample_points
     sfn.restype = ctypes.c_int64
     sfn.argtypes = [
-        ctypes.c_int64, ctypes.c_void_p,
+        ctypes.c_int64, ctypes.c_int64, ctypes.c_void_p,
         ctypes.c_double, ctypes.c_double, ctypes.c_double, ctypes.c_double,
         ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p,
     ]
@@ -219,34 +214,34 @@ def _ensure_loaded():
      _clip_ring_fn, _clip_line_fn, _laz_fn) = handles
 
 
-def _native_on() -> bool:
-    """False under ``LSU_NO_NATIVE=1`` (the caller runs its numpy twin);
-    otherwise loads the unit, raising if it cannot be built."""
-    if os.environ.get("LSU_NO_NATIVE") == "1":
-        return False
-    _ensure_loaded()
-    return True
+def _check_plane(a: np.ndarray, dtype, name: str) -> None:
+    """Raise ``ValueError`` unless ``a`` is a C-contiguous 2-D ``dtype``
+    plane: the kernels read and write it through a raw pointer."""
+    if a.ndim != 2 or a.dtype != dtype or not a.flags["C_CONTIGUOUS"]:
+        layout = "C-contiguous" if a.flags["C_CONTIGUOUS"] else "non-contiguous"
+        raise ValueError(
+            f"{name} must be a C-contiguous 2-D {np.dtype(dtype).name} plane, "
+            f"got {layout} {a.dtype.name} of shape {a.shape}"
+        )
 
 
 def sample_points(
     dem: np.ndarray, minx: float, miny: float, cs: float, rate: float
 ):
-    """C decode-to-points subsample; None => caller uses the numpy path.
-    Bit-identical to imagetile.sample_points_from_tile's numpy arithmetic."""
-    if not _native_on():
-        return None
-    dem = np.ascontiguousarray(dem, dtype=np.float32)
-    px = dem.shape[0]
-    if dem.ndim != 2 or dem.shape[1] != px:
-        return None
-    cap = px * px
+    """C decode-to-points subsample of the float32 plane ``dem`` ->
+    ``(x, y, z, cls)``: the contract of imagetile.sample_points_from_tile."""
+    _check_plane(dem, np.float32, "dem")
+    _ensure_loaded()
+    rows, cols = dem.shape
+    cap = rows * cols
     x = np.empty(cap, dtype=np.float64)
     y = np.empty(cap, dtype=np.float64)
     z = np.empty(cap, dtype=np.float64)
     cls = np.empty(cap, dtype=np.uint8)
     n = _sample_fn(
-        px, dem.ctypes.data, float(minx), float(miny), float(cs), float(rate),
-        x.ctypes.data, y.ctypes.data, z.ctypes.data, cls.ctypes.data,
+        rows, cols, dem.ctypes.data, float(minx), float(miny), float(cs),
+        float(rate), x.ctypes.data, y.ctypes.data, z.ctypes.data,
+        cls.ctypes.data,
     )
     return x[:n], y[:n], z[:n], cls[:n]
 
@@ -254,8 +249,7 @@ def sample_points(
 def triangulate(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     """C sweep-hull triangulation -> (n_tri, 3) int64 point indices.
 
-    The only triangulator, so ``LSU_NO_NATIVE`` does not apply; raises
-    ``MemoryError`` when the kernel cannot allocate its buffers."""
+    Raises ``MemoryError`` when the kernel cannot allocate its buffers."""
     _ensure_loaded()
     n = len(x)
     if n < 3:
@@ -277,8 +271,7 @@ def laz_decode_chunk(buf: np.ndarray, start: int, count: int, has_gps: bool,
     """C LASzip chunk decode of the uint8 array ``buf`` into ``out`` =
     (x, y, z, cls, rets, gps, rgb, extra, wave), C-contiguous arrays of
     ``count`` rows, None for absent items -> (kernel return code, final
-    read position).  The only chunk decoder, so ``LSU_NO_NATIVE`` does
-    not apply."""
+    read position)."""
     _ensure_loaded()
     end = ctypes.c_int64(0)
     rc = _laz_fn(
@@ -304,13 +297,16 @@ def rasterize_dem(
     eps: float,
     locked: np.ndarray | None,
     classification: np.ndarray | None,
-) -> bool:
+) -> None:
     """C triangle-push rasterization into ``dem`` in place.
 
-    Returns False under ``LSU_NO_NATIVE=1`` (caller runs the numpy
-    path).  ``dem`` must be C-contiguous float32."""
-    if not _native_on():
-        return False
+    ``dem`` must be a C-contiguous float32 plane and ``classification``,
+    when given, a C-contiguous uint8 plane; ``locked`` may be any dtype
+    (nonzero = locked)."""
+    _check_plane(dem, np.float32, "dem")
+    if classification is not None:
+        _check_plane(classification, np.uint8, "classification")
+    _ensure_loaded()
     rows, cols = dem.shape
     tri = np.ascontiguousarray(tri, dtype=np.int64)
     x = np.ascontiguousarray(x, dtype=np.float64)
@@ -323,9 +319,6 @@ def rasterize_dem(
             dtype=np.uint8,
         )
         cls_p = cls_arr.ctypes.data
-        cf = np.ascontiguousarray(classification, dtype=np.uint8)
-        if cf is not classification:
-            raise ValueError("classification plane must be C-contiguous uint8")
     lk = None
     if locked is not None:
         lk_arr = np.ascontiguousarray(locked, dtype=np.uint8)
@@ -336,7 +329,6 @@ def rasterize_dem(
         dem, lk,
         classification.ctypes.data if classification is not None else None,
     )
-    return True
 
 
 def fill_polygon_cells(
@@ -346,42 +338,39 @@ def fill_polygon_cells(
     row_top: int,
     poly_x: np.ndarray,
     poly_y: np.ndarray,
-) -> bool:
-    """C even-odd scanline fill; False => caller uses the numpy path."""
-    if not _native_on() or dest.dtype != np.uint8 or not dest.flags["C_CONTIGUOUS"]:
-        return False
+) -> None:
+    """C even-odd scanline fill of the uint8 plane ``dest`` in place;
+    raises ``MemoryError`` when the crossing buffer cannot be allocated."""
+    _check_plane(dest, np.uint8, "dest")
+    _ensure_loaded()
     px = np.ascontiguousarray(poly_x, dtype=np.float64)
     py = np.ascontiguousarray(poly_y, dtype=np.float64)
-    if len(px) > 1024:
-        # the C kernel caps node_x[1024] per scanline; crossings are
-        # bounded by the vertex count, so refuse the fast path rather
-        # than risk silently mispaired even-odd spans on huge rings
-        return False
     rows, cols = dest.shape
-    _fill_fn(dest.ctypes.data, rows, cols, int(value), int(row_bot),
-             int(row_top), px.ctypes.data, py.ctypes.data, len(px))
-    return True
+    rc = _fill_fn(dest.ctypes.data, rows, cols, int(value), int(row_bot),
+                  int(row_top), px.ctypes.data, py.ctypes.data, len(px))
+    if rc == -1:
+        raise MemoryError(
+            f"lsu_fill_polygon_cells: allocation failed for {len(px)} vertices"
+        )
 
 
 def rasterize_polyline(
     dest: np.ndarray, value: int, vrows: np.ndarray, vcols: np.ndarray
-) -> bool:
-    """C Bresenham polyline stamp; False => caller uses the numpy path."""
-    if not _native_on() or dest.dtype != np.uint8 or not dest.flags["C_CONTIGUOUS"]:
-        return False
+) -> None:
+    """C Bresenham polyline stamp into the uint8 plane ``dest`` in place."""
+    _check_plane(dest, np.uint8, "dest")
+    _ensure_loaded()
     vr = np.ascontiguousarray(vrows, dtype=np.int64)
     vc = np.ascontiguousarray(vcols, dtype=np.int64)
     rows, cols = dest.shape
     _line_fn(dest.ctypes.data, rows, cols, int(value), vr.ctypes.data,
              vc.ctypes.data, len(vr))
-    return True
 
 
 def clip_ring(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
-    """C Sutherland-Hodgman ring clip; returns UNAVAILABLE under
-    ``LSU_NO_NATIVE=1``, None when the clipped ring is empty, else (x, y)."""
-    if not _native_on():
-        return UNAVAILABLE
+    """C Sutherland-Hodgman ring clip -> None when the clipped ring is
+    empty, else (x, y)."""
+    _ensure_loaded()
     xs = np.ascontiguousarray(xs, dtype=np.float64)
     ys = np.ascontiguousarray(ys, dtype=np.float64)
     n = len(xs)
@@ -401,10 +390,9 @@ def clip_ring(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
 
 
 def clip_polyline(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
-    """C Liang-Barsky polyline clip; UNAVAILABLE under ``LSU_NO_NATIVE=1``,
-    else a list of (x, y) parts (possibly empty)."""
-    if not _native_on():
-        return UNAVAILABLE
+    """C Liang-Barsky polyline clip -> a list of (x, y) parts (possibly
+    empty)."""
+    _ensure_loaded()
     xs = np.ascontiguousarray(xs, dtype=np.float64)
     ys = np.ascontiguousarray(ys, dtype=np.float64)
     n = len(xs)

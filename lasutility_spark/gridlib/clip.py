@@ -3,10 +3,11 @@
 The reference clips features partly outside the raster with NTS
 ``Geometry.Intersection`` (Shapefile/RasteriserEvenOdd.cs:43-48).  For a
 rectangular clip window that is Sutherland-Hodgman for polygon rings and
-Liang-Barsky for line segments — both public classics.  C fast paths in
-_delaunay.c (bit-identical arithmetic, -ffp-contract=off) carry the PIP
-kernel's boundary-crossing features; the numpy/python forms below remain
-the semantics definition and the LSU_NO_NATIVE=1 fallback.  S-H can emit
+Liang-Barsky for line segments — both public classics.  Features that
+cross the box are clipped by the C kernels in _delaunay.c; their Python
+loops are kept only as the differential oracle in
+``tests/raster_oracle.py`` (bit-identical arithmetic, -ffp-contract=off,
+held by ``tests/test_raster_native.py``).  S-H can emit
 zero-width "bridge" edges along the clip boundary for concave polygons;
 those are harmless to the even-odd scanline (zero-area spans).
 """
@@ -35,53 +36,7 @@ def clip_ring(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
         and ys.min() >= miny and ys.max() <= maxy
     ):
         return xs, ys
-
-    got = _native.clip_ring(xs, ys, minx, miny, maxx, maxy)
-    if got is not _native.UNAVAILABLE:
-        return got
-
-    pts = list(zip(xs.tolist(), ys.tolist()))
-
-    def inside(p, edge):
-        x, y = p
-        if edge == 0:
-            return x >= minx
-        if edge == 1:
-            return x <= maxx
-        if edge == 2:
-            return y >= miny
-        return y <= maxy
-
-    def intersect(p, q, edge):
-        (x1, y1), (x2, y2) = p, q
-        if edge in (0, 1):
-            xb = minx if edge == 0 else maxx
-            t = (xb - x1) / (x2 - x1)
-            return (xb, y1 + t * (y2 - y1))
-        yb = miny if edge == 2 else maxy
-        t = (yb - y1) / (y2 - y1)
-        return (x1 + t * (x2 - x1), yb)
-
-    for edge in range(4):
-        if not pts:
-            return None
-        out = []
-        prev = pts[-1]
-        prev_in = inside(prev, edge)
-        for cur in pts:
-            cur_in = inside(cur, edge)
-            if cur_in:
-                if not prev_in:
-                    out.append(intersect(prev, cur, edge))
-                out.append(cur)
-            elif prev_in:
-                out.append(intersect(prev, cur, edge))
-            prev, prev_in = cur, cur_in
-        pts = out
-    if len(pts) < 3:
-        return None
-    arr = np.asarray(pts)
-    return arr[:, 0], arr[:, 1]
+    return _native.clip_ring(xs, ys, minx, miny, maxx, maxy)
 
 
 def clip_polyline(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
@@ -97,57 +52,4 @@ def clip_polyline(xs: np.ndarray, ys: np.ndarray, minx, miny, maxx, maxy):
         and ys.min() >= miny and ys.max() <= maxy
     ):
         return [(xs, ys)]
-    got = _native.clip_polyline(xs, ys, minx, miny, maxx, maxy)
-    if got is not _native.UNAVAILABLE:
-        return got
-    parts = []
-    cur_x: list[float] = []
-    cur_y: list[float] = []
-
-    def flush():
-        nonlocal cur_x, cur_y
-        if len(cur_x) >= 2:
-            parts.append((np.asarray(cur_x), np.asarray(cur_y)))
-        cur_x, cur_y = [], []
-
-    for i in range(1, len(xs)):
-        x1, y1, x2, y2 = xs[i - 1], ys[i - 1], xs[i], ys[i]
-        dx, dy = x2 - x1, y2 - y1
-        t0, t1 = 0.0, 1.0
-        ok = True
-        for p, q in (
-            (-dx, x1 - minx),
-            (dx, maxx - x1),
-            (-dy, y1 - miny),
-            (dy, maxy - y1),
-        ):
-            if p == 0:
-                if q < 0:
-                    ok = False
-                    break
-            else:
-                t = q / p
-                if p < 0:
-                    if t > t1:
-                        ok = False
-                        break
-                    t0 = max(t0, t)
-                else:
-                    if t < t0:
-                        ok = False
-                        break
-                    t1 = min(t1, t)
-        if not ok:
-            flush()
-            continue
-        cx1, cy1 = x1 + t0 * dx, y1 + t0 * dy
-        cx2, cy2 = x1 + t1 * dx, y1 + t1 * dy
-        if not cur_x or (cur_x[-1], cur_y[-1]) != (cx1, cy1):
-            flush()
-            cur_x, cur_y = [cx1], [cy1]
-        cur_x.append(cx2)
-        cur_y.append(cy2)
-        if t1 < 1.0:
-            flush()
-    flush()
-    return parts
+    return _native.clip_polyline(xs, ys, minx, miny, maxx, maxy)

@@ -66,28 +66,14 @@ def sample_points_from_tile(
     name: str, dem: np.ndarray, minx: int, miny: int, cellsize: float
 ):
     """Decode-to-points: pixel -> point at cell center; deterministic
-    subsample + class assignment (ground 80%, veg 3/4/5).
-
-    C fast path (gridlib._native.sample_points) with bit-identical
-    numpy fallback — pinned by tests/test_codecs_datagen.py."""
+    subsample + class assignment (ground 80%, veg 3/4/5, the arithmetic
+    of :func:`hash01` and :func:`assign_classes`), run by the C kernel
+    gridlib._native.sample_points.  ``dem`` must be a C-contiguous 2-D
+    float32 plane (``ValueError`` otherwise)."""
     rate = DENSE_RATE if is_dense_tile(name) else BASE_RATE
-    if dem.dtype == np.float32:  # other dtypes would downcast: numpy path
-        got = _native.sample_points(
-            dem, float(minx), float(miny), float(cellsize), rate
-        )
-        if got is not None:
-            return got
-    px = dem.shape[0]
-    cols, rws = np.meshgrid(np.arange(px), np.arange(px))
-    ex = minx + (cols + 0.5) * cellsize
-    ny = miny + (rws + 0.5) * cellsize
-    u = hash01((ex * 100).astype(np.int64) + 7, (ny * 100).astype(np.int64))
-    sel = u < rate
-    x = ex[sel].ravel()
-    y = ny[sel].ravel()
-    z = dem[sel].ravel().astype(np.float64)
-    z, cls = assign_classes(x, y, z)
-    return x, y, z, cls
+    return _native.sample_points(
+        dem, float(minx), float(miny), float(cellsize), rate
+    )
 
 
 def assign_classes(x, y, z):

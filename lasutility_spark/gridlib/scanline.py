@@ -14,6 +14,8 @@ Exact-parity port of the pinned reference semantics:
   (MathUtils.cs:131)
 - Bresenham with perfect-diagonal special case (MathUtils.cs:18-87)
 
+The fill and the line stamp run in C (:mod:`_native`); their numpy forms
+are kept only as the differential oracle in ``tests/raster_oracle.py``.
 Golden cell-set from MathUtils.Tests.cs:14-55 is pinned in tests.
 """
 
@@ -47,102 +49,25 @@ def fill_polygon(
 
     # envelope corners are in bounds (checked above) => every vertex is
     rows, cols = bounds.proj_to_cell_unchecked(ring_x, ring_y)
-    # vertex coords in cell space as doubles (MathUtils.cs:104-109)
-    fill_polygon_cells(dest, value, rmin, rmax, cols.astype(np.float64), rows.astype(np.float64))
-
-
-def fill_polygon_cells(
-    dest: np.ndarray,
-    value: int,
-    row_bot: int,
-    row_top: int,
-    poly_x: np.ndarray,
-    poly_y: np.ndarray,
-) -> None:
-    """V5 core: MathUtils.FillPolygonInt (MathUtils.cs:114-170), vectorized
-    per scanline row over the polygon edges with numpy.  C fast path when
-    available (node-x multiset is identical: trunc is monotone, so
-    sort-then-trunc == trunc-then-sort)."""
-    if _native.fill_polygon_cells(dest, value, row_bot, row_top, poly_x, poly_y):
-        return
-    n = len(poly_x)
-    px_i = poly_x
-    py_i = poly_y
-    px_j = np.roll(poly_x, 1)  # j = i-1 with wraparound (MathUtils.cs:127,139)
-    py_j = np.roll(poly_y, 1)
-
-    for pixel_y in range(row_bot, row_top + 1):
-        crosses = ((py_i < pixel_y) & (py_j >= pixel_y)) | (
-            (py_j < pixel_y) & (py_i >= pixel_y)
-        )
-        if not crosses.any():
-            continue
-        xi = px_i[crosses]
-        yi = py_i[crosses]
-        xj = px_j[crosses]
-        yj = py_j[crosses]
-        # C# (int) cast truncates toward zero (MathUtils.cs:136)
-        node_x = np.trunc(xi + (pixel_y - yi) / (yj - yi) * (xj - xi)).astype(np.int64)
-        node_x.sort()
-        for k in range(0, len(node_x) - 1, 2):
-            a, b = node_x[k], node_x[k + 1]
-            if b > a:
-                dest[pixel_y, a:b] = value  # right-exclusive (MathUtils.cs:164)
-
-
-def bresenham_line(ax: int, ay: int, bx: int, by: int) -> np.ndarray:
-    """V7: MathUtils.Line (MathUtils.cs:18-87) -> (n, 2) array of (x, y).
-
-    Includes the perfect-diagonal special case and the same `side` tie-break
-    as the reference so the exact cell sequence matches.
-    """
-    cells = [(ax, ay)]
-    xinc = -1 if bx < ax else 1
-    yinc = -1 if by < ay else 1
-    dx = xinc * (bx - ax)
-    dy = yinc * (by - ay)
-
-    if dx == dy:  # perfect diagonal (MathUtils.cs:40-60)
-        x, y = ax, ay
-        for _ in range(dx):
-            x += xinc
-            y += yinc
-            cells.append((x, y))
-        return np.array(cells, dtype=np.int64)
-
-    side = -1 * ((yinc if dx == 0 else xinc) - 1)  # MathUtils.cs:64
-    i = dx + dy
-    error = dx - dy
-    dx *= 2
-    dy *= 2
-    x, y = ax, ay
-    while i > 0:
-        i -= 1
-        if error > 0 or error == side:
-            x += xinc
-            error -= dy
-        else:
-            y += yinc
-            error += dx
-        cells.append((x, y))
-    return np.array(cells, dtype=np.int64)
+    # vertex coords in cell space as doubles (MathUtils.cs:104-109);
+    # the C kernel is MathUtils.FillPolygonInt (MathUtils.cs:114-170)
+    _native.fill_polygon_cells(
+        dest, value, rmin, rmax, cols.astype(np.float64), rows.astype(np.float64)
+    )
 
 
 def rasterize_linestring(
     bounds: RasterBounds, dest: np.ndarray, value: int, xs: np.ndarray, ys: np.ndarray
 ) -> None:
     """V7 wrapper: RasteriserEvenOdd.RasteriseLine (RasteriserEvenOdd.cs:84-101)
-    — per segment, Bresenham over the cell indices of the endpoints.
+    — per segment, Bresenham over the cell indices of the endpoints;
+    cells outside ``dest`` are skipped.
     Callers pass vertices already clipped inside ``bounds`` (V3 runs
     first, RasteriserEvenOdd.cs:43-48)."""
     rows, cols = bounds.proj_to_cell_unchecked(
         np.asarray(xs, float), np.asarray(ys, float)
     )
-    if _native.rasterize_polyline(dest, value, rows, cols):
-        return
-    for i in range(1, len(rows)):
-        seg = bresenham_line(int(cols[i - 1]), int(rows[i - 1]), int(cols[i]), int(rows[i]))
-        dest[seg[:, 1], seg[:, 0]] = value
+    _native.rasterize_polyline(dest, value, rows, cols)
 
 
 def rasterize_polygon_with_holes(

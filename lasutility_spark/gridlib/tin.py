@@ -16,8 +16,9 @@ Exact-parity port of the pinned reference semantics
 - point query: barycentric height + class, NaN outside the hull
   (T5, Triangulation.cs:159-196).
 
-All loops are per-*triangle* (few thousand per tile); per-cell work is
-vectorized numpy over the triangle's bbox — no per-cell Python.
+The rasterization runs in the C kernel (gridlib._native.rasterize_dem),
+one tight loop per triangle over its clamped bbox; its numpy form is kept
+only as the differential oracle in ``tests/raster_oracle.py``.
 """
 
 from __future__ import annotations
@@ -63,6 +64,9 @@ class Tin:
         """Fill ``dem`` (rows x cols float32, NaN = missing) from the TIN.
 
         Mirrors SurfaceTriangulation.RasteriseDem (Triangulation.cs:202-298).
+        ``dem`` must be a C-contiguous float32 plane and ``classification``
+        a C-contiguous uint8 one (``ValueError`` otherwise); ``locked`` is
+        a mask of cells to keep.
         """
         if dem is None:
             dem = np.full((bounds.rows, bounds.cols), np.nan, dtype=np.float32)
@@ -73,107 +77,11 @@ class Tin:
         if classification is not None and classification.shape != dem.shape:
             raise ValueError("Raster array dimensions must match raster bounds.")
 
-        tris = self.triangles
-        if len(tris) == 0:
-            return dem
-
-        # C fast path: tight per-triangle scanline, compute-bound (the
-        # numpy expansion below is memory-bandwidth bound, which caps
-        # multi-worker scaling); falls through to the numpy twin below
-        # under LSU_NO_NATIVE=1 or for non-contiguous/other-dtype planes
-        if (
-            dem.dtype == np.float32
-            and dem.flags["C_CONTIGUOUS"]
-            and (locked is None or locked.flags["C_CONTIGUOUS"])
-            and (
-                classification is None
-                or (
-                    classification.dtype == np.uint8
-                    and classification.flags["C_CONTIGUOUS"]
-                )
-            )
-            and _native.rasterize_dem(
-                tris, self.x, self.y, self.z, self.cls, dem,
-                bounds.minx, bounds.miny, bounds.maxx, bounds.maxy,
-                EPSILON, locked, classification,
-            )
-        ):
-            return dem
-
-        x, y, z = self.x, self.y, self.z
-        cw, ch = bounds.cell_width, bounds.cell_height
-
-        i0, i1, i2 = tris[:, 0], tris[:, 1], tris[:, 2]
-        x0, y0, z0 = x[i0], y[i0], z[i0]
-        x1, y1, z1 = x[i1], y[i1], z[i1]
-        x2, y2, z2 = x[i2], y[i2], z[i2]
-
-        # per-triangle bbox clamped to grid (Triangulation.cs:253-262)
-        minx = np.maximum(np.minimum(np.minimum(x0, x1), x2), bounds.minx)
-        miny = np.maximum(np.minimum(np.minimum(y0, y1), y2), bounds.miny)
-        maxx = np.minimum(np.maximum(np.maximum(x0, x1), x2), bounds.maxx - EPSILON)
-        maxy = np.minimum(np.maximum(np.maximum(y0, y1), y2), bounds.maxy - EPSILON)
-
-        det = (y1 - y2) * (x0 - x2) + (x2 - x1) * (y0 - y2)
-        keep = (
-            (np.abs(det) >= 1e-12)  # degenerate skip (Triangulation.cs:265-267)
-            & (minx <= maxx)
-            & (miny <= maxy)
+        _native.rasterize_dem(
+            self.triangles, self.x, self.y, self.z, self.cls, dem,
+            bounds.minx, bounds.miny, bounds.maxx, bounds.maxy,
+            EPSILON, locked, classification,
         )
-        if not keep.any():
-            return dem
-        order = np.flatnonzero(keep)  # preserve triangle order for overwrites
-        r0 = ((miny[order] - bounds.miny) / ch).astype(np.int64)
-        c0 = ((minx[order] - bounds.minx) / cw).astype(np.int64)
-        r1 = ((maxy[order] - bounds.miny) / ch).astype(np.int64)
-        c1 = ((maxx[order] - bounds.minx) / cw).astype(np.int64)
-
-        # flat "triangle x bbox-cell" expansion — one numpy pass, no
-        # per-cell Python.  Duplicate-index fancy assignment keeps the
-        # last write, matching the reference's sequential triangle loop.
-        nr = r1 - r0 + 1
-        nc = c1 - c0 + 1
-        counts = nr * nc
-        total = int(counts.sum())
-        tidx = np.repeat(np.arange(len(order)), counts)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        off = np.arange(total) - starts[tidx]
-        rows = r0[tidx] + off // nc[tidx]
-        cols = c0[tidx] + off % nc[tidx]
-
-        gt = order[tidx]
-        px = bounds.minx + cols * cw  # cell bottom-left (Triangulation.cs:278)
-        py = bounds.miny + rows * ch
-        inv = 1.0 / det[gt]
-        l1 = ((y1[gt] - y2[gt]) * (px - x2[gt]) + (x2[gt] - x1[gt]) * (py - y2[gt])) * inv
-        l2 = ((y2[gt] - y0[gt]) * (px - x2[gt]) + (x0[gt] - x2[gt]) * (py - y2[gt])) * inv
-        l3 = 1.0 - l1 - l2
-        inside = (l1 >= 0) & (l2 >= 0) & (l3 >= 0)
-        if locked is not None:
-            inside &= ~locked[rows, cols]  # T10 (Triangulation.cs:275-276)
-        if not inside.any():
-            return dem
-
-        rows = rows[inside]
-        cols = cols[inside]
-        gt = gt[inside]
-        h = (
-            l1[inside] * z0[gt] + l2[inside] * z1[gt] + l3[inside] * z2[gt]
-        )
-        dem[rows, cols] = h.astype(np.float32)
-
-        if classification is not None:
-            # nearest-vertex class in 3-D (T8, Triangulation.cs:315-324);
-            # <= tie order: vertex 0 wins, then vertex 1
-            px, py = px[inside], py[inside]
-            d0 = (px - x0[gt]) ** 2 + (py - y0[gt]) ** 2 + (h - z0[gt]) ** 2
-            d1 = (px - x1[gt]) ** 2 + (py - y1[gt]) ** 2 + (h - z1[gt]) ** 2
-            d2 = (px - x2[gt]) ** 2 + (py - y2[gt]) ** 2 + (h - z2[gt]) ** 2
-            c0v = self.cls[i0[gt]]
-            c1v = self.cls[i1[gt]]
-            c2v = self.cls[i2[gt]]
-            pick = np.where((d0 <= d1) & (d0 <= d2), c0v, np.where(d1 <= d2, c1v, c2v))
-            classification[rows, cols] = pick
         return dem
 
     # -- T5-T8: point queries ---------------------------------------------

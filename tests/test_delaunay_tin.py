@@ -113,17 +113,6 @@ def test_delaunay_quantized_etrs_tile():
     _check_delaunay(x, y, delaunay(x, y))
 
 
-def test_delaunay_ignores_no_native_switch(monkeypatch):
-    # LSU_NO_NATIVE=1 switches only the numpy-twinned kernels; the C
-    # triangulator has no twin, so the switch must not change triangles
-    rng = np.random.RandomState(11)
-    x = np.round(rng.uniform(0, 100, 500), 2)
-    y = np.round(rng.uniform(0, 100, 500), 2)
-    want = delaunay(x, y)
-    monkeypatch.setenv("LSU_NO_NATIVE", "1")
-    assert np.array_equal(delaunay(x, y), want)
-
-
 def test_delaunay_duplicates_and_small():
     assert len(delaunay(np.array([0.0, 1.0]), np.array([0.0, 1.0]))) == 0
     x = np.array([0.0, 1.0, 0.0, 1.0, 0.0])

@@ -9,10 +9,11 @@ import pytest
 from lasutility_spark.gridlib.bounds import RasterBounds
 from lasutility_spark.gridlib.rle import rle_compress_row, rle_decompress_row
 from lasutility_spark.gridlib.scanline import (
-    bresenham_line,
     fill_polygon,
+    rasterize_linestring,
     rasterize_polygon_with_holes,
 )
+from raster_oracle import bresenham_line
 from lasutility_spark.gridlib.tilenamer import (
     cell_id,
     cell_id_envelope,
@@ -184,9 +185,23 @@ def test_polygon_with_hole_two_pass():
 # ---- Bresenham (MathUtils.cs:18-87) --------------------------------------
 
 
+def _stamped_cells(ax, ay, bx, by):
+    """(x, y) cells the runtime path stamps for one segment between the
+    centers of cells (ax, ay) and (bx, by) on an 8 x 8 unit raster."""
+    b = RasterBounds(8, 8, 0, 0, 8, 8)
+    dest = np.zeros((8, 8), dtype=np.uint8)
+    rasterize_linestring(
+        b, dest, 9, np.array([ax + 0.5, bx + 0.5]), np.array([ay + 0.5, by + 0.5])
+    )
+    rows, cols = np.nonzero(dest)
+    assert set(dest[rows, cols].tolist()) == {9}
+    return sorted(zip(cols.tolist(), rows.tolist()))
+
+
 def test_bresenham_diagonal():
     cells = bresenham_line(0, 0, 3, 3)
     assert cells.tolist() == [[0, 0], [1, 1], [2, 2], [3, 3]]
+    assert _stamped_cells(0, 0, 3, 3) == [(0, 0), (1, 1), (2, 2), (3, 3)]
 
 
 def test_bresenham_straight_and_reverse():
@@ -195,6 +210,12 @@ def test_bresenham_straight_and_reverse():
     fwd = bresenham_line(0, 0, 5, 2)
     assert fwd[0].tolist() == [0, 0] and fwd[-1].tolist() == [5, 2]
     assert len(fwd) == 8  # dx+dy+1 cells
+    # the same cell sets through the C kernel that the runtime runs
+    assert _stamped_cells(0, 0, 3, 0) == [(0, 0), (1, 0), (2, 0), (3, 0)]
+    assert _stamped_cells(0, 0, 0, 3) == [(0, 0), (0, 1), (0, 2), (0, 3)]
+    assert _stamped_cells(0, 0, 5, 2) == sorted(map(tuple, fwd.tolist()))
+    rev = bresenham_line(5, 2, 0, 0)
+    assert _stamped_cells(5, 2, 0, 0) == sorted(map(tuple, rev.tolist()))
 
 
 # ---- RLE codec (ByteRaster.cs:94-122; HeightMap.Tests.cs:222-282) --------
@@ -211,43 +232,6 @@ def test_rle_roundtrip_random():
     for _ in range(20):
         row = rng.choice([0, 0, 0, 1, 2, 255], size=rng.randint(1, 500)).astype(np.uint8)
         assert np.array_equal(rle_decompress_row(rle_compress_row(row), len(row)), row)
-
-
-def test_clip_native_matches_python_fallback():
-    """C clip kernels (S-H ring + Liang-Barsky polyline) are bit-identical
-    to the Python fallback over fuzzed boundary-crossing geometries."""
-    import os
-
-    from lasutility_spark.gridlib import clip
-
-    rng = np.random.RandomState(7)
-    box = (0.0, 0.0, 100.0, 100.0)
-    for _ in range(800):
-        nv = rng.randint(3, 14)
-        xs = rng.uniform(-60, 160, nv)
-        ys = rng.uniform(-60, 160, nv)
-        c = clip.clip_ring(xs, ys, *box)
-        os.environ["LSU_NO_NATIVE"] = "1"
-        try:
-            p = clip.clip_ring(xs, ys, *box)
-        finally:
-            del os.environ["LSU_NO_NATIVE"]
-        assert (c is None) == (p is None)
-        if c is not None:
-            assert np.array_equal(c[0], p[0]) and np.array_equal(c[1], p[1])
-    for _ in range(800):
-        nv = rng.randint(2, 20)
-        xs = rng.uniform(-60, 160, nv)
-        ys = rng.uniform(-60, 160, nv)
-        c = clip.clip_polyline(xs, ys, *box)
-        os.environ["LSU_NO_NATIVE"] = "1"
-        try:
-            p = clip.clip_polyline(xs, ys, *box)
-        finally:
-            del os.environ["LSU_NO_NATIVE"]
-        assert len(c) == len(p)
-        for (cx, cy), (px_, py_) in zip(c, p):
-            assert np.array_equal(cx, px_) and np.array_equal(cy, py_)
 
 
 def _native_build_worker(tmpdir: str, barrier, delay: float) -> None:

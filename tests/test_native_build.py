@@ -48,37 +48,13 @@ else:
     raise SystemExit(3)
 """
 
-# one write_laz chunk through the kernel -> a digest of the nine results
-_DECODE_DIGEST = """
-import hashlib
-import numpy as np
-from lasutility_spark.gridlib import laz
-rng = np.random.RandomState(3)
-n = 500
-data = laz.write_laz(380000 + rng.rand(n) * 100, 6666000 + rng.rand(n) * 100,
-                     rng.rand(n) * 10, rng.choice([2, 5], n).astype(np.uint8),
-                     gps_time=np.sort(rng.rand(n)) + 3e5,
-                     rgb=rng.randint(0, 1 << 16, (n, 3)).astype(np.uint16),
-                     chunk_size=200)
-_h, vlr, chunks = laz.laz_chunk_plan(data)
-h = hashlib.sha256()
-for s, c in chunks:
-    for a in laz.decode_laz_chunk(data, vlr, s, c):
-        h.update(b"-" if a is None else a.tobytes())
-print("DIGEST", h.hexdigest())
-"""
-
-
-def _run(code, tmp_path, path, pythonpath=None, no_native=False):
-    env = {k: v for k, v in os.environ.items()
-           if k not in ("PYTHONPATH", "LSU_NO_NATIVE")}
+def _run(code, tmp_path, path, pythonpath=None):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PATH"] = path
     env["TMPDIR"] = str(tmp_path / "tmp")
     os.makedirs(env["TMPDIR"], exist_ok=True)
     if pythonpath:
         env["PYTHONPATH"] = pythonpath
-    if no_native:
-        env["LSU_NO_NATIVE"] = "1"
     work = tmp_path / "work"
     work.mkdir(exist_ok=True)
     return subprocess.run(
@@ -96,19 +72,6 @@ def test_no_compiler_on_path_raises(tmp_path):
     r = _run(_DECODE_AFTER_FAILED_BUILD, tmp_path, str(empty), pythonpath=REPO)
     assert r.returncode == 0, r.stdout + r.stderr
     assert "no C compiler (cc, gcc or clang) found on PATH" in r.stdout
-
-
-def test_no_native_switch_does_not_reach_the_laz_decoder(tmp_path):
-    """LSU_NO_NATIVE=1 switches only the numpy-twinned kernels: the LAZ
-    chunk decoder's nine results are byte-identical with and without
-    it, each in a fresh interpreter."""
-    digests = []
-    for no_native in (False, True):
-        r = _run(_DECODE_DIGEST, tmp_path, os.environ["PATH"],
-                 pythonpath=REPO, no_native=no_native)
-        assert r.returncode == 0, r.stdout + r.stderr
-        digests.append(r.stdout.split("DIGEST")[1].strip())
-    assert digests[0] == digests[1]
 
 
 def test_failing_compiler_stderr_in_error(tmp_path):
