@@ -1,4 +1,5 @@
-/* LASzip chunk decoder: one compressor-2 chunk -> point columns.
+/* LASzip decoder: one compressor-2 chunk -> point columns, and the chunk
+ * table -> chunk sizes.
  *
  * Port of the decoder that laz.py's writer mirrors, from the public
  * LASzip scheme (Isenburg, PE&RS 2013; laszip.org): the FastAC-style
@@ -23,6 +24,14 @@
  *   (29 per row) are written only for the items present.  Returns 0, or
  *   one of the LSU_LAZ_* codes below; ``*end_pos`` is the decoder's
  *   final read position (the raw first point's end for RAW_SHORT).
+ *
+ *   int64_t lsu_laz_decode_table(
+ *       const uint8_t *data, int64_t size, int64_t count, int64_t *sizes);
+ *   ``data[0:size]`` is the coded part of a version-0 chunk table (the
+ *   bytes after its version and count words): ``count`` chunk sizes, each
+ *   coded with the 32-bit, 2-context integer compressor in context 1 and
+ *   predicted by the previous size, the first by 0.  Writes ``count``
+ *   int32-wrapped sizes to ``sizes`` and returns 0, or LSU_LAZ_NOMEM.
  *
  * Semantics are those of the Python decoder kept as the test oracle
  * (tests/laz_oracle.py), bit for bit, on every input: coordinates
@@ -841,4 +850,21 @@ done:
     free(m_extra);
     free(last_extra);
     return rc;
+}
+
+/* ---- the chunk table --------------------------------------------------- */
+
+int64_t lsu_laz_decode_table(const uint8_t *data, int64_t size, int64_t count,
+                             int64_t *sizes) {
+    Arena a = {malloc(ic_words(32, 2) * sizeof(uint32_t)), 0};
+    if (!a.mem) return LSU_LAZ_NOMEM;
+    Dec d = {data, size, 0, 0, 0};
+    Model m_bits[2];
+    IC ic;
+    dec_init(&d);
+    ic_init(&ic, &d, &a, 32, 2, m_bits);
+    int64_t prev = 0;
+    for (int64_t i = 0; i < count; i++) sizes[i] = prev = ic_decompress(&ic, prev, 1);
+    free(a.mem);
+    return 0;
 }

@@ -15,11 +15,14 @@ The unit is required: every node needs ``cc`` (or ``gcc``/``clang``) on
 compiler and its stderr, and the same error is raised again on every
 later call rather than recompiling.  Every kernel here is the only
 runtime implementation of its job (triangulation, LASzip chunk decode,
-point sampling, DEM rasterize, polygon fill, polyline stamp, clip): each
-wrapper returns its result or raises, so no failure can silently change
-a tile's triangles, points or cells.  The numpy forms of the raster
-kernels live only in ``tests/raster_oracle.py``, where the differential
-test ``tests/test_raster_native.py`` holds each kernel to them.
+LASzip chunk-table decode, point sampling, DEM rasterize, polygon fill,
+polyline stamp, clip): each wrapper returns its result or raises, so no
+failure can silently change a tile's triangles, points or cells.  The
+numpy forms of the raster kernels live only in
+``tests/raster_oracle.py``, and the Python LASzip decoder (chunks and
+table) only in ``tests/laz_oracle.py``; the differential tests
+``tests/test_raster_native.py`` and ``tests/test_laz_native.py`` hold
+each kernel to them.
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ _DIR = os.path.dirname(os.path.abspath(__file__))
 _SOURCES = ("_delaunay.c", "_laszip.c")  # compiled together into one .so
 # ctypes handles, set together by _ensure_loaded
 _fn = _raster_fn = _fill_fn = _line_fn = _sample_fn = None
-_clip_ring_fn = _clip_line_fn = _laz_fn = None
+_clip_ring_fn = _clip_line_fn = _laz_fn = _laz_table_fn = None
 _load_error: Exception | None = None  # first build/load failure, re-raised
 
 
@@ -194,13 +197,16 @@ def _build_and_load():
     zfn = lib.lsu_laz_decode_chunk
     zfn.restype = ctypes.c_int64
     zfn.argtypes = [ctypes.c_void_p] + [ctypes.c_int64] * 8 + [ctypes.c_void_p] * 10
-    return fn, rfn, pfn, lfn, sfn, crfn, cpfn, zfn
+    tfn = lib.lsu_laz_decode_table
+    tfn.restype = ctypes.c_int64
+    tfn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64, ctypes.c_void_p]
+    return fn, rfn, pfn, lfn, sfn, crfn, cpfn, zfn, tfn
 
 
 def _ensure_loaded():
     """Load the unit once; re-raise the first build/load error ever after."""
     global _fn, _raster_fn, _fill_fn, _line_fn, _sample_fn
-    global _clip_ring_fn, _clip_line_fn, _laz_fn, _load_error
+    global _clip_ring_fn, _clip_line_fn, _laz_fn, _laz_table_fn, _load_error
     if _fn is not None:
         return
     if _load_error is not None:
@@ -211,7 +217,7 @@ def _ensure_loaded():
         _load_error = e
         raise
     (_fn, _raster_fn, _fill_fn, _line_fn, _sample_fn,
-     _clip_ring_fn, _clip_line_fn, _laz_fn) = handles
+     _clip_ring_fn, _clip_line_fn, _laz_fn, _laz_table_fn) = handles
 
 
 def _check_plane(a: np.ndarray, dtype, name: str) -> None:
@@ -281,6 +287,18 @@ def laz_decode_chunk(buf: np.ndarray, start: int, count: int, has_gps: bool,
         ctypes.addressof(end),
     )
     return rc, end.value
+
+
+def laz_decode_table(buf: np.ndarray, count: int) -> np.ndarray:
+    """C decode of the uint8 array ``buf``, the coded part of a version-0
+    LAZ chunk table, -> an int64 array of ``count`` chunk sizes.
+
+    Raises ``MemoryError`` when the kernel cannot allocate its models."""
+    _ensure_loaded()
+    sizes = np.empty(count, dtype=np.int64)
+    if _laz_table_fn(buf.ctypes.data, len(buf), count, sizes.ctypes.data):
+        raise MemoryError("lsu_laz_decode_table: model allocation failed")
+    return sizes
 
 
 def rasterize_dem(

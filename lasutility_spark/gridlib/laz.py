@@ -22,13 +22,14 @@ Components, all from the public spec:
   height contexts),
 - GPSTIME11 v2 multi-sequence delta prediction.
 
-Points decode in C: :func:`decode_laz_chunk` runs the chunk decoder of
-``_laszip.c``, built on first use with the Delaunay kernel
-(:mod:`_native`), and there is no Python point decoder in the package.
-The Python arithmetic decoder and integer compressor here decode only
-the chunk table while a scan is planned (:func:`laz_plan`).  The writer side
-(:func:`write_laz`) stays Python: it is the compressed point sink and
-the round-trip source the decoder is tested on.
+The read side is C only: :func:`decode_laz_chunk` runs the chunk
+decoder of ``_laszip.c``, and :func:`laz_plan` decodes the chunk table
+through the same unit's table decoder, built on first use with the
+Delaunay kernel (:mod:`_native`).  The package has no Python arithmetic
+decoder; the Python decode side lives only in ``tests/laz_oracle.py``,
+the differential tests' oracle.  The writer side (:func:`write_laz`)
+stays Python: it is the compressed point sink and the round-trip source
+the decoder is tested on.
 
 Each chunk starts with one RAW point and re-initialized models, so
 chunks are independently decodable — at scale, Spark tasks decode splits
@@ -36,11 +37,10 @@ of whole chunks (the chunk table, found through the 8-byte offset at the
 start of the point data, gives the offsets; engine/sources.py); the
 reference fixture holds a single chunk.
 
-The chunk table is handled in the laszip-native version-0 layout both
-directions (sizes arithmetic-coded with the 32-bit/2-context integer
-compressor, previous-size prediction — validated against the reference
-fixture's own table), so real multi-chunk laszip files locate their
-chunk boundaries correctly.
+The chunk table is read and written in the laszip-native version-0
+layout, the only one read (sizes arithmetic-coded with the
+32-bit/2-context integer compressor, previous-size prediction), so real
+multi-chunk laszip files locate their chunk boundaries correctly.
 
 Round 4 added the RGB12 v2 item both directions (point formats 2/3);
 round 5 added the BYTE v2 (extra-bytes) item, the WAVEPACKET13 v1
@@ -102,9 +102,8 @@ class ArithmeticBitModel:
 
 
 class ArithmeticModel:
-    """Adaptive multi-symbol model (decode side; binary-search variant —
-    the optional decoder lookup table is a pure speedup, not needed for
-    correctness)."""
+    """Adaptive multi-symbol model, encode side: ``_laszip.c`` updates
+    the same model identically while decoding."""
 
     __slots__ = ("symbols", "distribution", "symbol_count", "total_count",
                  "update_cycle", "symbols_until_update")
@@ -138,166 +137,6 @@ class ArithmeticModel:
         if self.update_cycle > max_cycle:
             self.update_cycle = max_cycle
         self.symbols_until_update = self.update_cycle
-
-
-class ArithmeticDecoder:
-    """FastAC-style range decoder over a byte stream."""
-
-    __slots__ = ("data", "pos", "value", "length")
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos
-        self.value = 0
-        self.length = 0
-
-    def init(self) -> None:
-        d = self.data
-        p = self.pos
-        # EOF-tolerant like _renorm: a tiny stream (e.g. a 1-entry chunk
-        # table) can end within the decoder's 4-byte prime read
-        b = [d[p + i] if p + i < len(d) else 0 for i in range(4)]
-        self.value = (b[0] << 24) | (b[1] << 16) | (b[2] << 8) | b[3]
-        self.pos = p + 4
-        self.length = AC_MAX_LENGTH
-
-    def _renorm(self) -> None:
-        d = self.data
-        while self.length < AC_MIN_LENGTH:
-            b = d[self.pos] if self.pos < len(d) else 0
-            self.pos += 1
-            self.value = ((self.value << 8) | b) & _U32
-            self.length = (self.length << 8) & _U32
-
-    def decode_bit(self, m: ArithmeticBitModel) -> int:
-        x = m.bit_0_prob * (self.length >> BM_LENGTH_SHIFT)
-        if self.value >= x:
-            sym = 1
-            self.value -= x
-            self.length -= x
-        else:
-            sym = 0
-            self.length = x
-        if self.length < AC_MIN_LENGTH:
-            self._renorm()
-        if sym == 0:
-            m.bit_0_count += 1
-        m.bits_until_update -= 1
-        if m.bits_until_update == 0:
-            m.update()
-        return sym
-
-    def decode_symbol(self, m: ArithmeticModel) -> int:
-        y = self.length
-        self.length >>= DM_LENGTH_SHIFT
-        length = self.length
-        value = self.value
-        dist = m.distribution
-        sym = 0
-        x = 0
-        n = m.symbols
-        k = n >> 1
-        while True:
-            z = length * dist[k]
-            if z > value:
-                n = k
-                y = z
-            else:
-                sym = k
-                x = z
-            k = (sym + n) >> 1
-            if k == sym:
-                break
-        self.value = value - x
-        self.length = y - x
-        if self.length < AC_MIN_LENGTH:
-            self._renorm()
-        m.symbol_count[sym] += 1
-        m.symbols_until_update -= 1
-        if m.symbols_until_update == 0:
-            m.update()
-        return sym
-
-    def read_bits(self, bits: int) -> int:
-        if bits > 19:
-            low = self.read_short()
-            high = self.read_bits(bits - 16)
-            return (high << 16) | low
-        self.length >>= bits
-        sym = self.value // self.length
-        self.value -= self.length * sym
-        if self.length < AC_MIN_LENGTH:
-            self._renorm()
-        return sym
-
-    def read_short(self) -> int:
-        self.length >>= 16
-        sym = self.value // self.length
-        self.value -= self.length * sym
-        if self.length < AC_MIN_LENGTH:
-            self._renorm()
-        return sym
-
-
-class IntegerCompressor:
-    """k-bit corrector integer decompression (LASzip integercompressor)."""
-
-    def __init__(self, dec: ArithmeticDecoder, bits: int = 32,
-                 contexts: int = 1, bits_high: int = 8) -> None:
-        self.dec = dec
-        self.bits_high = bits_high
-        if bits and bits < 32:
-            self.corr_bits = bits
-            self.corr_range = 1 << bits
-            self.corr_min = -(self.corr_range >> 1)
-        else:
-            self.corr_bits = 32
-            self.corr_range = 0
-            self.corr_min = -0x80000000
-        self.k = 0
-        self.m_bits = [ArithmeticModel(self.corr_bits + 1) for _ in range(contexts)]
-        self.m_corrector0 = ArithmeticBitModel()
-        self.m_corrector = [None] + [
-            ArithmeticModel(1 << min(k, bits_high))
-            for k in range(1, self.corr_bits + 1)
-        ]
-
-    def _read_corrector(self, context: int) -> int:
-        dec = self.dec
-        k = dec.decode_symbol(self.m_bits[context])
-        self.k = k
-        if k:
-            if k < 32:
-                if k <= self.bits_high:
-                    c = dec.decode_symbol(self.m_corrector[k])
-                else:
-                    k1 = k - self.bits_high
-                    c = dec.decode_symbol(self.m_corrector[k])
-                    c1 = dec.read_bits(k1)
-                    c = (c << k1) | c1
-                # fold back into the signed corrector interval
-                if c >= (1 << (k - 1)):
-                    c += 1
-                else:
-                    c -= (1 << k) - 1
-            else:
-                c = self.corr_min
-        else:
-            c = dec.decode_bit(self.m_corrector0)
-        return c
-
-    def decompress(self, pred: int, context: int = 0) -> int:
-        real = pred + self._read_corrector(context)
-        if self.corr_range:
-            if real < 0:
-                real += self.corr_range
-            elif real >= self.corr_range:
-                real -= self.corr_range
-        else:  # 32-bit: wrap to int32
-            real &= _U32
-            if real >= 0x80000000:
-                real -= 1 << 32
-        return real
 
 
 class StreamingMedian5:
@@ -554,7 +393,7 @@ def laz_chunk_plan(data: bytes, header: dict | None = None,
     row group).
 
     ``byte_start`` is always a concrete offset: single-chunk streams use
-    the point-data start, multi-chunk streams require a parsable chunk
+    the point-data start, multi-chunk streams require a version-0 chunk
     table and raise otherwise (the arithmetic decoder's byte lookahead
     makes sequential chunk-boundary recovery impossible)."""
     if header is None:
@@ -570,7 +409,9 @@ def laz_plan(read_at, size: int, header: dict, vlr: dict | None = None):
     ``offset``.  Reads the VLRs, the 8-byte chunk-table offset and the
     chunk table (from its offset to the end of the file), never point
     bytes.  A chunk ends where the next one starts; the last one at the
-    chunk table, or at the end of the file when there is none."""
+    chunk table, or at the end of the file when there is none.  The
+    table decodes in ``_laszip.c``, so a build failure of the native
+    unit raises RuntimeError here, on the driver."""
     if not (header["point_format"] & 0x80):
         raise ValueError("not LAZ (compression bit clear) — use las.read_las")
     if vlr is None:
@@ -625,6 +466,7 @@ def laz_plan(read_at, size: int, header: dict, vlr: dict | None = None):
     pos = header["offset_to_points"]
     end = size
     chunk_starts: list[int] | None = None
+    no_table = ""  # why a chunked stream has no chunk table to plan from
     if vlr["compressor"] == 2:  # chunked: chunk table offset precedes data
         if pos + 8 > size:
             raise ValueError("point data cannot hold the chunk table offset")
@@ -642,38 +484,46 @@ def laz_plan(read_at, size: int, header: dict, vlr: dict | None = None):
                 f"chunk table offset {table_off} lies before the point "
                 f"data at {pos}"
             )
-        # chunk table: version 0 = the laszip-native layout (chunk sizes
+        # chunk table: the laszip-native version-0 layout (chunk sizes
         # arithmetic-coded with the 32-bit/2-context integer compressor,
-        # each size predicted by the previous one — validated against the
-        # reference fixture's own table); version 1 = this module's
-        # legacy raw u32 layout (older written files)
-        if table_off > 0:
+        # each size predicted by the previous one), decoded in _laszip.c
+        if table_off <= 0:
+            no_table = f"the chunk table offset is {table_off}"
+        else:
             end = table_off
             table = read_at(table_off, size - table_off)
             ver, cnt = struct.unpack_from("<2I", table, 0)
-            max_chunks = 1 + n // max(vlr["chunk_size"], 1)
-            sizes = None
-            if ver == 0 and 0 < cnt <= max_chunks:
-                tdec = ArithmeticDecoder(table, 8)
-                tdec.init()
-                ic = IntegerCompressor(tdec, 32, 2)
-                sizes = []
-                prev = 0
-                for _ in range(cnt):
-                    prev = ic.decompress(prev, 1)
-                    sizes.append(prev)
-            elif ver == 1 and 0 < cnt <= max_chunks:
-                if 8 + 4 * cnt > len(table):
-                    raise ValueError("chunk table runs past the end of the file")
-                sizes = struct.unpack_from(f"<{cnt}I", table, 8)
-            if sizes is not None:
+            max_chunks = 1 + n // vlr["chunk_size"]
+            if ver != 0:
+                no_table = f"the chunk table version is {ver}, not 0"
+            elif not 0 < cnt <= max_chunks:
+                no_table = (f"the chunk table count {cnt} lies outside "
+                            f"1..{max_chunks}")
+            else:
+                # every chunk starts with its raw first point
+                raw = sum(isize for _t, isize, _v in vlr["items"])
+                span = table_off - pos
+                if cnt * raw > span:
+                    raise ValueError(
+                        f"chunk table count {cnt} cannot fit: {cnt} chunks "
+                        f"of at least {raw} bytes each, in the {span} bytes "
+                        "between the chunk table offset and the table"
+                    )
+                sizes = _native.laz_decode_table(
+                    np.frombuffer(table, np.uint8, offset=8), cnt
+                ).tolist()
                 if min(sizes) < 0:
                     raise ValueError("chunk table lists a negative chunk size")
+                if min(sizes) < raw:
+                    raise ValueError(
+                        f"chunk table lists a {min(sizes)}-byte chunk, "
+                        f"shorter than one {raw}-byte raw point"
+                    )
                 # the chunks fill the bytes between the offset and the table
-                if sum(sizes) != table_off - pos:
+                if sum(sizes) != span:
                     raise ValueError(
                         f"chunk table sizes sum to {sum(sizes)} bytes, the "
-                        f"chunks span {table_off - pos}"
+                        f"chunks span {span}"
                     )
                 chunk_starts = [pos]
                 for s in sizes[:-1]:
@@ -694,10 +544,10 @@ def laz_plan(read_at, size: int, header: dict, vlr: dict | None = None):
             chunks.append((pos, count, end))
         else:
             raise ValueError(
-                "multi-chunk LAZ without a parsable chunk table: sequential "
-                "decode cannot locate chunk boundaries (the arithmetic "
-                "decoder's byte lookahead makes dec.pos inexact) — "
-                "laszip-native arithmetic-coded chunk tables are out of scope"
+                f"multi-chunk LAZ without a chunk table: {no_table}; "
+                "sequential decode cannot locate chunk boundaries (the "
+                "arithmetic decoder's byte lookahead makes its read "
+                "position inexact)"
             )
         i += count
         k += 1
@@ -801,11 +651,6 @@ def read_laz(data: bytes):
             np.ascontiguousarray(wave[:, 13:17]).view("<f4").reshape(-1)
         )
     return header, xs * sx + ox, ys * sy + oy, zs * sz + oz, cls
-
-
-def read_laz_file(path: str):
-    with open(path, "rb") as f:
-        return read_laz(f.read())
 
 
 # --- encoder side (LAZ writer) --------------------------------------------
@@ -923,14 +768,30 @@ class ArithmeticEncoder:
         return bytes(self.out)
 
 
-class IntegerCompressorEnc(IntegerCompressor):
-    """Compress side sharing the decoder's model layout (the adaptive
-    models must evolve identically on both sides)."""
+class IntegerCompressorEnc:
+    """k-bit corrector integer compression (LASzip integercompressor), on
+    the decoder's model layout: the adaptive models must evolve
+    identically on both sides."""
 
-    def __init__(self, enc: "ArithmeticEncoder", bits: int = 32,
+    def __init__(self, enc: ArithmeticEncoder, bits: int = 32,
                  contexts: int = 1, bits_high: int = 8) -> None:
-        super().__init__(None, bits, contexts, bits_high)
         self.enc = enc
+        self.bits_high = bits_high
+        if bits and bits < 32:
+            self.corr_bits = bits
+            self.corr_range = 1 << bits
+            self.corr_min = -(self.corr_range >> 1)
+        else:
+            self.corr_bits = 32
+            self.corr_range = 0
+            self.corr_min = -0x80000000
+        self.k = 0
+        self.m_bits = [ArithmeticModel(self.corr_bits + 1) for _ in range(contexts)]
+        self.m_corrector0 = ArithmeticBitModel()
+        self.m_corrector = [None] + [
+            ArithmeticModel(1 << min(k, bits_high))
+            for k in range(1, self.corr_bits + 1)
+        ]
 
     def compress(self, pred: int, real: int, context: int = 0) -> None:
         corr = real - pred

@@ -1,10 +1,12 @@
-"""Differential oracle for the native LASzip chunk decoder.
+"""Differential oracle for the native LASzip decoder.
 
-The pure-Python item readers (POINT10 v2, GPSTIME11 v2, RGB12 v2, BYTE
-v2, WAVEPACKET13 v1) and the per-point loop that ``gridlib/laz.py`` ran
-before the decoder moved into ``gridlib/_laszip.c``.  The package keeps
-one decoder, the C kernel; this module exists only so the tests can hold
-the kernel to the same arrays and the same refusals on every input.
+The pure-Python decode side that ``gridlib/laz.py`` ran before decoding
+moved into ``gridlib/_laszip.c``: the arithmetic decoder, the integer
+compressor's decode half, the item readers (POINT10 v2, GPSTIME11 v2,
+RGB12 v2, BYTE v2, WAVEPACKET13 v1) with the per-point loop, and the
+chunk-table loop.  The package keeps one decoder, the C kernel, for the
+chunks and the table alike; this module exists only so the tests can
+hold the kernel to the same arrays and the same refusals on every input.
 
 Two changes against the package's last Python decoder, both on corrupt
 streams only: the GPSTIME11 sequence switch loops instead of recursing
@@ -20,6 +22,10 @@ import numpy as np
 
 from lasutility_spark.gridlib.laz import (
     _LOOKAHEAD,
+    AC_MAX_LENGTH,
+    AC_MIN_LENGTH,
+    BM_LENGTH_SHIFT,
+    DM_LENGTH_SHIFT,
     _U32,
     _U64,
     GPSTIME_MULTI,
@@ -33,9 +39,8 @@ from lasutility_spark.gridlib.laz import (
     ITEM_WAVEPACKET13,
     NUMBER_RETURN_LEVEL,
     NUMBER_RETURN_MAP,
-    ArithmeticDecoder,
+    ArithmeticBitModel,
     ArithmeticModel,
-    IntegerCompressor,
     StreamingMedian5,
     _div2_trunc,
     _i32,
@@ -43,15 +48,186 @@ from lasutility_spark.gridlib.laz import (
 )
 
 
-class Decoder(ArithmeticDecoder):
-    """The package's decoder plus the 32-bit raw read the items use."""
+class Decoder:
+    """FastAC-style range decoder over a byte stream; reads zeros past
+    its end."""
 
-    __slots__ = ()
+    __slots__ = ("data", "pos", "value", "length")
+
+    def __init__(self, data: bytes, pos: int = 0) -> None:
+        self.data = data
+        self.pos = pos
+        self.value = 0
+        self.length = 0
+
+    def init(self) -> None:
+        d = self.data
+        p = self.pos
+        # EOF-tolerant like _renorm: a tiny stream (e.g. a 1-entry chunk
+        # table) can end within the decoder's 4-byte prime read
+        b = [d[p + i] if p + i < len(d) else 0 for i in range(4)]
+        self.value = (b[0] << 24) | (b[1] << 16) | (b[2] << 8) | b[3]
+        self.pos = p + 4
+        self.length = AC_MAX_LENGTH
+
+    def _renorm(self) -> None:
+        d = self.data
+        while self.length < AC_MIN_LENGTH:
+            b = d[self.pos] if self.pos < len(d) else 0
+            self.pos += 1
+            self.value = ((self.value << 8) | b) & _U32
+            self.length = (self.length << 8) & _U32
+
+    def decode_bit(self, m: ArithmeticBitModel) -> int:
+        x = m.bit_0_prob * (self.length >> BM_LENGTH_SHIFT)
+        if self.value >= x:
+            sym = 1
+            self.value -= x
+            self.length -= x
+        else:
+            sym = 0
+            self.length = x
+        if self.length < AC_MIN_LENGTH:
+            self._renorm()
+        if sym == 0:
+            m.bit_0_count += 1
+        m.bits_until_update -= 1
+        if m.bits_until_update == 0:
+            m.update()
+        return sym
+
+    def decode_symbol(self, m: ArithmeticModel) -> int:
+        y = self.length
+        self.length >>= DM_LENGTH_SHIFT
+        length = self.length
+        value = self.value
+        dist = m.distribution
+        sym = 0
+        x = 0
+        n = m.symbols
+        k = n >> 1
+        while True:
+            z = length * dist[k]
+            if z > value:
+                n = k
+                y = z
+            else:
+                sym = k
+                x = z
+            k = (sym + n) >> 1
+            if k == sym:
+                break
+        self.value = value - x
+        self.length = y - x
+        if self.length < AC_MIN_LENGTH:
+            self._renorm()
+        m.symbol_count[sym] += 1
+        m.symbols_until_update -= 1
+        if m.symbols_until_update == 0:
+            m.update()
+        return sym
+
+    def read_bits(self, bits: int) -> int:
+        if bits > 19:
+            low = self.read_short()
+            high = self.read_bits(bits - 16)
+            return (high << 16) | low
+        self.length >>= bits
+        sym = self.value // self.length
+        self.value -= self.length * sym
+        if self.length < AC_MIN_LENGTH:
+            self._renorm()
+        return sym
+
+    def read_short(self) -> int:
+        self.length >>= 16
+        sym = self.value // self.length
+        self.value -= self.length * sym
+        if self.length < AC_MIN_LENGTH:
+            self._renorm()
+        return sym
 
     def read_int(self) -> int:
         low = self.read_short()
         high = self.read_short()
         return (high << 16) | low
+
+
+class IntegerCompressor:
+    """k-bit corrector integer decompression (LASzip integercompressor),
+    on the model layout of the writer's ``laz.IntegerCompressorEnc``."""
+
+    def __init__(self, dec: Decoder, bits: int = 32,
+                 contexts: int = 1, bits_high: int = 8) -> None:
+        self.dec = dec
+        self.bits_high = bits_high
+        if bits and bits < 32:
+            self.corr_bits = bits
+            self.corr_range = 1 << bits
+            self.corr_min = -(self.corr_range >> 1)
+        else:
+            self.corr_bits = 32
+            self.corr_range = 0
+            self.corr_min = -0x80000000
+        self.k = 0
+        self.m_bits = [ArithmeticModel(self.corr_bits + 1) for _ in range(contexts)]
+        self.m_corrector0 = ArithmeticBitModel()
+        self.m_corrector = [None] + [
+            ArithmeticModel(1 << min(k, bits_high))
+            for k in range(1, self.corr_bits + 1)
+        ]
+
+    def _read_corrector(self, context: int) -> int:
+        dec = self.dec
+        k = dec.decode_symbol(self.m_bits[context])
+        self.k = k
+        if k:
+            if k < 32:
+                if k <= self.bits_high:
+                    c = dec.decode_symbol(self.m_corrector[k])
+                else:
+                    k1 = k - self.bits_high
+                    c = dec.decode_symbol(self.m_corrector[k])
+                    c1 = dec.read_bits(k1)
+                    c = (c << k1) | c1
+                # fold back into the signed corrector interval
+                if c >= (1 << (k - 1)):
+                    c += 1
+                else:
+                    c -= (1 << k) - 1
+            else:
+                c = self.corr_min
+        else:
+            c = dec.decode_bit(self.m_corrector0)
+        return c
+
+    def decompress(self, pred: int, context: int = 0) -> int:
+        real = pred + self._read_corrector(context)
+        if self.corr_range:
+            if real < 0:
+                real += self.corr_range
+            elif real >= self.corr_range:
+                real -= self.corr_range
+        else:  # 32-bit: wrap to int32
+            real &= _U32
+            if real >= 0x80000000:
+                real -= 1 << 32
+        return real
+
+
+def decode_table(table: bytes, count: int) -> np.ndarray:
+    """The chunk-table loop that ``laz.laz_plan`` ran before
+    ``_native.laz_decode_table`` replaced it: ``table`` is the coded part
+    of a version-0 chunk table -> int64 array of ``count`` sizes, each
+    predicted by the previous one, the first by 0."""
+    dec = Decoder(table, 0)
+    dec.init()
+    ic = IntegerCompressor(dec, 32, 2)
+    sizes = np.empty(count, np.int64)
+    prev = 0
+    for i in range(count):
+        sizes[i] = prev = ic.decompress(prev, 1)
+    return sizes
 
 
 class Point10V2Reader:

@@ -1,12 +1,16 @@
-"""The native LASzip chunk decoder (``gridlib/_laszip.c``) against the
-Python oracle (``tests/laz_oracle.py``): identical arrays on every
+"""The native LASzip decoder (``gridlib/_laszip.c``) against the Python
+oracle (``tests/laz_oracle.py``): identical arrays on every
 ``write_laz`` item mix and chunk size, and the same verdict on mutated
-chunks — the same arrays, or ``ValueError`` from both.  The last test
-runs the mutated corpus through an AddressSanitizer build of the kernel,
-on exactly sized heap buffers."""
+chunks — the same arrays, or ``ValueError`` from both.  The chunk-table
+kernel is held to the oracle's table loop the same way, directly and
+through ``laz_chunk_plan``.  The last test runs the mutated corpora
+through an AddressSanitizer build of the kernel, on exactly sized heap
+buffers."""
 
 import os
+import pickle
 import signal
+import struct
 import subprocess
 import sys
 from contextlib import contextmanager
@@ -15,7 +19,7 @@ import numpy as np
 import pytest
 
 import laz_oracle
-from lasutility_spark.gridlib import laz
+from lasutility_spark.gridlib import _native, laz
 from lasutility_spark.gridlib.las import read_header
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -71,6 +75,41 @@ def mutated_chunks(seed: int = 41):
             b = bytearray(chunk)
             b[rng.randint(len(b))] ^= int(rng.randint(1, 256))
             yield vlr, bytes(b), c
+
+
+# (chunk_size, points) -> 1, 2, 10, 13 and 25 chunks
+TABLE_SHAPES = [(777, 500), (777, 1000), (100, 1000), (2, 25), (1, 25)]
+
+
+def table_of(data: bytes) -> tuple[int, bytes]:
+    """-> (chunk table offset, table bytes) of a LAZ file in memory."""
+    (off,) = struct.unpack_from("<q", data, read_header(data)["offset_to_points"])
+    return off, data[off:]
+
+
+def table_files(seed: int = 43):
+    """``write_laz`` bytes of every item mix in every TABLE_SHAPES shape."""
+    for k, items in enumerate(ITEM_MIXES):
+        for chunk_size, n in TABLE_SHAPES:
+            yield write_mix(items, chunk_size, n, seed + k)
+
+
+def mutated_tables(seed: int = 47):
+    """(coded table bytes, count) of every ``table_files`` table: whole,
+    cut at every byte, asked for 5 sizes more than it codes, and with 8
+    seeded single-byte flips."""
+    rng = np.random.RandomState(seed)
+    for data in table_files():
+        _off, table = table_of(data)
+        count = struct.unpack_from("<I", table, 4)[0]
+        coded = table[8:]
+        for cut in range(len(coded) + 1):
+            yield coded[:cut], count
+        yield coded, count + 5
+        for _ in range(8):
+            b = bytearray(coded)
+            b[rng.randint(len(b))] ^= int(rng.randint(1, 256))
+            yield bytes(b), count
 
 
 @contextmanager
@@ -193,8 +232,139 @@ def test_native_decoder_refusal_messages():
         laz.decode_laz_chunk(data[s:e], vlr, 0, 0)
 
 
+def test_table_kernel_matches_oracle():
+    """Every table of 1, 2, 10, 13 and 25 chunks, for every item mix,
+    decodes to identical int64 sizes through the kernel and the oracle,
+    and the sizes are the chunks' byte lengths in the plan."""
+    for data in table_files():
+        off, table = table_of(data)
+        count = struct.unpack_from("<I", table, 4)[0]
+        coded = np.frombuffer(table, np.uint8, offset=8)
+        native = _native.laz_decode_table(coded, count)
+        oracle = laz_oracle.decode_table(table[8:], count)
+        assert native.dtype == oracle.dtype == np.int64
+        assert np.array_equal(native, oracle)
+        _vlr, chunks = plan(data)
+        assert len(chunks) == count
+        assert native.tolist() == [e - s for s, _c, e in chunks]
+        assert chunks[-1][2] == off
+
+
+def test_table_kernel_matches_oracle_on_mutated_tables():
+    """Truncated, over-asked and byte-flipped tables: the kernel reads
+    zeros past the end exactly as the oracle does, so both give the same
+    sizes."""
+    n = 0
+    for coded, count in mutated_tables():
+        native = _native.laz_decode_table(np.frombuffer(coded, np.uint8), count)
+        assert np.array_equal(native, laz_oracle.decode_table(coded, count)), (
+            coded, count)
+        n += 1
+    assert n > 8 * len(TABLE_SHAPES) * 10
+
+
+def _plan_or_error(data: bytes):
+    with alarm(2):
+        try:
+            return laz.laz_chunk_plan(data)[2]
+        except ValueError as e:
+            return e
+
+
+def test_plan_of_mutated_file_matches_oracle_plan(monkeypatch):
+    """A file whose chunk table is cut short or has a byte flipped in its
+    version, count or coded sizes plans to exactly the plan built on the
+    oracle's table loop, or both raise ValueError."""
+    rng = np.random.RandomState(53)
+    files = []
+    for items in (("gps",), ("gps", "rgb", "wave", "extra")):
+        for chunk_size, n in TABLE_SHAPES:
+            data = write_mix(items, chunk_size, n, 59)
+            off, table = table_of(data)
+            files += [data[: off + cut] for cut in range(len(table))]
+            for lo, hi in ((0, 4), (4, 8), (8, len(table))):
+                for _ in range(6):
+                    b = bytearray(data)
+                    b[off + rng.randint(lo, hi)] ^= int(rng.randint(1, 256))
+                    files.append(bytes(b))
+    native = [_plan_or_error(f) for f in files]
+    monkeypatch.setattr(
+        _native, "laz_decode_table",
+        lambda buf, count: laz_oracle.decode_table(buf.tobytes(), count),
+    )
+    oracle = [_plan_or_error(f) for f in files]
+    planned = 0
+    for f, a, b in zip(files, native, oracle):
+        if isinstance(a, ValueError) or isinstance(b, ValueError):
+            assert isinstance(a, ValueError) and isinstance(b, ValueError), (
+                len(f), a, b)
+        else:
+            assert a == b, len(f)
+            planned += 1
+    assert planned > 0 and planned < len(files)
+
+
+def test_chunk_table_count_is_bounded_before_decoding():
+    """A table that claims 2^32 - 1 chunks (header point count
+    0xFFFFFFFF, VLR chunk_size 1) is refused at once, naming the count
+    and the span, instead of decoding 4.3e9 sizes; a size shorter than
+    one raw point is refused too.  Each plan runs under a 2 s alarm."""
+    data = write_mix((), 100, 300, 61)
+    h = read_header(data)
+    off, table = table_of(data)
+    span = off - h["offset_to_points"] - 8
+    d = bytearray(data)
+    struct.pack_into("<I", d, 107, 0xFFFFFFFF)
+    vlr_body = h["header_size"] + 54
+    struct.pack_into("<I", d, vlr_body + 12, 1)  # chunk_size
+    struct.pack_into("<I", d, off + 4, 0xFFFFFFFF)
+    with alarm(2), pytest.raises(
+        ValueError, match=f"chunk table count 4294967295 cannot fit: .* the {span} bytes"
+    ):
+        laz.laz_chunk_plan(bytes(d))
+
+    # 3 chunks re-coded as sizes 19, 20 + the rest: the sum holds, the
+    # first chunk cannot hold its 20-byte raw point
+    enc = laz.ArithmeticEncoder()
+    ic = laz.IntegerCompressorEnc(enc, 32, 2)
+    prev = 0
+    for size in (19, 20, span - 39):
+        ic.compress(prev, size, 1)
+        prev = size
+    short = data[:off] + struct.pack("<2I", 0, 3) + enc.done()
+    with alarm(2), pytest.raises(
+        ValueError, match="lists a 19-byte chunk, shorter than one 20-byte raw point"
+    ):
+        laz.laz_chunk_plan(short)
+
+
+@pytest.mark.parametrize("mutate, cause", [
+    ("offset", "the chunk table offset is -1"),
+    ("version", "the chunk table version is 1, not 0"),
+    ("count0", r"the chunk table count 0 lies outside 1\.\.4"),
+    ("count9", r"the chunk table count 9 lies outside 1\.\.4"),
+])
+def test_chunked_stream_without_table_is_refused(mutate, cause):
+    """A 3-chunk stream whose table cannot be used names why: no table
+    offset, a version other than 0, or a count out of range."""
+    x = np.arange(300.0)
+    data = bytearray(laz.write_laz(x, x, x, np.full(300, 2, np.uint8),
+                                   chunk_size=100))
+    pos = read_header(bytes(data))["offset_to_points"]
+    off, _table = table_of(bytes(data))
+    if mutate == "offset":
+        struct.pack_into("<q", data, pos, -1)
+    elif mutate == "version":
+        struct.pack_into("<I", data, off, 1)
+    else:
+        struct.pack_into("<I", data, off + 4, int(mutate[5:]))
+    with pytest.raises(ValueError, match="multi-chunk LAZ without a chunk "
+                       f"table: {cause}; sequential decode cannot locate"):
+        laz.laz_chunk_plan(bytes(data))
+
+
 _ASAN_RUN = """
-import ctypes, sys
+import ctypes, pickle, sys
 import numpy as np
 sys.path.insert(0, {tests!r})
 from test_laz_native import mutated_chunks
@@ -229,12 +399,26 @@ for vlr, chunk, count in mutated_chunks():
             libc.free(p)
     n += 1
 print("decoded", n)
+tfn = lib.lsu_laz_decode_table
+tfn.restype = ctypes.c_int64
+tfn.argtypes = [ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64, ctypes.c_void_p]
+n = 0
+with open("tables.pkl", "rb") as f:
+    tables = pickle.load(f)
+for coded, count in tables:
+    data, sizes = libc.malloc(len(coded)), libc.malloc(8 * count)
+    ctypes.memmove(data, coded, len(coded))
+    assert tfn(data, len(coded), count, sizes) == 0
+    libc.free(data)
+    libc.free(sizes)
+    n += 1
+print("tables", n)
 """
 
 
 def test_laszip_kernel_memory_safe_under_asan(tmp_path):
-    """The mutated corpus through ``_laszip.c`` built with
-    ``-fsanitize=address,undefined``: no out-of-bounds access, no
+    """The mutated chunk and table corpora through ``_laszip.c`` built
+    with ``-fsanitize=address,undefined``: no out-of-bounds access, no
     undefined behaviour, on buffers malloc'd to their exact size."""
     so = str(tmp_path / "laszip_asan.so")
     src = os.path.join(REPO, "lasutility_spark", "gridlib", "_laszip.c")
@@ -254,6 +438,10 @@ def test_laszip_kernel_memory_safe_under_asan(tmp_path):
         UBSAN_OPTIONS="halt_on_error=1:print_stacktrace=1",
         PYTHONPATH=REPO,
     )
+    # the table corpus is written here: write_laz under ASan is slow
+    tables = list(mutated_tables())
+    with open(tmp_path / "tables.pkl", "wb") as f:
+        pickle.dump(tables, f)
     code = _ASAN_RUN.format(tests=os.path.dirname(os.path.abspath(__file__)), so=so)
     r = subprocess.run(
         [sys.executable, "-c", code], env=env, cwd=tmp_path,
@@ -262,3 +450,4 @@ def test_laszip_kernel_memory_safe_under_asan(tmp_path):
     assert r.returncode == 0, r.stdout + r.stderr[-4000:]
     assert "runtime error" not in r.stderr, r.stderr[-4000:]
     assert f"decoded {8 * (64 + 16 + 24)}" in r.stdout, r.stdout + r.stderr[-4000:]
+    assert f"tables {len(tables)}" in r.stdout, r.stdout + r.stderr[-4000:]

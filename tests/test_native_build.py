@@ -32,16 +32,15 @@ assert errors[0] is errors[1]
 print(errors[0])
 """
 
-# the LASzip chunk decoder raises the same stored error: no Python decoder
+# planning a 3-chunk LAZ file decodes its chunk table in _laszip.c, so it
+# raises the same stored error: no Python decoder
 _DECODE_AFTER_FAILED_BUILD = """
 import numpy as np
 from lasutility_spark.gridlib import laz
 data = laz.write_laz(np.arange(5.0), np.arange(5.0), np.arange(5.0),
                      np.full(5, 2, np.uint8), chunk_size=2)
-_h, vlr, chunks = laz.laz_chunk_plan(data)
-s, c = chunks[0]
 try:
-    laz.decode_laz_chunk(data, vlr, s, c)
+    laz.laz_chunk_plan(data)
 except RuntimeError as e:
     print(e)
 else:
@@ -91,8 +90,9 @@ def test_failing_compiler_stderr_in_error(tmp_path):
 def test_pyfiles_zip_ships_kernel_source(tmp_path):
     """make_pyfiles writes dist/ next to its own checkout, so it runs in
     a copy; the package then imports from the zip alone, compiles
-    _delaunay.c and _laszip.c read through pkgutil, triangulates and
-    decodes one LAZ chunk."""
+    _delaunay.c and _laszip.c read through pkgutil, triangulates, plans
+    a 2-chunk LAZ file from its chunk table and decodes its second
+    chunk."""
     copy = tmp_path / "checkout"
     shutil.copytree(
         os.path.join(REPO, "lasutility_spark"), copy / "lasutility_spark",
@@ -124,6 +124,7 @@ from lasutility_spark.gridlib import laz
 x = np.arange(7.0)
 data = laz.write_laz(x, x, x, np.full(7, 2, np.uint8), chunk_size=4)
 _h, vlr, chunks = laz.laz_chunk_plan(data)
+assert [c for _s, c in chunks] == [4, 3], chunks
 s, c = chunks[1]
 xs = laz.decode_laz_chunk(data, vlr, s, c)[0]
 assert xs.tolist() == [400, 500, 600], xs

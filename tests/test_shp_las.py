@@ -235,15 +235,15 @@ def test_read_laz_reference_fixture():
     consistency proof (any arithmetic-coder desync destroys all three)."""
     import struct
 
-    from lasutility_spark.gridlib.laz import read_laz_file
+    from lasutility_spark.gridlib.laz import read_laz
 
-    h, x, y, z, cls = read_laz_file(LAZ_FIXTURE)
+    with open(LAZ_FIXTURE, "rb") as f:
+        raw = f.read()
+    h, x, y, z, cls = read_laz(raw)
     assert len(x) == 1481 == h["point_count"]
     assert (x.min(), x.max()) == (h["minx"], h["maxx"])
     assert (y.min(), y.max()) == (h["miny"], h["maxy"])
     assert abs(z.min() - h["minz"]) < 5e-3 and abs(z.max() - h["maxz"]) < 5e-3
-    with open(LAZ_FIXTURE, "rb") as f:
-        raw = f.read()
     by_return = struct.unpack_from("<5I", raw, 111)
     import collections
 

@@ -134,8 +134,14 @@ def test_laz_chunk_overrun_is_refused(spark, tmp_path):
     sizes = [b - a for a, b in zip(starts, starts[1:])]
     sizes[0] -= 64
     sizes[1] += 64
-    # version-1 (raw u32) table with the moved boundary
-    bad = data[:table_off] + struct.pack(f"<2I{len(sizes)}I", 1, len(sizes), *sizes)
+    # the moved boundary as a version-0 table, coded as write_laz codes it
+    enc = laz.ArithmeticEncoder()
+    ic = laz.IntegerCompressorEnc(enc, 32, 2)
+    prev = 0
+    for size in sizes:
+        ic.compress(prev, size, 1)
+        prev = size
+    bad = data[:table_off] + struct.pack("<2I", 0, len(sizes)) + enc.done()
     assert len(laz.laz_chunk_plan(bad)[2]) == 3
     with pytest.raises(ValueError, match="past the end of its"):
         laz.read_laz(bad)
